@@ -13,6 +13,16 @@ deliberate Arrow-tier surfaces.
 Usage: python tools/plan_audit.py [sf_dir] > PLANS.md
 Plans are inspected BEFORE execution (no actions run), so this is
 cheap and deterministic.
+
+Capture mode saves whole ``explain("formatted")`` plans for before/after
+diffs of a change:
+
+    python tools/plan_audit.py --capture <dir> <tag> [query ...]
+
+writes ``<dir>/<query>_<tag>.txt`` for each named query (every auditable
+query when none is named), built at ``$SPARK_GRAFT_SF_DIR`` (default
+sf0.1). The plans are the same pre-execution plans the table audits,
+so a before/after pair is like-for-like.
 """
 
 from __future__ import annotations
@@ -59,8 +69,8 @@ def audit(df) -> dict:
 # auditing shuffle counts should read the note, not flag the row.
 _NOTES = {
     "hybrid_join": (
-        "scan twin of hybrid_join_indexed (7-shuffle serving form): "
-        "composes two scan-form rankers + fusion by design"
+        "scan twin of hybrid_join_indexed: composes two scan-form "
+        "rankers + fusion by design"
     ),
     "bm25_join": (
         "scan twin of bm25_join_indexed: one corpus text scan shared "
@@ -73,20 +83,24 @@ _NOTES = {
         "short docs; the store form prunes by gram bucket"
     ),
     "retrieval_rerank": (
-        "stage one is the bm25_join scan (its Arrow node is the libm "
-        "ln shim); stage two adds only a candidates-bounded rescore"
+        "stage one is the bm25_join scan; stage two adds only a "
+        "candidates-bounded rescore"
     ),
     "retrieval_rerank_mmr": (
-        "greedy MMR is sequential by definition: the second Python "
-        "node is the deliberate per-query applyInPandas over "
-        "CANDIDATE-bounded groups (broadcast candidate ids prune the "
-        "corpus scan; |Q| x n_candidates^2 work, corpus-size-free)"
+        "greedy MMR is sequential by definition: the Python node is "
+        "the deliberate per-query applyInPandas over CANDIDATE-bounded "
+        "groups (broadcast candidate ids prune the corpus scan; |Q| x "
+        "n_candidates^2 work, corpus-size-free)"
+    ),
+    "retrieval_eval": (
+        "the Python node is retrieval_metrics' libm log2 over the "
+        "bounded hit/judgment relations"
     ),
     "bm25_join_rm3_indexed": (
         "batch-RM3 serving form: every pass reads pruned postings "
-        "buckets (the Arrow node is the libm ln shim); plan matches "
-        "bm25_join_indexed because pass two IS one weighted batch "
-        "probe — feedback passes run eagerly before this final plan"
+        "buckets; plan matches bm25_join_indexed because pass two IS "
+        "one weighted batch probe — feedback passes run eagerly "
+        "before this final plan"
     ),
     "bm25_join_prf_indexed": (
         "batch-PRF serving form: same pass structure as the RM3 twin "
@@ -94,8 +108,63 @@ _NOTES = {
     ),
 }
 
+# Every BM25 ranker collects its |terms|-row df aggregate at
+# construction and ships idf back as a literal, so that aggregate's
+# shuffle runs as a build-time job and is absent from these final
+# plans. The work moved; it was not removed.
+_DF_AT_BUILD = (
+    "df aggregate is a build-time collect (idf literal): its shuffle "
+    "moved out of this plan, not removed"
+)
+_BM25_ROWS = {
+    "bm25_topk", "bm25_topk_indexed", "bm25_topk_filtered",
+    "bm25_topk_prf", "bm25_topk_rm3", "bm25_join", "bm25_join_indexed",
+    "bm25_join_rm3", "bm25_join_rm3_indexed", "bm25_join_prf_indexed",
+    "retrieval_rerank", "retrieval_rerank_mmr", "retrieval_eval",
+    "hybrid_topk", "hybrid_topk_indexed", "hybrid_join",
+    "hybrid_join_indexed",
+}
+
+
+def _note(name: str) -> str:
+    parts = [_NOTES.get(name, "")]
+    if name in _BM25_ROWS:
+        parts.append(_DF_AT_BUILD)
+    return "; ".join(p for p in parts if p)
+
+
+def _auditable(name: str) -> bool:
+    return not (name.startswith("stream_") or name == "sessionize_stream")
+
+
+def capture(out_dir: str, tag: str, names: list[str]) -> None:
+    from spark_sorted_spark.queries import QUERIES
+    from spark_sorted_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("plan-capture")
+    spark.sparkContext.setLogLevel("ERROR")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names or [n for n in QUERIES if _auditable(n)]:
+        df = QUERIES[name](spark, sf_dir)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange mentions)")
+
 
 def main():
+    if sys.argv[1:2] == ["--capture"]:
+        if len(sys.argv) < 4:
+            raise SystemExit(
+                "usage: plan_audit.py --capture <dir> <tag> [query ...]"
+            )
+        capture(sys.argv[2], sys.argv[3], sys.argv[4:])
+        return
+
     from spark_sorted_spark.queries import QUERIES
     from spark_sorted_spark.session import get_spark
 
@@ -132,7 +201,7 @@ def main():
     print("|---|---|---|---|---|---|---|")
     skipped = []
     for name, fn in QUERIES.items():
-        if name.startswith("stream_") or name == "sessionize_stream":
+        if not _auditable(name):
             skipped.append(name)
             continue
         try:
@@ -145,7 +214,7 @@ def main():
         print(
             f"| {name} | {a['shuffles']} | {a['broadcasts']} | {a['sorts']} | "
             f"{'yes' if a['pushed'] else '—'} | {py} | "
-            f"{_NOTES.get(name, '')} |"
+            f"{_note(name)} |"
         )
     if skipped:
         print()
