@@ -4,7 +4,7 @@ one untimed warmup, then min over reps of the noop-forced body), with
 the same ambient steal%/load telemetry so a contended probe window is
 visible in the output.
 
-Usage: python tools/bench_probe.py <entry> [<entry> ...] [--reps N]
+Usage: python tools/bench_probe.py <entry> [<entry> ...] [--reps N | --reps=N]
 Env:   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as bench.py.
 Prints one JSON line: {"entries": {name: {"min": s, "all": [...],
 "steal_pct": p, "load1": l}}}.
@@ -20,14 +20,28 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _parse_args(argv: list[str]) -> tuple[list[str], int]:
+    """Split argv into entry names and the rep count; ``--reps N`` and
+    ``--reps=N`` are both accepted."""
+    args, reps = [], 3
+    it = iter(argv)
+    for a in it:
+        if a == "--reps":
+            val = next(it, None)
+            if val is None:
+                raise SystemExit("--reps needs a value")
+            reps = int(val)
+        elif a.startswith("--reps="):
+            reps = int(a.split("=", 1)[1])
+        else:
+            args.append(a)
+    return args, reps
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    reps = 3
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
-            reps = int(a.split("=")[1])
+    args, reps = _parse_args(sys.argv[1:])
     if not args:
-        raise SystemExit("usage: bench_probe.py <entry> [...] [--reps=N]")
+        raise SystemExit("usage: bench_probe.py <entry> [...] [--reps N]")
 
     import bench
     from spark_sorted_spark.session import get_spark
