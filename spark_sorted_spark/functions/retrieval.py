@@ -1,61 +1,85 @@
-"""Lexical retrieval: BM25 top-k over a document corpus.
+"""Lexical retrieval: BM25 ranking over a document corpus.
 
 The lexical complement to the embedding ANN surface
 (``functions/similarity.py``): the classic sparse-retrieval scorer
 (Robertson & Zaragoza 2009, "The Probabilistic Relevance Framework:
-BM25 and Beyond") as ONE relational job — no inverted-index service,
-the index IS the relational algebra:
+BM25 and Beyond") as relational jobs — no inverted-index service, the
+index IS the relational algebra:
 
     score(d, q) = sum_t idf(t) * tf(t,d) * (k1 + 1)
                   / (tf(t,d) + k1 * (1 - b + b * dl(d) / avgdl))
     idf(t)      = ln(1 + (N - df(t) + 0.5) / (df(t) + 0.5))
 
-Scale shape (the 100 TB argument):
+Every public ranker is a thin wrapper over ONE core, :func:`_bm25`:
 
-* the exploded token stream is FILTERED to the query's terms
-  immediately after the explode — the per-term postings are built for
-  the handful of query terms only, never for the vocabulary;
-* ``df(t)`` is a |terms|-row aggregate and joins back by broadcast;
-* ``N``/``sum(dl)`` are one column-pruned 2-scalar aggregate
-  (bounded-metadata collect, the repo-wide pattern);
-* the final top-k is ``ORDER BY score DESC LIMIT k`` — Catalyst
-  compiles it to TakeOrderedAndProject (per-partition top-k + driver
-  merge of k-row heaps), never a global sort materialization.
+* two postings sources, both yielding ``(tf relation, n_docs, sum_dl,
+  df rows)`` for a driver-side vocabulary — the corpus scan
+  (:func:`_scan_postings`: the exploded token stream is FILTERED to
+  the literal query vocabulary inside the scan stage, so postings are
+  built for the query terms only, never for the corpus vocabulary) and
+  the persisted index (:func:`_index_postings`: bucket-pruned postings
+  read, summed ``_bm25_stats`` rows, merged ``dft`` deltas);
+* one scorer holding the single contribution expression, the optional
+  per-term weight multiply and the strict term-ordered fold, finished
+  as ``ORDER BY score DESC LIMIT k`` for one query string (Catalyst
+  plans TakeOrderedAndProject: per-partition top-k + a k-row merge,
+  never a global sort) or as a per-query rank window for a batch;
+* one feedback step, :func:`_expand`, behind every PRF/RM3 form, fed
+  by either source's feedback-document postings;
+* one Reciprocal Rank Fusion, :func:`_rrf_fuse`, behind every hybrid
+  form.
 
-Float discipline: the idf's ``ln`` is evaluated on the |terms|-row
-df table through ``exactmath.ln_libm`` (bitwise the oracle's libm —
-JVM ``F.log`` rounds differently on ~4.4% of arguments); every other
-per-(doc, term) operation is a fixed-shape IEEE double expression
-over EXACT integers (tf, dl, df, N — avgdl enters as the exact
-integer pair sum_dl/N, divided inside the expression); and the
-per-document sum folds contributions in STRICT ascending-term order
-(array_sort + F.aggregate) — so the DuckDB oracle replays the floats
-bit-for-bit, same as the cosine and ln folds elsewhere in the repo.
+Float discipline: idf's ``ln`` runs driver-side through ``math.log``
+on the |terms|-row df table (the oracle's libm, bitwise — JVM
+``F.log`` rounds differently on ~4.4% of arguments; see
+``LIBM_FINGERPRINT.json``); every per-(doc, term) operation is a
+fixed-shape IEEE double expression over EXACT integers (tf, dl, df,
+N — avgdl enters as the exact integer pair sum_dl/N, divided inside
+the expression); and the per-document sum folds contributions in
+STRICT ascending-term order (array_sort + F.aggregate) — so the
+DuckDB oracle replays the floats bit-for-bit, same as the cosine and
+ln folds elsewhere in the repo.
 """
 
 from __future__ import annotations
 
+import hashlib
+import math
 import re as _re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .local_rows import local_rows_df as _local_rows_df
-from .text import tokens
+from .text import md5_int32, tokens
 
 # Driver-side bitwise twin of text.tokens() (= F.split(F.trim(c),
 # r"\s+")): Spark's trim strips 0x20 only, and Java's \s is the ASCII
 # class [ \t\n\x0B\f\r] (no unicode spaces) with limit=-1 keeping
 # leading/trailing empty strings — Python's str.split() differs on all
-# three, so the batch forms that enumerate query terms driver-side use
-# THIS to reproduce the relational explode(tokens(...)) exactly
-# (pinned against the relational form in tests/test_retrieval.py).
+# three, so query terms are enumerated through THIS to match the
+# corpus explode exactly (pinned against the relational form in
+# tests/test_retrieval.py).
 _JAVA_WS_RE = _re.compile(r"[ \t\n\x0B\f\r]+")
 
 
 def _tokens_py(text: str) -> list[str]:
     return _JAVA_WS_RE.split(text.strip(" "))
 
+
+def _query_terms(text: str) -> list[str]:
+    """The one query-term rule of every ranker: the corpus tokenizer's
+    driver twin minus the empty token, deduplicated (a repeated query
+    term counts once, the standard short-query form) and sorted."""
+    return sorted(set(_tokens_py(text)) - {""})
 
 
 __all__ = [
@@ -88,6 +112,473 @@ __all__ = [
 ]
 
 
+# ---------------------------------------------------------------------------
+# the ranker core: postings sources, scorer, feedback
+# ---------------------------------------------------------------------------
+
+
+def _corpus_stats(docs: DataFrame, text_col: str) -> DataFrame:
+    """The one corpus-stats aggregate, ``(n_docs, sum_dl)`` over the
+    tokenized text: scan rankers collect its single row, index builds
+    and appends persist it as their ``_bm25_stats`` row."""
+    return docs.select(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.size(tokens(text_col))).alias("sum_dl"),
+    )
+
+
+def _postings(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    vocab: list | None = None,
+    extra_cols=(),
+) -> DataFrame:
+    """``(id, tok, tf, dl, *extra_cols)`` postings: one explode per
+    document grouped per (doc, term) — the relation the index stores
+    and the scan rankers score. ``vocab`` filters the exploded stream
+    against a driver-side literal in the SAME codegen stage (no
+    vocabulary relation, no join, no distinct exchange)."""
+    toks = tokens(text_col)
+    occ = docs.select(
+        F.col(id_col),
+        F.size(toks).alias("dl"),
+        F.explode(toks).alias("tok"),
+        *[F.col(c) for c in extra_cols],
+    )
+    if vocab is not None:
+        occ = occ.filter(F.col("tok").isin(vocab))
+    return occ.groupBy(id_col, "tok").agg(
+        F.count(F.lit(1)).alias("tf"),
+        F.first("dl").alias("dl"),
+        *[F.first(c).alias(c) for c in extra_cols],
+    )
+
+
+def _scan_postings(docs, text_col, id_col, stats=None, where=None):
+    """Corpus-scan postings source: ``vocab -> (tf, n_docs, sum_dl,
+    df_rows)``, plus ``.feedback(ids)``, the (id, tok, tf) postings of
+    feedback documents. The stats scan runs once per source, so both
+    passes of a feedback ranker share it; ``stats=(n_docs, sum_dl)``
+    skips it (exact integers, so a matching pair is bitwise-neutral).
+    ``where`` restricts CANDIDATES only: df is counted on the
+    unfiltered postings, so idf/avgdl stay corpus-wide (the standard
+    filtered-search contract, and the index's ``where`` contract)."""
+    from .similarity import _apply_where
+
+    cache = []
+
+    def source(vocab):
+        if not cache:
+            if stats is not None:
+                n_docs, sum_dl = int(stats[0]), int(stats[1])
+                if n_docs <= 0 or sum_dl < 0:
+                    raise ValueError(f"invalid precomputed stats {stats!r}")
+            else:
+                st = _corpus_stats(docs, text_col).head()
+                # n_docs first — on an empty corpus sum_dl is NULL
+                n_docs = int(st.n_docs)
+                if n_docs == 0:
+                    raise ValueError("corpus is empty")
+                sum_dl = int(st.sum_dl)
+            cache.append((n_docs, sum_dl))
+        tf = _postings(docs, text_col, id_col, vocab)
+        # bounded-collect: |vocab| df rows
+        dfrows = tf.groupBy("tok").agg(F.count(F.lit(1))).collect()
+        if where is not None:
+            tf = tf.join(
+                _apply_where(docs, where).select(id_col), id_col, "left_semi"
+            )
+        return (tf, *cache[0], dfrows)
+
+    source.feedback = lambda ids: _postings(
+        docs.filter(F.col(id_col).isin(ids)), text_col, id_col
+    )
+    return source
+
+
+def _bucket(term: str, n_buckets: int) -> int:
+    """Driver twin of the build's ``pmod(md5_int32(tok), n_buckets)``."""
+    return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % n_buckets
+
+
+def _index_postings(spark, path, id_col, before_batch=None, where=None):
+    """Persisted-index postings source (same contract as
+    :func:`_scan_postings`), never touching corpus text: the one-row
+    ``_bm25_meta`` and the summed per-batch ``_bm25_stats`` rows are
+    read once per source; each vocabulary reads only its terms'
+    ``tok_bucket`` directories (planning-time partition pruning) of
+    the postings and of the ``dft`` store, whose per-append deltas are
+    summed for these terms only. ``where`` evaluates inside the pruned
+    postings scan (over the index's stored ``extra_cols``); df comes
+    from the ``dft`` store, so statistics stay corpus-wide.
+    ``before_batch`` fences every read to the pre-append state.
+    ``.feedback(ids)`` reads feedback documents' postings: not
+    bucket-pruned (a document's terms span all buckets — the
+    inverted-index-without-forward-index trade), id filter pushed to
+    parquet."""
+    from ..sources.manifest import resolve_root
+    from .similarity import _apply_where, _before_batch
+
+    cache = []
+
+    def meta():
+        if not cache:
+            root = resolve_root(spark, path)
+            # bounded-collect: one parameter row from the index metadata
+            n_buckets = int(
+                spark.read.parquet(f"{root}/_bm25_meta").collect()[0][0]
+            )
+            stats = _before_batch(
+                spark.read.parquet(f"{root}/_bm25_stats"), before_batch
+            )
+            # bounded-collect: the summed corpus scalars (one row per
+            # batch partition pre-sum — batch count, not corpus, sized)
+            st = stats.agg(
+                F.sum("n_docs").alias("n_docs"),
+                F.sum("sum_dl").alias("sum_dl"),
+            ).collect()[0]
+            if st.n_docs is None:
+                raise ValueError(f"index at {root!r} holds no stats rows")
+            cache.append((root, n_buckets, int(st.n_docs), int(st.sum_dl)))
+        return cache[0]
+
+    def source(vocab):
+        root, n_buckets, n_docs, sum_dl = meta()
+        buckets = sorted({_bucket(t, n_buckets) for t in vocab})
+
+        def read(table):
+            return _before_batch(
+                spark.read.parquet(f"{root}/{table}")
+                .filter(F.col("tok_bucket").isin(buckets))
+                .filter(F.col("tok").isin(vocab)),
+                before_batch,
+            )
+
+        # bounded-collect: |vocab| merged df rows
+        dfrows = read("dft").groupBy("tok").agg(F.sum("df")).collect()
+        return _apply_where(read("postings"), where), n_docs, sum_dl, dfrows
+
+    source.feedback = lambda ids: _before_batch(
+        spark.read.parquet(f"{meta()[0]}/postings"), before_batch
+    ).filter(F.col(id_col).isin(ids))
+    return source
+
+
+def _idf_literal(spark, df_rows, n_docs: int) -> DataFrame:
+    """(tok, idf) literal relation from driver-side ``(term, df)``
+    rows: ``idf = ln(1 + (N - df + 0.5) / (df + 0.5))`` through
+    Python's ``math.log`` — the glibc libm call the oracle makes, on an
+    argument computed in IEEE-754 doubles in the oracle's operation
+    order (``+ - /`` are exactly specified and ``df < 2^53`` casts
+    exactly), so every idf is bitwise the oracle's. The df table is
+    |terms|-row, so the ln costs nothing driver-side and needs no
+    Python-worker node."""
+    n = float(n_docs)
+    rows = [
+        (t, math.log(1.0 + (((n - float(df)) + 0.5) / (float(df) + 0.5))))
+        for t, df in df_rows
+    ]
+    return _local_rows_df(spark, rows, "tok string, __idf double")
+
+
+def _bm25(source, qrows, k, k1, b, id_col, query_id_col=None, qid_type=None):
+    """THE BM25 ranker. ``qrows`` are driver-side ``(query_key, term,
+    weight)`` rows — weight ``None`` for unweighted terms; one query
+    string passes ``query_id_col=None`` (its keys are ignored) and gets
+    the ``ORDER BY score DESC, id LIMIT k`` finish, which Catalyst
+    plans as TakeOrderedAndProject, returning ``(id, score,
+    n_terms_matched)``; a batch gets each query's top ``k`` by a rank
+    window over the query partitioning (per-partition state is one
+    query's candidates, spilled by WindowExec if a query matches half
+    the corpus), returning ``(query_id, id, score, n_terms_matched,
+    rank)``. Only documents matching at least one term can score; the
+    id is the deterministic tiebreak.
+
+    Eager, snapshot-idf contract, shared by every public ranker:
+    construction runs ``source``'s corpus-stats and df collects
+    (|vocabulary|-row bounded), and the returned DataFrame carries idf
+    and avgdl as literals fixed as of construction. Executing it later
+    re-reads the postings but keeps those statistics; build a new
+    ranker to see a changed corpus or index.
+
+    A weighted term contributes ``w * (idf * saturation)`` — the weight
+    multiplies the WHOLE contribution once, so unweighted scores are
+    untouched by the weighted path and every weighted form (single or
+    batch, scan or index) is operand-for-operand the same."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if not (k1 > 0 and 0.0 <= b <= 1.0):
+        raise ValueError(f"need k1 > 0 and 0 <= b <= 1, got k1={k1} b={b}")
+    vocab = sorted({t for _, t, _ in qrows})
+    if not vocab:
+        raise ValueError(
+            "query has no terms" if query_id_col is None
+            else "query batch has no terms"
+        )
+    tf, n_docs, sum_dl, dfrows = source(vocab)
+    spark = tf.sparkSession
+    weighted = qrows[0][2] is not None
+    keys = [id_col] if query_id_col is None else [query_id_col, id_col]
+    contrib = tf.join(F.broadcast(_idf_literal(spark, dfrows, n_docs)), "tok")
+    if query_id_col is not None or weighted:
+        # the (query, term[, weight]) table: workload-bounded, joined
+        # back as an explicit broadcast
+        fields = [StructField("tok", StringType())]
+        if query_id_col is not None:
+            fields.insert(0, StructField(query_id_col, qid_type))
+        if weighted:
+            fields.append(StructField("__w", DoubleType()))
+        rows = [
+            ((q,) if query_id_col is not None else ())
+            + (t,)
+            + ((w,) if weighted else ())
+            for q, t, w in qrows
+        ]
+        contrib = contrib.join(
+            F.broadcast(_local_rows_df(spark, rows, StructType(fields))), "tok"
+        )
+    c = (
+        F.col("__idf")
+        * (F.col("tf") * F.lit(float(k1) + 1.0))
+        / (
+            F.col("tf")
+            + F.lit(float(k1))
+            * (
+                F.lit(1.0 - float(b))
+                + F.lit(float(b))
+                * F.col("dl")
+                / (F.lit(float(sum_dl)) / F.lit(float(n_docs)))
+            )
+        )
+    )
+    if weighted:
+        c = F.col("__w") * c
+    scored = (
+        contrib.select(*keys, "tok", c.alias("__c"))
+        .groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias("n_terms_matched"),
+            F.array_sort(F.collect_list(F.struct("tok", "__c"))).alias("__cs"),
+        )
+        .select(
+            *keys,
+            F.aggregate(
+                F.col("__cs"), F.lit(0.0), lambda acc, s: acc + s["__c"]
+            ).alias("score"),
+            "n_terms_matched",
+        )
+    )
+    order = [F.col("score").desc(), F.col(id_col).asc()]
+    if query_id_col is None:
+        return scored.orderBy(*order).limit(int(k))
+    w = Window.partitionBy(query_id_col).orderBy(*order)
+    return scored.withColumn(
+        "rank", F.row_number().over(w).cast("bigint")
+    ).filter(F.col("rank") <= k)
+
+
+def _single_rows(query: str, weights: dict | None) -> list:
+    """Core rows of one query string, or of a ``{term: w}`` weighted
+    query (the term set is then the weight keys)."""
+    weights = dict(weights) if weights else None
+    if weights is None:
+        return [(None, t, None) for t in _query_terms(query)]
+    # not (w > 0) instead of w <= 0: NaN compares False BOTH ways, so
+    # the naive form would let a NaN weight poison every contribution
+    if any(not (w > 0) for w in weights.values()):
+        raise ValueError("weights must be positive")
+    return [(None, t, float(w)) for t, w in sorted(weights.items())]
+
+
+def _collect_query_texts(queries, query_id_col, query_text_col, strict=True):
+    """The batch front door: collect ``(query_id, text)`` and map each
+    id to its sorted query terms. ``strict`` (the feedback forms,
+    whose contract is "identical to looping the single form") rejects
+    an empty batch, duplicate ids and term-less texts loudly; the
+    plain batch rankers merge duplicate ids' terms and skip NULL
+    texts."""
+    # bounded-collect: the query batch texts — the retrieval workload
+    qrows = queries.select(F.col(query_id_col), F.col(query_text_col)).collect()
+    if strict:
+        if not qrows:
+            raise ValueError("query batch is empty")
+        if len({r[0] for r in qrows}) != len(qrows):
+            raise ValueError("duplicate query ids in the batch")
+    out: dict = {}
+    for q, text in qrows:
+        terms = _query_terms(text) if text is not None else []
+        if strict and not terms:
+            raise ValueError(f"query {q!r} has no terms")
+        out.setdefault(q, set()).update(terms)
+    return {q: sorted(ts) for q, ts in out.items()}
+
+
+def _batch_rows(queries, weights, query_id_col, query_text_col):
+    """Core rows (and the query-id type) of a batch: the query texts,
+    or — for weighted batch BM25 — the ``(query_id_col, term, weight)``
+    relation, validated driver-side on the collected workload."""
+    if weights is None:
+        texts = _collect_query_texts(
+            queries, query_id_col, query_text_col, strict=False
+        )
+        rows = [(q, t, None) for q, ts in texts.items() for t in ts]
+        return rows, queries.schema[query_id_col].dataType
+    wsel = weights.select(
+        F.col(query_id_col), F.col("term"), F.col("weight").cast("double")
+    )
+    # bounded-collect: |Q| x terms weight rows — the weighted workload
+    rows = [(r[0], r[1], r[2]) for r in wsel.collect()]
+    if not rows:
+        raise ValueError("weights relation is empty")
+    if any(w is None or not (w > 0) for _, _, w in rows):
+        raise ValueError("weights must be positive")
+    # NULL-containing pairs never count as distinct, so a null query id
+    # or term trips the duplicate check too
+    pairs = {(q, t) for q, t, _ in rows if q is not None and t is not None}
+    if len(pairs) != len(rows):
+        raise ValueError("duplicate (query, term) rows in weights")
+    return rows, weights.schema[query_id_col].dataType
+
+
+def _expand(orig, fb_counts, fb_terms, lam, key_col, key_type):
+    """The one feedback step. ``orig`` maps each query key to its
+    sorted terms; ``fb_counts`` is the ``(key, tok, __n)`` occurrence
+    count of each query's feedback documents (``None`` when pass one
+    retrieved nothing). Each query keeps the ``fb_terms`` most
+    frequent tokens outside its own terms (count DESC, token ASC —
+    exact integers, a window per query) plus its own terms' counts.
+
+    ``lam=None`` is binary PRF: the expanded term list. Otherwise RM3
+    (Abdul-Jaleel et al., TREC 2004) ``{term: weight}``: the feedback
+    mass is truncated to the kept vocabulary, renormalized over it and
+    mixed with the query's uniform model,
+
+        w(t) = lam * 1[t in q]/|q|  +  (1-lam) * count_fb(t)/total_kept
+
+    where ``total_kept`` sums the KEPT counts only, so the feedback
+    component always carries its full (1-lam) mass whatever the
+    feedback documents' length. Every weight is a Python float built
+    from exact integer counts by the +*/ sequence a SQL replay
+    performs."""
+    kept: dict = {q: {} for q in orig}
+    if fb_counts is not None:
+        orig_df = _local_rows_df(
+            fb_counts.sparkSession,
+            [(q, t) for q, ts in orig.items() for t in ts],
+            StructType(
+                [StructField(key_col, key_type), StructField("tok", StringType())]
+            ),
+        )
+        w = Window.partitionBy(key_col).orderBy(
+            F.col("__n").desc(), F.col("tok").asc()
+        )
+        top = (
+            fb_counts.join(F.broadcast(orig_df), [key_col, "tok"], "left_anti")
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= int(fb_terms))
+            .select(key_col, "tok", "__n")
+        )
+        own = fb_counts.join(F.broadcast(orig_df), [key_col, "tok"], "left_semi")
+        # bounded-collect: <= |Q| x (fb_terms + |q|) kept-count rows
+        for r in top.unionByName(own).collect():
+            kept[r[0]][r[1]] = int(r[2])
+    out: dict = {}
+    for q, ts in orig.items():
+        counts = kept[q]
+        if lam is None:
+            out[q] = sorted(set(ts) | set(counts))
+            continue
+        own_terms, nq = set(ts), len(ts)
+        total_kept = sum(counts.values())
+        weights = {}
+        for t in sorted(own_terms | set(counts)):
+            w_orig = lam * (1.0 / nq) if t in own_terms else 0.0
+            w_fb = (
+                (1.0 - lam) * (counts.get(t, 0) / total_kept)
+                if total_kept
+                else 0.0
+            )
+            if w_orig + w_fb > 0:
+                weights[t] = w_orig + w_fb
+        out[q] = weights
+    return out
+
+
+def _feedback(
+    source, orig, fb_docs, fb_terms, lam, k1, b, id_col,
+    query_id_col=None, qid_type=None,
+):
+    """Pass one of every PRF/RM3 form: rank ``orig`` (``{key:
+    terms}``; one key for a single query string) for its top
+    ``fb_docs`` documents, count their tokens from ``source``'s
+    feedback postings (``tf`` summed per query and token — exact
+    integers, equal to the explode-and-count of the text), and
+    :func:`_expand`. Driver traffic is workload-bounded: |Q| x fb_docs
+    feedback pairs and |Q| x (fb_terms + |q|) kept counts."""
+    if fb_docs < 1:
+        raise ValueError(f"fb_docs must be >= 1, got {fb_docs}")
+    if fb_terms < 1:
+        raise ValueError(f"fb_terms must be >= 1, got {fb_terms}")
+    if lam is not None and not 0.0 <= lam <= 1.0:
+        raise ValueError(f"lam must be in [0, 1], got {lam}")
+    qrows = [(q, t, None) for q, ts in orig.items() for t in ts]
+    first = _bm25(source, qrows, fb_docs, k1, b, id_col, query_id_col, qid_type)
+    if query_id_col is None:
+        key_col, key_type, (key,) = "__q", LongType(), orig
+        # bounded-collect: fb_docs ids (pass one's TakeOrdered output)
+        pairs = [(key, r[0]) for r in first.select(id_col).collect()]
+    else:
+        key_col, key_type = query_id_col, qid_type
+        # bounded-collect: |Q| x fb_docs feedback pairs (rank window)
+        pairs = [tuple(r) for r in first.select(query_id_col, id_col).collect()]
+    fb_counts = None
+    if pairs:
+        posts = source.feedback(sorted({p[1] for p in pairs}))
+        pair_df = _local_rows_df(
+            posts.sparkSession,
+            pairs,
+            StructType(
+                [
+                    StructField(key_col, key_type),
+                    StructField(id_col, posts.schema[id_col].dataType),
+                ]
+            ),
+        )
+        fb_counts = (
+            posts.select(id_col, "tok", "tf")
+            .join(F.broadcast(pair_df), id_col)
+            .groupBy(key_col, "tok")
+            .agg(F.sum("tf").cast("bigint").alias("__n"))
+        )
+    return _expand(orig, fb_counts, fb_terms, lam, key_col, key_type)
+
+
+def _two_pass(
+    source, orig, k, fb_docs, fb_terms, lam, k1, b, id_col,
+    query_id_col=None, qid_type=None,
+):
+    """Feedback ranking: :func:`_feedback`, then rank the expanded
+    (``lam=None``) or RM3-weighted terms with the same source, so both
+    passes share its corpus statistics."""
+    exp = _feedback(
+        source, orig, fb_docs, fb_terms, lam, k1, b, id_col,
+        query_id_col, qid_type,
+    )
+    rows = [
+        (q, t, None if lam is None else e[t]) for q, e in exp.items() for t in e
+    ]
+    # RM3 at lam=0 leaves no weights for a query whose pass one found
+    # nothing; its unweighted terms then match nothing either
+    rows = rows or [(q, t, None) for q, ts in orig.items() for t in ts]
+    return _bm25(source, rows, k, k1, b, id_col, query_id_col, qid_type)
+
+
+# ---------------------------------------------------------------------------
+# scan-form rankers
+# ---------------------------------------------------------------------------
+
+
 def bm25_topk(
     df: DataFrame,
     query: str,
@@ -100,16 +591,16 @@ def bm25_topk(
     where=None,
     weights: dict | None = None,
 ) -> DataFrame:
-    """Top-``k`` documents by BM25 score for ``query`` (whitespace
-    tokenization, the corpus-wide ``tokens`` rule; duplicate query
-    terms count once, the standard short-query form). Only documents
-    matching at least one term can score — the returned relation is
-    ``(id, score, n_terms_matched)``, score-descending with the id as
-    the deterministic tiebreak.
+    """Top-``k`` documents by BM25 score for ``query`` (terms by the
+    corpus-wide ``tokens`` rule; duplicate query terms count once, the
+    standard short-query form). Only documents matching at least one
+    term can score — the returned relation is ``(id, score,
+    n_terms_matched)``, score-descending with the id as the
+    deterministic tiebreak. Eager, snapshot-idf: see :func:`_bm25`.
 
     ``stats=(n_docs, sum_dl)`` lets pipeline callers who already
-    scanned the corpus skip the second stats scan this definitional
-    form otherwise pays (the values are exact integers, so a caller-
+    scanned the corpus skip the stats scan this definitional form
+    otherwise pays (the values are exact integers, so a caller-
     supplied pair that matches the derived one is bitwise-neutral —
     pinned in tests); the persisted-index probes amortize it for
     everyone else.
@@ -128,176 +619,10 @@ def bm25_topk(
     ignored for term extraction. Weights enter as exact literals and
     multiply each contribution once, so the scoring stays
     oracle-replayable."""
-    from .similarity import _apply_where
-
-    weights = dict(weights) if weights else None
-    if weights is not None:
-        terms = sorted(weights)
-        # not (w > 0) instead of w <= 0: NaN compares False BOTH ways,
-        # so the naive form would let a NaN weight silently poison
-        # every contribution (ADVICE r11)
-        if any(not (w > 0) for w in weights.values()):
-            raise ValueError("weights must be positive")
-    else:
-        terms = sorted(set(query.split()))
-    if not terms:
-        raise ValueError("query has no terms")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not (k1 > 0 and 0.0 <= b <= 1.0):
-        raise ValueError(f"need k1 > 0 and 0 <= b <= 1, got k1={k1} b={b}")
-
-    # one corpus scan for the postings: per-doc length + the doc's
-    # occurrences of QUERY terms only (the filter sits directly on the
-    # exploded stream — nothing vocabulary-sized is ever aggregated)
-    toks = tokens(text_col)
-    occ = (
-        df.select(
-            F.col(id_col),
-            F.size(toks).alias("__dl"),
-            F.explode(toks).alias("__tok"),
-        )
-        .filter(F.col("__tok").isin(terms))
+    return _bm25(
+        _scan_postings(df, text_col, id_col, stats, where),
+        _single_rows(query, weights), k, k1, b, id_col,
     )
-    tf = occ.groupBy(id_col, "__tok").agg(
-        F.count(F.lit(1)).alias("__tf"), F.first("__dl").alias("__dl")
-    )
-
-    if stats is not None:
-        n_docs, sum_dl = int(stats[0]), int(stats[1])
-        if n_docs <= 0 or sum_dl < 0:
-            raise ValueError(f"invalid precomputed stats {stats!r}")
-    else:
-        # corpus stats: bounded 2-scalar collect (column-pruned scan).
-        # n_docs first — on an empty corpus sum_dl is NULL, so
-        # converting it before the emptiness check would raise
-        # TypeError (ADVICE r10)
-        st = df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.size(toks)).alias("sum_dl"),
-        ).head()
-        n_docs = int(st.n)
-        if n_docs == 0:
-            raise ValueError("corpus is empty")
-        sum_dl = int(st.sum_dl)
-
-    # per-term document frequency: |terms|-row relation, collected and
-    # turned into a (term, idf) broadcast LITERAL. The idf's ln runs
-    # driver-side through math.log — the same libm call the former
-    # ln_libm pandas UDF made (bitwise; JVM F.log disagrees on ~4.4%
-    # of arguments — functions/exactmath.py), so this removes the
-    # ArrowEvalPython node and its broadcast-build job (round 16,
-    # guide §4) without touching a single output bit. The df aggregate
-    # is the same extra corpus pass Catalyst already planned for the
-    # broadcast build (it prunes the tf aggregate differently, so the
-    # exchange was never reused); bounded-collect: |terms| rows.
-    dfrows = [
-        (r[0], int(r[1]))
-        for r in tf.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df")).collect()
-    ]
-    df_t = _idf_literal(df.sparkSession, dfrows, n_docs, "__tok")
-
-    # filtered retrieval: restrict CANDIDATES to qualifying docs
-    # (semi-join against the filtered id set) AFTER df_t derived from
-    # the unfiltered postings — collection statistics stay global,
-    # matching the indexed probe's where (df comes from the dft store)
-    if where is not None:
-        tf = tf.join(
-            _apply_where(df, where).select(id_col), id_col, "left_semi"
-        )
-    if weights is not None:
-        # per-term boost rides the |terms|-row idf table; the weight
-        # multiplies the WHOLE contribution (w * (idf * sat)) so the
-        # unweighted expression — and every existing oracle — is
-        # untouched when weights is None
-        wdf = _local_rows_df(df.sparkSession,
-            [(t, float(w)) for t, w in sorted(weights.items())],
-            "__tok string, __w double",
-        )
-        df_t = df_t.join(F.broadcast(wdf), "__tok")
-    base_c = (
-        F.col("__idf")
-        * (F.col("__tf") * F.lit(float(k1) + 1.0))
-        / (
-            F.col("__tf")
-            + F.lit(float(k1))
-            * (
-                F.lit(1.0 - float(b))
-                + F.lit(float(b))
-                * F.col("__dl")
-                / (F.lit(float(sum_dl)) / F.lit(float(n_docs)))
-            )
-        )
-    )
-    contrib = tf.join(F.broadcast(df_t), "__tok").select(
-        F.col(id_col),
-        F.col("__tok"),
-        (base_c if weights is None else F.col("__w") * base_c).alias("__c"),
-    )
-    scored = (
-        contrib.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_matched"),
-            F.array_sort(
-                F.collect_list(F.struct("__tok", "__c"))
-            ).alias("__cs"),
-        )
-        .select(
-            id_col,
-            F.aggregate(
-                F.col("__cs"), F.lit(0.0), lambda acc, s: acc + s["__c"]
-            ).alias("score"),
-            "n_terms_matched",
-        )
-    )
-    # TakeOrderedAndProject: per-partition top-k + driver k-heap merge
-    return scored.orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    ).limit(int(k))
-
-
-def _idf_literal(spark, df_rows, n_docs: int, tok_name: str):
-    """(term, idf) literal relation from driver-side ``(term, df)``
-    rows: ``idf = ln(1 + (N - df + 0.5) / (df + 0.5))`` evaluated with
-    Python's ``math.log`` — the SAME glibc libm call ``ln_libm``'s
-    pandas UDF made, on an argument computed in IEEE-754 doubles in
-    the same operation order as the former Catalyst expression
-    (``+ - /`` are exactly specified and ``df < 2^53`` casts exactly),
-    so every idf is bitwise-identical to the ArrowEvalPython form this
-    replaces. The round-16 point (guide §4): the df table is
-    |terms|-row — workload-bounded — and the terms are already
-    enumerated driver-side by every caller, so the Python-worker
-    round trip (one ArrowEvalPython node + its broadcast build per
-    retrieval pass) buys nothing; collect the tiny aggregate, do the
-    ln on the driver, ship the result back as a broadcast literal."""
-    import math
-
-    n = float(n_docs)
-    rows = [
-        (
-            t,
-            math.log(1.0 + (((n - float(df)) + 0.5) / (float(df) + 0.5))),
-        )
-        for t, df in df_rows
-    ]
-    return _local_rows_df(spark, rows, f"{tok_name} string, __idf double")
-
-
-def _corpus_stats(docs: DataFrame, text_col: str) -> tuple:
-    """One bounded 2-scalar corpus-stats scan — EXACTLY the aggregate
-    :func:`bm25_topk` derives internally (count + sum of tokenized
-    lengths), factored out so two-pass wrappers pay it ONCE and thread
-    it through both passes via the bitwise-neutral ``stats=`` contract
-    (round-15: each pass otherwise re-tokenized the whole corpus for
-    the same two integers — guide §1.4/§2.4)."""
-    st = docs.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.size(tokens(text_col))).alias("sum_dl"),
-    ).head()
-    n_docs = int(st.n)
-    if n_docs == 0:
-        raise ValueError("corpus is empty")
-    return n_docs, int(st.sum_dl)
 
 
 def expand_query_prf(
@@ -325,36 +650,14 @@ def expand_query_prf(
 
     Scale shape: pass one is :func:`bm25_topk` (scale-safe top-k);
     the feedback ids are a bounded workload-sized collect; the term
-    count is one explode over ``fb_docs`` documents ONLY (id-pruned
-    scan), top-``fb_terms`` via TakeOrderedAndProject. ``where``
-    scopes pass one AND the feedback docs (filtered retrieval's
-    contract carries through)."""
-    if fb_docs < 1:
-        raise ValueError(f"fb_docs must be >= 1, got {fb_docs}")
-    if fb_terms < 1:
-        raise ValueError(f"fb_terms must be >= 1, got {fb_terms}")
-    terms = sorted(set(query.split()))
-    first = bm25_topk(
-        docs, query, k=fb_docs, k1=k1, b=b,
-        text_col=text_col, id_col=id_col, where=where, stats=stats,
+    count reads the ``fb_docs`` documents ONLY (id-pruned scan).
+    ``where`` scopes pass one AND therefore the feedback docs
+    (filtered retrieval's contract carries through)."""
+    exp = _feedback(
+        _scan_postings(docs, text_col, id_col, stats, where),
+        {0: _query_terms(query)}, fb_docs, fb_terms, None, k1, b, id_col,
     )
-    # bounded-collect: fb_docs ids — the feedback set is k-sized by
-    # construction (pass one's TakeOrdered output)
-    fb_ids = [r[0] for r in first.select(id_col).collect()]
-    if not fb_ids:
-        return " ".join(terms)
-    fb_counts = (
-        docs.filter(F.col(id_col).isin(fb_ids))
-        .select(F.explode(tokens(text_col)).alias("__tok"))
-        .filter(~F.col("__tok").isin(terms))
-        .groupBy("__tok")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .orderBy(F.col("__n").desc(), F.col("__tok").asc())
-        .limit(int(fb_terms))
-    )
-    # bounded-collect: fb_terms rows (TakeOrdered output)
-    new_terms = [r[0] for r in fb_counts.collect()]
-    return " ".join(sorted(set(terms) | set(new_terms)))
+    return " ".join(exp[0])
 
 
 def rm3_expand(
@@ -372,71 +675,19 @@ def rm3_expand(
 ) -> dict:
     """RM3 query expansion with WEIGHTS (Abdul-Jaleel et al., TREC
     2004 — the weighted upgrade of :func:`expand_query_prf`'s binary
-    form): the relevance model's term mass is estimated from the
-    top-``fb_docs`` feedback set, TRUNCATED to the kept vocabulary,
-    renormalized over it (the standard RM3 truncate-then-renormalize
-    step), and mixed with the original query's uniform model,
-
-        w(t) = lam * 1[t in q]/|q|  +  (1-lam) * count_fb(t)/total_kept
-
-    where the kept vocabulary is the union of the original terms and
-    the ``fb_terms`` most frequent non-query feedback tokens, and
-    ``total_kept`` sums the feedback counts of the KEPT terms only —
-    so the feedback component always carries its full (1-lam) mass
-    regardless of feedback-document length. Returns ``{term: weight}``
-    for :func:`bm25_topk(weights=...)`. Every weight is a Python
-    float built from exact integer counts by the same +*/ sequence a
-    SQL replay performs, so the downstream scoring stays
+    form; the weight formula is :func:`_expand`'s): the relevance
+    model's term mass is estimated from the top-``fb_docs`` feedback
+    set, TRUNCATED to the kept vocabulary (the original terms plus the
+    ``fb_terms`` most frequent non-query feedback tokens), renormalized
+    over it, and mixed with the original query's uniform model.
+    Returns ``{term: weight}`` for :func:`bm25_topk(weights=...)`,
     oracle-replayable. Same bounded-collect shape as the binary
-    form (feedback ids and term counts are TakeOrdered outputs)."""
-    if fb_docs < 1:
-        raise ValueError(f"fb_docs must be >= 1, got {fb_docs}")
-    if fb_terms < 1:
-        raise ValueError(f"fb_terms must be >= 1, got {fb_terms}")
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam must be in [0, 1], got {lam}")
-    terms = sorted(set(query.split()))
-    first = bm25_topk(
-        docs, query, k=fb_docs, k1=k1, b=b,
-        text_col=text_col, id_col=id_col, where=where, stats=stats,
+    form."""
+    exp = _feedback(
+        _scan_postings(docs, text_col, id_col, stats, where),
+        {0: _query_terms(query)}, fb_docs, fb_terms, lam, k1, b, id_col,
     )
-    # bounded-collect: fb_docs ids (pass one's TakeOrdered output)
-    fb_ids = [r[0] for r in first.select(id_col).collect()]
-    fb_counts: dict = {}
-    if fb_ids:
-        all_counts = (
-            docs.filter(F.col(id_col).isin(fb_ids))
-            .select(F.explode(tokens(text_col)).alias("__tok"))
-            .groupBy("__tok")
-            .agg(F.count(F.lit(1)).alias("__n"))
-        )
-        keep = (
-            all_counts.filter(~F.col("__tok").isin(terms))
-            .orderBy(F.col("__n").desc(), F.col("__tok").asc())
-            .limit(int(fb_terms))
-            .unionByName(all_counts.filter(F.col("__tok").isin(terms)))
-        )
-        # bounded-collect: <= fb_terms + |q| count rows (TakeOrdered
-        # union the query's own terms)
-        fb_counts = {r[0]: int(r[1]) for r in keep.collect()}
-    # renormalizer over the KEPT vocabulary only (RM3's truncate-then-
-    # renormalize; ADVICE r11 — dividing by ALL feedback tokens would
-    # dampen expansion as feedback documents get longer). Exact
-    # integer sum of the already-collected kept counts — no extra scan.
-    total_kept = sum(fb_counts.values())
-    out: dict = {}
-    nq = len(terms)
-    for t in sorted(set(terms) | set(fb_counts)):
-        w_orig = lam * (1.0 / nq) if t in terms else 0.0
-        w_fb = (
-            (1.0 - lam) * (fb_counts.get(t, 0) / total_kept)
-            if total_kept
-            else 0.0
-        )
-        w = w_orig + w_fb
-        if w > 0:
-            out[t] = w
-    return out
+    return exp[0]
 
 
 def bm25_topk_rm3(
@@ -456,17 +707,10 @@ def bm25_topk_rm3(
     weighted-query :func:`bm25_topk` — the full RM3 composition
     (weights are exact-integer-derived literals, pinned against a
     DuckDB replay of both passes in tests). The corpus stats scan
-    runs ONCE and threads through both passes (bitwise-neutral by the
-    ``stats=`` contract)."""
-    stats = _corpus_stats(docs, text_col)
-    w = rm3_expand(
-        docs, query, fb_docs=fb_docs, fb_terms=fb_terms, lam=lam,
-        k1=k1, b=b, text_col=text_col, id_col=id_col, where=where,
-        stats=stats,
-    )
-    return bm25_topk(
-        docs, query, k=k, k1=k1, b=b, text_col=text_col,
-        id_col=id_col, where=where, weights=w, stats=stats,
+    runs ONCE and serves both passes."""
+    return _two_pass(
+        _scan_postings(docs, text_col, id_col, where=where),
+        {0: _query_terms(query)}, k, fb_docs, fb_terms, lam, k1, b, id_col,
     )
 
 
@@ -482,21 +726,15 @@ def bm25_topk_prf(
     id_col: str = "doc_id",
     where=None,
 ) -> DataFrame:
-    """Two-pass BM25 with pseudo-relevance feedback: expand via
+    """Two-pass BM25 with pseudo-relevance feedback: expand as
     :func:`expand_query_prf`, then score the expanded query with the
-    ordinary :func:`bm25_topk` (same float discipline — the expansion
-    layer is all exact-integer selection, so the whole composition
-    stays oracle-replayable; pinned against a DuckDB replay in
-    tests). The corpus stats scan runs ONCE and threads through both
-    passes (bitwise-neutral by the ``stats=`` contract)."""
-    stats = _corpus_stats(docs, text_col)
-    expanded = expand_query_prf(
-        docs, query, fb_docs=fb_docs, fb_terms=fb_terms, k1=k1, b=b,
-        text_col=text_col, id_col=id_col, where=where, stats=stats,
-    )
-    return bm25_topk(
-        docs, expanded, k=k, k1=k1, b=b,
-        text_col=text_col, id_col=id_col, where=where, stats=stats,
+    ordinary :func:`bm25_topk` (the expansion layer is all
+    exact-integer selection, so the whole composition stays
+    oracle-replayable; pinned against a DuckDB replay in tests). The
+    corpus stats scan runs ONCE and serves both passes."""
+    return _two_pass(
+        _scan_postings(docs, text_col, id_col, where=where),
+        {0: _query_terms(query)}, k, fb_docs, fb_terms, None, k1, b, id_col,
     )
 
 
@@ -519,11 +757,12 @@ def bm25_join(
     and keep each query's top ``k`` (the shape of RAG candidate
     generation, lexical decontamination sweeps, and eval-set retrieval
     at corpus scale, where looping ``bm25_topk`` would re-scan the
-    corpus per query). Duplicate terms within a query count once
-    (same short-query form as bm25_topk).
+    corpus per query). Per-query output equals ``bm25_topk`` on that
+    query's text (same term rule, same statistics — pinned).
 
     Returns ``(query_id, id, score, n_terms_matched, rank)`` with
-    rank 1..k per query (score DESC, id tiebreak).
+    rank 1..k per query (score DESC, id tiebreak). Eager,
+    snapshot-idf: see :func:`_bm25`.
 
     Scale shape: the query batch is collected driver-side (bounded —
     the retrieval WORKLOAD, the same contract as
@@ -531,254 +770,31 @@ def bm25_join(
     and the corpus explode is filtered against the literal batch
     vocabulary INSIDE the scan stage — the corpus is scanned once
     regardless of |queries|, with no vocabulary relation, no join and
-    no distinct exchanges (round-15: the former relational form let
-    the planner BROADCAST the corpus token stream — built by one
-    single-threaded task — against the unestimatable vocabulary side;
-    guide §2.4/§3.1). df(t) aggregates over matched postings only;
-    idf's ln runs on that |terms|-row table via ln_libm; the per-term
-    idf and (query, term) tables join back as explicit broadcasts.
-    Per-query top-k is a window over the query partitioning —
-    per-partition state is one query's candidates, spilled by
-    WindowExec if a query matches half the corpus. A million-term
-    query batch is the point where chunk-and-union (per-query
-    independence makes it semantics-free) beats one literal IN-set.
-    Floats: same discipline as bm25_topk (libm idf, fixed-shape
-    contributions, strict (term)-ordered per-(query, doc) fold) — the
-    DuckDB oracle replays bit-for-bit. ``stats=(n_docs, sum_dl)``
-    skips the stats scan as in :func:`bm25_topk`; ``where`` is
-    filtered retrieval with the same contract (candidates restricted,
-    collection statistics corpus-wide).
+    no distinct exchanges. A million-term query batch is the point
+    where chunk-and-union (per-query independence makes it
+    semantics-free) beats one literal IN-set. ``stats`` and ``where``
+    are :func:`bm25_topk`'s.
 
     ``weights`` is WEIGHTED-QUERY batch BM25 — the R-S twin of
     :func:`bm25_topk(weights=...)`: a relation with columns
     ``(query_id_col, term, weight)`` giving each query its own
     weighted term set (per-query boosting / RM3 expansion weights,
-    see :func:`bm25_join_rm3`), or — internal fast path for the
-    feedback wrappers that already hold the rows driver-side — a
-    plain list of ``(query_id, term, weight)`` tuples. When given,
-    the per-query term sets come from the weights and ``queries``'
-    text column is ignored for term extraction; each term's
-    contribution is scaled ``w * (idf * saturation)`` —
-    operand-for-operand the single-query weighted form, so per-query
-    output equals looping ``bm25_topk(weights=w_q)`` bitwise
-    (pinned). The relation is workload-bounded (|Q| x terms); weights
-    must be positive and (query, term) pairs unique — validated
-    driver-side on the collected workload (the indexed twin's
-    contract)."""
-    from pyspark.sql import Window
-
-    from .exactmath import ln_libm
-    from .similarity import _apply_where
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not (k1 > 0 and 0.0 <= b <= 1.0):
-        raise ValueError(f"need k1 > 0 and 0 <= b <= 1, got k1={k1} b={b}")
-
-    import math
-
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
+    see :func:`bm25_join_rm3`). When given, ``queries``' text column
+    is ignored for term extraction; per-query output equals looping
+    ``bm25_topk(weights=w_q)`` bitwise (pinned). The relation is
+    workload-bounded (|Q| x terms); weights must be positive and
+    (query, term) pairs unique — validated driver-side on the
+    collected workload."""
     from .dedup import spread_small_input
 
-    spark = docs.sparkSession
-    if weights is not None:
-        if isinstance(weights, DataFrame):
-            # bounded-collect: the weighted workload — it IS the
-            # per-query term enumeration (the bm25_join_indexed
-            # precedent); validation is free driver-side on the
-            # already-collected rows. NaN compares False both ways
-            # (`w <= 0` alone would pass it — ADVICE r11), hence the
-            # explicit isnan.
-            wsel = weights.select(
-                F.col(query_id_col),
-                F.col("term"),
-                F.col("weight").cast("double"),
-            )
-            # bounded-collect: |Q| x terms weight rows (see above)
-            wrows = [(r[0], r[1], r[2]) for r in wsel.collect()]
-            qid_type = weights.schema[query_id_col].dataType
-        else:
-            # internal fast path (bm25_join_rm3 / bm25_join_prf): the
-            # weight rows are already driver-side — same validation,
-            # no round-trip through a relation
-            wrows = [(q, t, float(w)) for q, t, w in weights]
-            qid_type = queries.schema[query_id_col].dataType
-        if not wrows:
-            raise ValueError("weights relation is empty")
-        if any(
-            w is not None and (math.isnan(w) or w <= 0)
-            for _, _, w in wrows
-        ):
-            raise ValueError("weights must be positive")
-        # count_distinct semantics: NULL-containing pairs never count
-        # as distinct, so any null (query, term) component trips the
-        # duplicate check exactly like the old relational aggregate
-        nd = len(
-            {
-                (q, t)
-                for q, t, _ in wrows
-                if q is not None and t is not None
-            }
-        )
-        if nd != len(wrows):
-            raise ValueError("duplicate (query, term) rows in weights")
-        qterms = _local_rows_df(
-            spark,
-            wrows,
-            StructType(
-                [
-                    StructField(query_id_col, qid_type),
-                    StructField("__tok", StringType()),
-                    StructField("__w", DoubleType()),
-                ]
-            ),
-        )
-        vocab_terms = sorted({t for _, t, _ in wrows if t is not None})
-    else:
-        # bounded-collect: the query batch texts — the retrieval
-        # workload (the _collect_query_texts / bm25_join_indexed
-        # precedent). Terms re-derive through _tokens_py, the bitwise
-        # twin of the old relational explode(tokens(...)).distinct(),
-        # so the (query, term) pairs — and every score downstream —
-        # are unchanged.
-        qrows = queries.select(
-            F.col(query_id_col), F.col(query_text_col)
-        ).collect()
-        pairs = sorted(
-            {
-                (r[0], t)
-                for r in qrows
-                if r[1] is not None
-                for t in _tokens_py(r[1])
-            },
-            key=lambda p: (repr(p[0]), p[1]),
-        )
-        qid_type = queries.schema[query_id_col].dataType
-        qterms = _local_rows_df(
-            spark,
-            pairs,
-            StructType(
-                [
-                    StructField(query_id_col, qid_type),
-                    StructField("__tok", StringType()),
-                ]
-            ),
-        )
-        vocab_terms = sorted({t for _, t in pairs})
-
+    qrows, qid_type = _batch_rows(queries, weights, query_id_col, query_text_col)
     # a small parquet corpus arrives as ONE scan partition, which
-    # would serialize the tokenize+explode onto a single core (and
-    # round 15 measured exactly that: the old plan broadcast the
-    # whole corpus token stream built by one 5.5 s task); no-op at
-    # corpus scale where splits >= cores
+    # would serialize the tokenize+explode onto a single core; no-op
+    # at corpus scale where splits >= cores
     docs = spread_small_input(docs)
-    toks = tokens(text_col)
-    # the vocabulary is a driver-side literal, so the explode is
-    # filtered in the SAME codegen stage — no vocabulary relation, no
-    # join, no distinct exchanges (guide §2.4), matching bm25_topk's
-    # single-query shape
-    tok_in_vocab = (
-        F.col("__tok").isin(vocab_terms) if vocab_terms else F.lit(False)
-    )
-    occ = docs.select(
-        F.col(id_col),
-        F.size(toks).alias("__dl"),
-        F.explode(toks).alias("__tok"),
-    ).filter(tok_in_vocab)
-    tf = occ.groupBy(id_col, "__tok").agg(
-        F.count(F.lit(1)).alias("__tf"), F.first("__dl").alias("__dl")
-    )
-
-    if stats is not None:
-        n_docs, sum_dl = int(stats[0]), int(stats[1])
-        if n_docs <= 0 or sum_dl < 0:
-            raise ValueError(f"invalid precomputed stats {stats!r}")
-    else:
-        # bounded-collect: two corpus scalars (count + total length);
-        # n_docs checked before sum_dl conversion (NULL on empty)
-        st = docs.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.size(toks)).alias("sum_dl"),
-        ).head()
-        n_docs = int(st.n)
-        if n_docs == 0:
-            raise ValueError("corpus is empty")
-        sum_dl = int(st.sum_dl)
-
-    # (term, idf) broadcast literal via the driver-side libm ln —
-    # bitwise the former ln_libm ArrowEvalPython form, minus the
-    # Python-worker round trip and its broadcast-build corpus pass's
-    # Arrow tail (see bm25_topk; round 16, guide §4). bounded-collect:
-    # |batch vocabulary| rows.
-    dfrows = [
-        (r[0], int(r[1]))
-        for r in tf.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df")).collect()
-    ]
-    df_t = _idf_literal(spark, dfrows, n_docs, "__tok")
-
-    # filtered retrieval: candidates only — df_t above is already
-    # derived from the unfiltered postings (global statistics)
-    if where is not None:
-        tf = tf.join(
-            _apply_where(docs, where).select(id_col), id_col, "left_semi"
-        )
-    base_c = (
-        F.col("__idf")
-        * (F.col("__tf") * F.lit(float(k1) + 1.0))
-        / (
-            F.col("__tf")
-            + F.lit(float(k1))
-            * (
-                F.lit(1.0 - float(b))
-                + F.lit(float(b))
-                * F.col("__dl")
-                / (F.lit(float(sum_dl)) / F.lit(float(n_docs)))
-            )
-        )
-    )
-    contrib = (
-        tf.join(F.broadcast(df_t), "__tok")
-        .join(F.broadcast(qterms), "__tok")
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.col("__tok"),
-            # weighted form multiplies the WHOLE contribution once,
-            # operand-for-operand bm25_topk's `__w * base_c`
-            (base_c if weights is None else F.col("__w") * base_c).alias(
-                "__c"
-            ),
-        )
-    )
-    scored = (
-        contrib.groupBy(query_id_col, id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_matched"),
-            F.array_sort(
-                F.collect_list(F.struct("__tok", "__c"))
-            ).alias("__cs"),
-        )
-        .select(
-            query_id_col,
-            id_col,
-            F.aggregate(
-                F.col("__cs"), F.lit(0.0), lambda acc, s: acc + s["__c"]
-            ).alias("score"),
-            "n_terms_matched",
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
+    return _bm25(
+        _scan_postings(docs, text_col, id_col, stats, where),
+        qrows, k, k1, b, id_col, query_id_col, qid_type,
     )
 
 
@@ -799,127 +815,24 @@ def bm25_join_prf(
     """Batch PRF retrieval — the R-S form of :func:`bm25_topk_prf`:
     expand EVERY query of the batch from its own top-``fb_docs``
     feedback documents, then rescore the expanded batch, with each
-    corpus pass shared across the whole batch (pass one is ONE
-    :func:`bm25_join`; the feedback term counts are one scan of the
-    union of all queries' feedback docs, grouped per query; pass two
-    is one :func:`bm25_join` over the expanded texts). Per-query
-    output is IDENTICAL to looping :func:`bm25_topk_prf` (pinned —
-    same selection rule: occurrence count desc, token asc, own terms
-    excluded, binary weights).
+    corpus pass shared across the whole batch (pass one is ONE batch
+    ranking; the feedback term counts are one scan of the union of
+    all queries' feedback docs, grouped per query; pass two is one
+    batch ranking of the expanded terms). Per-query output is
+    IDENTICAL to looping :func:`bm25_topk_prf` (pinned).
 
     Driver traffic is workload-bounded only: the query texts, the
-    |Q| x fb_docs feedback pairs, and the |Q| x fb_terms expansion
-    terms (all TakeOrdered/window outputs).
+    |Q| x fb_docs feedback pairs, and the |Q| x (fb_terms + |q|)
+    kept terms. Millions of queries should chunk the batch (outputs
+    are per-query independent, so chunk-and-union is
+    semantics-free)."""
+    from .dedup import spread_small_input
 
-    |Q| ceiling: PRF is the one batch op that re-materializes the
-    EXPANDED query texts driver-side, so the practical bound is
-    |Q| x (fb_docs + fb_terms + |query| in tokens) strings — 10^5
-    queries at the defaults is tens of MB, fine; millions of queries
-    should chunk the batch (outputs are per-query independent, so
-    chunk-and-union is semantics-free)."""
-    from pyspark.sql import Window
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    if fb_docs < 1:
-        raise ValueError(f"fb_docs must be >= 1, got {fb_docs}")
-    if fb_terms < 1:
-        raise ValueError(f"fb_terms must be >= 1, got {fb_terms}")
-    spark = docs.sparkSession
-    # bounded-collect: the query batch texts — the retrieval workload
-    qrows = queries.select(F.col(query_id_col), F.col(query_text_col)).collect()
-    if not qrows:
-        raise ValueError("query batch is empty")
-    qid_type = queries.schema[query_id_col].dataType
-    # the documented contract is "identical to looping bm25_topk_prf":
-    # a duplicate id would silently collapse two queries into one dict
-    # slot, and a NULL text would stringify to the literal token
-    # 'None' — both must fail loudly instead (ADVICE r11), matching
-    # bm25_topk's own "query has no terms" validation
-    if len({r[0] for r in qrows}) != len(qrows):
-        raise ValueError("duplicate query ids in the batch")
-    for r in qrows:
-        if r[1] is None or not r[1].split():
-            raise ValueError(f"query {r[0]!r} has no terms")
-    orig = {r[0]: sorted(set(r[1].split())) for r in qrows}
-    # corpus stats computed ONCE and shared by both passes (the
-    # documented bitwise-neutral stats= fast path — exact integers, so
-    # pass two equals a fresh derivation; saves one full-corpus
-    # tokenize+aggregate per call)
-    st = docs.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.size(tokens(text_col))).alias("sum_dl"),
-    ).head()
-    if int(st.n) == 0:
-        raise ValueError("corpus is empty")
-    stats = (int(st.n), int(st.sum_dl))
-    first = bm25_join(
-        docs, queries, k=fb_docs, k1=k1, b=b, text_col=text_col,
-        id_col=id_col, query_text_col=query_text_col,
-        query_id_col=query_id_col, where=where, stats=stats,
-    )
-    # bounded-collect: |Q| x fb_docs feedback pairs (pass one's
-    # per-query top-k window output)
-    fb_pairs = [(r[0], r[1]) for r in first.select(query_id_col, id_col).collect()]
-    if fb_pairs:
-        id_type = docs.schema[id_col].dataType
-        pair_df = _local_rows_df(
-            spark,
-            fb_pairs,
-            StructType(
-                [
-                    StructField(query_id_col, qid_type),
-                    StructField(id_col, id_type),
-                ]
-            ),
-        )
-        fb_ids = sorted({p[1] for p in fb_pairs})
-        orig_df = _local_rows_df(
-            spark,
-            [(q, t) for q, ts in orig.items() for t in ts],
-            StructType(
-                [
-                    StructField(query_id_col, qid_type),
-                    StructField("__tok", StringType()),
-                ]
-            ),
-        )
-        counts = (
-            docs.filter(F.col(id_col).isin(fb_ids))
-            .select(F.col(id_col), F.explode(tokens(text_col)).alias("__tok"))
-            .join(F.broadcast(pair_df), id_col)
-            .groupBy(query_id_col, "__tok")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .join(F.broadcast(orig_df), [query_id_col, "__tok"], "left_anti")
-        )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("__n").desc(), F.col("__tok").asc()
-        )
-        top = counts.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= int(fb_terms)
-        )
-        # bounded-collect: |Q| x fb_terms expansion terms
-        new_terms: dict = {}
-        for r in top.select(query_id_col, "__tok").collect():
-            new_terms.setdefault(r[0], set()).add(r[1])
-    else:
-        new_terms = {}
-    expanded = _local_rows_df(
-        spark,
-        [
-            (q, " ".join(sorted(set(ts) | new_terms.get(q, set()))))
-            for q, ts in orig.items()
-        ],
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField(query_text_col, StringType()),
-            ]
-        ),
-    )
-    return bm25_join(
-        docs, expanded, k=k, k1=k1, b=b, text_col=text_col,
-        id_col=id_col, query_text_col=query_text_col,
-        query_id_col=query_id_col, where=where, stats=stats,
+    orig = _collect_query_texts(queries, query_id_col, query_text_col)
+    return _two_pass(
+        _scan_postings(spread_small_input(docs), text_col, id_col, where=where),
+        orig, k, fb_docs, fb_terms, None, k1, b, id_col,
+        query_id_col, queries.schema[query_id_col].dataType,
     )
 
 
@@ -938,146 +851,26 @@ def bm25_join_rm3(
     query_id_col: str = "query_id",
     where=None,
 ) -> DataFrame:
-    """Batch RM3 retrieval — the R-S form of :func:`bm25_topk_rm3`,
-    completing the relevance-feedback matrix (binary PRF x weighted
-    RM3, single x batch): every query's relevance-model weights are
-    estimated from its OWN top-``fb_docs`` feedback set (pass one is
-    ONE :func:`bm25_join`; the feedback term counts are one scan of
-    the union of all queries' feedback docs, grouped per query), then
-    the whole weighted batch rescores in one weighted
-    :func:`bm25_join`. Per-query output is IDENTICAL to looping
-    :func:`bm25_topk_rm3` (pinned — same truncate-then-renormalize
-    weights over the kept vocabulary, same ``w * (idf * saturation)``
-    scoring).
+    """Batch RM3 retrieval — the R-S form of :func:`bm25_topk_rm3`:
+    every query's relevance-model weights are estimated from its OWN
+    top-``fb_docs`` feedback set (the :func:`bm25_join_prf` pass
+    structure), then the whole weighted batch rescores in one weighted
+    batch ranking. Per-query output is IDENTICAL to looping
+    :func:`bm25_topk_rm3` (pinned). Same driver traffic and |Q|
+    ceiling as :func:`bm25_join_prf`."""
+    from .dedup import spread_small_input
 
-    Driver traffic is workload-bounded only: the query texts, the
-    |Q| x fb_docs feedback pairs, and the |Q| x (fb_terms + |q|)
-    kept-term counts (TakeOrdered/window outputs). Same |Q| ceiling
-    as :func:`bm25_join_prf` — millions of queries should chunk the
-    batch (per-query independence makes chunk-and-union
-    semantics-free)."""
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
+    orig = _collect_query_texts(queries, query_id_col, query_text_col)
+    return _two_pass(
+        _scan_postings(spread_small_input(docs), text_col, id_col, where=where),
+        orig, k, fb_docs, fb_terms, lam, k1, b, id_col,
+        query_id_col, queries.schema[query_id_col].dataType,
     )
 
-    if fb_docs < 1:
-        raise ValueError(f"fb_docs must be >= 1, got {fb_docs}")
-    if fb_terms < 1:
-        raise ValueError(f"fb_terms must be >= 1, got {fb_terms}")
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam must be in [0, 1], got {lam}")
-    spark = docs.sparkSession
-    # bounded-collect: the query batch texts — the retrieval workload
-    qrows = queries.select(F.col(query_id_col), F.col(query_text_col)).collect()
-    if not qrows:
-        raise ValueError("query batch is empty")
-    qid_type = queries.schema[query_id_col].dataType
-    # same loud validation as bm25_join_prf (ADVICE r11): duplicates
-    # collapse dict slots, NULL text stringifies to 'None'
-    if len({r[0] for r in qrows}) != len(qrows):
-        raise ValueError("duplicate query ids in the batch")
-    for r in qrows:
-        if r[1] is None or not r[1].split():
-            raise ValueError(f"query {r[0]!r} has no terms")
-    orig = {r[0]: sorted(set(r[1].split())) for r in qrows}
-    # corpus stats computed ONCE and shared by both passes (the
-    # documented bitwise-neutral stats= fast path; saves one
-    # full-corpus tokenize+aggregate per call)
-    st = docs.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.size(tokens(text_col))).alias("sum_dl"),
-    ).head()
-    if int(st.n) == 0:
-        raise ValueError("corpus is empty")
-    stats = (int(st.n), int(st.sum_dl))
-    first = bm25_join(
-        docs, queries, k=fb_docs, k1=k1, b=b, text_col=text_col,
-        id_col=id_col, query_text_col=query_text_col,
-        query_id_col=query_id_col, where=where, stats=stats,
-    )
-    # bounded-collect: |Q| x fb_docs feedback pairs (pass one's
-    # per-query top-k window output)
-    fb_pairs = [(r[0], r[1]) for r in first.select(query_id_col, id_col).collect()]
-    fb_counts: dict = {q: {} for q in orig}
-    if fb_pairs:
-        id_type = docs.schema[id_col].dataType
-        pair_df = _local_rows_df(
-            spark,
-            fb_pairs,
-            StructType(
-                [
-                    StructField(query_id_col, qid_type),
-                    StructField(id_col, id_type),
-                ]
-            ),
-        )
-        fb_ids = sorted({p[1] for p in fb_pairs})
-        orig_df = _local_rows_df(
-            spark,
-            [(q, t) for q, ts in orig.items() for t in ts],
-            StructType(
-                [
-                    StructField(query_id_col, qid_type),
-                    StructField("__tok", StringType()),
-                ]
-            ),
-        )
-        counts = (
-            docs.filter(F.col(id_col).isin(fb_ids))
-            .select(F.col(id_col), F.explode(tokens(text_col)).alias("__tok"))
-            .join(F.broadcast(pair_df), id_col)
-            .groupBy(query_id_col, "__tok")
-            .agg(F.count(F.lit(1)).alias("__n"))
-        )
-        # kept vocabulary per query: the fb_terms most frequent
-        # NON-query feedback tokens (count DESC, tok ASC) ...
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("__n").desc(), F.col("__tok").asc()
-        )
-        top = (
-            counts.join(
-                F.broadcast(orig_df), [query_id_col, "__tok"], "left_anti"
-            )
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= int(fb_terms))
-            .select(query_id_col, "__tok", "__n")
-        )
-        # ... plus the query's OWN terms present in its feedback set
-        own = counts.join(
-            F.broadcast(orig_df), [query_id_col, "__tok"], "left_semi"
-        ).select(query_id_col, "__tok", "__n")
-        # bounded-collect: <= |Q| x (fb_terms + |q|) kept-count rows
-        for r in top.unionByName(own).collect():
-            fb_counts[r[0]][r[1]] = int(r[2])
-    # weights driver-side: exact integer counts through the same
-    # truncate-then-renormalize +*/ sequence as rm3_expand
-    wrows = []
-    for q, ts in orig.items():
-        counts_q = fb_counts.get(q, {})
-        total_kept = sum(counts_q.values())
-        nq = len(ts)
-        for t in sorted(set(ts) | set(counts_q)):
-            w_orig = lam * (1.0 / nq) if t in ts else 0.0
-            w_fb = (
-                (1.0 - lam) * (counts_q.get(t, 0) / total_kept)
-                if total_kept
-                else 0.0
-            )
-            wv = w_orig + w_fb
-            if wv > 0:
-                wrows.append((q, t, wv))
-    # weight rows are already driver-side — bm25_join's internal list
-    # fast path skips the createDataFrame -> re-collect round-trip
-    return bm25_join(
-        docs, queries, k=k, k1=k1, b=b, text_col=text_col,
-        id_col=id_col, query_text_col=query_text_col,
-        query_id_col=query_id_col, where=where, weights=wrows,
-        stats=stats,
-    )
+
+# ---------------------------------------------------------------------------
+# second-stage rerankers
+# ---------------------------------------------------------------------------
 
 
 def rerank_overlap(
@@ -1436,6 +1229,126 @@ def rerank_mmr(
     return joined.groupBy(query_id_col).applyInPandas(per_query, out_schema)
 
 
+# ---------------------------------------------------------------------------
+# hybrid (lexical + dense) rankers
+# ---------------------------------------------------------------------------
+
+
+def _check_hybrid(rrf_k: int, w_lex: float, w_dense: float, dense=None) -> None:
+    """Shared validation of every hybrid entry point: 0.0 legitimately
+    disables a side, but a NEGATIVE weight would silently invert that
+    side's rank contribution, and NaN (which compares False both ways)
+    would silently poison every fused score."""
+    if rrf_k < 1:
+        raise ValueError(f"rrf_k must be >= 1, got {rrf_k}")
+    for name, w in (("w_lex", w_lex), ("w_dense", w_dense)):
+        if not (w >= 0):
+            raise ValueError(
+                f"{name} must be >= 0 (0 disables the side), got {w!r}"
+            )
+    if dense is not None and dense not in ("ivf", "ivfpq", "ivfsq8"):
+        raise ValueError(
+            f"dense must be 'ivf', 'ivfpq', or 'ivfsq8', got {dense!r}"
+        )
+
+
+def _rrf_fuse(
+    lex, dense, dense_id: str, id_col: str, rrf_k: int, k: int,
+    w_lex: float, w_dense: float, query_id_col: str | None = None,
+) -> DataFrame:
+    """The one Reciprocal Rank Fusion of every hybrid form: ``lex`` is
+    a BM25 ranking, ``dense`` a dense ranking with ids in ``dense_id``
+    and a ``rank`` column. Both arms are <= n_candidates rows (per
+    query), so the fusion join and every window here are
+    candidate-bounded. Engine-exact: a fixed-order sum of reciprocals
+    of exact integer ranks, each side scaled by its weight (``w=1.0``
+    multiplies exactly, so the defaults are bitwise the unweighted
+    fusion). With ``query_id_col`` the fusion is per query and keeps
+    each query's top ``k`` by a rank window; without, it ranks the
+    one query's candidates and keeps ``k`` rows."""
+    keys = [] if query_id_col is None else [query_id_col]
+
+    def order(col):
+        return [F.col(col).desc(), F.col(id_col).asc()]
+
+    if query_id_col is None:
+        lex_rank = F.row_number().over(Window.orderBy(*order("score")))
+    else:
+        lex_rank = F.col("rank")
+    lex = lex.select(
+        *keys, F.col(id_col).alias("__id"), lex_rank.cast("bigint").alias("rank_lex")
+    )
+    dense = dense.select(
+        *keys,
+        F.col(dense_id).alias("__id"),
+        F.col("rank").cast("bigint").alias("rank_dense"),
+    )
+    fused = lex.join(dense, keys + ["__id"], "full_outer").select(
+        *keys,
+        F.col("__id").alias(id_col),
+        (
+            F.coalesce(
+                F.lit(float(w_lex))
+                * (F.lit(1.0) / (F.lit(int(rrf_k)) + F.col("rank_lex"))),
+                F.lit(0.0),
+            )
+            + F.coalesce(
+                F.lit(float(w_dense))
+                * (F.lit(1.0) / (F.lit(int(rrf_k)) + F.col("rank_dense"))),
+                F.lit(0.0),
+            )
+        ).alias("rrf"),
+        "rank_lex",
+        "rank_dense",
+    )
+    if query_id_col is None:
+        rank = F.row_number().over(Window.orderBy(*order("rrf")))
+        return (
+            fused.select(
+                id_col, "rrf", "rank_lex", "rank_dense",
+                rank.cast("bigint").alias("rank"),
+            )
+            .orderBy("rank")
+            .limit(int(k))
+        )
+    w = Window.partitionBy(query_id_col).orderBy(*order("rrf"))
+    return fused.withColumn(
+        "rank", F.row_number().over(w).cast("bigint")
+    ).filter(F.col("rank") <= k)
+
+
+def _dense_arm(
+    spark, ann_path: str, dense: str, query, n_candidates: int, nprobe,
+    rerank, where, query_id_col=None, query_vec_col=None,
+) -> DataFrame:
+    """The one dense-arm lookup of the indexed hybrids: ``dense`` picks
+    the IVF-family index (``ivf`` exact-cosine cells, ``ivfpq``
+    product-quantized codes, ``ivfsq8`` scalar-quantized codes — the
+    compressed arms take the exact-cosine ``rerank`` tail), and the
+    input picks the probe: one query vector, or a batch relation with
+    ``query_id_col`` / ``query_vec_col``."""
+    from . import similarity as sim
+
+    single, batch = {
+        "ivf": (sim.ann_ivf_topk_indexed, sim.ann_ivf_join_indexed),
+        "ivfpq": (sim.ann_ivfpq_topk_indexed, sim.ann_ivfpq_join_indexed),
+        "ivfsq8": (sim.ann_ivfsq8_topk_indexed, sim.ann_ivfsq8_join_indexed),
+    }[dense]
+    kw = {
+        "k": n_candidates,
+        "nprobe": sim.ANN_NPROBE if nprobe is None else int(nprobe),
+        "where": where,
+    }
+    if dense != "ivf":
+        kw["rerank"] = rerank
+    if query_id_col is None:
+        return single(spark, ann_path, [float(x) for x in query], **kw)
+    return batch(
+        spark, ann_path, query,
+        query_id_col=query_id_col, query_vec_col=query_vec_col, **kw,
+    )
+
+
 def hybrid_topk(
     docs: DataFrame,
     embeddings: DataFrame,
@@ -1475,91 +1388,25 @@ def hybrid_topk(
     libm-idf discipline). Scale shape: each side is its own scale-safe
     top-``n_candidates`` (TakeOrderedAndProject); the fusion then
     joins two <= n_candidates-row relations — negligible at any corpus
-    size. The windows below run over those candidate rows only.
+    size.
 
     ``lex_where`` / ``dense_where`` restrict each side's candidates
     (filtered hybrid — each arm's documented filter contract; pass
-    the same predicate to both when the corpora share metadata)."""
-    from pyspark.sql import Window
-
+    the same predicate to both when the corpora share metadata).
+    ``w_lex`` / ``w_dense`` scale each side's reciprocal rank."""
     from .similarity import _apply_where, cosine_topk
 
-    if rrf_k < 1:
-        raise ValueError(f"rrf_k must be >= 1, got {rrf_k}")
+    _check_hybrid(rrf_k, w_lex, w_dense)
     lex = bm25_topk(
         docs, query, k=n_candidates, k1=k1, b=b,
         text_col=text_col, id_col=id_col, where=lex_where,
-    ).select(
-        F.col(id_col).alias("__id"),
-        F.row_number()
-        .over(Window.orderBy(F.col("score").desc(), F.col(id_col).asc()))
-        .cast("bigint")
-        .alias("rank_lex"),
     )
     dense = cosine_topk(
         _apply_where(embeddings, dense_where),
         [float(x) for x in query_vec], k=n_candidates,
         vec_col=vec_col, id_col=vec_id_col,
-    ).select(
-        F.col(vec_id_col).alias("__id"),
-        F.col("rank").cast("bigint").alias("rank_dense"),
     )
-    return _rrf_fuse(lex, dense, id_col, rrf_k, k, w_lex, w_dense)
-
-
-def _check_rrf_weights(w_lex: float, w_dense: float) -> None:
-    """Shared weight validation for every hybrid entry point (all four
-    route through _rrf_fuse/_rrf_fuse_batch): 0.0 legitimately
-    disables a side, but a NEGATIVE weight would silently invert that
-    side's rank contribution, and NaN (which compares False both ways)
-    would silently poison every fused score (ADVICE r11)."""
-    for name, w in (("w_lex", w_lex), ("w_dense", w_dense)):
-        if not (w >= 0):
-            raise ValueError(
-                f"{name} must be >= 0 (0 disables the side), got {w!r}"
-            )
-
-
-def _rrf_fuse(
-    lex, dense, id_col: str, rrf_k: int, k: int,
-    w_lex: float = 1.0, w_dense: float = 1.0,
-) -> DataFrame:
-    """Reciprocal Rank Fusion of two (__id, rank_*) candidate
-    relations — the shared fusion layer of :func:`hybrid_topk` and
-    :func:`hybrid_topk_indexed` (both <= n_candidates rows per side,
-    so every window below is candidate-bounded). Engine-exact: a
-    fixed-order sum of reciprocals of exact integer ranks, each side
-    scaled by its weight (``w=1.0`` multiplies exactly, so the
-    defaults are bitwise the unweighted fusion)."""
-    from pyspark.sql import Window
-
-    _check_rrf_weights(w_lex, w_dense)
-    fused = lex.join(dense, "__id", "full_outer").select(
-        F.col("__id").alias(id_col),
-        (
-            F.coalesce(
-                F.lit(float(w_lex))
-                * (F.lit(1.0) / (F.lit(int(rrf_k)) + F.col("rank_lex"))),
-                F.lit(0.0),
-            )
-            + F.coalesce(
-                F.lit(float(w_dense))
-                * (F.lit(1.0) / (F.lit(int(rrf_k)) + F.col("rank_dense"))),
-                F.lit(0.0),
-            )
-        ).alias("rrf"),
-        "rank_lex",
-        "rank_dense",
-    )
-    w = Window.orderBy(F.col("rrf").desc(), F.col(id_col).asc())
-    return (
-        fused.select(
-            id_col, "rrf", "rank_lex", "rank_dense",
-            F.row_number().over(w).cast("bigint").alias("rank"),
-        )
-        .orderBy("rank")
-        .limit(int(k))
-    )
+    return _rrf_fuse(lex, dense, vec_id_col, id_col, rrf_k, k, w_lex, w_dense)
 
 
 def hybrid_topk_indexed(
@@ -1612,62 +1459,166 @@ def hybrid_topk_indexed(
     ``lex_where`` / ``dense_where`` restrict each arm's candidates
     in-scan (filtered hybrid — both indexes must store the predicate
     columns via their builds' ``extra_cols``)."""
-    from pyspark.sql import Window
-
-    from .similarity import (
-        ANN_NPROBE,
-        ann_ivf_topk_indexed,
-        ann_ivfpq_topk_indexed,
-        ann_ivfsq8_topk_indexed,
-    )
-
-    if rrf_k < 1:
-        raise ValueError(f"rrf_k must be >= 1, got {rrf_k}")
-    if dense not in ("ivf", "ivfpq", "ivfsq8"):
-        raise ValueError(
-            f"dense must be 'ivf', 'ivfpq', or 'ivfsq8', got {dense!r}"
-        )
+    _check_hybrid(rrf_k, w_lex, w_dense, dense)
     lex = bm25_topk_indexed(
         spark, bm25_path, query, k=n_candidates, k1=k1, b=b,
         id_col=id_col, where=lex_where,
-    ).select(
-        F.col(id_col).alias("__id"),
-        F.row_number()
-        .over(Window.orderBy(F.col("score").desc(), F.col(id_col).asc()))
-        .cast("bigint")
-        .alias("rank_lex"),
     )
-    np_ = ANN_NPROBE if nprobe is None else int(nprobe)
-    if dense == "ivfpq":
-        dense_df = ann_ivfpq_topk_indexed(
-            spark,
-            ann_path,
-            [float(x) for x in query_vec],
-            k=n_candidates,
-            nprobe=np_,
-            rerank=dense_rerank,
-            where=dense_where,
-        )
-    elif dense == "ivfsq8":
-        dense_df = ann_ivfsq8_topk_indexed(
-            spark,
-            ann_path,
-            [float(x) for x in query_vec],
-            k=n_candidates,
-            nprobe=np_,
-            rerank=dense_rerank,
-            where=dense_where,
-        )
-    else:
-        dense_df = ann_ivf_topk_indexed(
-            spark, ann_path, [float(x) for x in query_vec],
-            k=n_candidates, nprobe=np_, where=dense_where,
-        )
-    dense_df = dense_df.select(
-        F.col("vec_id").alias("__id"),
-        F.col("rank").cast("bigint").alias("rank_dense"),
+    arm = _dense_arm(
+        spark, ann_path, dense, query_vec, n_candidates, nprobe,
+        dense_rerank, dense_where,
     )
-    return _rrf_fuse(lex, dense_df, id_col, rrf_k, k, w_lex, w_dense)
+    return _rrf_fuse(lex, arm, "vec_id", id_col, rrf_k, k, w_lex, w_dense)
+
+
+def hybrid_join(
+    docs: DataFrame,
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    n_candidates: int = 50,
+    rrf_k: int = 60,
+    k1: float = 1.2,
+    b: float = 0.75,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    vec_id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_text_col: str = "text",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    lex_where=None,
+    dense_where=None,
+    w_lex: float = 1.0,
+    w_dense: float = 1.0,
+) -> DataFrame:
+    """Batch hybrid retrieval — the R-S form of :func:`hybrid_topk`:
+    fuse per-query BM25 (:func:`bm25_join`, one corpus text scan for
+    the whole batch) and per-query exact cosine
+    (``similarity.cosine_join``, one embedding scan) rankings by RRF.
+    ``queries`` carries BOTH modalities per row: ``(query_id, text,
+    query_vec)``. Returns ``(query_id, id, rrf, rank_lex, rank_dense,
+    rank)`` with rank 1..k per query; ranks NULL for the side that
+    did not retrieve the id.
+
+    Each side scans its table ONCE regardless of |queries|; the
+    fusion joins two <= |queries| x n_candidates relations. The
+    100 TB serving form is :func:`hybrid_join_indexed` (neither side
+    scans a full table). ``lex_where`` / ``dense_where`` restrict
+    each side's candidates (filtered hybrid)."""
+    from .similarity import _apply_where, cosine_join
+
+    _check_hybrid(rrf_k, w_lex, w_dense)
+    lex = bm25_join(
+        docs, queries, k=n_candidates, k1=k1, b=b, text_col=text_col,
+        id_col=id_col, query_text_col=query_text_col,
+        query_id_col=query_id_col, where=lex_where,
+    )
+    dense = cosine_join(
+        _apply_where(embeddings, dense_where), queries, k=n_candidates,
+        vec_col=vec_col, id_col=vec_id_col, query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
+    )
+    return _rrf_fuse(
+        lex, dense, vec_id_col, id_col, rrf_k, k, w_lex, w_dense, query_id_col
+    )
+
+
+def hybrid_join_indexed(
+    spark,
+    bm25_path: str,
+    ann_path: str,
+    queries: DataFrame,
+    k: int = 10,
+    n_candidates: int = 50,
+    rrf_k: int = 60,
+    nprobe: int | None = None,
+    k1: float = 1.2,
+    b: float = 0.75,
+    id_col: str = "doc_id",
+    query_text_col: str = "text",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    dense: str = "ivf",
+    dense_rerank: int | None = None,
+    lex_where=None,
+    dense_where=None,
+    w_lex: float = 1.0,
+    w_dense: float = 1.0,
+) -> DataFrame:
+    """Batch hybrid retrieval against PERSISTED indexes on both sides
+    — completes the hybrid matrix (:func:`hybrid_topk` /
+    :func:`hybrid_topk_indexed` / :func:`hybrid_join` / this), and is
+    the shape a 100 TB RAG serving path actually runs: the whole
+    query batch's lexical candidates come from the bucket-pruned BM25
+    inverted index (:func:`bm25_join_indexed` — reads the batch
+    vocabulary's postings buckets only) and its dense candidates from
+    the IVF index (``similarity.ann_ivf_join_indexed`` — reads the
+    union of the batch's probed cells only), fused per query by the
+    same engine-exact RRF. No full-table scan anywhere.
+
+    ``dense="ivfpq"`` probes an IVF-PQ index instead
+    (``similarity.ann_ivfpq_join_indexed``); ``dense="ivfsq8"`` an
+    IVF-SQ8 index (``similarity.ann_ivfsq8_join_indexed``, the
+    scalar-quantized middle ground) — the union-of-cells scan
+    additionally reads the CODE column only (~16x less probe IO at
+    the defaults); ``dense_rerank=R`` adds the per-query exact-cosine
+    tail. The fusion consumes ranks only, so either arm slots in.
+
+    With ``nprobe >= nlist`` the output is BITWISE :func:`hybrid_join`
+    (pinned in tests; for ``ivfpq`` the same holds with
+    ``dense_rerank >= |corpus|``); at serving defaults the dense side
+    trades recall for the pruned scan. ``lex_where`` /
+    ``dense_where`` restrict each arm's candidates in-scan (filtered
+    hybrid; both indexes must store the predicate columns).
+
+    |Q| ceiling: the query batch is driver-materialized BY DESIGN
+    (texts + vectors; ~100 bytes + 8*dim per query — 10^5 queries at
+    dim 64 is ~60 MB, far under driver memory). Millions of queries:
+    chunk the batch and union the outputs — per-query results are
+    independent, so chunking is semantics-free."""
+    _check_hybrid(rrf_k, w_lex, w_dense, dense)
+    # materialize the query batch ONCE: both sides must collect the
+    # workload anyway (terms -> postings buckets, vectors -> probe
+    # cells), and handing each a live DataFrame would re-run the
+    # caller's query-construction lineage per side
+    # bounded-collect: the retrieval workload (both sides re-collect
+    # from this local relation, which is free)
+    qrows = queries.select(
+        F.col(query_id_col),
+        F.col(query_text_col),
+        F.col(query_vec_col).cast("array<double>"),
+    ).collect()
+    if not qrows:
+        raise ValueError("query batch is empty")
+    qlocal = _local_rows_df(
+        spark,
+        [(r[0], r[1], [float(x) for x in r[2]]) for r in qrows],
+        StructType(
+            [
+                StructField(query_id_col, queries.schema[query_id_col].dataType),
+                StructField(query_text_col, StringType()),
+                StructField(query_vec_col, ArrayType(DoubleType())),
+            ]
+        ),
+    )
+    lex = bm25_join_indexed(
+        spark, bm25_path, qlocal, k=n_candidates, k1=k1, b=b, id_col=id_col,
+        query_text_col=query_text_col, query_id_col=query_id_col,
+        where=lex_where,
+    )
+    arm = _dense_arm(
+        spark, ann_path, dense, qlocal, n_candidates, nprobe, dense_rerank,
+        dense_where, query_id_col, query_vec_col,
+    )
+    return _rrf_fuse(
+        lex, arm, "vec_id", id_col, rrf_k, k, w_lex, w_dense, query_id_col
+    )
+
+
+# ---------------------------------------------------------------------------
+# retrieval evaluation
+# ---------------------------------------------------------------------------
 
 
 def retrieval_metrics(
@@ -1856,272 +1807,9 @@ def retrieval_metrics_summary(
     )
 
 
-def _rrf_fuse_batch(
-    lex, dense, query_id_col: str, id_col: str, rrf_k: int, k: int,
-    w_lex: float = 1.0, w_dense: float = 1.0,
-) -> DataFrame:
-    """Per-query RRF fusion of two (query_id, __id, rank_*) candidate
-    relations — the batch twin of :func:`_rrf_fuse`. Both inputs are
-    <= n_candidates rows PER QUERY, so the fusion join and the final
-    window are candidate-bounded per partition key."""
-    from pyspark.sql import Window
-
-    _check_rrf_weights(w_lex, w_dense)
-    fused = lex.join(dense, [query_id_col, "__id"], "full_outer").select(
-        F.col(query_id_col),
-        F.col("__id").alias(id_col),
-        (
-            F.coalesce(
-                F.lit(float(w_lex))
-                * (F.lit(1.0) / (F.lit(int(rrf_k)) + F.col("rank_lex"))),
-                F.lit(0.0),
-            )
-            + F.coalesce(
-                F.lit(float(w_dense))
-                * (F.lit(1.0) / (F.lit(int(rrf_k)) + F.col("rank_dense"))),
-                F.lit(0.0),
-            )
-        ).alias("rrf"),
-        "rank_lex",
-        "rank_dense",
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("rrf").desc(), F.col(id_col).asc()
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def hybrid_join(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_candidates: int = 50,
-    rrf_k: int = 60,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    lex_where=None,
-    dense_where=None,
-    w_lex: float = 1.0,
-    w_dense: float = 1.0,
-) -> DataFrame:
-    """Batch hybrid retrieval — the R-S form of :func:`hybrid_topk`:
-    fuse per-query BM25 (:func:`bm25_join`, one corpus text scan for
-    the whole batch) and per-query exact cosine
-    (``similarity.cosine_join``, one embedding scan) rankings by RRF.
-    ``queries`` carries BOTH modalities per row: ``(query_id, text,
-    query_vec)``. Returns ``(query_id, id, rrf, rank_lex, rank_dense,
-    rank)`` with rank 1..k per query; ranks NULL for the side that
-    did not retrieve the id.
-
-    Each side scans its table ONCE regardless of |queries|; the
-    fusion joins two <= |queries| x n_candidates relations. The
-    100 TB serving form is :func:`hybrid_join_indexed` (neither side
-    scans a full table). ``lex_where`` / ``dense_where`` restrict
-    each side's candidates (filtered hybrid)."""
-    from .similarity import _apply_where, cosine_join
-
-    if rrf_k < 1:
-        raise ValueError(f"rrf_k must be >= 1, got {rrf_k}")
-    lex = bm25_join(
-        docs,
-        queries,
-        k=n_candidates,
-        k1=k1,
-        b=b,
-        text_col=text_col,
-        id_col=id_col,
-        query_text_col=query_text_col,
-        query_id_col=query_id_col,
-        where=lex_where,
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col).alias("__id"),
-        F.col("rank").alias("rank_lex"),
-    )
-    dense = cosine_join(
-        _apply_where(embeddings, dense_where),
-        queries,
-        k=n_candidates,
-        vec_col=vec_col,
-        id_col=vec_id_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-    ).select(
-        F.col(query_id_col),
-        F.col(vec_id_col).alias("__id"),
-        F.col("rank").alias("rank_dense"),
-    )
-    return _rrf_fuse_batch(lex, dense, query_id_col, id_col, rrf_k, k, w_lex, w_dense)
-
-
-def hybrid_join_indexed(
-    spark,
-    bm25_path: str,
-    ann_path: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_candidates: int = 50,
-    rrf_k: int = 60,
-    nprobe: int | None = None,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    query_text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    dense: str = "ivf",
-    dense_rerank: int | None = None,
-    lex_where=None,
-    dense_where=None,
-    w_lex: float = 1.0,
-    w_dense: float = 1.0,
-) -> DataFrame:
-    """Batch hybrid retrieval against PERSISTED indexes on both sides
-    — completes the hybrid matrix (:func:`hybrid_topk` /
-    :func:`hybrid_topk_indexed` / :func:`hybrid_join` / this), and is
-    the shape a 100 TB RAG serving path actually runs: the whole
-    query batch's lexical candidates come from the bucket-pruned BM25
-    inverted index (:func:`bm25_join_indexed` — reads the batch
-    vocabulary's postings buckets only) and its dense candidates from
-    the IVF index (``similarity.ann_ivf_join_indexed`` — reads the
-    union of the batch's probed cells only), fused per query by the
-    same engine-exact RRF. No full-table scan anywhere.
-
-    ``dense="ivfpq"`` probes an IVF-PQ index instead
-    (``similarity.ann_ivfpq_join_indexed``); ``dense="ivfsq8"`` an
-    IVF-SQ8 index (``similarity.ann_ivfsq8_join_indexed``, the
-    scalar-quantized middle ground) — the union-of-cells scan
-    additionally reads the CODE column only (~16x less probe IO at
-    the defaults); ``dense_rerank=R`` adds the per-query exact-cosine
-    tail. The fusion consumes ranks only, so either arm slots in.
-
-    With ``nprobe >= nlist`` the output is BITWISE :func:`hybrid_join`
-    (pinned in tests; for ``ivfpq`` the same holds with
-    ``dense_rerank >= |corpus|``); at serving defaults the dense side
-    trades recall for the pruned scan. ``lex_where`` /
-    ``dense_where`` restrict each arm's candidates in-scan (filtered
-    hybrid; both indexes must store the predicate columns).
-
-    |Q| ceiling: the query batch is driver-materialized BY DESIGN
-    (texts + vectors; ~100 bytes + 8*dim per query — 10^5 queries at
-    dim 64 is ~60 MB, far under driver memory). Millions of queries:
-    chunk the batch and union the outputs — per-query results are
-    independent, so chunking is semantics-free."""
-    from .similarity import (
-        ANN_NPROBE,
-        ann_ivf_join_indexed,
-        ann_ivfpq_join_indexed,
-        ann_ivfsq8_join_indexed,
-    )
-
-    if rrf_k < 1:
-        raise ValueError(f"rrf_k must be >= 1, got {rrf_k}")
-    if dense not in ("ivf", "ivfpq", "ivfsq8"):
-        raise ValueError(
-            f"dense must be 'ivf', 'ivfpq', or 'ivfsq8', got {dense!r}"
-        )
-    # materialize the query batch ONCE: both sides must collect the
-    # workload anyway (terms -> postings buckets, vectors -> probe
-    # cells), and handing each a live DataFrame would re-run the
-    # caller's query-construction lineage per side
-    # bounded-collect: the retrieval workload (both sides re-collect
-    # from this local relation, which is free)
-    qrows = queries.select(
-        F.col(query_id_col),
-        F.col(query_text_col),
-        F.col(query_vec_col).cast("array<double>"),
-    ).collect()
-    if not qrows:
-        raise ValueError("query batch is empty")
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    qid_type = queries.schema[query_id_col].dataType
-    qlocal = _local_rows_df(
-        spark,
-        [(r[0], r[1], [float(x) for x in r[2]]) for r in qrows],
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField(query_text_col, StringType()),
-                StructField(query_vec_col, ArrayType(DoubleType())),
-            ]
-        ),
-    )
-    lex = bm25_join_indexed(
-        spark,
-        bm25_path,
-        qlocal,
-        k=n_candidates,
-        k1=k1,
-        b=b,
-        id_col=id_col,
-        query_text_col=query_text_col,
-        query_id_col=query_id_col,
-        where=lex_where,
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col).alias("__id"),
-        F.col("rank").alias("rank_lex"),
-    )
-    np_ = ANN_NPROBE if nprobe is None else int(nprobe)
-    if dense == "ivfpq":
-        dense_df = ann_ivfpq_join_indexed(
-            spark,
-            ann_path,
-            qlocal,
-            k=n_candidates,
-            nprobe=np_,
-            rerank=dense_rerank,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            where=dense_where,
-        )
-    elif dense == "ivfsq8":
-        dense_df = ann_ivfsq8_join_indexed(
-            spark,
-            ann_path,
-            qlocal,
-            k=n_candidates,
-            nprobe=np_,
-            rerank=dense_rerank,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            where=dense_where,
-        )
-    else:
-        dense_df = ann_ivf_join_indexed(
-            spark,
-            ann_path,
-            qlocal,
-            k=n_candidates,
-            nprobe=np_,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            where=dense_where,
-        )
-    dense_df = dense_df.select(
-        F.col(query_id_col),
-        F.col("vec_id").alias("__id"),
-        F.col("rank").alias("rank_dense"),
-    )
-    return _rrf_fuse_batch(lex, dense_df, query_id_col, id_col, rrf_k, k, w_lex, w_dense)
+# ---------------------------------------------------------------------------
+# persisted BM25 index: store lifecycle and indexed rankers
+# ---------------------------------------------------------------------------
 
 
 _BM25_RESERVED_COLS = (
@@ -2212,7 +1900,6 @@ def build_bm25_index(
     from ..sources.bucketed import write_partitioned
     from ..sources.manifest import begin_generation, commit_generation
     from .dedup import _rm_dir, spread_small_input
-    from .text import md5_int32, tokens
 
     if n_buckets is None:
         if target_bucket_docs < 1:
@@ -2240,22 +1927,9 @@ def build_bm25_index(
         _rm_dir(spark, f"{path}/postings")
         _rm_dir(spark, f"{path}/dft")
         _rm_dir(spark, f"{path}/_bm25_stats")
-    toks = tokens(text_col)
-    occ = spread_small_input(docs).select(
-        F.col(id_col),
-        F.size(toks).alias("dl"),
-        F.explode(toks).alias("tok"),
-        *[F.col(c) for c in extra_cols],
-    )
-    postings = (
-        occ.groupBy(id_col, "tok")
-        .agg(
-            F.count(F.lit(1)).alias("tf"),
-            F.first("dl").alias("dl"),
-            *[F.first(c).alias(c) for c in extra_cols],
-        )
-        .withColumn("tok_bucket", F.pmod(md5_int32(F.col("tok")), F.lit(n_buckets)))
-    )
+    postings = _postings(
+        spread_small_input(docs), text_col, id_col, extra_cols=extra_cols
+    ).withColumn("tok_bucket", F.pmod(md5_int32(F.col("tok")), F.lit(n_buckets)))
     write_partitioned(
         postings, f"{path}/postings/ingest_batch_id=-1", "tok_bucket"
     )
@@ -2267,10 +1941,7 @@ def build_bm25_index(
         .mode("overwrite")
         .parquet(f"{path}/dft/ingest_batch_id=-1")
     )
-    docs.select(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(toks)).alias("sum_dl"),
-    ).coalesce(1).write.mode("overwrite").parquet(
+    _corpus_stats(docs, text_col).coalesce(1).write.mode("overwrite").parquet(
         f"{path}/_bm25_stats/ingest_batch_id=-1"
     )
     _local_rows_df(
@@ -2303,7 +1974,6 @@ def append_to_bm25_index(
     from ..sources.bucketed import write_partitioned
     from ..sources.manifest import resolve_root
     from .dedup import spread_small_input
-    from .text import md5_int32, tokens
 
     if batch_id is not None and batch_id < 0:
         raise ValueError(
@@ -2319,20 +1989,8 @@ def append_to_bm25_index(
     )
     part = -1 if batch_id is None else batch_id
     mode = "append" if batch_id is None else "overwrite"
-    toks = tokens(text_col)
-    occ = spread_small_input(docs).select(
-        F.col(id_col),
-        F.size(toks).alias("dl"),
-        F.explode(toks).alias("tok"),
-        *[F.col(c) for c in extras],
-    )
     postings = (
-        occ.groupBy(id_col, "tok")
-        .agg(
-            F.count(F.lit(1)).alias("tf"),
-            F.first("dl").alias("dl"),
-            *[F.first(c).alias(c) for c in extras],
-        )
+        _postings(spread_small_input(docs), text_col, id_col, extra_cols=extras)
         .withColumn(
             "tok_bucket", F.pmod(md5_int32(F.col("tok")), F.lit(n_buckets))
         )
@@ -2350,10 +2008,7 @@ def append_to_bm25_index(
         .parquet(f"{path}/dft/ingest_batch_id={part}")
     )
     postings.unpersist()
-    docs.select(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(toks)).alias("sum_dl"),
-    ).coalesce(1).write.mode(mode).parquet(
+    _corpus_stats(docs, text_col).coalesce(1).write.mode(mode).parquet(
         f"{path}/_bm25_stats/ingest_batch_id={part}"
     )
 
@@ -2473,134 +2128,24 @@ def bm25_topk_indexed(
     """Top-``k`` BM25 against a persisted index — NEVER touches corpus
     text: the probe reads only the query terms' postings buckets
     (directory-partition pruning on ``tok_bucket``), the |terms|-row
-    df shard (idf via ln_libm), and the 1-row stats table. Bitwise the
-    scan-form :func:`bm25_topk` answer (pinned in tests). ``where``
-    (over the index's stored ``extra_cols``) is filtered retrieval:
-    the predicate evaluates inside the pruned postings scan,
-    restricting CANDIDATES while idf/avgdl stay corpus-wide — bitwise
-    the scan form's ``where`` (pinned).
+    df shard, and the per-batch stats rows. Bitwise the scan-form
+    :func:`bm25_topk` answer (pinned in tests). Eager, snapshot-idf:
+    see :func:`_bm25`. ``where`` (over the index's stored
+    ``extra_cols``) is filtered retrieval: the predicate evaluates
+    inside the pruned postings scan, restricting CANDIDATES while
+    idf/avgdl stay corpus-wide — bitwise the scan form's ``where``
+    (pinned). ``before_batch`` fences every read to the pre-append
+    state.
 
     ``weights`` (``{term: w}``) is WEIGHTED-QUERY probing, bitwise
     the scan form's :func:`bm25_topk(weights=...)`: the term set is
     the weight keys (``query`` ignored for term extraction) and each
     term's contribution scales ``w * (idf * saturation)`` — the RM3
     serving path against the index."""
-    from ..sources.manifest import resolve_root
-    from .exactmath import ln_libm
-    from .similarity import _apply_where
-
-    weights = dict(weights) if weights else None
-    if weights is not None:
-        terms = sorted(weights)
-        # not (w > 0): NaN compares False both ways (the scan form's
-        # ADVICE-r11 check, mirrored)
-        if any(not (w > 0) for w in weights.values()):
-            raise ValueError("weights must be positive")
-    else:
-        terms = sorted(set(query.split()))
-    if not terms:
-        raise ValueError("query has no terms")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not (k1 > 0 and 0.0 <= b <= 1.0):
-        raise ValueError(f"need k1 > 0 and 0 <= b <= 1, got k1={k1} b={b}")
-    path = resolve_root(spark, path)
-    # bounded-collect: one parameter row from the index metadata
-    n_buckets = int(spark.read.parquet(f"{path}/_bm25_meta").collect()[0][0])
-    stats = spark.read.parquet(f"{path}/_bm25_stats")
-    if before_batch is not None:
-        stats = stats.filter(F.col("ingest_batch_id") < before_batch)
-    # bounded-collect: the summed corpus scalars (one row per batch
-    # partition pre-sum — batch count, not corpus, sized)
-    st = stats.agg(
-        F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
-    ).collect()[0]
-    if st.n_docs is None:
-        raise ValueError(f"index at {path!r} holds no stats rows")
-    n_docs, sum_dl = int(st.n_docs), int(st.sum_dl)
-
-    import hashlib
-
-    buckets = sorted(
-        {int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % n_buckets for t in terms}
+    return _bm25(
+        _index_postings(spark, path, id_col, before_batch, where),
+        _single_rows(query, weights), k, k1, b, id_col,
     )
-    term_filter = F.col("tok").isin(terms)
-    bucket_filter = F.col("tok_bucket").isin(buckets)
-    tf = (
-        spark.read.parquet(f"{path}/postings")
-        .filter(bucket_filter)
-        .filter(term_filter)
-    )
-    dft = (
-        spark.read.parquet(f"{path}/dft")
-        .filter(bucket_filter)
-        .filter(term_filter)
-    )
-    if before_batch is not None:
-        tf = tf.filter(F.col("ingest_batch_id") < before_batch)
-        dft = dft.filter(F.col("ingest_batch_id") < before_batch)
-    # filtered retrieval: candidates only — df (below) comes from the
-    # dft store, so collection statistics stay corpus-wide
-    tf = _apply_where(tf, where)
-    # merge per-append df DELTAS — for the probe's terms only, so the
-    # merge aggregate is |terms|-row sized regardless of append count;
-    # collected, ln'd driver-side (same libm, bitwise — see
-    # _idf_literal), and shipped back as a broadcast literal: the
-    # pruned dft read that fed the former broadcast build now feeds a
-    # |terms|-row collect, and the ArrowEvalPython node disappears
-    # (round 16, guide §4)
-    dfrows = [
-        (r[0], int(r[1]))
-        for r in dft.groupBy("tok").agg(F.sum("df").alias("df")).collect()
-    ]
-    df_t = _idf_literal(spark, dfrows, n_docs, "tok")
-    if weights is not None:
-        # per-term boost rides the |terms|-row idf table, exactly the
-        # scan form's construction (bitwise-pinned)
-        wdf = _local_rows_df(
-            spark,
-            [(t, float(w)) for t, w in sorted(weights.items())],
-            "tok string, __w double",
-        )
-        df_t = df_t.join(F.broadcast(wdf), "tok")
-    base_c = (
-        F.col("__idf")
-        * (F.col("tf") * F.lit(float(k1) + 1.0))
-        / (
-            F.col("tf")
-            + F.lit(float(k1))
-            * (
-                F.lit(1.0 - float(b))
-                + F.lit(float(b))
-                * F.col("dl")
-                / (F.lit(float(sum_dl)) / F.lit(float(n_docs)))
-            )
-        )
-    )
-    contrib = tf.join(F.broadcast(df_t), "tok").select(
-        F.col(id_col),
-        F.col("tok").alias("__tok"),
-        (base_c if weights is None else F.col("__w") * base_c).alias("__c"),
-    )
-    scored = (
-        contrib.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_matched"),
-            F.array_sort(
-                F.collect_list(F.struct("__tok", "__c"))
-            ).alias("__cs"),
-        )
-        .select(
-            id_col,
-            F.aggregate(
-                F.col("__cs"), F.lit(0.0), lambda acc, s: acc + s["__c"]
-            ).alias("score"),
-            "n_terms_matched",
-        )
-    )
-    return scored.orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    ).limit(int(k))
 
 
 def bm25_join_indexed(
@@ -2617,234 +2162,32 @@ def bm25_join_indexed(
     where=None,
     weights: DataFrame | None = None,
 ) -> DataFrame:
-    """Batch retrieval against a persisted index — completes the
-    scan/indexed x single/batch matrix (:func:`bm25_topk` /
-    :func:`bm25_join` / :func:`bm25_topk_indexed` / this): score a
-    whole query batch reading ONLY the batch vocabulary's postings
-    buckets, never corpus text. Same output and semantics as
-    :func:`bm25_join` (pinned bitwise-equal).
+    """Batch retrieval against a persisted index — the indexed twin of
+    :func:`bm25_join`: score a whole query batch reading ONLY the
+    batch vocabulary's postings buckets, never corpus text. Same
+    output and semantics as :func:`bm25_join` (pinned bitwise-equal).
+    Eager, snapshot-idf: see :func:`_bm25`.
 
     ``weights`` is the WEIGHTED batch probe — the indexed twin of
     :func:`bm25_join(weights=...)`: a ``(query_id_col, term, weight)``
     relation giving each query its own weighted term set (``queries``
     is then ignored for term extraction; it may even be the weights
-    relation itself). Validation happens driver-side on the already-
-    collected workload (the batch probe collects the (query, term)
-    pairs regardless — that is what enumerates the postings buckets),
-    and contributions scale ``w * (idf * saturation)`` exactly like
-    every other weighted form. Per-query output equals looping
-    ``bm25_topk_indexed(weights=w_q)`` bitwise (pinned).
+    relation itself), validated driver-side. Per-query output equals
+    looping ``bm25_topk_indexed(weights=w_q)`` bitwise (pinned).
 
     Scale shape: the postings/df scans prune to the union of the query
-    batch's term buckets at PLANNING time when the vocabulary is
-    driver-enumerable — which it is here, because the query batch
-    itself must be collected to know which buckets to read
-    (bounded-collect: the batch's distinct terms — the query WORKLOAD,
-    not the corpus; a million-term batch is the point where
+    batch's term buckets at PLANNING time, because the query batch
+    itself is collected to enumerate them (bounded-collect: the query
+    WORKLOAD, not the corpus; a million-term batch is the point where
     :func:`bm25_join`'s full-scan form wins anyway). df deltas merge
     for these terms only; per-query top-k is the same spilling window
     as bm25_join. ``where`` is filtered retrieval over the index's
     stored ``extra_cols`` (candidates restricted in-scan, statistics
     corpus-wide), applied to the whole batch."""
-    from ..sources.manifest import resolve_root
-    from .exactmath import ln_libm
-    from .similarity import _apply_where
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not (k1 > 0 and 0.0 <= b <= 1.0):
-        raise ValueError(f"need k1 > 0 and 0 <= b <= 1, got k1={k1} b={b}")
-    from pyspark.sql import Window
-
-    path = resolve_root(spark, path)
-    # bounded-collect: one parameter row from the index metadata
-    n_buckets = int(spark.read.parquet(f"{path}/_bm25_meta").collect()[0][0])
-    stats = spark.read.parquet(f"{path}/_bm25_stats")
-    if before_batch is not None:
-        stats = stats.filter(F.col("ingest_batch_id") < before_batch)
-    # bounded-collect: the summed corpus scalars (batch-count rows)
-    st = stats.agg(
-        F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
-    ).collect()[0]
-    if st.n_docs is None:
-        raise ValueError(f"index at {path!r} holds no stats rows")
-    n_docs, sum_dl = int(st.n_docs), int(st.sum_dl)
-
-    from .text import tokens
-
-    # bounded-collect: the query batch's (query_id, term) pairs — the
-    # retrieval workload itself, needed driver-side to enumerate the
-    # postings buckets the scans prune to
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    if weights is not None:
-        # bounded-collect: the weighted workload (same contract as
-        # qpairs — it IS the (query, term) enumeration); validation is
-        # free here because the rows are already driver-side
-        wrows = weights.select(
-            F.col(query_id_col),
-            F.col("term"),
-            F.col("weight").cast("double"),
-        ).collect()
-        if not wrows:
-            raise ValueError("weights relation is empty")
-        seen = set()
-        for r in wrows:
-            # not (w > 0): catches NaN, None, and non-positives alike
-            if r[2] is None or not (r[2] > 0):
-                raise ValueError("weights must be positive")
-            if (r[0], r[1]) in seen:
-                raise ValueError("duplicate (query, term) rows in weights")
-            seen.add((r[0], r[1]))
-        qpairs = [(r[0], r[1]) for r in wrows]
-        qid_type = weights.schema[query_id_col].dataType
-    else:
-        qpairs = (
-            queries.select(
-                F.col(query_id_col),
-                F.explode(tokens(query_text_col)).alias("__tok"),
-            )
-            .distinct()
-            # bounded-collect: workload-sized (the marker comment above)
-            .collect()
-        )
-        qid_type = queries.schema[query_id_col].dataType
-    if not qpairs:
-        raise ValueError("query batch has no terms")
-    terms = sorted({r[1] for r in qpairs})
-    import hashlib
-
-    buckets = sorted(
-        {int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % n_buckets for t in terms}
-    )
-    # re-created frame keeps the CALLER's query-id type — the scan-form
-    # twin bm25_join is id-type-agnostic, so this must be too
-    qfields = [
-        StructField(query_id_col, qid_type),
-        StructField("__tok", StringType()),
-    ]
-    if weights is not None:
-        qterms = _local_rows_df(
-            spark,
-            [(r[0], r[1], float(r[2])) for r in wrows],
-            StructType(qfields + [StructField("__w", DoubleType())]),
-        )
-    else:
-        qterms = _local_rows_df(
-            spark,
-            [(r[0], r[1]) for r in qpairs], StructType(qfields)
-        )
-    term_filter = F.col("tok").isin(terms)
-    bucket_filter = F.col("tok_bucket").isin(buckets)
-    tf = (
-        spark.read.parquet(f"{path}/postings")
-        .filter(bucket_filter)
-        .filter(term_filter)
-    )
-    dft = (
-        spark.read.parquet(f"{path}/dft")
-        .filter(bucket_filter)
-        .filter(term_filter)
-    )
-    if before_batch is not None:
-        tf = tf.filter(F.col("ingest_batch_id") < before_batch)
-        dft = dft.filter(F.col("ingest_batch_id") < before_batch)
-    # filtered retrieval: candidates only; df from the dft store
-    # keeps collection statistics corpus-wide
-    tf = _apply_where(tf, where)
-    # (term, idf) broadcast literal from the |batch vocabulary|-row
-    # dft merge, ln'd driver-side (same libm, bitwise — _idf_literal;
-    # round 16, guide §4): no ArrowEvalPython, no broadcast-build job
-    dfrows = [
-        (r[0], int(r[1]))
-        for r in dft.groupBy("tok").agg(F.sum("df").alias("df")).collect()
-    ]
-    df_t = _idf_literal(spark, dfrows, n_docs, "tok")
-    base_c = (
-        F.col("__idf")
-        * (F.col("tf") * F.lit(float(k1) + 1.0))
-        / (
-            F.col("tf")
-            + F.lit(float(k1))
-            * (
-                F.lit(1.0 - float(b))
-                + F.lit(float(b))
-                * F.col("dl")
-                / (F.lit(float(sum_dl)) / F.lit(float(n_docs)))
-            )
-        )
-    )
-    contrib = (
-        tf.join(F.broadcast(df_t), "tok")
-        .join(
-            F.broadcast(qterms.withColumnRenamed("__tok", "tok")), "tok"
-        )
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.col("tok").alias("__tok"),
-            # weighted form multiplies the whole contribution once,
-            # operand-for-operand every other weighted BM25 form
-            (base_c if weights is None else F.col("__w") * base_c).alias(
-                "__c"
-            ),
-        )
-    )
-    scored = (
-        contrib.groupBy(query_id_col, id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_matched"),
-            F.array_sort(
-                F.collect_list(F.struct("__tok", "__c"))
-            ).alias("__cs"),
-        )
-        .select(
-            query_id_col,
-            id_col,
-            F.aggregate(
-                F.col("__cs"), F.lit(0.0), lambda acc, s: acc + s["__c"]
-            ).alias("score"),
-            "n_terms_matched",
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _fb_counts_from_postings(
-    spark,
-    path: str,
-    fb_ids: list,
-    id_col: str = "doc_id",
-    before_batch: int | None = None,
-):
-    """Per-term occurrence counts of a feedback-doc set, read from the
-    PERSISTED index's postings instead of corpus text — the indexed
-    twin of the PRF/RM3 feedback scan: ``tf`` is already the per-(doc,
-    term) occurrence count, so summing it over the feedback ids equals
-    the scan form's explode-and-count exactly (integers). Cost shape:
-    one postings read pruned to three columns (tok, id, tf) with the
-    id filter pushed to parquet row groups — NOT bucket-pruned (a
-    document's terms span all buckets; this is the classic
-    inverted-index-without-forward-index trade), but it never touches
-    corpus text and the output is |fb vocabulary|-bounded."""
-    posts = spark.read.parquet(f"{path}/postings")
-    if before_batch is not None:
-        posts = posts.filter(F.col("ingest_batch_id") < before_batch)
-    return (
-        posts.filter(F.col(id_col).isin(fb_ids))
-        .groupBy("tok")
-        .agg(F.sum("tf").cast("bigint").alias("__n"))
+    qrows, qid_type = _batch_rows(queries, weights, query_id_col, query_text_col)
+    return _bm25(
+        _index_postings(spark, path, id_col, before_batch, where),
+        qrows, k, k1, b, id_col, query_id_col, qid_type,
     )
 
 
@@ -2863,45 +2206,15 @@ def bm25_topk_prf_indexed(
 ) -> DataFrame:
     """Two-pass PRF against a PERSISTED index — the serving form of
     :func:`bm25_topk_prf`, bitwise-equal to it (pinned): pass one is
-    the bucket-pruned :func:`bm25_topk_indexed`, the feedback term
-    counts come from the index's own postings
-    (:func:`_fb_counts_from_postings` — tf summed over the feedback
-    ids equals the scan form's explode-and-count exactly), and pass
-    two probes the expanded term set. Corpus text is never read.
-    ``where`` scopes both probes (the scan twin's contract);
-    ``before_batch`` fences every read to the pre-append state."""
-    if fb_docs < 1:
-        raise ValueError(f"fb_docs must be >= 1, got {fb_docs}")
-    if fb_terms < 1:
-        raise ValueError(f"fb_terms must be >= 1, got {fb_terms}")
-    from ..sources.manifest import resolve_root
-
-    terms = sorted(set(query.split()))
-    first = bm25_topk_indexed(
-        spark, path, query, k=fb_docs, k1=k1, b=b, id_col=id_col,
-        before_batch=before_batch, where=where,
-    )
-    # bounded-collect: fb_docs ids (pass one's TakeOrdered output)
-    fb_ids = [r[0] for r in first.select(id_col).collect()]
-    if not fb_ids:
-        return bm25_topk_indexed(
-            spark, path, query, k=k, k1=k1, b=b, id_col=id_col,
-            before_batch=before_batch, where=where,
-        )
-    fb_counts = (
-        _fb_counts_from_postings(
-            spark, resolve_root(spark, path), fb_ids, id_col, before_batch
-        )
-        .filter(~F.col("tok").isin(terms))
-        .orderBy(F.col("__n").desc(), F.col("tok").asc())
-        .limit(int(fb_terms))
-    )
-    # bounded-collect: fb_terms rows (TakeOrdered output)
-    new_terms = [r[0] for r in fb_counts.collect()]
-    expanded = " ".join(sorted(set(terms) | set(new_terms)))
-    return bm25_topk_indexed(
-        spark, path, expanded, k=k, k1=k1, b=b, id_col=id_col,
-        before_batch=before_batch, where=where,
+    the bucket-pruned probe, the feedback term counts come from the
+    index's own postings (tf summed over the feedback ids equals the
+    scan form's explode-and-count exactly), and pass two probes the
+    expanded term set. Corpus text is never read. ``where`` scopes
+    both probes (the scan twin's contract); ``before_batch`` fences
+    every read to the pre-append state."""
+    return _two_pass(
+        _index_postings(spark, path, id_col, before_batch, where),
+        {0: _query_terms(query)}, k, fb_docs, fb_terms, None, k1, b, id_col,
     )
 
 
@@ -2923,114 +2236,10 @@ def bm25_topk_rm3_indexed(
     :func:`bm25_topk_rm3`, bitwise-equal to it (pinned): feedback term
     counts from the index's postings, the same truncate-then-
     renormalize weights over the kept vocabulary, and a weighted
-    bucket-pruned probe (:func:`bm25_topk_indexed(weights=...)`).
-    Corpus text is never read."""
-    if fb_docs < 1:
-        raise ValueError(f"fb_docs must be >= 1, got {fb_docs}")
-    if fb_terms < 1:
-        raise ValueError(f"fb_terms must be >= 1, got {fb_terms}")
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam must be in [0, 1], got {lam}")
-    from ..sources.manifest import resolve_root
-
-    terms = sorted(set(query.split()))
-    first = bm25_topk_indexed(
-        spark, path, query, k=fb_docs, k1=k1, b=b, id_col=id_col,
-        before_batch=before_batch, where=where,
-    )
-    # bounded-collect: fb_docs ids (pass one's TakeOrdered output)
-    fb_ids = [r[0] for r in first.select(id_col).collect()]
-    fb_counts: dict = {}
-    if fb_ids:
-        all_counts = _fb_counts_from_postings(
-            spark, resolve_root(spark, path), fb_ids, id_col, before_batch
-        )
-        keep = (
-            all_counts.filter(~F.col("tok").isin(terms))
-            .orderBy(F.col("__n").desc(), F.col("tok").asc())
-            .limit(int(fb_terms))
-            .unionByName(all_counts.filter(F.col("tok").isin(terms)))
-        )
-        # bounded-collect: <= fb_terms + |q| count rows (TakeOrdered
-        # union the query's own terms — the scan form's shape)
-        fb_counts = {r[0]: int(r[1]) for r in keep.collect()}
-    # identical weight arithmetic to rm3_expand (truncate-then-
-    # renormalize over the kept vocabulary; exact integer counts)
-    total_kept = sum(fb_counts.values())
-    w: dict = {}
-    nq = len(terms)
-    for t in sorted(set(terms) | set(fb_counts)):
-        w_orig = lam * (1.0 / nq) if t in terms else 0.0
-        w_fb = (
-            (1.0 - lam) * (fb_counts.get(t, 0) / total_kept)
-            if total_kept
-            else 0.0
-        )
-        wv = w_orig + w_fb
-        if wv > 0:
-            w[t] = wv
-    return bm25_topk_indexed(
-        spark, path, query, k=k, k1=k1, b=b, id_col=id_col,
-        before_batch=before_batch, where=where, weights=w,
-    )
-
-
-def _collect_query_texts(queries, query_id_col, query_text_col):
-    """Collect + validate a query batch (the shared front door of the
-    batch feedback forms): duplicate ids collapse dict slots and NULL
-    texts stringify to 'None', so both fail loudly (ADVICE r11)."""
-    # bounded-collect: the query batch texts — the retrieval workload
-    qrows = queries.select(
-        F.col(query_id_col), F.col(query_text_col)
-    ).collect()
-    if not qrows:
-        raise ValueError("query batch is empty")
-    if len({r[0] for r in qrows}) != len(qrows):
-        raise ValueError("duplicate query ids in the batch")
-    for r in qrows:
-        if r[1] is None or not r[1].split():
-            raise ValueError(f"query {r[0]!r} has no terms")
-    return {r[0]: sorted(set(r[1].split())) for r in qrows}
-
-
-def _fb_counts_per_query(
-    spark,
-    path: str,
-    fb_pairs: list,
-    qid_type,
-    id_type,
-    id_col: str,
-    query_id_col: str,
-    before_batch: int | None,
-):
-    """Per-(query, term) feedback counts from the INDEX's postings —
-    the batch twin of :func:`_fb_counts_from_postings`: one postings
-    read pruned to (tok, id, tf) and the union of all queries'
-    feedback ids, tf summed per (query, tok) through the broadcast
-    (query, fb_doc) pair relation. Output is |Q| x |fb vocabulary|-
-    bounded; corpus text is never read."""
-    from pyspark.sql.types import StructField, StructType
-
-    pair_df = _local_rows_df(
-        spark,
-        fb_pairs,
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField(id_col, id_type),
-            ]
-        ),
-    )
-    fb_ids = sorted({p[1] for p in fb_pairs})
-    posts = spark.read.parquet(f"{path}/postings")
-    if before_batch is not None:
-        posts = posts.filter(F.col("ingest_batch_id") < before_batch)
-    return (
-        posts.filter(F.col(id_col).isin(fb_ids))
-        .select(id_col, "tok", "tf")
-        .join(F.broadcast(pair_df), id_col)
-        .groupBy(query_id_col, F.col("tok").alias("__tok"))
-        .agg(F.sum("tf").cast("bigint").alias("__n"))
+    bucket-pruned probe. Corpus text is never read."""
+    return _two_pass(
+        _index_postings(spark, path, id_col, before_batch, where),
+        {0: _query_terms(query)}, k, fb_docs, fb_terms, lam, k1, b, id_col,
     )
 
 
@@ -3049,79 +2258,18 @@ def bm25_join_prf_indexed(
     before_batch: int | None = None,
     where=None,
 ) -> DataFrame:
-    """Batch PRF against a PERSISTED index — the last PRF cell of the
-    {single, batch} x {scan, indexed} matrix: pass one is ONE
-    bucket-pruned :func:`bm25_join_indexed`, the per-query feedback
-    term counts come from the index's own postings (one pruned read
-    for the whole batch — :func:`_fb_counts_per_query`), and pass two
-    probes the expanded batch. Corpus text is never read; per-query
-    output is IDENTICAL to looping :func:`bm25_topk_prf_indexed`
-    (pinned), which in turn equals the scan-form PRF."""
-    from pyspark.sql import Window
-
-    if fb_docs < 1:
-        raise ValueError(f"fb_docs must be >= 1, got {fb_docs}")
-    if fb_terms < 1:
-        raise ValueError(f"fb_terms must be >= 1, got {fb_terms}")
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from ..sources.manifest import resolve_root
-
+    """Batch PRF against a PERSISTED index: pass one is ONE
+    bucket-pruned batch probe, the per-query feedback term counts come
+    from the index's own postings (one pruned read for the whole
+    batch), and pass two probes the expanded batch. Corpus text is
+    never read; per-query output is IDENTICAL to looping
+    :func:`bm25_topk_prf_indexed` (pinned), which in turn equals the
+    scan-form PRF."""
     orig = _collect_query_texts(queries, query_id_col, query_text_col)
-    qid_type = queries.schema[query_id_col].dataType
-    first = bm25_join_indexed(
-        spark, path, queries, k=fb_docs, k1=k1, b=b, id_col=id_col,
-        query_text_col=query_text_col, query_id_col=query_id_col,
-        before_batch=before_batch, where=where,
-    )
-    # bounded-collect: |Q| x fb_docs feedback pairs
-    fb_pairs = [(r[0], r[1]) for r in first.select(query_id_col, id_col).collect()]
-    new_terms: dict = {}
-    if fb_pairs:
-        cur = resolve_root(spark, path)
-        id_type = spark.read.parquet(f"{cur}/postings").schema[
-            id_col
-        ].dataType
-        orig_df = _local_rows_df(
-            spark,
-            [(q, t) for q, ts in orig.items() for t in ts],
-            StructType(
-                [
-                    StructField(query_id_col, qid_type),
-                    StructField("__tok", StringType()),
-                ]
-            ),
-        )
-        counts = _fb_counts_per_query(
-            spark, cur, fb_pairs, qid_type, id_type, id_col,
-            query_id_col, before_batch,
-        ).join(F.broadcast(orig_df), [query_id_col, "__tok"], "left_anti")
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("__n").desc(), F.col("__tok").asc()
-        )
-        top = counts.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= int(fb_terms)
-        )
-        # bounded-collect: |Q| x fb_terms expansion terms
-        for r in top.select(query_id_col, "__tok").collect():
-            new_terms.setdefault(r[0], set()).add(r[1])
-    expanded = _local_rows_df(
-        spark,
-        [
-            (q, " ".join(sorted(set(ts) | new_terms.get(q, set()))))
-            for q, ts in orig.items()
-        ],
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField(query_text_col, StringType()),
-            ]
-        ),
-    )
-    return bm25_join_indexed(
-        spark, path, expanded, k=k, k1=k1, b=b, id_col=id_col,
-        query_text_col=query_text_col, query_id_col=query_id_col,
-        before_batch=before_batch, where=where,
+    return _two_pass(
+        _index_postings(spark, path, id_col, before_batch, where),
+        orig, k, fb_docs, fb_terms, None, k1, b, id_col,
+        query_id_col, queries.schema[query_id_col].dataType,
     )
 
 
@@ -3141,106 +2289,14 @@ def bm25_join_rm3_indexed(
     before_batch: int | None = None,
     where=None,
 ) -> DataFrame:
-    """Batch RM3 against a PERSISTED index — the last cell of the full
-    relevance-feedback matrix ({PRF, RM3} x {single, batch} x {scan,
-    indexed}): per-query RM3 weights from one pruned postings read for
-    the whole batch, rescored in ONE weighted batch probe
-    (:func:`bm25_join_indexed(weights=...)`). Corpus text is never
-    read; per-query output is IDENTICAL to looping
-    :func:`bm25_topk_rm3_indexed` (pinned), which equals the scan-form
-    RM3."""
-    from pyspark.sql import Window
-
-    if fb_docs < 1:
-        raise ValueError(f"fb_docs must be >= 1, got {fb_docs}")
-    if fb_terms < 1:
-        raise ValueError(f"fb_terms must be >= 1, got {fb_terms}")
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam must be in [0, 1], got {lam}")
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..sources.manifest import resolve_root
-
+    """Batch RM3 against a PERSISTED index: per-query RM3 weights from
+    one pruned postings read for the whole batch, rescored in ONE
+    weighted batch probe. Corpus text is never read; per-query output
+    is IDENTICAL to looping :func:`bm25_topk_rm3_indexed` (pinned),
+    which equals the scan-form RM3."""
     orig = _collect_query_texts(queries, query_id_col, query_text_col)
-    qid_type = queries.schema[query_id_col].dataType
-    first = bm25_join_indexed(
-        spark, path, queries, k=fb_docs, k1=k1, b=b, id_col=id_col,
-        query_text_col=query_text_col, query_id_col=query_id_col,
-        before_batch=before_batch, where=where,
-    )
-    # bounded-collect: |Q| x fb_docs feedback pairs
-    fb_pairs = [(r[0], r[1]) for r in first.select(query_id_col, id_col).collect()]
-    fb_counts: dict = {q: {} for q in orig}
-    if fb_pairs:
-        cur = resolve_root(spark, path)
-        id_type = spark.read.parquet(f"{cur}/postings").schema[
-            id_col
-        ].dataType
-        orig_df = _local_rows_df(
-            spark,
-            [(q, t) for q, ts in orig.items() for t in ts],
-            StructType(
-                [
-                    StructField(query_id_col, qid_type),
-                    StructField("__tok", StringType()),
-                ]
-            ),
-        )
-        counts = _fb_counts_per_query(
-            spark, cur, fb_pairs, qid_type, id_type, id_col,
-            query_id_col, before_batch,
-        )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("__n").desc(), F.col("__tok").asc()
-        )
-        top = (
-            counts.join(
-                F.broadcast(orig_df), [query_id_col, "__tok"], "left_anti"
-            )
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= int(fb_terms))
-            .select(query_id_col, "__tok", "__n")
-        )
-        own = counts.join(
-            F.broadcast(orig_df), [query_id_col, "__tok"], "left_semi"
-        ).select(query_id_col, "__tok", "__n")
-        # bounded-collect: <= |Q| x (fb_terms + |q|) kept-count rows
-        for r in top.unionByName(own).collect():
-            fb_counts[r[0]][r[1]] = int(r[2])
-    # identical weight arithmetic to rm3_expand / bm25_join_rm3
-    wrows = []
-    for q, ts in orig.items():
-        counts_q = fb_counts.get(q, {})
-        total_kept = sum(counts_q.values())
-        nq = len(ts)
-        for t in sorted(set(ts) | set(counts_q)):
-            w_orig = lam * (1.0 / nq) if t in ts else 0.0
-            w_fb = (
-                (1.0 - lam) * (counts_q.get(t, 0) / total_kept)
-                if total_kept
-                else 0.0
-            )
-            wv = w_orig + w_fb
-            if wv > 0:
-                wrows.append((q, t, wv))
-    wdf = _local_rows_df(
-        spark,
-        wrows,
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField("term", StringType()),
-                StructField("weight", DoubleType()),
-            ]
-        ),
-    )
-    return bm25_join_indexed(
-        spark, path, queries, k=k, k1=k1, b=b, id_col=id_col,
-        query_text_col=query_text_col, query_id_col=query_id_col,
-        before_batch=before_batch, where=where, weights=wdf,
+    return _two_pass(
+        _index_postings(spark, path, id_col, before_batch, where),
+        orig, k, fb_docs, fb_terms, lam, k1, b, id_col,
+        query_id_col, queries.schema[query_id_col].dataType,
     )

@@ -160,7 +160,9 @@ def test_gumbel_libm_formula(spark):
 def test_bm25_join_matches_per_query_topk(spark):
     """The batch form must equal running bm25_topk per query (same
     corpus stats, same idf, same folds) — pinned by value equality on
-    every (query, doc, score) triple."""
+    every (query, doc, score) triple. Query 400 holds a no-break space,
+    which the corpus tokenizer (Java \\s) does not split on: both forms
+    must read it as the one term ``spark\\xa0join``."""
     from spark_sorted_spark.functions.retrieval import bm25_join, bm25_topk
 
     docs = {
@@ -170,9 +172,15 @@ def test_bm25_join_matches_per_query_topk(spark):
         4: "window spark",
         5: "unrelated words entirely",
         6: "spark join window filter all four terms here",
+        7: "spark\xa0join",
     }
     df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
-    queries = [(100, "spark join"), (200, "filter window"), (300, "scan")]
+    queries = [
+        (100, "spark join"),
+        (200, "filter window"),
+        (300, "scan"),
+        (400, "spark\xa0join"),
+    ]
     qdf = spark.createDataFrame(queries, "query_id long, text string")
     got = {
         (r.query_id, r.doc_id): (r.score, r.n_terms_matched, r.rank)
