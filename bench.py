@@ -954,13 +954,14 @@ def main():
     times: dict[str, float] = {}
     # ambient contention telemetry (additions-only; VERDICT r15 item 3):
     # hypervisor steal% and 1-min load sampled around each entry's
-    # warmup+timed window, so a contaminated run is adjudicable from
+    # timed window (after the untimed warmup, the same window as
+    # tools/bench_probe.py), so a contaminated run is adjudicable from
     # the JSON alone instead of costing a round of forensics
     ambient: dict[str, dict] = {}
     run_t0 = _cpu_ticks()
     for name, fn in BENCH.items():
-        e_t0, l0 = _cpu_ticks(), _load1()
         fn(spark)  # warmup (untimed)
+        e_t0, l0 = _cpu_ticks(), _load1()
         best = float("inf")
         for _ in range(3 if name in NOISY else 2):
             t0 = time.perf_counter()

@@ -29,6 +29,16 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.manifest import (  # noqa: F401  (_rename, _swap_in: re-exported)
+    _carry,
+    _exists,
+    _rename,
+    _swap_in,
+    batch_dir,
+    resolve_root,
+    staged_store,
+    store_layout,
+)
 from .local_rows import local_rows_df
 from .text import md5_int32, tokens
 
@@ -1130,51 +1140,27 @@ def build_minhash_band_store(
     partitions with ``before_batch``. Partition pruning makes both
     free at read time.
 
-    ``commit="manifest"`` (round 10): the store is written under a
-    fresh ``{path}/gen-{k}`` generation and published by the atomic
-    ``_current`` pointer PUT — the object-store-safe layout
-    (``sources/manifest.py``, same protocol as the ANN indexes).
-    Appends, probes, and compaction resolve the pointer transparently
-    on both layouts; compaction on a manifest store publishes a NEW
-    generation, so it is also safe under concurrent readers."""
-    from ..sources.manifest import begin_generation, commit_generation
-
-    if commit not in ("rename", "manifest"):
-        raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
+    ``commit``: the shared storage contract of every store (see
+    ``sources/manifest.py``) — ``"rename"`` (default) or
+    ``"manifest"`` for object stores. Appends, probes and compaction
+    resolve the pointer transparently on both layouts."""
     bands = minhash_band_table(df, text_col, id_col, n)
-    spark = df.sparkSession
-    if commit == "manifest":
-        root = path
-        path = begin_generation(spark, root)
-    else:
-        # a build is a FRESH store: clear stale append partitions first
-        # (overwriting only the base partition would leave them
-        # behind). Delete ONLY the two store subdirs, never the
-        # user-supplied path itself — a mistyped path must not take
-        # unrelated data with it, and a failure between delete and
-        # write leaves the sibling intact
-        _rm_dir(spark, f"{path}/bands")
-        _rm_dir(spark, f"{path}/counts")
-    bands.write.mode("overwrite").parquet(f"{path}/bands/ingest_batch_id=-1")
+    with staged_store(df.sparkSession, path, commit) as staged:
+        _write_band_store(bands, staged)
+
+
+def _write_band_store(bands: DataFrame, staged: str) -> None:
+    """Write a complete band store into ``staged``: the bands as the
+    base partition, then the counts aggregated from that partition."""
+    spark = bands.sparkSession
+    bands.write.mode("overwrite").parquet(f"{staged}/bands/ingest_batch_id=-1")
     (
-        spark.read.parquet(f"{path}/bands")
+        spark.read.parquet(f"{staged}/bands")
         .groupBy("band", "band_key")
         .agg(F.count(F.lit(1)).alias("store_n"))
         .write.mode("overwrite")
-        .parquet(f"{path}/counts/ingest_batch_id=-1")
+        .parquet(f"{staged}/counts/ingest_batch_id=-1")
     )
-    if commit == "manifest":
-        commit_generation(spark, root, path)
-
-
-def _rm_dir(spark, path: str) -> None:
-    """Recursively delete ``path`` through the Hadoop FileSystem API,
-    so it works on any supported scheme (local, HDFS, object stores),
-    not just the driver's local disk."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
 
 
 def append_to_minhash_band_store(
@@ -1195,31 +1181,15 @@ def append_to_minhash_band_store(
     O(all store keys) job per batch). The guard merges deltas lazily —
     but only for the keys a batch actually touches, after the
     broadcast prune, so reads stay O(new batch). Run
-    :func:`build_minhash_band_store` to compact a long-appended store
+    :func:`compact_minhash_band_store` to compact a long-appended store
     back to one row per key.
 
-    With ``batch_id`` set the write is IDEMPOTENT: the batch lands in
-    its own ``ingest_batch_id={batch_id}`` partition with overwrite
-    semantics, so re-running the same batch (streaming replay after a
-    crash) replaces its earlier partial write instead of duplicating
-    it. Without it, rows accumulate in the base partition (plain
-    at-least-once append — fine for a driver you only run once)."""
-    if batch_id is not None and batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0, got {batch_id}: negative ids are "
-            "reserved (ingest_batch_id=-1 is the base partition the "
-            "build wrote — overwriting it would replace the whole base "
-            "store with one batch)"
-        )
-    from ..sources.manifest import resolve_root
-
-    # manifest-committed store: the append mutates the CURRENT
-    # generation in place (partition-level overwrite — same replay
-    # contract as the legacy layout; no-op on rename-layout stores)
-    path = resolve_root(df.sparkSession, path)
+    ``batch_id`` follows the shared append contract
+    (``sources.manifest.batch_dir``): set, the batch overwrites its
+    own partition (replay-safe); unset, rows accumulate in the base
+    partition."""
+    path, part, mode = batch_dir(df.sparkSession, path, batch_id)
     bands = minhash_band_table(df, text_col, id_col, n).persist()
-    part = -1 if batch_id is None else batch_id
-    mode = "append" if batch_id is None else "overwrite"
     bands.write.mode(mode).parquet(f"{path}/bands/ingest_batch_id={part}")
     (
         bands.groupBy("band", "band_key")
@@ -1241,110 +1211,14 @@ def compact_minhash_band_store(spark, path: str) -> None:
     never the corpus text, so no re-shingling and no 100 TB scan.
     Run it when the counts table's delta-row count (one row set per
     append) starts to matter; correctness never depends on it (the
-    guard merges deltas lazily).
-
-    On a MANIFEST-layout store (built with ``commit="manifest"``) the
-    compacted tables are written to a fresh generation and published
-    by the atomic pointer PUT — object-store safe AND safe under
-    concurrent readers (they keep resolving the old generation until
-    the flip). On the legacy rename layout this swaps in place
-    (``_swap_in``) and is NOT concurrency-safe: don't compact while an
-    ingest stream is draining into the same store (the read-rewrite
-    window would drop an append that lands in between)."""
-    from ..sources.manifest import (
-        begin_generation,
-        commit_generation,
-        resolve_root,
-    )
-
-    root = path
-    cur = resolve_root(spark, root)
-    bands = spark.read.parquet(f"{cur}/bands")
-    if "ingest_batch_id" in bands.columns:
-        bands = bands.drop("ingest_batch_id")
-    if cur != root:
-        # manifest layout: compacted store = next generation
-        gen = begin_generation(spark, root)
-        bands.write.mode("overwrite").parquet(
-            f"{gen}/bands/ingest_batch_id=-1"
-        )
-        (
-            spark.read.parquet(f"{gen}/bands")
-            .groupBy("band", "band_key")
-            .agg(F.count(F.lit(1)).alias("store_n"))
-            .write.mode("overwrite")
-            .parquet(f"{gen}/counts/ingest_batch_id=-1")
-        )
-        commit_generation(spark, root, gen)
-        return
-    # the store fits the "bounded metadata" exception nowhere — it is
-    # corpus-proportional — so stage through a sibling dir and swap,
-    # never through driver memory
-    staging = f"{path}/bands_compacting"
-    bands.write.mode("overwrite").parquet(staging)
-    _swap_in(spark, staging, f"{path}/bands", f"{path}/bands/ingest_batch_id=-1")
-    counts_staging = f"{path}/counts_compacting"
-    (
-        spark.read.parquet(f"{path}/bands")
-        .groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("store_n"))
-        .write.mode("overwrite")
-        .parquet(counts_staging)
-    )
-    _swap_in(
-        spark, counts_staging, f"{path}/counts", f"{path}/counts/ingest_batch_id=-1"
-    )
-
-
-def _swap_in(spark, staged: str, live: str, dst: str) -> None:
-    """Crash-atomic directory replacement for the compact paths:
-    rename the live dir ASIDE (``{live}.old``), rename the staged dir
-    to ``dst`` (a path under ``live``), and delete the old copy LAST.
-
-    Every crash point leaves a recoverable state — the
-    delete-then-rename order it replaces had a window (after the
-    delete, before the rename) that lost the only readable copy:
-
-    * before the aside-rename: live untouched, staged is an orphan;
-    * between the renames: live missing but the FULL old store sits in
-      ``{live}.old`` (recover: rename it back) and the merged state in
-      the staged dir;
-    * after the in-rename: live is correct; a leftover ``.old`` is
-      swept by the next swap.
-
-    STORAGE CONTRACT: this protocol's atomicity rests on
-    ``FileSystem.rename`` being atomic — true on HDFS and local
-    filesystems, NOT on S3-style object stores (directory rename there
-    is per-object copy+delete; a crash or concurrent reader mid-swap
-    sees a torn store). On object stores, build the store with
-    ``commit="manifest"`` (supported by the ANN indexes, the band
-    store, and the gram store since round 10; see
-    ``sources/manifest.py``) — their compact paths then publish a new
-    GENERATION instead of swapping, and this function is never
-    reached. The remaining rename-layout store is the ingest corpus
-    (``streaming/ingest.py compact_corpus``), whose stopped-stream
-    requirement already removes the concurrent-reader window; the
-    crash-mid-swap case leaves the full copy in ``.old`` (documented
-    recovery).
-    """
-    old = f"{live}.old"
-    _rm_dir(spark, old)  # leftover from a crash after a completed swap
-    _rename(spark, live, old)
-    _rename(spark, staged, dst)
-    _rm_dir(spark, old)
-
-
-def _rename(spark, src: str, dst: str) -> None:
-    """Rename through the Hadoop FileSystem API, creating the
-    destination's parent (rename fails, not creates, without it)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    src_p = jvm.org.apache.hadoop.fs.Path(src)
-    dst_p = jvm.org.apache.hadoop.fs.Path(dst)
-    fs = dst_p.getFileSystem(conf)
-    fs.mkdirs(dst_p.getParent())
-    if not fs.rename(src_p, dst_p):
-        raise IOError(f"rename {src} -> {dst} failed")
+    guard merges deltas lazily). The compacted store is staged whole
+    and published once (``sources.manifest.staged_store``); run it
+    with no ingest stream draining into the store."""
+    cur, commit = store_layout(spark, path)
+    bands = spark.read.parquet(f"{cur}/bands").drop("ingest_batch_id")
+    with staged_store(spark, path, commit) as staged:
+        _write_band_store(bands, staged)
+        _carry(spark, cur, staged, "_ingest_stream")
 
 
 def _combined_small_keys(
@@ -1444,8 +1318,6 @@ def dedup_against_store(
     spark = new_df.sparkSession
     store_counts = None
     if isinstance(store, str):
-        from ..sources.manifest import resolve_root
-
         store = resolve_root(spark, store)
         store_counts = spark.read.parquet(f"{store}/counts")
         store = spark.read.parquet(f"{store}/bands")
@@ -1945,42 +1817,31 @@ def build_gram_store(
     :func:`remove_repeated_spans` would see (raw, pre-clean): the
     store's counts stand in for the corpus occurrences in the
     duplicate test, and the one-shot-equivalence contract (pinned in
-    tests) is stated in :func:`clean_against_gram_store`."""
-    from ..sources.manifest import begin_generation, commit_generation
-
+    tests) is stated in :func:`clean_against_gram_store`. ``commit``:
+    the shared storage contract (``sources/manifest.py``)."""
     if min_len < 1:
         raise ValueError(f"min_len must be >= 1, got {min_len}")
-    if commit not in ("rename", "manifest"):
-        raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
     spark = df.sparkSession
     w = _positioned_windows(spread_small_input(df), text_col, id_col, min_len)
-    if commit == "manifest":
-        # object-store-safe layout (sources/manifest.py): the whole
-        # store (grams + _gram_meta) lands in a fresh generation,
-        # published by the atomic _current pointer PUT
-        root = path
-        path = begin_generation(spark, root)
-    else:
-        _rm_dir(spark, f"{path}/grams")
-    (
-        w.groupBy("gram_md5")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .write.mode("overwrite")
-        .parquet(f"{path}/grams/ingest_batch_id=-1")
-    )
-    local_rows_df(
-        spark,
-        [(int(min_len),)], "min_len int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_gram_meta")
-    if commit == "manifest":
-        commit_generation(spark, root, path)
+    with staged_store(spark, path, commit) as staged:
+        _gram_counts(w).write.mode("overwrite").parquet(
+            f"{staged}/grams/ingest_batch_id=-1"
+        )
+        _write_gram_meta(spark, staged, min_len)
+
+
+def _gram_counts(w: DataFrame) -> DataFrame:
+    return w.groupBy("gram_md5").agg(F.count(F.lit(1)).alias("occ"))
+
+
+def _write_gram_meta(spark, path: str, min_len: int) -> None:
+    local_rows_df(spark, [(int(min_len),)], "min_len int").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/_gram_meta")
 
 
 def _gram_meta_exists(spark, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_gram_meta")
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+    return _exists(spark, f"{path}/_gram_meta")
 
 
 def _resolve_gram_meta(spark, path: str, min_len: int | None, caller: str) -> int:
@@ -2023,95 +1884,37 @@ def append_to_gram_store(
     tomorrow's batch is checked against today's corpus too). Counts
     append as a PER-BATCH DELTA row set — reads merge deltas lazily
     for only the keys a batch touches; :func:`compact_gram_store`
-    collapses a long-appended store. With ``batch_id`` the write is
-    idempotent (own partition, overwrite); negative ids are rejected
-    (``-1`` is the base partition)."""
-    if batch_id is not None and batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0, got {batch_id}: negative ids are "
-            "reserved (ingest_batch_id=-1 is the base partition the "
-            "build wrote)"
-        )
+    collapses a long-appended store. ``batch_id`` follows the shared
+    append contract (``sources.manifest.batch_dir``)."""
     spark = df.sparkSession
-    from ..sources.manifest import resolve_root
-
-    # manifest-committed store: appends mutate the CURRENT generation
-    # (partition-level overwrite, same replay contract; no-op on the
-    # rename layout)
-    path = resolve_root(spark, path)
+    path, part, mode = batch_dir(spark, path, batch_id)
     had_meta = _gram_meta_exists(spark, path)
     min_len = _resolve_gram_meta(spark, path, min_len, "append_to_gram_store")
     w = _positioned_windows(spread_small_input(df), text_col, id_col, min_len)
-    part = -1 if batch_id is None else batch_id
-    mode = "append" if batch_id is None else "overwrite"
-    (
-        w.groupBy("gram_md5")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .write.mode(mode)
-        .parquet(f"{path}/grams/ingest_batch_id={part}")
-    )
+    _gram_counts(w).write.mode(mode).parquet(f"{path}/grams/ingest_batch_id={part}")
     if not had_meta:
         # first-batch store creation (the streaming path starts with
         # no prior build): record the width so later appends/cleans
         # resolve and pin it like a built store's
-        local_rows_df(
-            spark, [(int(min_len),)], "min_len int"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_gram_meta")
+        _write_gram_meta(spark, path, min_len)
 
 
 def compact_gram_store(spark, path: str) -> None:
     """Collapse per-append delta rows to one total per gram. Reads
-    only the STORE (never corpus text). Crash-atomic via
-    :func:`_swap_in` — same storage contract (rename-atomic
-    filesystems; offline on object stores).
-
-    ``streaming.ingest.stream_maintain_gram_store`` keeps its
-    ``_ingest_stream`` identity marker INSIDE ``{path}/grams`` (the
-    dir the swap replaces), so — mirroring ``compact_corpus`` — the
-    marker is read before the swap and re-written after it; otherwise
-    the next stream resume hard-fails on the no-marker guard and the
-    ``allow_restart=True`` workaround resets the replay-fence base
-    the original marker recorded (ADVICE r9).
-
-    On a MANIFEST-layout store the compacted grams (+ carried
-    ``_gram_meta`` and stream marker) publish as a fresh generation
-    via the atomic pointer PUT — object-store safe and safe under
-    concurrent readers; the stopped-stream requirement still applies
-    (compacting between a crash and its replay folds a torn batch
-    into the base on either layout)."""
-    from ..sources.manifest import (
-        begin_generation,
-        commit_generation,
-        resolve_root,
-    )
-    from ..streaming.ingest import _read_text, _write_text
-
-    root = path
-    cur = resolve_root(spark, root)
-    marker = _read_text(spark, f"{cur}/grams/_ingest_stream")
-    grams = spark.read.parquet(f"{cur}/grams")
-    if "ingest_batch_id" in grams.columns:
-        grams = grams.drop("ingest_batch_id")
-    compacted = grams.groupBy("gram_md5").agg(F.sum("occ").alias("occ"))
-    if cur != root:
-        # manifest layout: the new generation is self-contained —
-        # grams, the carried _gram_meta, and the stream marker
-        gen = begin_generation(spark, root)
-        compacted.write.mode("overwrite").parquet(
-            f"{gen}/grams/ingest_batch_id=-1"
-        )
-        spark.read.parquet(f"{cur}/_gram_meta").coalesce(1).write.mode(
+    only the STORE (never corpus text); the compacted grams, the
+    ``_gram_meta`` and the ``_ingest_stream`` marker that
+    ``streaming.ingest.stream_maintain_gram_store`` keeps inside
+    ``{path}/grams`` are staged whole and published once
+    (``sources.manifest.staged_store``). Run it with the stream
+    stopped: compacting between a crash and its replay folds a torn
+    batch into the base."""
+    cur, commit = store_layout(spark, path)
+    grams = spark.read.parquet(f"{cur}/grams").drop("ingest_batch_id")
+    with staged_store(spark, path, commit) as staged:
+        grams.groupBy("gram_md5").agg(F.sum("occ").alias("occ")).write.mode(
             "overwrite"
-        ).parquet(f"{gen}/_gram_meta")
-        if marker is not None:
-            _write_text(spark, f"{gen}/grams/_ingest_stream", marker)
-        commit_generation(spark, root, gen)
-        return
-    staging = f"{path}/grams_compacting"
-    compacted.write.mode("overwrite").parquet(staging)
-    _swap_in(spark, staging, f"{path}/grams", f"{path}/grams/ingest_batch_id=-1")
-    if marker is not None:
-        _write_text(spark, f"{path}/grams/_ingest_stream", marker)
+        ).parquet(f"{staged}/grams/ingest_batch_id=-1")
+        _carry(spark, cur, staged, "_gram_meta", "grams/_ingest_stream")
 
 
 def clean_against_gram_store(
@@ -2150,8 +1953,6 @@ def clean_against_gram_store(
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
     spark = df.sparkSession
-    from ..sources.manifest import resolve_root
-
     path = resolve_root(spark, path)
     min_len = _resolve_gram_meta(spark, path, None, "clean_against_gram_store")
     grams = spark.read.parquet(f"{path}/grams")

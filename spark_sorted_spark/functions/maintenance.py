@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.manifest import _ls, resolve_root
 from .local_rows import local_rows_df
 
 __all__ = ["maintenance_plan"]
@@ -50,12 +51,10 @@ def _detect_store(spark, path: str) -> str:
     -> IVF-SQ8); ``_lsh_meta``
     -> LSH; ``bands`` + ``counts`` -> MinHash band store; ``grams`` +
     ``_gram_meta`` -> gram store."""
-    jfs = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jfs(path).getFileSystem(conf)
+    names = set(_ls(spark, path))
 
     def has(sub: str) -> bool:
-        return fs.exists(jfs(f"{path}/{sub}"))
+        return sub in names
 
     if has("_bm25_meta"):
         return "bm25"
@@ -124,8 +123,6 @@ def maintenance_plan(
     no depth knob in the banding scheme). Works on both the rename
     and manifest layouts (the health reports resolve the generation
     pointer themselves)."""
-    from ..sources.manifest import resolve_root
-
     if max_batches < 1:
         raise ValueError(f"max_batches must be >= 1, got {max_batches}")
     if not (skew_ratio >= 1.0):

@@ -58,6 +58,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources.manifest import (
+    _carry,
+    batch_dir,
+    resolve_root,
+    staged_store,
+    store_layout,
+)
 from .local_rows import local_rows_df as _local_rows_df
 from .text import md5_int32, tokens
 
@@ -217,7 +224,6 @@ def _index_postings(spark, path, id_col, before_batch=None, where=None):
     bucket-pruned (a document's terms span all buckets — the
     inverted-index-without-forward-index trade), id filter pushed to
     parquet."""
-    from ..sources.manifest import resolve_root
     from .similarity import _apply_where, _before_batch
 
     cache = []
@@ -1872,9 +1878,8 @@ def build_bm25_index(
     * ``{path}/_bm25_meta``  — ``n_buckets`` (probes resolve it; the
       ``_lsh_meta`` discipline).
 
-    ``commit="manifest"`` publishes via the generation-pointer layout
-    (``sources/manifest.py``) — the same object-store contract as the
-    ANN/band/gram stores. Probes (:func:`bm25_topk_indexed`) are
+    ``commit`` is the shared storage contract of every store
+    (``sources/manifest.py``). Probes (:func:`bm25_topk_indexed`) are
     pinned bitwise-equal to the scan form, including across appends
     (idf and avgdl re-derive from the summed stats, so a probe after
     ``append_to_bm25_index`` equals a text scan of the UNION corpus).
@@ -1897,10 +1902,6 @@ def build_bm25_index(
     gated constructions remain oracle-replayable; pass ``None`` at
     scale. Probes resolve whatever count was used from
     ``_bm25_meta``, so nothing downstream changes."""
-    from ..sources.bucketed import write_partitioned
-    from ..sources.manifest import begin_generation, commit_generation
-    from .dedup import _rm_dir, spread_small_input
-
     if n_buckets is None:
         if target_bucket_docs < 1:
             raise ValueError(
@@ -1912,44 +1913,52 @@ def build_bm25_index(
         )
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    if commit not in ("rename", "manifest"):
-        raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
     _check_bm25_extra_cols(extra_cols, id_col, text_col)
     spark = docs.sparkSession
-    if commit == "manifest":
-        root = path
-        path = begin_generation(spark, root)
-    else:
-        # clear ALL per-batch subdirs, not just postings/dft: a rebuild
-        # over a previously-appended index must not leave stale
-        # _bm25_stats partitions behind — probes SUM the stats rows, so
-        # a leftover batch row silently skews idf/avgdl (ADVICE r10)
-        _rm_dir(spark, f"{path}/postings")
-        _rm_dir(spark, f"{path}/dft")
-        _rm_dir(spark, f"{path}/_bm25_stats")
+    with staged_store(spark, path, commit) as staged:
+        _write_bm25_batch(
+            docs, staged, text_col, id_col, extra_cols, n_buckets, -1, "overwrite"
+        )
+        _local_rows_df(
+            spark,
+            [(int(n_buckets),)], "n_buckets int"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{staged}/_bm25_meta")
+
+
+def _write_bm25_batch(
+    docs: DataFrame, path: str, text_col: str, id_col: str, extra_cols,
+    n_buckets: int, part: int, mode: str,
+) -> None:
+    """One batch partition of every per-batch table — postings, df
+    deltas, corpus stats — shared by the build (base ``-1``,
+    overwrite) and appends. The build counts df from a read-back of
+    the partition it just wrote (no corpus-sized cache); an append
+    counts its cached batch frame (a read-back of an append-mode base
+    partition would include the prior rows)."""
+    from ..sources.bucketed import write_partitioned
+    from .dedup import spread_small_input
+
+    build = part == -1 and mode == "overwrite"
     postings = _postings(
         spread_small_input(docs), text_col, id_col, extra_cols=extra_cols
     ).withColumn("tok_bucket", F.pmod(md5_int32(F.col("tok")), F.lit(n_buckets)))
-    write_partitioned(
-        postings, f"{path}/postings/ingest_batch_id=-1", "tok_bucket"
-    )
+    if not build:
+        postings = postings.persist()
+    dst = f"{path}/postings/ingest_batch_id={part}"
+    write_partitioned(postings, dst, "tok_bucket", mode=mode)
     (
-        spark.read.parquet(f"{path}/postings/ingest_batch_id=-1")
+        (docs.sparkSession.read.parquet(dst) if build else postings)
         .groupBy("tok_bucket", "tok")
         .agg(F.count(F.lit(1)).alias("df"))
         .write.partitionBy("tok_bucket")
-        .mode("overwrite")
-        .parquet(f"{path}/dft/ingest_batch_id=-1")
+        .mode(mode)
+        .parquet(f"{path}/dft/ingest_batch_id={part}")
     )
-    _corpus_stats(docs, text_col).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/_bm25_stats/ingest_batch_id=-1"
+    if not build:
+        postings.unpersist()
+    _corpus_stats(docs, text_col).coalesce(1).write.mode(mode).parquet(
+        f"{path}/_bm25_stats/ingest_batch_id={part}"
     )
-    _local_rows_df(
-        spark,
-        [(int(n_buckets),)], "n_buckets int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_bm25_meta")
-    if commit == "manifest":
-        commit_generation(spark, root, path)
 
 
 def append_to_bm25_index(
@@ -1966,51 +1975,19 @@ def append_to_bm25_index(
     them lazily, for their terms only), so the append is O(new batch)
     — the existing index is never read, let alone re-totalled.
 
-    With ``batch_id`` the write is IDEMPOTENT (partition overwrite —
-    streaming-replay safe); without it rows accumulate in the base
-    partition. Batch ids must be NEW documents (shared incremental-
-    store contract); probes after the append equal a text scan of the
-    union corpus (pinned)."""
-    from ..sources.bucketed import write_partitioned
-    from ..sources.manifest import resolve_root
-    from .dedup import spread_small_input
-
-    if batch_id is not None and batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0, got {batch_id}: negative ids are "
-            "reserved (ingest_batch_id=-1 is the base partition)"
-        )
+    ``batch_id`` follows the shared append contract
+    (``sources.manifest.batch_dir``: own partition, idempotent). Batch
+    ids must be NEW documents (shared incremental-store contract);
+    probes after the append equal a text scan of the union corpus
+    (pinned)."""
     spark = docs.sparkSession
-    path = resolve_root(spark, path)
+    path, part, mode = batch_dir(spark, path, batch_id)
     # bounded-collect: one parameter row from the index metadata
     n_buckets = int(spark.read.parquet(f"{path}/_bm25_meta").collect()[0][0])
     extras = _bm25_extra_cols(
         spark.read.parquet(f"{path}/postings"), id_col
     )
-    part = -1 if batch_id is None else batch_id
-    mode = "append" if batch_id is None else "overwrite"
-    postings = (
-        _postings(spread_small_input(docs), text_col, id_col, extra_cols=extras)
-        .withColumn(
-            "tok_bucket", F.pmod(md5_int32(F.col("tok")), F.lit(n_buckets))
-        )
-        .persist()
-    )
-    write_partitioned(
-        postings, f"{path}/postings/ingest_batch_id={part}", "tok_bucket",
-        mode=mode,
-    )
-    (
-        postings.groupBy("tok_bucket", "tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .write.partitionBy("tok_bucket")
-        .mode(mode)
-        .parquet(f"{path}/dft/ingest_batch_id={part}")
-    )
-    postings.unpersist()
-    _corpus_stats(docs, text_col).coalesce(1).write.mode(mode).parquet(
-        f"{path}/_bm25_stats/ingest_batch_id={part}"
-    )
+    _write_bm25_batch(docs, path, text_col, id_col, extras, n_buckets, part, mode)
 
 
 def bm25_index_stats(spark, path: str) -> DataFrame:
@@ -2021,8 +1998,6 @@ def bm25_index_stats(spark, path: str) -> DataFrame:
     counts -> :func:`compact_bm25_index`; persistently hot buckets ->
     rebuild with a larger ``n_buckets``. Store-only read, aggregate
     bounded by tables x batches x buckets."""
-    from ..sources.manifest import resolve_root
-
     path = resolve_root(spark, path)
     out = None
     for table in ("postings", "dft"):
@@ -2045,23 +2020,11 @@ def compact_bm25_index(spark, path: str) -> None:
     """Collapse a long-appended BM25 index back to the base layout:
     postings merge into ``ingest_batch_id=-1``, df deltas re-total to
     one row per term, stats rows to one. Reads only the STORE (never
-    corpus text). Manifest-layout indexes publish a fresh generation
-    (object-store safe, concurrent-reader safe); rename-layout swaps
-    in place via ``_swap_in`` (stopped-writer contract)."""
-    from ..sources.manifest import (
-        begin_generation,
-        commit_generation,
-        resolve_root,
-    )
-    from ..streaming.ingest import _read_text, _write_text
-    from .dedup import _swap_in
-
-    root = path
-    cur = resolve_root(spark, root)
-    # stream_maintain_bm25_index keeps its identity marker INSIDE
-    # {path}/postings (the dir this compaction replaces) — carry it
-    # across, the compact_gram_store lesson (ADVICE r9)
-    marker = _read_text(spark, f"{cur}/postings/_ingest_stream")
+    corpus text). The compacted index, its ``_bm25_meta`` and the
+    stream marker ``stream_maintain_bm25_index`` keeps in
+    ``{path}/postings`` are staged whole and published once
+    (``sources.manifest.staged_store``; stopped-writer contract)."""
+    cur, commit = store_layout(spark, path)
     postings = spark.read.parquet(f"{cur}/postings").drop("ingest_batch_id")
     dft = (
         spark.read.parquet(f"{cur}/dft")
@@ -2072,45 +2035,17 @@ def compact_bm25_index(spark, path: str) -> None:
         F.sum("n_docs").cast("bigint").alias("n_docs"),
         F.sum("sum_dl").cast("bigint").alias("sum_dl"),
     )
-    if cur != root:
-        gen = begin_generation(spark, root)
+    with staged_store(spark, path, commit) as staged:
         postings.write.partitionBy("tok_bucket").mode("overwrite").parquet(
-            f"{gen}/postings/ingest_batch_id=-1"
+            f"{staged}/postings/ingest_batch_id=-1"
         )
         dft.write.partitionBy("tok_bucket").mode("overwrite").parquet(
-            f"{gen}/dft/ingest_batch_id=-1"
+            f"{staged}/dft/ingest_batch_id=-1"
         )
         stats.coalesce(1).write.mode("overwrite").parquet(
-            f"{gen}/_bm25_stats/ingest_batch_id=-1"
+            f"{staged}/_bm25_stats/ingest_batch_id=-1"
         )
-        spark.read.parquet(f"{cur}/_bm25_meta").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{gen}/_bm25_meta")
-        if marker is not None:
-            _write_text(spark, f"{gen}/postings/_ingest_stream", marker)
-        commit_generation(spark, root, gen)
-        return
-    for sub, df_out, pby in (
-        ("postings", postings, True),
-        ("dft", dft, True),
-        ("_bm25_stats", stats.coalesce(1), False),
-    ):
-        staging = f"{path}/{sub}_compacting"
-        w = df_out.write.mode("overwrite")
-        if pby:
-            w = w.partitionBy("tok_bucket")
-        w.parquet(staging)
-        _swap_in(
-            spark, staging, f"{path}/{sub}",
-            f"{path}/{sub}/ingest_batch_id=-1",
-        )
-        if sub == "postings" and marker is not None:
-            # re-arm the stream-identity marker IMMEDIATELY after the
-            # postings swap (the dir that carries it) — a crash between
-            # the swaps must not leave a marker-less base-only store
-            # that a fresh-checkpoint stream could silently adopt with
-            # a reset replay fence (ADVICE r10)
-            _write_text(spark, f"{path}/postings/_ingest_stream", marker)
+        _carry(spark, cur, staged, "_bm25_meta", "postings/_ingest_stream")
 
 
 def bm25_topk_indexed(

@@ -53,6 +53,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.manifest import (
+    _carry,
+    _exists,
+    _fs,
+    _ls,
+    _rm_dir,
+    batch_dir,
+    resolve_root,
+    staged_store,
+    store_layout,
+)
 from .local_rows import local_rows_df
 
 __all__ = [
@@ -450,33 +461,16 @@ def build_ann_lsh_index(
     plane count silently computes garbage buckets and returns
     empty/wrong neighbors with no error.
 
-    STORAGE CONTRACT (``commit=``): the default ``"rename"`` publish
-    stages to a sibling dir and swaps via ``FileSystem.rename`` —
-    atomic on HDFS and local filesystems, NOT on S3-style object
-    stores (directory rename there is per-object copy+delete; a crash
-    or reader mid-swap sees a torn index). On object stores pass
-    ``commit="manifest"``: the index is written to a fresh
-    ``{path}/gen-{k}`` generation and published by writing the small
-    ``{path}/_current`` pointer LAST (one atomic PUT) — see
-    ``sources/manifest.py``. Appends and probes resolve the pointer
-    transparently, on both layouts."""
-    from ..sources.bucketed import write_partitioned
-    from ..sources.manifest import begin_generation, commit_generation
-    from .dedup import _rm_dir, spread_small_input
+    STORAGE CONTRACT (``commit=``, shared by every store — see
+    ``sources/manifest.py``): the new index is staged whole and
+    published once, so a rebuild whose input ``df`` READS the live
+    index (the index holds id+embedding) scans the old copy intact.
+    ``"rename"`` (default) swaps a sibling dir in — atomic on HDFS and
+    local filesystems; on S3-style object stores pass
+    ``commit="manifest"`` (generation dir + atomic pointer PUT).
+    Appends and probes resolve the pointer transparently."""
+    from .dedup import spread_small_input
 
-    if commit not in ("rename", "manifest"):
-        raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
-
-    # a build is a FRESH index, replacing any prior batch partitions
-    # (or overwrite would leave stale appends beside the new base).
-    # The replacement is STAGED: the new assignment is written to a
-    # sibling ``{path}.building`` dir and swapped in only after the
-    # build's plan has fully executed — so a rebuild whose input ``df``
-    # READS the live index (the rebuild/compaction flow streaming/
-    # ann.py recommends: the index holds id+embedding) scans the old
-    # copy intact. An eager pre-delete here would destroy the only
-    # copy before the lazy write ever ran (ADVICE r8), and it also
-    # bypassed Spark's own cannot-read-and-overwrite-same-path check.
     spark = df.sparkSession
     _check_corpus_dim(df, vec_col, dim, "build_ann_lsh_index")
     # n_planes=None derives the depth from the corpus count (the
@@ -501,11 +495,6 @@ def build_ann_lsh_index(
     # the 100 TB design point.
     if n_planes is None:
         n_planes = auto_planes(df.count(), target_bucket)
-    if commit == "manifest":
-        staging = begin_generation(spark, path)
-    else:
-        staging = f"{path}.building"
-        _rm_dir(spark, staging)  # stale staging from a crashed build
     df = spread_small_input(df)
     planes = [_hyperplane(p, dim) for p in range(n_planes)]
     assigned = df.select(
@@ -515,25 +504,12 @@ def build_ann_lsh_index(
         ),
         _sign_bucket_col(F.col(vec_col), planes).alias("bucket"),
     )
-    write_partitioned(assigned, f"{staging}/ingest_batch_id=-1", "bucket")
-    # occupancy side table (VERDICT r14 item 2): counted from a
-    # read-back of the partition just written — bucket is the
-    # directory name, so the aggregate reads no data columns
-    _write_occ_counts(
-        _occ_read_back(spark, f"{staging}/ingest_batch_id=-1", "bucket"),
-        "bucket",
-        staging,
-        -1,
-        "overwrite",
-    )
-    local_rows_df(
-        spark,
-        [(int(n_planes), int(dim))], "n_planes int, dim int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staging}/_lsh_meta")
-    if commit == "manifest":
-        commit_generation(spark, path, staging)
-    else:
-        _publish_index(spark, staging, path)
+    with staged_store(spark, path, commit) as staged:
+        _write_base(assigned, staged, "bucket")
+        _write_meta(
+            spark, staged, "_lsh_meta",
+            [(int(n_planes), int(dim))], "n_planes int, dim int",
+        )
 
 
 def _resolve_lsh_params(
@@ -572,21 +548,47 @@ def _resolve_lsh_params(
     )
 
 
-def _publish_index(spark, staged: str, path: str) -> None:
-    """Swap a fully-written staged index directory into the live
-    ``path``: rename-aside → rename-in → delete-old-last (the
-    crash-atomic ``_swap_in`` protocol the sketch/band-store compactors
-    use; every crash point leaves a complete copy either live or at
-    ``{path}.old``). A fresh build (no live dir) is a single rename."""
-    from .dedup import _rename, _swap_in
+def _write_base(rows: DataFrame, staged: str, key: str | None) -> None:
+    """Write an ANN store's base partition ``ingest_batch_id=-1``
+    (``key``-partitioned) and its occupancy side table, counted from a
+    read-back of the partition just written — ``key`` is the
+    directory name, so the aggregate reads no data columns. Flat PQ
+    (``key=None``) is unpartitioned and has no side table."""
+    from ..sources.bucketed import write_partitioned
 
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        _swap_in(spark, staged, path, path)
-    else:
-        _rename(spark, staged, path)
+    base = f"{staged}/ingest_batch_id=-1"
+    if key is None:
+        rows.write.mode("overwrite").parquet(base)
+        return
+    write_partitioned(rows, base, key)
+    _write_occ_counts(
+        _occ_read_back(rows.sparkSession, base, key), key, staged, -1, "overwrite"
+    )
+
+
+def _write_batch(
+    rows: DataFrame, path: str, key: str, part: int, mode: str
+) -> None:
+    """Land one append batch (``sources.manifest.batch_dir``'s
+    ``part``/``mode``) ``key``-partitioned, bracketed by its occupancy
+    stats: a batch-id-keyed write first drops its stats partition, and
+    the delta is counted from a read-back (overwrite) or from ``rows``
+    (base-partition appends; column pruning keeps any encode out of
+    the count)."""
+    from ..sources.bucketed import write_partitioned
+
+    if mode == "overwrite":
+        _invalidate_occ_counts(rows.sparkSession, path, part)
+    write_partitioned(rows, f"{path}/ingest_batch_id={part}", key, mode=mode)
+    _append_occ_counts(rows, key, path, part, mode)
+
+
+def _write_meta(spark, staged: str, name: str, rows, schema: str) -> None:
+    """One bounded metadata table (``_lsh_meta``, ``_centroids``, ...)
+    as a single file."""
+    local_rows_df(spark, rows, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{staged}/{name}")
 
 
 def append_to_ann_lsh_index(
@@ -604,33 +606,18 @@ def append_to_ann_lsh_index(
     would re-scan and re-write the whole corpus for vectors whose
     buckets never change (the planes are seeded constants).
 
-    Same idempotency contract as ``append_to_minhash_band_store``:
-    with ``batch_id`` set, the batch lands in its own
-    ``ingest_batch_id={batch_id}`` partition with overwrite semantics
-    — a streaming replay replaces its earlier partial write instead
-    of duplicating vectors (duplicated index rows would surface as
-    duplicate candidates and corrupt ranks). Without it, rows append
-    to the base partition (plain at-least-once).
+    ``batch_id`` follows the shared append contract
+    (``sources.manifest.batch_dir``): set, a streaming replay
+    replaces its own partition instead of duplicating vectors
+    (duplicated index rows would surface as duplicate candidates and
+    corrupt ranks); unset, rows append to the base partition.
 
     Probes (:func:`ann_lsh_topk_indexed`) need no change: partition
     discovery surfaces all batches, bucket pruning applies within
     each."""
-    from ..sources.bucketed import write_partitioned
     from .dedup import spread_small_input
 
-    if batch_id is not None and batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0, got {batch_id}: negative ids are "
-            "reserved (ingest_batch_id=-1 is the base partition the "
-            "build wrote — overwriting it would replace the whole base "
-            "corpus assignment with one batch)"
-        )
-    from ..sources.manifest import resolve_root
-
-    # manifest-committed index: the append mutates the CURRENT
-    # generation in place (partition-level overwrite — same replay
-    # contract as the legacy layout)
-    path = resolve_root(df.sparkSession, path)
+    path, part, mode = batch_dir(df.sparkSession, path, batch_id)
     n_planes, dim = _resolve_lsh_params(
         df.sparkSession, path, n_planes, dim, "append_to_ann_lsh_index"
     )
@@ -643,16 +630,7 @@ def append_to_ann_lsh_index(
         ).alias(vec_col),
         _sign_bucket_col(F.col(vec_col), planes).alias("bucket"),
     )
-    part = -1 if batch_id is None else batch_id
-    mode = "append" if batch_id is None else "overwrite"
-    if mode == "overwrite":
-        _invalidate_occ_counts(df.sparkSession, path, part)
-    write_partitioned(
-        assigned, f"{path}/ingest_batch_id={part}", "bucket", mode=mode
-    )
-    # occupancy delta for this batch (VERDICT r14 item 2): read-back
-    # for batch-keyed writes, the assignment frame for base appends
-    _append_occ_counts(assigned, "bucket", path, part, mode)
+    _write_batch(assigned, path, "bucket", part, mode)
 
 
 def ann_lsh_topk_indexed(
@@ -675,8 +653,6 @@ def ann_lsh_topk_indexed(
     ``ann_lsh_topk`` with the same probe settings on the same data
     (same planes, same folds). ``before_batch`` fences the read to
     earlier batch partitions (see :func:`_before_batch`)."""
-    from ..sources.manifest import resolve_root
-
     index_path = resolve_root(spark, index_path)
     dim = len(query_vec)
     n_planes, _ = _resolve_lsh_params(
@@ -922,10 +898,8 @@ def build_ann_ivf_index(
     stays at ``<path>/_centroids`` (underscore → hidden from the
     partitioned read).
 
-    ``commit``: same storage contract as :func:`build_ann_lsh_index` —
-    ``"rename"`` (default; atomic on HDFS/local only) or
-    ``"manifest"`` (generation + pointer; the object-store-safe
-    publish, see ``sources/manifest.py``).
+    ``commit``: the shared storage contract (see
+    :func:`build_ann_lsh_index` and ``sources/manifest.py``).
 
     ``extra_cols`` stores passthrough METADATA columns in the index
     rows (source, label, license, date, ...) — the filtered-ANN
@@ -933,14 +907,10 @@ def build_ann_ivf_index(
     pruned scan as an ordinary parquet pushdown instead of a
     post-hoc join against a metadata table. Appends introspect the
     persisted schema and carry the same columns (or fail loudly)."""
-    from ..sources.bucketed import write_partitioned
-    from ..sources.manifest import begin_generation, commit_generation
-    from .dedup import _rm_dir, spread_small_input
+    from .dedup import spread_small_input
 
     if lloyd_iters < 0:
         raise ValueError(f"lloyd_iters must be >= 0, got {lloyd_iters}")
-    if commit not in ("rename", "manifest"):
-        raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
     _check_extra_cols(extra_cols, id_col, vec_col)
     if nlist is None:
         # auto-size cells from the corpus count (ceil(n/target_cell) —
@@ -966,14 +936,6 @@ def build_ann_ivf_index(
             df, vec_col, len(cents[0][1]), "build_ann_ivf_index"
         )
     spark = df.sparkSession
-    # staged rebuild, same rationale as build_ann_lsh_index: the input
-    # may READ the live index (rebuild-from-index flow), so the old
-    # copy must survive until the new assignment is fully written
-    if commit == "manifest":
-        staging = begin_generation(spark, path)
-    else:
-        staging = f"{path}.building"
-        _rm_dir(spark, staging)  # stale staging from a crashed build
     df = spread_small_input(df)
     vcol = (
         _dim_guard_col(
@@ -988,26 +950,17 @@ def build_ann_ivf_index(
         _ivf_cell_col(F.col(vec_col), cents).alias("cell"),
         *[F.col(c) for c in extra_cols],
     )
-    write_partitioned(celled, f"{staging}/ingest_batch_id=-1", "cell")
-    # occupancy side table (VERDICT r14 item 2): read-back of the
-    # partition just written — cell is the directory name, no data
-    # columns touched
-    _write_occ_counts(
-        _occ_read_back(spark, f"{staging}/ingest_batch_id=-1", "cell"),
-        "cell",
-        staging,
-        -1,
-        "overwrite",
+    with staged_store(spark, path, commit) as staged:
+        _write_base(celled, staged, "cell")
+        _write_centroids(spark, staged, cents)
+
+
+def _write_centroids(spark, staged: str, cents) -> None:
+    _write_meta(
+        spark, staged, "_centroids",
+        [(i, cid, vec) for i, (cid, vec) in enumerate(cents)],
+        "cell int, cent_id bigint, centroid array<double>",
     )
-    cent_rows = [(i, cid, vec) for i, (cid, vec) in enumerate(cents)]
-    local_rows_df(
-        spark,
-        cent_rows, "cell int, cent_id bigint, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staging}/_centroids")
-    if commit == "manifest":
-        commit_generation(spark, path, staging)
-    else:
-        _publish_index(spark, staging, path)
 
 
 def append_to_ann_ivf_index(
@@ -1025,31 +978,19 @@ def append_to_ann_ivf_index(
     quantization drifts as the corpus grows; rebuild with
     ``lloyd_iters`` when cell-size skew warrants it).
 
-    Same idempotency contract as the LSH twin: ``batch_id`` set →
-    overwrite-own-partition (replay-safe); unset → at-least-once
-    append to the base partition."""
-    from ..sources.bucketed import write_partitioned
-    from ..sources.manifest import resolve_root
+    Same append contract as the LSH twin
+    (``sources.manifest.batch_dir``)."""
     from .dedup import spread_small_input
 
-    if batch_id is not None and batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0, got {batch_id}: negative ids are "
-            "reserved (ingest_batch_id=-1 is the base partition the "
-            "build wrote)"
-        )
     spark = df.sparkSession
-    path = resolve_root(spark, path)
+    path, part, mode = batch_dir(spark, path, batch_id)
     # layout guard: a quantized sibling at this path would be silently
     # corrupted by raw-vector rows (probes would see NULL codes)
-    jfs = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jfs(path).getFileSystem(conf)
     for meta, kind, fix in (
         ("_pq_meta", "IVF-PQ", "append_to_ann_ivfpq_index"),
         ("_sq_meta", "IVF-SQ8", "append_to_ann_ivfsq8_index"),
     ):
-        if fs.exists(jfs(f"{path}/{meta}")):
+        if _exists(spark, f"{path}/{meta}"):
             raise ValueError(
                 f"index at {path!r} is {kind} (has {meta}): its rows "
                 f"carry codes, not raw embeddings — use {fix}"
@@ -1073,16 +1014,7 @@ def append_to_ann_ivf_index(
         _ivf_cell_col(F.col(vec_col), cents).alias("cell"),
         *[F.col(c) for c in extras],
     )
-    part = -1 if batch_id is None else batch_id
-    mode = "append" if batch_id is None else "overwrite"
-    if mode == "overwrite":
-        _invalidate_occ_counts(df.sparkSession, path, part)
-    write_partitioned(
-        celled, f"{path}/ingest_batch_id={part}", "cell", mode=mode
-    )
-    # occupancy delta for this batch (VERDICT r14 item 2): read-back
-    # for batch-keyed writes, the assignment frame for base appends
-    _append_occ_counts(celled, "cell", path, part, mode)
+    _write_batch(celled, path, "cell", part, mode)
 
 
 def ann_ivf_topk_indexed(
@@ -1105,8 +1037,6 @@ def ann_ivf_topk_indexed(
     into the pruned scan and ranking sees only qualifying rows —
     top-k of the filtered set. ``before_batch`` fences the read to
     earlier batch partitions (see :func:`_before_batch`)."""
-    from ..sources.manifest import resolve_root
-
     index_path = resolve_root(spark, index_path)
     cents = _load_centroids(spark, index_path)
     probe = _ivf_probe_cells(query_vec, cents, nprobe)
@@ -1159,8 +1089,6 @@ def ann_ivf_join_indexed(
         StructField,
         StructType,
     )
-
-    from ..sources.manifest import resolve_root
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -1481,20 +1409,12 @@ def build_ann_pq_index(
     publish contract as the LSH/IVF builds (``commit="rename"`` |
     ``"manifest"``). ``extra_cols`` stores passthrough metadata for
     filtered probes (see :func:`build_ann_ivf_index`)."""
-    from ..sources.manifest import begin_generation, commit_generation
-    from .dedup import _rm_dir, spread_small_input
+    from .dedup import spread_small_input
 
-    if commit not in ("rename", "manifest"):
-        raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
     _check_extra_cols(extra_cols, id_col, vec_col)
     _check_corpus_dim(df, vec_col, dim, "build_ann_pq_index")
     cbs = pq_codebooks(df, m, ksub, dim, vec_col, id_col, lloyd_iters)
     spark = df.sparkSession
-    if commit == "manifest":
-        staging = begin_generation(spark, path)
-    else:
-        staging = f"{path}.building"
-        _rm_dir(spark, staging)
     df = spread_small_input(df)
     coded = df.select(
         F.col(id_col),
@@ -1507,24 +1427,21 @@ def build_ann_pq_index(
     # batch-partitioned like the LSH/IVF indexes: the build writes the
     # base partition; append_to_ann_pq_index adds later batches in
     # their own idempotent partitions (frozen codebooks)
-    coded.write.parquet(f"{staging}/codes/ingest_batch_id=-1")
-    rows = [
-        (j, c, cbs[j][c])
-        for j in range(m)
-        for c in range(ksub)
-    ]
-    local_rows_df(
-        spark,
-        rows, "j int, c int, sub array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staging}/_pq_codebooks")
-    local_rows_df(
-        spark,
-        [(int(m), int(ksub), int(dim))], "m int, ksub int, dim int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staging}/_pq_meta")
-    if commit == "manifest":
-        commit_generation(spark, path, staging)
-    else:
-        _publish_index(spark, staging, path)
+    with staged_store(spark, path, commit) as staged:
+        _write_base(coded, f"{staged}/codes", None)
+        _write_codebooks(spark, staged, cbs)
+        _write_meta(
+            spark, staged, "_pq_meta",
+            [(int(m), int(ksub), int(dim))], "m int, ksub int, dim int",
+        )
+
+
+def _write_codebooks(spark, staged: str, cbs) -> None:
+    _write_meta(
+        spark, staged, "_pq_codebooks",
+        [(j, c, sub) for j, book in enumerate(cbs) for c, sub in enumerate(book)],
+        "j int, c int, sub array<double>",
+    )
 
 
 def append_to_ann_pq_index(
@@ -1542,16 +1459,11 @@ def append_to_ann_pq_index(
     do NOT retrain on append (quantization drifts as the corpus grows;
     rebuild with ``lloyd_iters`` when ADC error warrants it — the same
     trade-off as the IVF centroids)."""
-    if batch_id is not None and batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0, got {batch_id}: negative ids are "
-            "reserved (ingest_batch_id=-1 is the base partition the "
-            "build wrote)"
-        )
     from .dedup import spread_small_input
 
     spark = df.sparkSession
-    path, _m, _ksub, dim, cbs = _load_pq_index(spark, path)
+    path, part, mode = batch_dir(spark, path, batch_id)
+    _p, _m, _ksub, dim, cbs = _load_pq_index(spark, path)
     extras = _index_extra_cols(
         spark.read.parquet(f"{path}/codes"), id_col, vec_col
     )
@@ -1564,8 +1476,6 @@ def append_to_ann_pq_index(
         ),
         *[F.col(c) for c in extras],
     )
-    part = -1 if batch_id is None else batch_id
-    mode = "append" if batch_id is None else "overwrite"
     coded.write.mode(mode).parquet(f"{path}/codes/ingest_batch_id={part}")
 
 
@@ -1605,12 +1515,8 @@ def build_ann_ivfpq_index(
     residual codebooks (same determinism caveat as both parents: the
     PERSISTED index is the reproducible artifact; seeded defaults keep
     the gated query oracle-replayable)."""
-    from ..sources.bucketed import write_partitioned
-    from ..sources.manifest import begin_generation, commit_generation
-    from .dedup import _rm_dir, spread_small_input
+    from .dedup import spread_small_input
 
-    if commit not in ("rename", "manifest"):
-        raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
     _check_extra_cols(extra_cols, id_col, vec_col)
     _check_corpus_dim(df, vec_col, dim, "build_ann_ivfpq_index")
     if nlist is None:
@@ -1639,11 +1545,6 @@ def build_ann_ivfpq_index(
         rdf, m, ksub, dim, vec_col="__resid", id_col=id_col,
         lloyd_iters=pq_lloyd_iters,
     )
-    if commit == "manifest":
-        staging = begin_generation(spark, path)
-    else:
-        staging = f"{path}.building"
-        _rm_dir(spark, staging)
     coded = rdf.select(
         F.col(id_col),
         F.col("cell"),
@@ -1653,35 +1554,15 @@ def build_ann_ivfpq_index(
         ),
         *[F.col(c) for c in extra_cols],
     )
-    write_partitioned(coded, f"{staging}/ingest_batch_id=-1", "cell")
-    # occupancy side table (VERDICT r14 item 2): read-back, no data
-    # columns touched (cell is the directory name)
-    _write_occ_counts(
-        _occ_read_back(spark, f"{staging}/ingest_batch_id=-1", "cell"),
-        "cell",
-        staging,
-        -1,
-        "overwrite",
-    )
-    cent_rows = [(i, cid, vec) for i, (cid, vec) in enumerate(cents)]
-    local_rows_df(
-        spark,
-        cent_rows, "cell int, cent_id bigint, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staging}/_centroids")
-    cb_rows = [(j, c, cbs[j][c]) for j in range(m) for c in range(ksub)]
-    local_rows_df(
-        spark,
-        cb_rows, "j int, c int, sub array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staging}/_pq_codebooks")
-    local_rows_df(
-        spark,
-        [(int(m), int(ksub), int(dim), int(nlist))],
-        "m int, ksub int, dim int, nlist int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staging}/_pq_meta")
-    if commit == "manifest":
-        commit_generation(spark, path, staging)
-    else:
-        _publish_index(spark, staging, path)
+    with staged_store(spark, path, commit) as staged:
+        _write_base(coded, staged, "cell")
+        _write_centroids(spark, staged, cents)
+        _write_codebooks(spark, staged, cbs)
+        _write_meta(
+            spark, staged, "_pq_meta",
+            [(int(m), int(ksub), int(dim), int(nlist))],
+            "m int, ksub int, dim int, nlist int",
+        )
 
 
 def append_to_ann_ivfpq_index(
@@ -1701,21 +1582,11 @@ def append_to_ann_ivfpq_index(
     ``lloyd_iters`` / ``pq_lloyd_iters`` when probe recall warrants
     it — the documented parents' trade-off, compounded).
 
-    Same idempotency contract as every store append: ``batch_id`` set
-    → overwrite-own-partition (replay-safe); unset → at-least-once
-    append to the base partition."""
-    from ..sources.bucketed import write_partitioned
-    from ..sources.manifest import resolve_root
+    Same append contract as every store (``sources.manifest.batch_dir``)."""
     from .dedup import spread_small_input
 
-    if batch_id is not None and batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0, got {batch_id}: negative ids are "
-            "reserved (ingest_batch_id=-1 is the base partition the "
-            "build wrote)"
-        )
     spark = df.sparkSession
-    path = resolve_root(spark, path)
+    path, part, mode = batch_dir(spark, path, batch_id)
     # bounded-collect: nlist centroid rows from the index metadata
     cent_rows = (
         spark.read.parquet(f"{path}/_centroids").orderBy("cell").collect()
@@ -1753,35 +1624,13 @@ def append_to_ann_ivfpq_index(
         ).alias(vec_col),
         *[F.col(c) for c in extras],
     )
-    part = -1 if batch_id is None else batch_id
-    mode = "append" if batch_id is None else "overwrite"
-    if mode == "overwrite":
-        _invalidate_occ_counts(df.sparkSession, path, part)
-    write_partitioned(
-        coded, f"{path}/ingest_batch_id={part}", "cell", mode=mode
-    )
-    # occupancy delta for this batch (VERDICT r14 item 2): read-back
-    # for batch-keyed writes; base appends count the pre-encode frame
-    # (rdf already carries the cell assignment — pruning keeps the PQ
-    # encode out of the aggregate)
-    _append_occ_counts(rdf, "cell", path, part, mode)
+    _write_batch(coded, path, "cell", part, mode)
 
 
 def _list_batch_dirs(spark, root: str) -> list[str]:
     """Names of the ``ingest_batch_id=*`` partition dirs under
     ``root`` (empty if the dir is missing)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hpath.getFileSystem(conf)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if name.startswith("ingest_batch_id="):
-            out.append(name)
-    return out
+    return [n for n in _ls(spark, root) if n.startswith("ingest_batch_id=")]
 
 
 # Persisted per-cell/bucket occupancy of the ANN index stores
@@ -1859,8 +1708,6 @@ def _invalidate_occ_counts(spark, root: str, part: int) -> None:
     (listing-detectable — guards recount) rather than silently stale
     (describing the replaced rows of a re-landed batch id, which the
     listing check alone cannot see). No-op when the batch is new."""
-    from .dedup import _rm_dir
-
     _rm_dir(spark, f"{root}/{_OCC_DIR}/ingest_batch_id={part}")
 
 
@@ -1920,119 +1767,32 @@ def compact_ann_index(spark, path: str) -> None:
 
     Layout is AUTODETECTED: flat PQ (``codes`` subdir), IVF / IVF-PQ
     (``cell``-partitioned root), LSH (``bucket``-partitioned root).
-    Metadata tables (``_centroids``, ``_pq_*``, ``_lsh_meta``) and the
-    ``_ingest_stream`` marker are untouched on the rename layout and
-    carried into the new generation on the manifest layout.
-
-    On a MANIFEST-layout index the compacted data is a fresh
-    generation published by the atomic pointer PUT (object-store
-    safe, concurrent-reader safe). On the rename layout the swap is
-    in-place and NOT concurrency-safe — stop any maintenance stream
-    first (the shared compact contract); every crash point leaves a
-    recoverable copy (batch dirs move ASIDE to ``.old_batches``
-    before the staged base moves in; recovery = rename them back)."""
-    from ..sources.bucketed import write_partitioned
-    from ..sources.manifest import (
-        begin_generation,
-        commit_generation,
-        resolve_root,
-    )
-    from ..streaming.ingest import _read_text, _write_text
-    from .dedup import _rename, _rm_dir
-
-    root = path
-    cur = resolve_root(spark, root)
-    jfs = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jfs(cur).getFileSystem(conf)
-
-    flat_pq = fs.exists(jfs(f"{cur}/codes"))
-    data_root = f"{cur}/codes" if flat_pq else cur
-    if flat_pq:
-        part_col = None
-    elif fs.exists(jfs(f"{cur}/_centroids")):
-        part_col = "cell"
-    else:
-        part_col = "bucket"
-    if not _list_batch_dirs(spark, data_root):
+    The compacted data, a fresh occupancy side table, the metadata
+    tables (``_centroids``, ``_pq_*``, ``_lsh_meta``, ``_sq_meta``)
+    and the ``_ingest_stream`` marker are staged whole and published
+    once (``sources.manifest.staged_store``). Stop any maintenance
+    stream first (the shared compact contract)."""
+    cur, commit = store_layout(spark, path)
+    data_sub, key = _ann_layout(spark, cur)
+    if not _list_batch_dirs(spark, f"{cur}{data_sub}"):
         raise ValueError(f"{path!r} holds no batch partitions; build first")
-    merged = spark.read.parquet(data_root)
-    if "ingest_batch_id" in merged.columns:
-        merged = merged.drop("ingest_batch_id")
-
-    if cur != root:
-        # manifest layout: compacted index = next generation; bounded
-        # metadata tables are rewritten alongside, the stream marker
-        # (if any) carried — a draining stream must be stopped, same
-        # contract as every compact path
-        gen = begin_generation(spark, root)
-        data_dst = f"{gen}/codes" if flat_pq else gen
-        if part_col is None:
-            merged.write.mode("overwrite").parquet(
-                f"{data_dst}/ingest_batch_id=-1"
-            )
-        else:
-            write_partitioned(
-                merged, f"{data_dst}/ingest_batch_id=-1", part_col
-            )
-            # fresh occupancy side table for the compacted generation
-            # (the delta partitions collapse with the data they
-            # describe); flat PQ has no cell/bucket key and no guards
-            _write_occ_counts(
-                _occ_read_back(
-                    spark, f"{data_dst}/ingest_batch_id=-1", part_col
-                ),
-                part_col,
-                data_dst,
-                -1,
-                "overwrite",
-            )
-        for meta in (
-            "_centroids", "_pq_codebooks", "_pq_meta", "_lsh_meta", "_sq_meta"
-        ):
-            if fs.exists(jfs(f"{cur}/{meta}")):
-                spark.read.parquet(f"{cur}/{meta}").coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(f"{gen}/{meta}")
-        marker = _read_text(spark, f"{cur}/_ingest_stream")
-        if marker is not None:
-            _write_text(spark, f"{gen}/_ingest_stream", marker)
-        commit_generation(spark, root, gen)
-        return
-
-    # stage as a SIBLING of the data dir (writing into a child of the
-    # path being read is the trap the band store's *_compacting
-    # siblings avoid), then move the live batch dirs ASIDE, bring the
-    # staged base in, sweep last — each crash point leaves a full
-    # readable copy somewhere (recovery: rename .old_batches back)
-    staging = f"{data_root}.compacting"
-    _rm_dir(spark, staging)
-    if part_col is None:
-        merged.write.mode("overwrite").parquet(staging)
-    else:
-        write_partitioned(merged, staging, part_col)
-    aside = f"{data_root}.old_batches"
-    _rm_dir(spark, aside)
-    for name in _list_batch_dirs(spark, data_root):
-        _rename(spark, f"{data_root}/{name}", f"{aside}/{name}")
-    _rename(spark, staging, f"{data_root}/ingest_batch_id=-1")
-    _rm_dir(spark, aside)
-    if part_col is not None:
-        # rewrite the occupancy side table to match the collapsed
-        # layout (its old per-batch partitions describe dirs that no
-        # longer exist; in the window before this write the listing
-        # mismatch makes guards fall back to the recount — stats are
-        # derived data, every crash point self-heals via fallback)
-        _rm_dir(spark, f"{data_root}/{_OCC_DIR}")
-        _write_occ_counts(
-            _occ_read_back(
-                spark, f"{data_root}/ingest_batch_id=-1", part_col
-            ),
-            part_col,
-            data_root,
-            -1,
-            "overwrite",
+    merged = spark.read.parquet(f"{cur}{data_sub}").drop("ingest_batch_id")
+    with staged_store(spark, path, commit) as staged:
+        _write_base(merged, f"{staged}{data_sub}", key)
+        _carry(
+            spark, cur, staged, "_centroids", "_pq_codebooks", "_pq_meta",
+            "_lsh_meta", "_sq_meta", "_ingest_stream",
         )
+
+
+def _ann_layout(spark, cur: str) -> tuple[str, str | None]:
+    """``(data subdir, partition key)`` of a resolved ANN index: flat
+    PQ keeps unpartitioned rows under ``/codes``; IVF-family indexes
+    are ``cell``-partitioned, LSH ``bucket``-partitioned, at the
+    root."""
+    if _exists(spark, f"{cur}/codes"):
+        return "/codes", None
+    return "", ("cell" if _exists(spark, f"{cur}/_centroids") else "bucket")
 
 
 def ann_index_stats(spark, path: str) -> DataFrame:
@@ -2045,18 +1805,12 @@ def ann_index_stats(spark, path: str) -> DataFrame:
     oversized units -> rebuild with ``lloyd_iters`` / auto ``nlist``.
     Store-only read (ids never leave the executors — the aggregate is
     batchxunit-bounded)."""
-    from ..sources.manifest import resolve_root
-
     cur = resolve_root(spark, path)
-    jfs = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jfs(cur).getFileSystem(conf)
-    flat_pq = fs.exists(jfs(f"{cur}/codes"))
-    data_root = f"{cur}/codes" if flat_pq else cur
-    if not _list_batch_dirs(spark, data_root):
+    data_sub, _key = _ann_layout(spark, cur)
+    if not _list_batch_dirs(spark, f"{cur}{data_sub}"):
         raise ValueError(f"{path!r} holds no batch partitions; build first")
-    df = spark.read.parquet(data_root)
-    if flat_pq:
+    df = spark.read.parquet(f"{cur}{data_sub}")
+    if data_sub:
         unit = F.lit(None).cast("int")
     elif "cell" in df.columns:
         unit = F.col("cell").cast("int")
@@ -2091,8 +1845,6 @@ def ann_ivfpq_topk_indexed(
     cosine, reading embeddings for those R ids alone. ``where``
     filters inside the doubly-pruned scan over the index's stored
     ``extra_cols`` (pre-filter semantics)."""
-    from ..sources.manifest import resolve_root
-
     path = resolve_root(spark, index_path)
     cents = _load_centroids(spark, path)
     _p, m, ksub, dim, cbs = _load_pq_index(spark, path)
@@ -2162,15 +1914,13 @@ def _cached_driver_read(spark, path: str, sub: str, load):
     dir is unreadable the load runs uncached (missing metadata keeps
     its loud error). One entry per (path, sub): a republish evicts
     the prior generation."""
-    jfs = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     try:
-        fs = jfs(path).getFileSystem(conf)
-        st = fs.getFileStatus(jfs(f"{path}/{sub}"))
+        fs, meta_dir = _fs(spark, f"{path}/{sub}")
+        st = fs.getFileStatus(meta_dir)
         listing = tuple(
             sorted(
                 (s.getPath().getName(), s.getLen())
-                for s in fs.listStatus(jfs(f"{path}/{sub}"))
+                for s in fs.listStatus(meta_dir)
             )
         )
         gen = (st.getModificationTime(), listing)
@@ -2229,7 +1979,6 @@ def _load_sq_meta_dim(spark, path: str) -> int:
 
 
 def _load_pq_index(spark, path: str):
-    from ..sources.manifest import resolve_root
 
     path = resolve_root(spark, path)
 
@@ -2624,8 +2373,6 @@ def ann_ivfpq_join_indexed(
         StructField,
         StructType,
     )
-
-    from ..sources.manifest import resolve_root
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -3093,7 +2840,6 @@ def cosine_neardup_against_index(
     Default ``None`` keeps the construction exact w.r.t. the bucket
     rule — the oracle-gated row relies on that."""
     spark = batch.sparkSession
-    from ..sources.manifest import resolve_root
     from .dedup import spread_small_input
 
     if max_bucket is not None and max_bucket < 1:
@@ -3227,7 +2973,6 @@ def cosine_neardup_against_ivf_index(
     the ``nprobe`` probe rule — the oracle-gated row relies on
     that."""
     spark = batch.sparkSession
-    from ..sources.manifest import resolve_root
     from .dedup import spread_small_input
 
     if nprobe < 1:
@@ -3774,14 +3519,10 @@ def build_ann_ivfsq8_index(
     marking the layout for autodetection (compaction, stats, the
     maintenance planner). ``commit``/``extra_cols`` carry the shared
     storage and filtered-ANN contracts of the IVF build."""
-    from ..sources.bucketed import write_partitioned
-    from ..sources.manifest import begin_generation, commit_generation
-    from .dedup import _rm_dir, spread_small_input
+    from .dedup import spread_small_input
 
     if lloyd_iters < 0:
         raise ValueError(f"lloyd_iters must be >= 0, got {lloyd_iters}")
-    if commit not in ("rename", "manifest"):
-        raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
     _check_extra_cols(extra_cols, id_col, vec_col)
     bad_sq8 = [c for c in extra_cols if c in _SQ8_RESERVED_COLS]
     if bad_sq8:
@@ -3798,39 +3539,17 @@ def build_ann_ivfsq8_index(
     if lloyd_iters and cents:
         cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
     spark = df.sparkSession
-    if commit == "manifest":
-        staging = begin_generation(spark, path)
-    else:
-        staging = f"{path}.building"
-        _rm_dir(spark, staging)  # stale staging from a crashed build
-    df = spread_small_input(df)
     celled = _sq8_rows(
-        df, cents, vec_col, id_col, extra_cols,
+        spread_small_input(df), cents, vec_col, id_col, extra_cols,
         dim=dim, caller="build_ann_ivfsq8_index",
     )
-    write_partitioned(celled, f"{staging}/ingest_batch_id=-1", "cell")
-    # occupancy side table (VERDICT r14 item 2): read-back, no data
-    # columns touched (cell is the directory name)
-    _write_occ_counts(
-        _occ_read_back(spark, f"{staging}/ingest_batch_id=-1", "cell"),
-        "cell",
-        staging,
-        -1,
-        "overwrite",
-    )
-    cent_rows = [(i, cid, vec) for i, (cid, vec) in enumerate(cents)]
-    local_rows_df(
-        spark,
-        cent_rows, "cell int, cent_id bigint, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staging}/_centroids")
-    local_rows_df(
-        spark,
-        [(int(dim), "sq8_pervec")], "dim int, scheme string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staging}/_sq_meta")
-    if commit == "manifest":
-        commit_generation(spark, path, staging)
-    else:
-        _publish_index(spark, staging, path)
+    with staged_store(spark, path, commit) as staged:
+        _write_base(celled, staged, "cell")
+        _write_centroids(spark, staged, cents)
+        _write_meta(
+            spark, staged, "_sq_meta",
+            [(int(dim), "sq8_pervec")], "dim int, scheme string",
+        )
 
 
 def append_to_ann_ivfsq8_index(
@@ -3847,22 +3566,11 @@ def append_to_ann_ivfsq8_index(
     replay-safe, unset -> at-least-once base append). Because SQ8 has
     no trained codebook, appended batches quantize EXACTLY like the
     build — no quantizer drift, the property PQ appends give up."""
-    from ..sources.bucketed import write_partitioned
-    from ..sources.manifest import resolve_root
     from .dedup import spread_small_input
 
-    if batch_id is not None and batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0, got {batch_id}: negative ids are "
-            "reserved (ingest_batch_id=-1 is the base partition the "
-            "build wrote)"
-        )
     spark = df.sparkSession
-    path = resolve_root(spark, path)
-    jfs = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jfs(path).getFileSystem(conf)
-    if not fs.exists(jfs(f"{path}/_sq_meta")):
+    path, part, mode = batch_dir(spark, path, batch_id)
+    if not _exists(spark, f"{path}/_sq_meta"):
         raise ValueError(
             f"no IVF-SQ8 index at {path!r} (missing _sq_meta): build "
             "it first with build_ann_ivfsq8_index, or use the append "
@@ -3887,17 +3595,7 @@ def append_to_ann_ivfsq8_index(
         df, cents, vec_col, id_col, extras,
         dim=meta_dim, caller="append_to_ann_ivfsq8_index",
     )
-    part = -1 if batch_id is None else batch_id
-    mode = "append" if batch_id is None else "overwrite"
-    if mode == "overwrite":
-        _invalidate_occ_counts(df.sparkSession, path, part)
-    write_partitioned(
-        celled, f"{path}/ingest_batch_id={part}", "cell", mode=mode
-    )
-    # occupancy delta for this batch (VERDICT r14 item 2): read-back
-    # for batch-keyed writes; base appends count the assignment frame
-    # (pruning keeps the SQ8 encode out of the aggregate)
-    _append_occ_counts(celled, "cell", path, part, mode)
+    _write_batch(celled, path, "cell", part, mode)
 
 
 def ann_ivfsq8_topk_indexed(
@@ -3922,8 +3620,6 @@ def ann_ivfsq8_topk_indexed(
     R ids alone), returning ``(id, rank, cos)``. ``where`` filters
     inside the pruned scan over stored ``extra_cols``;
     ``before_batch`` fences the read to earlier batch partitions."""
-    from ..sources.manifest import resolve_root
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if nprobe < 1:
@@ -4007,8 +3703,6 @@ def ann_ivfsq8_join_indexed(
         StructField,
         StructType,
     )
-
-    from ..sources.manifest import resolve_root
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..functions.similarity import append_to_ann_lsh_index
-from .ingest import _resolve_stream_base
+from .ingest import _drain_into_store
 
 __all__ = ["stream_index_embeddings"]
 
@@ -56,42 +56,14 @@ def stream_index_embeddings(
     its own idempotent partition. ``n_planes``/``dim`` default to the
     index's persisted ``_lsh_meta`` (explicit mismatches raise — see
     ``_resolve_lsh_params``); a stream-created index with no prior
-    build uses the shared ANN constants."""
-    spark = stream_emb.sparkSession
-    if "ingest_batch_id" in stream_emb.columns:
-        raise ValueError(
-            "stream_index_embeddings reserves the 'ingest_batch_id' "
-            "column for the index partition key; rename it in the input"
-        )
-    # a manifest-committed index (build_ann_lsh_index commit="manifest")
-    # keeps its data under a generation dir: resolve ONCE up front so
-    # the identity marker, the batch-id base detection, and every
-    # append all address the same generation. Rebuilds (which flip the
-    # pointer) require a stopped stream, same as every compact path.
-    from ..sources.manifest import resolve_root
-
-    index_path = resolve_root(spark, index_path)
-    base = _resolve_stream_base(spark, index_path, checkpoint_dir, allow_restart)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_to_ann_lsh_index(
-            batch_df,
-            index_path,
-            batch_id=base + batch_id,
-            n_planes=n_planes,
-            dim=dim,
-            vec_col=vec_col,
-            id_col=id_col,
-        )
-
-    q = (
-        stream_emb.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    build uses the shared ANN constants. A manifest-committed index
+    is pinned to its current generation for the whole run."""
+    _drain_into_store(
+        stream_emb, index_path, checkpoint_dir,
+        lambda batch_df, path, part: append_to_ann_lsh_index(
+            batch_df, path, batch_id=part, n_planes=n_planes, dim=dim,
+            vec_col=vec_col, id_col=id_col,
+        ),
+        caller="stream_index_embeddings", timeout_sec=timeout_sec,
+        allow_restart=allow_restart,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream_index_embeddings did not finish")
-    finally:
-        q.stop()

@@ -73,6 +73,18 @@ from ..functions.dedup import (
     dedup_against_store,
     minhash_lsh_pairs,
 )
+from ..sources.manifest import (
+    _batch_ids,
+    _carry,
+    _exists,
+    _fs,
+    _ls,
+    _rm_dir,
+    resolve_root,
+    staged_store,
+    store_layout,
+)
+from .run import _drain_foreach
 
 __all__ = [
     "stream_ingest_dedup",
@@ -89,24 +101,15 @@ __all__ = [
 _crash_before_publish = None
 
 
-def _fs_path(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
-
-
 def _read_text(spark: SparkSession, path: str) -> str | None:
     """One small text file through the Hadoop FS API (any scheme)."""
-    fs, hpath, jvm = _fs_path(spark, path)
+    fs, hpath = _fs(spark, path)
     if not fs.exists(hpath):
         return None
+    jio = spark.sparkContext._jvm.java.io
     stream = fs.open(hpath)
     try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        line = reader.readLine()
+        line = jio.BufferedReader(jio.InputStreamReader(stream, "UTF-8")).readLine()
         return line if line is not None else ""
     finally:
         stream.close()
@@ -119,7 +122,7 @@ def _write_text(spark: SparkSession, path: str, text: str) -> None:
     final path, wedging every subsequent start on json.loads)."""
     head, _, tail = path.rpartition("/")
     tmp = f"{head}/.{tail}.tmp"
-    fs, hpath, _ = _fs_path(spark, tmp)
+    fs, hpath = _fs(spark, tmp)
     stream = fs.create(hpath, True)
     try:
         stream.write(bytearray(text, "utf-8"))
@@ -133,8 +136,8 @@ def _publish(spark: SparkSession, staging: str, final: str) -> None:
     replaced if present (a replayed batch re-publishing itself); the
     staging dir's dot prefix keeps it invisible to any parquet reader
     until the rename lands it whole."""
-    fs, final_p, _ = _fs_path(spark, final)
-    _, staging_p, _ = _fs_path(spark, staging)
+    fs, final_p = _fs(spark, final)
+    staging_p = _fs(spark, staging)[1]
     if _crash_before_publish is not None:
         _crash_before_publish(final, staging)
     fs.delete(final_p, True)
@@ -145,19 +148,7 @@ def _publish(spark: SparkSession, staging: str, final: str) -> None:
 def _existing_max_batch(spark: SparkSession, corpus_path: str) -> int | None:
     """Largest ingest_batch_id partition in the corpus dir, or None if
     the dir is missing / has no batch partitions."""
-    fs, hpath, _ = _fs_path(spark, corpus_path)
-    if not fs.exists(hpath):
-        return None
-    best = None
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if name.startswith("ingest_batch_id="):
-            try:
-                n = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            best = n if best is None else max(best, n)
-    return best
+    return max(_batch_ids(spark, corpus_path), default=None)
 
 
 def _has_foreign_stream_data(spark: SparkSession, corpus_path: str) -> bool:
@@ -168,15 +159,10 @@ def _has_foreign_stream_data(spark: SparkSession, corpus_path: str) -> bool:
     marker-less dir holding ONLY the base is a freshly built store a
     new stream may adopt (first adoption is the NORMAL flow for the
     BM25 index and a pre-built gram store), not a takeover risk."""
-    fs, hpath, _ = _fs_path(spark, corpus_path)
-    if not fs.exists(hpath):
-        return False
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if name.startswith((".", "_")) or name == "ingest_batch_id=-1":
-            continue
-        return True
-    return False
+    return any(
+        not name.startswith((".", "_")) and name != "ingest_batch_id=-1"
+        for name in _ls(spark, corpus_path)
+    )
 
 
 def _resolve_stream_base(
@@ -233,6 +219,50 @@ def _resolve_stream_base(
     return base
 
 
+def _drain_into_store(
+    stream_df: DataFrame,
+    path: str,
+    checkpoint_dir: str,
+    append,
+    *,
+    caller: str,
+    timeout_sec: int,
+    allow_restart: bool,
+    marker_sub: str = "",
+    precheck=None,
+) -> None:
+    """The one streaming store-maintenance drain: reject the reserved
+    partition column, pin the run to the store's current generation,
+    match the stream identity (``_resolve_stream_base``, marker at
+    ``{store}{marker_sub}``), then drain availableNow, calling
+    ``append(batch_df, store_dir, part)`` per micro-batch with ``part``
+    offset by the run's base — so an ``allow_restart`` run continues
+    PAST the prior run's partitions instead of colliding with them.
+
+    ``precheck(spark, store_dir)`` is the family's eager validation: a
+    failure inside foreachBatch would surface as an opaque
+    StreamingQueryException after the checkpoint is already created.
+    Compaction mid-stream is forbidden on both layouts, so the pointer
+    cannot move under a running drain."""
+    spark = stream_df.sparkSession
+    if "ingest_batch_id" in stream_df.columns:
+        raise ValueError(
+            f"{caller} reserves the 'ingest_batch_id' column for the "
+            "store partition key; rename it in the input"
+        )
+    path = resolve_root(spark, path)
+    if precheck is not None:
+        precheck(spark, path)
+    base = _resolve_stream_base(
+        spark, f"{path}{marker_sub}", checkpoint_dir, allow_restart
+    )
+    _drain_foreach(
+        stream_df,
+        lambda batch_df, batch_id: append(batch_df, path, base + batch_id),
+        checkpoint_dir, timeout_sec, caller,
+    )
+
+
 def stream_ingest_dedup(
     stream_docs: DataFrame,
     store_path: str,
@@ -264,26 +294,9 @@ def stream_ingest_dedup(
     3-column files; read such mixed dirs with
     ``option("mergeSchema", "true")`` (old rows read kind=null)."""
     spark = stream_docs.sparkSession
-    if "ingest_batch_id" in stream_docs.columns:
-        raise ValueError(
-            "stream_ingest_dedup reserves the 'ingest_batch_id' column "
-            "for the corpus partition key; rename it in the input"
-        )
-    from ..sources.manifest import resolve_root
 
-    # pin THIS run to the corpus's current generation (manifest-layout
-    # corpora — see compact_corpus(commit="manifest"); compaction
-    # mid-stream is forbidden on both layouts, so the pointer cannot
-    # move under a running drain). Rename-layout corpora resolve to
-    # themselves.
-    corpus_path = resolve_root(spark, corpus_path)
-    base = _resolve_stream_base(spark, corpus_path, checkpoint_dir, allow_restart)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # all partition ids and fences use the base-offset id, so an
-        # allow_restart run continues PAST the prior run's partitions
-        # instead of colliding with them
-        part = base + batch_id
+    def process(batch_df: DataFrame, corpus_path: str, part: int) -> None:
+        # all partition ids and fences use the base-offset ``part``
         # within-batch self-dedup: lower id survives
         self_pairs = minhash_lsh_pairs(
             batch_df,
@@ -373,17 +386,11 @@ def stream_ingest_dedup(
         audit.write.mode("overwrite").parquet(audit_staging)
         _publish(spark, audit_staging, f"{audit_path}/batch_id={part}")
 
-    q = (
-        stream_docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_into_store(
+        stream_docs, corpus_path, checkpoint_dir, process,
+        caller="stream_ingest_dedup", timeout_sec=timeout_sec,
+        allow_restart=allow_restart,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream_ingest_dedup did not finish")
-    finally:
-        q.stop()
 
 
 def compact_corpus(
@@ -415,78 +422,45 @@ def compact_corpus(
     provenance audit double-counts). With the reserved base id the
     worst case is that anomaly, not corpus loss.
 
-    Crash-atomic via the same rename-aside swap as the sketch stores
-    (``_swap_in``: live aside -> staged in -> delete old LAST). The
-    ``_ingest_stream`` identity marker is re-written (atomically)
-    after the swap; a crash in between leaves the full corpus in
-    ``{corpus_path}.old`` and a marker-less live dir — the loud
-    restart guard fires on the next start instead of anything
-    silently clobbering (recover: rename ``.old`` back).
+    The compacted corpus and its ``_ingest_stream`` identity marker
+    are staged whole and published once
+    (``sources.manifest.staged_store``): a crash at any point leaves
+    the live corpus untouched.
 
-    ``commit`` controls the publish layout, closing the last
-    rename-only store (PARITY open item #3): ``None`` preserves
-    whatever layout the corpus already has; ``"manifest"`` publishes
-    the compacted corpus as a fresh GENERATION under the original
-    root (``sources/manifest.py`` — converts a rename-layout corpus
-    on its first use; object-store safe, concurrent-reader safe
-    because nothing under the old generation is touched until the
-    pointer PUT commits); ``"rename"`` insists on the in-place swap
-    and refuses a manifest-layout corpus (no down-migration — readers
-    may hold the pointer). After a manifest compaction the stream
-    resumes against the new generation automatically
-    (``stream_ingest_dedup`` resolves the pointer at start; the
-    identity marker is carried into the new generation so the replay
-    fence survives)."""
-    from ..functions.dedup import _swap_in
-    from ..sources.manifest import (
-        begin_generation,
-        commit_generation,
-        resolve_root,
-    )
-
+    ``commit`` picks the publish layout: ``None`` preserves whatever
+    layout the corpus already has; ``"manifest"`` publishes the
+    compacted corpus as a fresh GENERATION under the original root
+    (converting a rename-layout corpus on its first use);
+    ``"rename"`` refuses a manifest-layout corpus (no down-migration —
+    readers may hold the pointer). After a manifest compaction the
+    stream resumes against the new generation automatically
+    (``stream_ingest_dedup`` resolves the pointer at start)."""
     if commit not in (None, "rename", "manifest"):
         raise ValueError(
             f"commit must be None, 'rename' or 'manifest', got {commit!r}"
         )
-    root = corpus_path
-    cur = resolve_root(spark, root)
-    if commit == "rename" and cur != root:
+    cur, layout = store_layout(spark, corpus_path)
+    if commit == "rename" and layout == "manifest":
         raise ValueError(
-            f"corpus at {root!r} is manifest-layout; commit='rename' "
+            f"corpus at {corpus_path!r} is manifest-layout; commit='rename' "
             "would strand readers holding the generation pointer"
         )
     if _existing_max_batch(spark, cur) is None:
         raise ValueError(f"{cur!r} holds no batch partitions")
-    marker = _read_text(spark, f"{cur}/_ingest_stream")
-    df = spark.read.parquet(cur)
-    if "ingest_batch_id" in df.columns:
-        df = df.drop("ingest_batch_id")
-    if commit == "manifest" or cur != root:
-        gen = begin_generation(spark, root)
-        df.write.mode("overwrite").parquet(f"{gen}/ingest_batch_id=-1")
-        if marker is not None:
-            _write_text(spark, f"{gen}/_ingest_stream", marker)
-        commit_generation(spark, root, gen)
-        if cur == root:
-            # first manifest commit over a rename-layout corpus: the
-            # old loose batch partitions now live INSIDE the committed
-            # generation's history only; remove them from the root so
-            # a pointer-unaware reader cannot double-read. The pointer
-            # is already committed, so a crash mid-cleanup leaves a
-            # bigger root dir, never a torn corpus.
-            fs, hpath, jvm = _fs_path(spark, root)
-            for status in fs.listStatus(hpath):
-                name = status.getPath().getName()
-                if name.startswith("ingest_batch_id=") or name == "_ingest_stream":
-                    fs.delete(status.getPath(), True)
-        return
-    staging = f"{corpus_path}.compacting"
-    df.write.mode("overwrite").parquet(staging)
-    _swap_in(
-        spark, staging, corpus_path, f"{corpus_path}/ingest_batch_id=-1"
-    )
-    if marker is not None:
-        _write_text(spark, f"{corpus_path}/_ingest_stream", marker)
+    df = spark.read.parquet(cur).drop("ingest_batch_id")
+    target = commit or layout
+    with staged_store(spark, corpus_path, target) as staged:
+        df.write.mode("overwrite").parquet(f"{staged}/ingest_batch_id=-1")
+        _carry(spark, cur, staged, "_ingest_stream")
+    if target != layout:
+        # first manifest commit over a rename-layout corpus: the old
+        # loose batch partitions now live in the committed generation;
+        # remove them from the root so a pointer-unaware reader cannot
+        # double-read. The pointer is already committed, so a crash
+        # mid-cleanup leaves a bigger root dir, never a torn corpus.
+        for name in _ls(spark, corpus_path):
+            if name.startswith("ingest_batch_id=") or name == "_ingest_stream":
+                _rm_dir(spark, f"{corpus_path}/{name}")
 
 
 def stream_maintain_gram_store(
@@ -517,62 +491,36 @@ def stream_maintain_gram_store(
     existing store is never read). Compact with
     ``functions.dedup.compact_gram_store`` when delta-row count
     warrants it, stream STOPPED, like every compact path."""
-    from ..functions.dedup import _gram_meta_exists, append_to_gram_store
-
-    spark = stream_docs.sparkSession
-    if "ingest_batch_id" in stream_docs.columns:
-        raise ValueError(
-            "stream_maintain_gram_store reserves the 'ingest_batch_id' "
-            "column for the store partition key; rename it in the input"
-        )
-    from ..sources.manifest import resolve_root
-
-    # manifest-layout store: pin THIS run to the current generation
-    # (compaction mid-stream is forbidden on both layouts, so the
-    # pointer cannot move under a draining stream)
-    store_path = resolve_root(spark, store_path)
-    # validate the width contract EAGERLY — raised inside foreachBatch
-    # it would surface as an opaque StreamingQueryException after the
-    # checkpoint is already created. Covers BOTH directions: a fresh
-    # store with no min_len, and an explicit min_len that mismatches an
-    # existing store's recorded _gram_meta (ADVICE r9)
-    if _gram_meta_exists(spark, store_path):
-        from ..functions.dedup import _resolve_gram_meta
-
-        _resolve_gram_meta(
-            spark, store_path, min_len, "stream_maintain_gram_store"
-        )
-    elif min_len is None:
-        raise ValueError(
-            f"store at {store_path!r} does not exist yet: a fresh store "
-            "needs an explicit min_len (it is recorded in _gram_meta and "
-            "adopted by every later append/clean)"
-        )
-    base = _resolve_stream_base(
-        spark, f"{store_path}/grams", checkpoint_dir, allow_restart
+    from ..functions.dedup import (
+        _gram_meta_exists,
+        _resolve_gram_meta,
+        append_to_gram_store,
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_to_gram_store(
-            batch_df,
-            store_path,
-            text_col=text_col,
-            id_col=id_col,
-            min_len=min_len,
-            batch_id=base + batch_id,
-        )
+    def precheck(spark, store_path: str) -> None:
+        # the width contract, BOTH directions: a fresh store with no
+        # min_len, and an explicit min_len that mismatches an existing
+        # store's recorded _gram_meta (ADVICE r9)
+        if _gram_meta_exists(spark, store_path):
+            _resolve_gram_meta(
+                spark, store_path, min_len, "stream_maintain_gram_store"
+            )
+        elif min_len is None:
+            raise ValueError(
+                f"store at {store_path!r} does not exist yet: a fresh store "
+                "needs an explicit min_len (it is recorded in _gram_meta and "
+                "adopted by every later append/clean)"
+            )
 
-    q = (
-        stream_docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_into_store(
+        stream_docs, store_path, checkpoint_dir,
+        lambda batch_df, path, part: append_to_gram_store(
+            batch_df, path, text_col=text_col, id_col=id_col,
+            min_len=min_len, batch_id=part,
+        ),
+        caller="stream_maintain_gram_store", timeout_sec=timeout_sec,
+        allow_restart=allow_restart, marker_sub="/grams", precheck=precheck,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream_maintain_gram_store did not finish")
-    finally:
-        q.stop()
 
 
 def stream_maintain_bm25_index(
@@ -601,54 +549,49 @@ def stream_maintain_bm25_index(
     when delta rows warrant it — stream STOPPED, like every compact
     path (compaction preserves the stream marker on both layouts)."""
     from ..functions.retrieval import append_to_bm25_index
-    from ..sources.manifest import resolve_root
 
-    spark = stream_docs.sparkSession
-    if "ingest_batch_id" in stream_docs.columns:
-        raise ValueError(
-            "stream_maintain_bm25_index reserves the 'ingest_batch_id' "
-            "column for the index partition key; rename it in the input"
-        )
-    # pin THIS run to the current generation (compaction mid-stream is
-    # forbidden on both layouts, so the pointer cannot move)
-    index_path = resolve_root(spark, index_path)
-    # eager existence check — a missing index raised inside
-    # foreachBatch would surface as an opaque StreamingQueryException
-    # after the checkpoint is already created
+    _drain_into_store(
+        stream_docs, index_path, checkpoint_dir,
+        lambda batch_df, path, part: append_to_bm25_index(
+            batch_df, path, text_col=text_col, id_col=id_col, batch_id=part
+        ),
+        caller="stream_maintain_bm25_index", timeout_sec=timeout_sec,
+        allow_restart=allow_restart, marker_sub="/postings",
+        precheck=_require_table(
+            "_bm25_meta",
+            "no BM25 index at {path!r}: build it first with "
+            "build_bm25_index (the stream cannot pick n_buckets)",
+        ),
+    )
+
+
+def _require_table(name: str, msg: str):
+    """An eager store-existence precheck: the bounded metadata table
+    ``name`` must be readable, else ``msg`` (formatted with ``path``)
+    is raised."""
     from pyspark.errors import AnalysisException
 
-    try:
-        # bounded-collect: one parameter row from the index metadata
-        spark.read.parquet(f"{index_path}/_bm25_meta").collect()
-    except AnalysisException:
-        raise ValueError(
-            f"no BM25 index at {index_path!r}: build it first with "
-            "build_bm25_index (the stream cannot pick n_buckets)"
-        ) from None
-    base = _resolve_stream_base(
-        spark, f"{index_path}/postings", checkpoint_dir, allow_restart
-    )
+    def precheck(spark, path: str) -> None:
+        try:
+            # bounded-collect: a metadata table (parameter row / nlist
+            # centroid rows)
+            spark.read.parquet(f"{path}/{name}").collect()
+        except AnalysisException:
+            raise ValueError(msg.format(path=path)) from None
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_to_bm25_index(
-            batch_df,
-            index_path,
-            text_col=text_col,
-            id_col=id_col,
-            batch_id=base + batch_id,
-        )
+    return precheck
 
-    q = (
-        stream_docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+
+def _ann_drain(stream_vecs, index_path, checkpoint_dir, append, caller,
+               vec_col, id_col, timeout_sec, allow_restart, precheck):
+    _drain_into_store(
+        stream_vecs, index_path, checkpoint_dir,
+        lambda batch_df, path, part: append(
+            batch_df, path, batch_id=part, vec_col=vec_col, id_col=id_col
+        ),
+        caller=caller, timeout_sec=timeout_sec,
+        allow_restart=allow_restart, precheck=precheck,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream_maintain_bm25_index did not finish")
-    finally:
-        q.stop()
 
 
 def stream_maintain_ann_ivfpq_index(
@@ -678,59 +621,19 @@ def stream_maintain_ann_ivfpq_index(
     never read beyond its bounded metadata tables. Rebuild with
     ``lloyd_iters`` when quantization drift erodes probe recall (the
     composite layout's documented trade-off)."""
-    from pyspark.errors import AnalysisException
-
     from ..functions.similarity import append_to_ann_ivfpq_index
-    from ..sources.manifest import resolve_root
 
-    spark = stream_vecs.sparkSession
-    if "ingest_batch_id" in stream_vecs.columns:
-        raise ValueError(
-            "stream_maintain_ann_ivfpq_index reserves the "
-            "'ingest_batch_id' column for the index partition key; "
-            "rename it in the input"
-        )
-    # pin THIS run to the current generation (compaction/rebuild
-    # mid-stream is forbidden on both layouts)
-    index_path = resolve_root(spark, index_path)
-    # eager existence check — a missing index raised inside
-    # foreachBatch would surface as an opaque StreamingQueryException
-    # after the checkpoint is already created
-    try:
-        # bounded-collect: one construction-parameter row
-        spark.read.parquet(f"{index_path}/_pq_meta").collect()
-    except AnalysisException:
-        raise ValueError(
-            f"no IVF-PQ index at {index_path!r}: build it first with "
+    _ann_drain(
+        stream_vecs, index_path, checkpoint_dir, append_to_ann_ivfpq_index,
+        "stream_maintain_ann_ivfpq_index", vec_col, id_col, timeout_sec,
+        allow_restart,
+        _require_table(
+            "_pq_meta",
+            "no IVF-PQ index at {path!r}: build it first with "
             "build_ann_ivfpq_index (the stream cannot train the "
-            "centroids or codebooks)"
-        ) from None
-    base = _resolve_stream_base(
-        spark, index_path, checkpoint_dir, allow_restart
+            "centroids or codebooks)",
+        ),
     )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_to_ann_ivfpq_index(
-            batch_df,
-            index_path,
-            batch_id=base + batch_id,
-            vec_col=vec_col,
-            id_col=id_col,
-        )
-
-    q = (
-        stream_vecs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                "stream_maintain_ann_ivfpq_index did not finish"
-            )
-    finally:
-        q.stop()
 
 
 def stream_maintain_ann_ivf_index(
@@ -761,72 +664,34 @@ def stream_maintain_ann_ivf_index(
     O(batch): one centroid assignment (``append_to_ann_ivf_index``),
     cell-subpartitioned so probes prune streamed data exactly like
     the base."""
-    from pyspark.errors import AnalysisException
-
     from ..functions.similarity import append_to_ann_ivf_index
-    from ..sources.manifest import resolve_root
 
-    spark = stream_vecs.sparkSession
-    if "ingest_batch_id" in stream_vecs.columns:
-        raise ValueError(
-            "stream_maintain_ann_ivf_index reserves the "
-            "'ingest_batch_id' column for the index partition key; "
-            "rename it in the input"
-        )
-    # pin THIS run to the current generation (compaction/rebuild
-    # mid-stream is forbidden on both layouts)
-    index_path = resolve_root(spark, index_path)
-    # eager existence/type checks — failures inside foreachBatch
-    # surface as opaque StreamingQueryExceptions after the checkpoint
-    # is already created
-    jfs = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jfs(index_path).getFileSystem(conf)
-    if fs.exists(jfs(f"{index_path}/_pq_meta")):
-        raise ValueError(
-            f"index at {index_path!r} is IVF-PQ (has _pq_meta): its "
-            "batches carry codes, not raw embeddings — use "
-            "stream_maintain_ann_ivfpq_index"
-        )
-    if fs.exists(jfs(f"{index_path}/_sq_meta")):
-        raise ValueError(
-            f"index at {index_path!r} is IVF-SQ8 (has _sq_meta): its "
-            "batches carry scale+codes — use "
-            "stream_maintain_ann_ivfsq8_index"
-        )
-    try:
-        # bounded-collect: nlist centroid rows (index metadata)
-        spark.read.parquet(f"{index_path}/_centroids").collect()
-    except AnalysisException:
-        raise ValueError(
-            f"no IVF index at {index_path!r}: build it first with "
-            "build_ann_ivf_index (the stream cannot train the "
-            "centroids)"
-        ) from None
-    base = _resolve_stream_base(
-        spark, index_path, checkpoint_dir, allow_restart
+    need_centroids = _require_table(
+        "_centroids",
+        "no IVF index at {path!r}: build it first with "
+        "build_ann_ivf_index (the stream cannot train the centroids)",
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_to_ann_ivf_index(
-            batch_df,
-            index_path,
-            batch_id=base + batch_id,
-            vec_col=vec_col,
-            id_col=id_col,
-        )
+    def precheck(spark, path: str) -> None:
+        if _exists(spark, f"{path}/_pq_meta"):
+            raise ValueError(
+                f"index at {path!r} is IVF-PQ (has _pq_meta): its "
+                "batches carry codes, not raw embeddings — use "
+                "stream_maintain_ann_ivfpq_index"
+            )
+        if _exists(spark, f"{path}/_sq_meta"):
+            raise ValueError(
+                f"index at {path!r} is IVF-SQ8 (has _sq_meta): its "
+                "batches carry scale+codes — use "
+                "stream_maintain_ann_ivfsq8_index"
+            )
+        need_centroids(spark, path)
 
-    q = (
-        stream_vecs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _ann_drain(
+        stream_vecs, index_path, checkpoint_dir, append_to_ann_ivf_index,
+        "stream_maintain_ann_ivf_index", vec_col, id_col, timeout_sec,
+        allow_restart, precheck,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream_maintain_ann_ivf_index did not finish")
-    finally:
-        q.stop()
 
 
 def stream_maintain_ann_ivfsq8_index(
@@ -854,64 +719,25 @@ def stream_maintain_ann_ivfsq8_index(
     and because SQ8 has no trained codebook, streamed batches
     quantize EXACTLY like the base build (no quantizer drift, the
     property the IVF-PQ maintainer's docstring trades away)."""
-    from pyspark.errors import AnalysisException
-
     from ..functions.similarity import append_to_ann_ivfsq8_index
-    from ..sources.manifest import resolve_root
 
-    spark = stream_vecs.sparkSession
-    if "ingest_batch_id" in stream_vecs.columns:
-        raise ValueError(
-            "stream_maintain_ann_ivfsq8_index reserves the "
-            "'ingest_batch_id' column for the index partition key; "
-            "rename it in the input"
-        )
-    # pin THIS run to the current generation (compaction/rebuild
-    # mid-stream is forbidden on both layouts)
-    index_path = resolve_root(spark, index_path)
-    # eager existence/type checks — failures inside foreachBatch
-    # surface as opaque StreamingQueryExceptions after the checkpoint
-    # is already created
-    jfs = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jfs(index_path).getFileSystem(conf)
-    if not fs.exists(jfs(f"{index_path}/_sq_meta")):
-        raise ValueError(
-            f"no IVF-SQ8 index at {index_path!r} (missing _sq_meta): "
-            "build it first with build_ann_ivfsq8_index (the stream "
-            "cannot train the centroids)"
-        )
-    try:
-        # bounded-collect: nlist centroid rows (index metadata)
-        spark.read.parquet(f"{index_path}/_centroids").collect()
-    except AnalysisException:
-        raise ValueError(
-            f"no centroid table at {index_path!r}: the store is "
-            "incomplete — rebuild with build_ann_ivfsq8_index"
-        ) from None
-    base = _resolve_stream_base(
-        spark, index_path, checkpoint_dir, allow_restart
+    need_centroids = _require_table(
+        "_centroids",
+        "no centroid table at {path!r}: the store is incomplete — "
+        "rebuild with build_ann_ivfsq8_index",
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_to_ann_ivfsq8_index(
-            batch_df,
-            index_path,
-            batch_id=base + batch_id,
-            vec_col=vec_col,
-            id_col=id_col,
-        )
-
-    q = (
-        stream_vecs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                "stream_maintain_ann_ivfsq8_index did not finish"
+    def precheck(spark, path: str) -> None:
+        if not _exists(spark, f"{path}/_sq_meta"):
+            raise ValueError(
+                f"no IVF-SQ8 index at {path!r} (missing _sq_meta): "
+                "build it first with build_ann_ivfsq8_index (the stream "
+                "cannot train the centroids)"
             )
-    finally:
-        q.stop()
+        need_centroids(spark, path)
+
+    _ann_drain(
+        stream_vecs, index_path, checkpoint_dir, append_to_ann_ivfsq8_index,
+        "stream_maintain_ann_ivfsq8_index", vec_col, id_col, timeout_sec,
+        allow_restart, precheck,
+    )

@@ -44,12 +44,27 @@ def run_available_now(
 
 
 def _drain(writer, timeout_sec: int, what: str) -> None:
+    """Start ``writer``, wait for its availableNow run to finish, and
+    always stop it — the one start/await/stop of this package."""
     q = writer.start()
     try:
         if not q.awaitTermination(timeout_sec):
             raise TimeoutError(f"streaming query {what} did not finish")
     finally:
         q.stop()
+
+
+def _drain_foreach(
+    sdf: DataFrame, process, checkpoint_dir: str, timeout_sec: int, what: str
+) -> None:
+    """Drain ``sdf`` availableNow through ``foreachBatch(process)`` with
+    its checkpoint at ``checkpoint_dir``."""
+    writer = (
+        sdf.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+    _drain(writer, timeout_sec, what)
 
 
 def stream_to_files(

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.local_rows import local_rows_df
+from ..sources.manifest import _batch_ids, _exists, staged_store
+from .run import _drain_foreach
 
 from ..functions.sketches import hll_estimate, hll_register_table
 
@@ -51,6 +53,22 @@ __all__ = [
 ]
 
 
+def _drain_sketch_store(
+    stream_df: DataFrame, store_path: str, checkpoint_dir: str, sketch,
+    timeout_sec: int, caller: str,
+) -> None:
+    """Drain ``stream_df`` availableNow, writing each micro-batch's
+    ``sketch(batch_df)`` to its own ``ingest_batch_id`` partition with
+    overwrite semantics (a replayed batch replaces its own state)."""
+    _drain_foreach(
+        stream_df,
+        lambda batch_df, batch_id: sketch(batch_df).write.mode("overwrite").parquet(
+            f"{store_path}/ingest_batch_id={batch_id}"
+        ),
+        checkpoint_dir, timeout_sec, caller,
+    )
+
+
 def stream_hll_distinct(
     stream_df: DataFrame,
     value: str,
@@ -65,23 +83,11 @@ def stream_hll_distinct(
     micro-batch holding that batch's grouped register table."""
     keys = [keys] if isinstance(keys, str) else list(keys)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        regs = hll_register_table(batch_df, value, b=b, keys=keys)
-        regs.write.mode("overwrite").parquet(
-            f"{store_path}/ingest_batch_id={batch_id}"
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_sketch_store(
+        stream_df, store_path, checkpoint_dir,
+        lambda batch: hll_register_table(batch, value, b=b, keys=keys),
+        timeout_sec, "stream_hll_distinct",
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream_hll_distinct did not finish")
-    finally:
-        q.stop()
 
 
 def stream_cms_counts(
@@ -105,23 +111,11 @@ def stream_cms_counts(
     get it from overwrite-by-batch-partition."""
     from ..functions.sketches import cms_build
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        cells = cms_build(batch_df, value, width=width, depth=depth)
-        cells.write.mode("overwrite").parquet(
-            f"{store_path}/ingest_batch_id={batch_id}"
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_sketch_store(
+        stream_df, store_path, checkpoint_dir,
+        lambda batch: cms_build(batch, value, width=width, depth=depth),
+        timeout_sec, "stream_cms_counts",
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream_cms_counts did not finish")
-    finally:
-        q.stop()
 
 
 def read_cms_cells(spark, store_path: str) -> DataFrame:
@@ -158,23 +152,11 @@ def stream_bloom(
     m_bits/8 bytes of state total."""
     from ..functions.sketches import bloom_build
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        words = bloom_build(batch_df, value, m_bits=m_bits, k=k)
-        words.write.mode("overwrite").parquet(
-            f"{store_path}/ingest_batch_id={batch_id}"
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_sketch_store(
+        stream_df, store_path, checkpoint_dir,
+        lambda batch: bloom_build(batch, value, m_bits=m_bits, k=k),
+        timeout_sec, "stream_bloom",
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream_bloom did not finish")
-    finally:
-        q.stop()
 
 
 def read_bloom(spark, store_path: str) -> DataFrame:
@@ -212,23 +194,11 @@ def stream_histogram(
 
     keys = [keys] if isinstance(keys, str) else list(keys)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sk = histogram_sketch(batch_df, value, sub_bits=sub_bits, keys=keys)
-        sk.write.mode("overwrite").parquet(
-            f"{store_path}/ingest_batch_id={batch_id}"
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_sketch_store(
+        stream_df, store_path, checkpoint_dir,
+        lambda batch: histogram_sketch(batch, value, sub_bits=sub_bits, keys=keys),
+        timeout_sec, "stream_histogram",
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream_histogram did not finish")
-    finally:
-        q.stop()
 
 
 def read_histogram(spark, store_path: str, keys=()) -> DataFrame:
@@ -251,12 +221,8 @@ def _kmv_meta_read(spark, store_path: str) -> int | None:
     a legacy store written before the meta existed (ADVICE r12:
     without the persisted k, a read with a too-large k makes the
     estimator treat a saturated sketch as an exact count)."""
-    jvm = spark.sparkContext._jvm
-    jfs = jvm.org.apache.hadoop.fs.Path
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     meta = f"{store_path}/_kmv_meta"
-    fs = jfs(store_path).getFileSystem(conf)
-    if not fs.exists(jfs(meta)):
+    if not _exists(spark, meta):
         return None
     return int(spark.read.parquet(meta).head().k)
 
@@ -268,21 +234,6 @@ def _kmv_meta_write(spark, store_path: str, k: int) -> None:
     local_rows_df(spark, [(int(k),)], "k int").coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{store_path}/_kmv_meta")
-
-
-def _kmv_has_batches(spark, store_path: str) -> bool:
-    """True when the store dir exists and holds at least one
-    ``ingest_batch_id=`` partition (a drained store)."""
-    jvm = spark.sparkContext._jvm
-    jfs = jvm.org.apache.hadoop.fs.Path
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jfs(store_path).getFileSystem(conf)
-    if not fs.exists(jfs(store_path)):
-        return False
-    return any(
-        s.getPath().getName().startswith("ingest_batch_id=")
-        for s in fs.listStatus(jfs(store_path))
-    )
 
 
 def _kmv_resolve_k(
@@ -360,7 +311,7 @@ def stream_kmv(
     spark = stream_df.sparkSession
     meta_k = _kmv_meta_read(spark, store_path)
     if meta_k is None:
-        if _kmv_has_batches(spark, store_path):
+        if _batch_ids(spark, store_path):
             # a LEGACY store (drained before the meta existed): we
             # cannot know its true build k, and silently stamping the
             # caller's k would re-open the saturated-sketch-as-exact-
@@ -381,23 +332,11 @@ def stream_kmv(
             "would mix incompatible sketches"
         )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sk = kmv_sketch(batch_df, value, k=k, keys=keys)
-        sk.write.mode("overwrite").parquet(
-            f"{store_path}/ingest_batch_id={batch_id}"
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_sketch_store(
+        stream_df, store_path, checkpoint_dir,
+        lambda batch: kmv_sketch(batch, value, k=k, keys=keys),
+        timeout_sec, "stream_kmv",
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream_kmv did not finish")
-    finally:
-        q.stop()
 
 
 def _read_kmv_resolved(spark, store_path: str, k: int, keys) -> DataFrame:
@@ -457,32 +396,29 @@ def compact_sketch_store(
     now holds merged totals. (The same stream-stopped contract as
     ``compact_minhash_band_store``.)
 
-    Crash-atomic (ADVICE r7): the swap renames the live store ASIDE
-    before moving the staged merge in and deletes the old copy last —
-    no crash point loses the only readable copy (a crash between the
-    renames is recovered by renaming ``{store}.old`` back)."""
-    from ..functions.dedup import _swap_in
-
+    The merged partition (and, for KMV, the validated build-k meta)
+    is staged whole and published once
+    (``sources.manifest.staged_store``): no crash point loses the only
+    readable copy."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     if kind not in ("hll", "cms", "histogram", "bloom", "kmv"):
         raise ValueError(
             f"unknown sketch store kind {kind!r}: expected "
             "'hll', 'bloom', 'cms', 'histogram' or 'kmv'"
         )
-    kmv_meta_k = None
     if kind == "kmv":
         # resolves k from _kmv_meta (or validates the caller's k
         # against it); legacy meta-less stores still require k
         kmv_meta_k = _kmv_meta_read(spark, store_path)
         k = _kmv_resolve_k(kmv_meta_k, k, store_path, "compact_sketch_store")
-        if kmv_meta_k is None and _kmv_has_batches(spark, store_path):
+        if kmv_meta_k is None and _batch_ids(spark, store_path):
             # LEGACY store: before stamping the caller's k as the
             # build k, bound it by the stored sketch lengths — a
             # sketch of length L may be saturated at build k = L, so
             # any k > max(L) risks the exact-count estimator branch
             # on a saturated sketch. k <= max(L) is always safe
             # (bottom-k of a valid bottom-L is a valid bottom-k).
-            # Gated on _kmv_has_batches (ADVICE r13): an empty or
+            # Gated on _batch_ids (ADVICE r13): an empty or
             # missing legacy store must reach the clean 'holds no
             # batch partitions' ValueError below, not die here on
             # schema inference.
@@ -503,18 +439,8 @@ def compact_sketch_store(
     # find the max batch partition BEFORE any read: an empty OR
     # MISSING dir must be a clean ValueError, not a schema-inference
     # failure / py4j FileNotFoundException
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(store_path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        raise ValueError(f"{store_path!r} holds no batch partitions")
-    max_id = None
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if name.startswith("ingest_batch_id="):
-            n = int(name.split("=", 1)[1])
-            max_id = n if max_id is None else max(max_id, n)
-    if max_id is None:
+    ids = _batch_ids(spark, store_path)
+    if not ids:
         raise ValueError(f"{store_path!r} holds no batch partitions")
     if kind == "hll":
         merged = read_hll_registers(spark, store_path, keys)
@@ -526,19 +452,14 @@ def compact_sketch_store(
         merged = _read_kmv_resolved(spark, store_path, k, keys)
     else:
         merged = read_histogram(spark, store_path, keys)
-    staging = f"{store_path}.compacting"
-    merged.write.mode("overwrite").parquet(staging)
-    _swap_in(spark, staging, store_path, f"{store_path}/ingest_batch_id={max_id}")
-    if kind == "kmv":
-        # the swap replaced the whole live dir with the merged batch
-        # partition — restore the build-k meta so post-compact reads
-        # keep their validation (this also upgrades a legacy
-        # meta-less store: the caller's k was length-validated above).
-        # A crash between the swap and this write leaves a meta-less
-        # store whose sketches are ALL length <= k — recovery is this
-        # same compact (or any read) with the explicit k, which the
-        # length bound accepts.
-        _kmv_meta_write(spark, store_path, k)
+    with staged_store(spark, store_path, "rename") as staged:
+        merged.write.mode("overwrite").parquet(
+            f"{staged}/ingest_batch_id={max(ids)}"
+        )
+        if kind == "kmv":
+            # the build-k meta, also upgrading a legacy meta-less store
+            # (the caller's k was length-validated above)
+            _kmv_meta_write(spark, staged, k)
 
 
 def read_hll_registers(spark, store_path: str, keys=()) -> DataFrame:

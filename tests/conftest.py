@@ -17,6 +17,52 @@ def sf_dir():
     return "/root/testdata/sf0.001"
 
 
+@pytest.fixture(scope="session")
+def ro_store(spark, sf_dir, tmp_path_factory):
+    """Read-only stores over the ``sf_dir`` tables, each built once per
+    session on first use: probes never mutate a store, so the tests
+    that only probe share one build. A test that appends to, compacts
+    or rebuilds a store builds its own."""
+    from pyspark.sql import functions as F
+
+    from spark_sorted_spark.functions.dedup import build_minhash_band_store
+    from spark_sorted_spark.functions.retrieval import build_bm25_index
+    from spark_sorted_spark.functions.similarity import (
+        build_ann_ivf_index,
+        build_ann_ivfpq_index,
+        build_ann_ivfsq8_index,
+        build_ann_lsh_index,
+        build_ann_pq_index,
+    )
+    from spark_sorted_spark.sources.tpch import load_table
+
+    docs = load_table(spark, "documents", sf_dir)
+    vecs = load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") != 0)
+    vecs = vecs.select("vec_id", "embedding")
+    builders = {
+        "bm25": lambda p: build_bm25_index(docs, p),
+        "bm25_source": lambda p: build_bm25_index(docs, p, extra_cols=("source",)),
+        "lsh": lambda p: build_ann_lsh_index(vecs, p),
+        "ivf": lambda p: build_ann_ivf_index(vecs, p),
+        "pq": lambda p: build_ann_pq_index(vecs, p),
+        "ivfpq": lambda p: build_ann_ivfpq_index(vecs, p),
+        "sq8": lambda p: build_ann_ivfsq8_index(vecs, p),
+        "bands": lambda p: build_minhash_band_store(
+            docs.filter(F.col("doc_id") % 4 != 0), p
+        ),
+    }
+    root = tmp_path_factory.mktemp("ro_stores")
+    built = {}
+
+    def get(kind: str) -> str:
+        if kind not in built:
+            builders[kind](str(root / kind))
+            built[kind] = str(root / kind)
+        return built[kind]
+
+    return get
+
+
 def plan_of(df, mode: str = "formatted") -> str:
     """Physical-plan string for assertions. NB: "formatted" prints each
     node twice (tree + detail) — use mode="simple" when counting node

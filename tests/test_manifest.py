@@ -72,7 +72,7 @@ def test_commit_rejects_non_generation_dir(spark, tmp_path):
         commit_generation(spark, str(tmp_path), str(tmp_path / "other"))
 
 
-def test_ann_lsh_manifest_build_probe_append_rebuild(spark, emb, tmp_path):
+def test_ann_lsh_manifest_build_probe_append_rebuild(spark, emb, tmp_path, ro_store):
     """End-to-end store round trip under commit='manifest': build,
     probe (identical to the rename-layout probe), append a batch,
     rebuild FROM the index's own read (zero renames — the flow an
@@ -88,8 +88,7 @@ def test_ann_lsh_manifest_build_probe_append_rebuild(spark, emb, tmp_path):
     half_a = corpus.filter(F.col("vec_id") % 2 == 1)
     half_b = corpus.filter(F.col("vec_id") % 2 == 0)
 
-    ref = str(tmp_path / "ref_idx")
-    build_ann_lsh_index(corpus, ref)  # rename layout, the truth
+    ref = ro_store("lsh")  # rename layout, the truth
     want = [
         (r.vec_id, r.rank)
         for r in ann_lsh_topk_indexed(spark, ref, qvec, k=5).collect()
@@ -125,7 +124,7 @@ def test_ann_lsh_manifest_build_probe_append_rebuild(spark, emb, tmp_path):
     assert got2 == want
 
 
-def test_ann_ivf_manifest_build_probe(spark, emb, tmp_path):
+def test_ann_ivf_manifest_build_probe(spark, emb, tmp_path, ro_store):
     from spark_sorted_spark.functions.similarity import (
         ann_ivf_topk_indexed,
         build_ann_ivf_index,
@@ -134,8 +133,7 @@ def test_ann_ivf_manifest_build_probe(spark, emb, tmp_path):
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
     corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
 
-    ref = str(tmp_path / "ref_ivf")
-    build_ann_ivf_index(corpus, ref)
+    ref = ro_store("ivf")
     want = [
         (r.vec_id, r.rank)
         for r in ann_ivf_topk_indexed(spark, ref, qvec, k=5).collect()

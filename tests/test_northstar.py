@@ -357,20 +357,16 @@ def test_simhash_banded_equals_bruteforce_at_k3(docs):
         simhash_pairs_banded(docs, max_hamming=4, n_bands=4)
 
 
-def test_ann_lsh_persisted_index_pruned_probe(spark, emb, tmp_path):
+def test_ann_lsh_persisted_index_pruned_probe(spark, emb, ro_store):
     # Scale path: bucket assignment computed once + persisted; the
     # probe reads ONLY the query's bucket directory (PartitionFilters
     # on `bucket` at the scan) and returns the identical result to the
     # query-time form.
-    from spark_sorted_spark.functions.similarity import (
-        ann_lsh_topk_indexed,
-        build_ann_lsh_index,
-    )
+    from spark_sorted_spark.functions.similarity import ann_lsh_topk_indexed
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
     base = emb.filter(F.col("vec_id") != 0)
-    path = str(tmp_path / "lsh_idx")
-    build_ann_lsh_index(base, path)
+    path = ro_store("lsh")
 
     probe = ann_lsh_topk_indexed(spark, path, qvec, k=5)
     plan = plan_of(probe, "formatted")
@@ -380,7 +376,7 @@ def test_ann_lsh_persisted_index_pruned_probe(spark, emb, tmp_path):
     assert got == [(r.vec_id, r.rank) for r in exact_form.collect()]
 
 
-def test_ann_lsh_index_incremental_append(spark, emb, tmp_path):
+def test_ann_lsh_index_incremental_append(spark, emb, tmp_path, ro_store):
     # growing-corpus maintenance: build over half, append the rest —
     # probes must equal the full build; replaying the same batch_id
     # must be idempotent (a duplicated index row would surface as a
@@ -397,8 +393,7 @@ def test_ann_lsh_index_incremental_append(spark, emb, tmp_path):
     half_a = corpus.filter(F.col("vec_id") % 2 == 1)
     half_b = corpus.filter(F.col("vec_id") % 2 == 0)
 
-    full = str(tmp_path / "full_idx")
-    build_ann_lsh_index(corpus, full)
+    full = ro_store("lsh")
     want = [(r.vec_id, r.rank) for r in ann_lsh_topk_indexed(spark, full, qvec, k=5).collect()]
 
     inc = str(tmp_path / "inc_idx")
@@ -881,17 +876,15 @@ def test_cosine_neardup_lsh_rejects_wrong_dim_batch(spark, tmp_path):
         ).collect()
 
 
-def test_ann_ivf_persisted_index_pruned_probe(spark, emb, tmp_path):
+def test_ann_ivf_persisted_index_pruned_probe(spark, emb, ro_store):
     from spark_sorted_spark.functions.similarity import (
         ann_ivf_topk,
         ann_ivf_topk_indexed,
-        build_ann_ivf_index,
     )
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
     base = emb.filter(F.col("vec_id") != 0)
-    path = str(tmp_path / "ivf_idx")
-    build_ann_ivf_index(base, path)
+    path = ro_store("ivf")
 
     probe = ann_ivf_topk_indexed(spark, path, qvec, k=5)
     plan = plan_of(probe, "formatted")
@@ -934,16 +927,12 @@ def test_ann_lsh_multiprobe_recall_monotone(spark, emb):
     assert r0 <= r2 <= r4, (r0, r2, r4)
 
 
-def test_ann_lsh_multiprobe_indexed_matches_query_time(spark, emb, tmp_path):
-    from spark_sorted_spark.functions.similarity import (
-        ann_lsh_topk_indexed,
-        build_ann_lsh_index,
-    )
+def test_ann_lsh_multiprobe_indexed_matches_query_time(spark, emb, ro_store):
+    from spark_sorted_spark.functions.similarity import ann_lsh_topk_indexed
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
     base = emb.filter(F.col("vec_id") != 0)
-    path = str(tmp_path / "lsh_mp")
-    build_ann_lsh_index(base, path)
+    path = ro_store("lsh")
     a = ann_lsh_topk(base, qvec, k=5, probe_bits=3).collect()
     b = ann_lsh_topk_indexed(spark, path, qvec, k=5, probe_bits=3).collect()
     assert [(r.vec_id, r.rank) for r in a] == [(r.vec_id, r.rank) for r in b]
@@ -1117,21 +1106,19 @@ def test_image_decode_with_pil(spark):
     assert d["pixels"] == b"\xff\x00\x00" * 8
 
 
-def test_dedup_against_store_matches_cross_batch_self_dedup(spark, docs, tmp_path):
+def test_dedup_against_store_matches_cross_batch_self_dedup(spark, docs, ro_store):
     """Incremental dedup must equal the cross-batch subset of a full
     self-dedup over the combined corpus: same bands, same combined
     bucket guard, same exact verify — only the store side's signature
     cost moves to build time."""
     from spark_sorted_spark.functions.dedup import (
-        build_minhash_band_store,
         dedup_against_store,
         minhash_lsh_pairs,
     )
 
     existing = docs.filter(F.col("doc_id") % 4 != 0)
     new = docs.filter(F.col("doc_id") % 4 == 0)
-    store = str(tmp_path / "bands")
-    build_minhash_band_store(existing, store)
+    store = ro_store("bands")
 
     inc = dedup_against_store(new, store, existing)
     got = sorted(map(tuple, inc.collect()))
@@ -1155,7 +1142,7 @@ def test_dedup_against_store_matches_cross_batch_self_dedup(spark, docs, tmp_pat
     assert again == got
 
 
-def test_dedup_against_store_prunes_store_via_broadcast(spark, docs, tmp_path):
+def test_dedup_against_store_prunes_store_via_broadcast(spark, docs, ro_store):
     """The 100 TB contract of the incremental path: the persisted
     store must meet only a scan + broadcast-hash-join against the
     new-batch key set — never a full-store shuffle. Pinned on the
@@ -1163,10 +1150,7 @@ def test_dedup_against_store_prunes_store_via_broadcast(spark, docs, tmp_path):
     store's counts table is read (not re-aggregated from bands)."""
     from tests.conftest import plan_of
 
-    from spark_sorted_spark.functions.dedup import (
-        build_minhash_band_store,
-        dedup_against_store,
-    )
+    from spark_sorted_spark.functions.dedup import dedup_against_store
 
     from spark_sorted_spark.functions.dedup import (
         _combined_small_keys,
@@ -1175,8 +1159,7 @@ def test_dedup_against_store_prunes_store_via_broadcast(spark, docs, tmp_path):
 
     existing = docs.filter(F.col("doc_id") % 4 != 0)
     new = docs.filter(F.col("doc_id") % 4 == 0)
-    store = str(tmp_path / "store")
-    build_minhash_band_store(existing, store)
+    store = ro_store("bands")
 
     # guard plan: precomputed counts scanned (store_n), new keys
     # broadcast into the store-counts scan (no store-side Exchange
@@ -1243,7 +1226,7 @@ def test_dedup_against_store_accepts_dataframe_store(spark, docs):
     assert out.count() >= 0
 
 
-def test_ann_ivf_lloyd_refinement(spark, emb, tmp_path):
+def test_ann_ivf_lloyd_refinement(spark, emb, tmp_path, ro_store):
     """Lloyd-refined index: probes stay exact-cosine-correct (subset
     of exact ranking, identical given the same index), cells cover
     every vector, recall at full probe is exact by construction, and
@@ -1267,8 +1250,7 @@ def test_ann_ivf_lloyd_refinement(spark, emb, tmp_path):
             ).collect()
         ]
 
-    seeded, refined = str(tmp_path / "seed"), str(tmp_path / "lloyd")
-    build_ann_ivf_index(base, seeded)
+    seeded, refined = ro_store("ivf"), str(tmp_path / "lloyd")
     build_ann_ivf_index(base, refined, lloyd_iters=3)
 
     n_base = base.count()
@@ -2107,7 +2089,7 @@ def test_contains_join_hypothesis_vs_brute_force(spark):
     run()
 
 
-def test_ann_pq_indexed_equals_query_form_and_prunes_scan(spark, emb, tmp_path):
+def test_ann_pq_indexed_equals_query_form_and_prunes_scan(spark, emb, ro_store):
     """PQ: the persisted-index ADC probe equals the query-time form
     bitwise (same seeded codebooks), and the ADC scan reads the CODE
     column only — the embedding bytes never leave disk (the 16x IO
@@ -2115,7 +2097,6 @@ def test_ann_pq_indexed_equals_query_form_and_prunes_scan(spark, emb, tmp_path):
     from spark_sorted_spark.functions.similarity import (
         ann_pq_topk,
         ann_pq_topk_indexed,
-        build_ann_pq_index,
     )
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
@@ -2125,8 +2106,7 @@ def test_ann_pq_indexed_equals_query_form_and_prunes_scan(spark, emb, tmp_path):
         for r in ann_pq_topk(base, qvec, k=8).collect()
     ]
 
-    path = str(tmp_path / "pq_idx")
-    build_ann_pq_index(base, path)
+    path = ro_store("pq")
     probe = ann_pq_topk_indexed(spark, path, qvec, k=8)
     got = [(r.vec_id, r.rank, r.adot) for r in probe.collect()]
     assert got == want
@@ -2142,25 +2122,21 @@ def test_ann_pq_indexed_equals_query_form_and_prunes_scan(spark, emb, tmp_path):
         ann_pq_topk_indexed(spark, path, qvec, k=8, rerank=4)
 
 
-def test_ann_pq_rerank_finds_exact_duplicate(spark, emb, tmp_path):
+def test_ann_pq_rerank_finds_exact_duplicate(spark, emb, ro_store):
     """Exact rerank: a query IDENTICAL to a stored vector must return
     that vector at rank 1 with cosine exactly 1.0 (ADC alone only
     guarantees it a top-R candidacy; the exact tail closes it)."""
-    from spark_sorted_spark.functions.similarity import (
-        ann_pq_topk_indexed,
-        build_ann_pq_index,
-    )
+    from spark_sorted_spark.functions.similarity import ann_pq_topk_indexed
 
     base = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
     target = base.filter(F.col("vec_id") == 77).head()
     qvec = [float(x) for x in target[1]]
-    path = str(tmp_path / "pq_rr")
-    build_ann_pq_index(base, path)
+    path = ro_store("pq")
     top = ann_pq_topk_indexed(spark, path, qvec, k=3, rerank=100).collect()
     assert top[0].vec_id == 77 and abs(top[0].cos - 1.0) < 1e-12
 
 
-def test_ann_pq_manifest_commit(spark, emb, tmp_path):
+def test_ann_pq_manifest_commit(spark, emb, tmp_path, ro_store):
     import os
 
     from spark_sorted_spark.functions.similarity import (
@@ -2170,8 +2146,7 @@ def test_ann_pq_manifest_commit(spark, emb, tmp_path):
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
     base = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
-    ref = str(tmp_path / "pq_ref")
-    build_ann_pq_index(base, ref)
+    ref = ro_store("pq")
     want = [
         (r.vec_id, r.rank)
         for r in ann_pq_topk_indexed(spark, ref, qvec, k=5).collect()
@@ -2299,20 +2274,16 @@ def test_ann_ivfpq_index_incremental_append(spark, emb, tmp_path):
         append_to_ann_ivfpq_index(half_b, str(tmp_path / "nope"), batch_id=0)
 
 
-def test_ann_ivfpq_prunes_both_layers_and_reranks_exactly(spark, emb, tmp_path):
+def test_ann_ivfpq_prunes_both_layers_and_reranks_exactly(spark, emb, ro_store):
     """IVF-PQ: the probe must prune BOTH layers — cell directories
     (PartitionFilters) and the embedding column (ReadSchema) — and
     exact rerank must return an identical stored vector at rank 1
     with cosine exactly 1.0 (its own cell is the rank-1 probe by
     construction: assignment is argmax centroid dot)."""
-    from spark_sorted_spark.functions.similarity import (
-        ann_ivfpq_topk_indexed,
-        build_ann_ivfpq_index,
-    )
+    from spark_sorted_spark.functions.similarity import ann_ivfpq_topk_indexed
 
     base = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
-    path = str(tmp_path / "ivfpq")
-    build_ann_ivfpq_index(base, path)
+    path = ro_store("ivfpq")
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
     probe = ann_ivfpq_topk_indexed(spark, path, qvec, k=5)
@@ -2531,6 +2502,8 @@ def test_ann_probe_before_batch_fence(spark, emb, tmp_path):
     dense side: a fenced probe equals a probe of an index that only
     ever received the earlier batches (same frozen quantizers, so
     bitwise)."""
+    import shutil
+
     from spark_sorted_spark.functions.similarity import (
         ANN_NLIST,
         ann_ivfpq_topk_indexed,
@@ -2550,10 +2523,10 @@ def test_ann_probe_before_batch_fence(spark, emb, tmp_path):
     full = str(tmp_path / "ivfpq_full")
     build_ann_ivfpq_index(base, full)
     append_to_ann_ivfpq_index(b0, full, batch_id=0)
-    append_to_ann_ivfpq_index(b1, full, batch_id=1)
+    # ref = base + b0 only: a byte copy of `full` at this point
     ref = str(tmp_path / "ivfpq_ref")
-    build_ann_ivfpq_index(base, ref)
-    append_to_ann_ivfpq_index(b0, ref, batch_id=0)
+    shutil.copytree(full, ref)
+    append_to_ann_ivfpq_index(b1, full, batch_id=1)
 
     def probe(p, **kw):
         return [
@@ -2715,7 +2688,7 @@ def test_compact_ann_index_all_layouts(spark, emb, tmp_path):
         compact_ann_index(spark, str(tmp_path / "missing"))
 
 
-def test_ann_ivfpq_manifest_commit(spark, emb, tmp_path):
+def test_ann_ivfpq_manifest_commit(spark, emb, tmp_path, ro_store):
     import os
 
     from spark_sorted_spark.functions.similarity import (
@@ -2725,8 +2698,7 @@ def test_ann_ivfpq_manifest_commit(spark, emb, tmp_path):
 
     base = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-    ref = str(tmp_path / "ivfpq_ref")
-    build_ann_ivfpq_index(base, ref)
+    ref = ro_store("ivfpq")
     want = [
         (r.vec_id, r.rank, r.adot)
         for r in ann_ivfpq_topk_indexed(spark, ref, qvec, k=5).collect()
@@ -3250,7 +3222,7 @@ def test_semantic_dedup_lloyd_path_is_valid_partition(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_ann_ivfsq8_probe_matches_reconstructed_cosine(spark, emb, tmp_path):
+def test_ann_ivfsq8_probe_matches_reconstructed_cosine(spark, emb, ro_store):
     """With nprobe = nlist the probe ranks the WHOLE corpus by cosine
     over the reconstructed (dequantized) vectors — bitwise equal to
     composing quantize -> dequantize -> cosine_topk, because the index
@@ -3259,7 +3231,6 @@ def test_ann_ivfsq8_probe_matches_reconstructed_cosine(spark, emb, tmp_path):
     from spark_sorted_spark.functions.similarity import (
         ANN_NLIST,
         ann_ivfsq8_topk_indexed,
-        build_ann_ivfsq8_index,
         cosine_topk,
         dequantize_embeddings,
         quantize_embeddings,
@@ -3267,8 +3238,7 @@ def test_ann_ivfsq8_probe_matches_reconstructed_cosine(spark, emb, tmp_path):
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
     corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
-    p = str(tmp_path / "sq8")
-    build_ann_ivfsq8_index(corpus, p)
+    p = ro_store("sq8")
     got = [
         (r.vec_id, r.rank, r.acos)
         for r in ann_ivfsq8_topk_indexed(
@@ -3283,21 +3253,19 @@ def test_ann_ivfsq8_probe_matches_reconstructed_cosine(spark, emb, tmp_path):
     assert got == want
 
 
-def test_ann_ivfsq8_rerank_matches_exact_cosine(spark, emb, tmp_path):
+def test_ann_ivfsq8_rerank_matches_exact_cosine(spark, emb, ro_store):
     """rerank=R re-ranks by exact cosine over the TRUE embeddings; at
     full probe depth with R >= corpus the result equals brute-force
     cosine_topk bitwise (the same guarantee the IVF-PQ rerank pins)."""
     from spark_sorted_spark.functions.similarity import (
         ANN_NLIST,
         ann_ivfsq8_topk_indexed,
-        build_ann_ivfsq8_index,
         cosine_topk,
     )
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
     corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
-    p = str(tmp_path / "sq8")
-    build_ann_ivfsq8_index(corpus, p)
+    p = ro_store("sq8")
     n = corpus.count()
     got = [
         (r.vec_id, r.rank, r.cos)
@@ -3325,16 +3293,13 @@ def test_ann_ivfsq8_rerank_matches_exact_cosine(spark, emb, tmp_path):
             assert abs(approx[vid] - cos) < 2e-2
 
 
-def test_ann_ivfsq8_join_matches_single_probe_loop(spark, emb, tmp_path):
+def test_ann_ivfsq8_join_matches_single_probe_loop(spark, emb, ro_store):
     from spark_sorted_spark.functions.similarity import (
         ann_ivfsq8_join_indexed,
         ann_ivfsq8_topk_indexed,
-        build_ann_ivfsq8_index,
     )
 
-    corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
-    p = str(tmp_path / "sq8")
-    build_ann_ivfsq8_index(corpus, p)
+    p = ro_store("sq8")
     qs = [
         (int(r.vec_id), [float(x) for x in r.embedding])
         for r in emb.limit(4).collect()
@@ -3436,9 +3401,7 @@ def test_ann_ivfsq8_validation_errors(spark, emb, tmp_path):
         ann_ivfsq8_topk_indexed(spark, p, qvec, k=3, nprobe=0)
     # the batch twin validates every query's dim against _sq_meta —
     # a mismatched vector would NULL-fold every cosine silently
-    from spark_sorted_spark.functions.similarity import (
-        ann_ivfsq8_join_indexed,
-    )
+    from spark_sorted_spark.functions.similarity import ann_ivfsq8_join_indexed
 
     badq = spark.createDataFrame(
         [(1, [1.0, 2.0])], "query_id bigint, query_vec array<double>"

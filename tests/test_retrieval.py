@@ -620,56 +620,17 @@ def test_bm25_precomputed_stats_param(spark):
         bm25_topk(docs, "spark", stats=(0, 5))
 
 
-def test_compact_bm25_rewrites_marker_right_after_postings_swap(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r10 (low): a crash between the postings swap and the dft
-    swap must NOT leave a marker-less store — the marker is re-armed
-    immediately after the postings swap, so the half-compacted store
-    still refuses silent adoption by a fresh-checkpoint stream."""
-    import spark_sorted_spark.functions.retrieval as retrieval
-    from spark_sorted_spark.functions import dedup as dedup_mod
-    from spark_sorted_spark.functions.retrieval import build_bm25_index
-    from spark_sorted_spark.streaming.ingest import _read_text, _write_text
-
-    docs = spark.createDataFrame(
-        [(1, "spark join"), (2, "join window")], "doc_id long, text string"
-    )
-    path = str(tmp_path / "idx")
-    build_bm25_index(docs, path)
-    _write_text(spark, f"{path}/postings/_ingest_stream", '{"id": "s1"}')
-
-    real_swap = dedup_mod._swap_in
-    calls = {"n": 0}
-
-    def crashing_swap(spark_, staging, dest, base):
-        calls["n"] += 1
-        if calls["n"] == 2:  # the dft swap — crash after postings
-            raise RuntimeError("injected crash between swaps")
-        return real_swap(spark_, staging, dest, base)
-
-    monkeypatch.setattr(dedup_mod, "_swap_in", crashing_swap)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        retrieval.compact_bm25_index(spark, path)
-    # the marker survived the partial compaction
-    assert _read_text(spark, f"{path}/postings/_ingest_stream") == '{"id": "s1"}'
-
-
-def test_hybrid_topk_indexed_full_probe_equals_scan(spark, tmp_path):
+def test_hybrid_topk_indexed_full_probe_equals_scan(spark, ro_store):
     """hybrid_topk_indexed with nprobe >= nlist (exact-recall probe)
     must be BITWISE the scan-form hybrid_topk: the BM25 index is a
     layout (pinned), and a full IVF probe ranks by exact cosine over
     all vectors. At serving nprobe the dense side is a subset of the
     exact candidates (recall trade, never a score change)."""
     from spark_sorted_spark.functions.retrieval import (
-        build_bm25_index,
         hybrid_topk,
         hybrid_topk_indexed,
     )
-    from spark_sorted_spark.functions.similarity import (
-        ANN_NLIST,
-        build_ann_ivf_index,
-    )
+    from spark_sorted_spark.functions.similarity import ANN_NLIST
     from spark_sorted_spark.sources.tpch import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
@@ -679,10 +640,7 @@ def test_hybrid_topk_indexed_full_probe_equals_scan(spark, tmp_path):
         for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
     ]
     base = emb.filter(F.col("vec_id") != 0)
-    bm25 = str(tmp_path / "bm25")
-    ivf = str(tmp_path / "ivf")
-    build_bm25_index(docs, bm25)
-    build_ann_ivf_index(base, ivf)
+    bm25, ivf = ro_store("bm25"), ro_store("ivf")
     q = "spark join window filter"
     want = [
         (r.doc_id, r.rrf, r.rank_lex, r.rank_dense, r.rank)
@@ -767,7 +725,7 @@ def test_cosine_join_matches_per_query_topk(spark):
     assert len(got) == n
 
 
-def test_ann_ivf_join_indexed_full_probe_equals_exact(spark, tmp_path):
+def test_ann_ivf_join_indexed_full_probe_equals_exact(spark, ro_store):
     """Batch IVF probe: nprobe >= nlist equals the exact cosine_join
     bitwise; serving nprobe returns a subset whose scores are the
     exact cosines; string query ids work (schema derived from the
@@ -775,15 +733,13 @@ def test_ann_ivf_join_indexed_full_probe_equals_exact(spark, tmp_path):
     from spark_sorted_spark.functions.similarity import (
         ANN_NLIST,
         ann_ivf_join_indexed,
-        build_ann_ivf_index,
         cosine_join,
     )
     from spark_sorted_spark.sources.tpch import load_table
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     base = emb.filter(F.col("vec_id") != 0)
-    idx = str(tmp_path / "ivf")
-    build_ann_ivf_index(base, idx)
+    idx = ro_store("ivf")
     qs = {
         r.vec_id: [float(x) for x in r.embedding]
         for r in emb.filter(F.col("vec_id").isin([3, 7, 11])).collect()
@@ -829,7 +785,7 @@ def test_ann_ivf_join_indexed_full_probe_equals_exact(spark, tmp_path):
         )
 
 
-def test_ann_pq_join_indexed_matches_per_query_probe(spark, tmp_path):
+def test_ann_pq_join_indexed_matches_per_query_probe(spark, ro_store):
     """Batch flat-PQ ADC == running ann_pq_topk_indexed per query
     (identical table folds, identical tiebreaks); rerank >= |corpus|
     == cosine_join bitwise; string ids; validation."""
@@ -838,15 +794,13 @@ def test_ann_pq_join_indexed_matches_per_query_probe(spark, tmp_path):
     from spark_sorted_spark.functions.similarity import (
         ann_pq_join_indexed,
         ann_pq_topk_indexed,
-        build_ann_pq_index,
         cosine_join,
     )
     from spark_sorted_spark.sources.tpch import load_table
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     base = emb.filter(F.col("vec_id") != 0)
-    idx = str(tmp_path / "pq")
-    build_ann_pq_index(base, idx)
+    idx = ro_store("pq")
     qs = {
         r.vec_id: [float(x) for x in r.embedding]
         for r in emb.filter(F.col("vec_id").isin([3, 7, 11])).collect()
@@ -899,7 +853,7 @@ def test_ann_pq_join_indexed_matches_per_query_probe(spark, tmp_path):
         ann_pq_join_indexed(spark, idx, bad, k=3)
 
 
-def test_ann_ivfpq_join_indexed_matches_per_query_probe(spark, tmp_path):
+def test_ann_ivfpq_join_indexed_matches_per_query_probe(spark, ro_store):
     """Batch IVF-PQ residual ADC == running ann_ivfpq_topk_indexed per
     query at serving nprobe; full probe + corpus-wide rerank ==
     cosine_join bitwise; string ids; empty batch raises."""
@@ -909,15 +863,13 @@ def test_ann_ivfpq_join_indexed_matches_per_query_probe(spark, tmp_path):
         ANN_NLIST,
         ann_ivfpq_join_indexed,
         ann_ivfpq_topk_indexed,
-        build_ann_ivfpq_index,
         cosine_join,
     )
     from spark_sorted_spark.sources.tpch import load_table
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     base = emb.filter(F.col("vec_id") != 0)
-    idx = str(tmp_path / "ivfpq")
-    build_ann_ivfpq_index(base, idx)
+    idx = ro_store("ivfpq")
     qs = {
         r.vec_id: [float(x) for x in r.embedding]
         for r in emb.filter(F.col("vec_id").isin([3, 7, 11])).collect()
@@ -1006,27 +958,20 @@ def test_hybrid_join_matches_per_query_hybrid_topk(spark):
     assert len(got) == n
 
 
-def test_hybrid_join_indexed_full_probe_equals_scan(spark, tmp_path):
+def test_hybrid_join_indexed_full_probe_equals_scan(spark, ro_store):
     """hybrid_join_indexed with nprobe >= nlist is BITWISE the
     scan-form hybrid_join (both indexes are layouts at full probe)."""
     from spark_sorted_spark.functions.retrieval import (
-        build_bm25_index,
         hybrid_join,
         hybrid_join_indexed,
     )
-    from spark_sorted_spark.functions.similarity import (
-        ANN_NLIST,
-        build_ann_ivf_index,
-    )
+    from spark_sorted_spark.functions.similarity import ANN_NLIST
     from spark_sorted_spark.sources.tpch import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     base = emb.filter(F.col("vec_id") != 0)
-    bm25 = str(tmp_path / "bm25")
-    ivf = str(tmp_path / "ivf")
-    build_bm25_index(docs, bm25)
-    build_ann_ivf_index(base, ivf)
+    bm25, ivf = ro_store("bm25"), ro_store("ivf")
     toks = F.split(F.trim(F.col("text")), r"\s+")
     qdf = (
         docs.filter(F.col("doc_id").isin([3, 7, 11]))
@@ -1066,7 +1011,7 @@ def test_hybrid_join_indexed_full_probe_equals_scan(spark, tmp_path):
             assert r.rank_lex == lex_want[(r.query_id, r.doc_id)]
 
 
-def test_hybrid_indexed_ivfpq_dense_arm(spark, tmp_path):
+def test_hybrid_indexed_ivfpq_dense_arm(spark, ro_store):
     """dense="ivfpq": full probe + corpus-wide exact rerank makes both
     hybrid indexed forms BITWISE the scan forms (the dense ranks
     collapse to exact cosine); serving settings still return k rows;
@@ -1074,25 +1019,18 @@ def test_hybrid_indexed_ivfpq_dense_arm(spark, tmp_path):
     import pytest as _pytest
 
     from spark_sorted_spark.functions.retrieval import (
-        build_bm25_index,
         hybrid_join,
         hybrid_join_indexed,
         hybrid_topk,
         hybrid_topk_indexed,
     )
-    from spark_sorted_spark.functions.similarity import (
-        ANN_NLIST,
-        build_ann_ivfpq_index,
-    )
+    from spark_sorted_spark.functions.similarity import ANN_NLIST
     from spark_sorted_spark.sources.tpch import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     base = emb.filter(F.col("vec_id") != 0)
-    bm25 = str(tmp_path / "bm25")
-    ivfpq = str(tmp_path / "ivfpq")
-    build_bm25_index(docs, bm25)
-    build_ann_ivfpq_index(base, ivfpq)
+    bm25, ivfpq = ro_store("bm25"), ro_store("ivfpq")
     toks = F.split(F.trim(F.col("text")), r"\s+")
     qdf = (
         docs.filter(F.col("doc_id").isin([3, 7]))
@@ -1150,7 +1088,7 @@ def test_hybrid_indexed_ivfpq_dense_arm(spark, tmp_path):
         )
 
 
-def test_filtered_bm25_scan_indexed_and_append(spark, tmp_path):
+def test_filtered_bm25_scan_indexed_and_append(spark, tmp_path, ro_store):
     """Filtered lexical retrieval: where restricts CANDIDATES while
     idf/avgdl stay corpus-wide — the scan form's filtered top-k must
     equal the unfiltered scored relation restricted to qualifying
@@ -1223,7 +1161,7 @@ def test_filtered_bm25_scan_indexed_and_append(spark, tmp_path):
     bgot = sorted(
         (r.query_id, r.doc_id, r.score, r.n_terms_matched, r.rank)
         for r in bm25_join_indexed(
-            spark, _full_bm25(spark, docs, tmp_path), qdf, k=5,
+            spark, ro_store("bm25_source"), qdf, k=5,
             where=F.col("source") == "src0",
         ).collect()
     )
@@ -1239,23 +1177,11 @@ def test_filtered_bm25_scan_indexed_and_append(spark, tmp_path):
         build_bm25_index(docs, str(tmp_path / "bad"), extra_cols=("tok",))
 
 
-def _full_bm25(spark, docs, tmp_path):
-    path = str(tmp_path / "bm25_meta_full")
-    import os
-
-    if not os.path.exists(path):
-        from spark_sorted_spark.functions.retrieval import build_bm25_index
-
-        build_bm25_index(docs, path, extra_cols=("source",))
-    return path
-
-
-def test_filtered_hybrid_indexed_equals_scan(spark, tmp_path):
+def test_filtered_hybrid_indexed_equals_scan(spark, tmp_path, ro_store):
     """Filtered hybrid: lex_where/dense_where restrict each arm; at
     full probe the indexed form is bitwise the scan form under the
     same predicates."""
     from spark_sorted_spark.functions.retrieval import (
-        build_bm25_index,
         hybrid_join,
         hybrid_join_indexed,
     )
@@ -1268,9 +1194,8 @@ def test_filtered_hybrid_indexed_equals_scan(spark, tmp_path):
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     base = emb.filter(F.col("vec_id") != 0)
-    bm25 = str(tmp_path / "bm25")
+    bm25 = ro_store("bm25_source")
     ivf = str(tmp_path / "ivf")
-    build_bm25_index(docs, bm25, extra_cols=("source",))
     build_ann_ivf_index(base, ivf, extra_cols=("label",))
     toks = F.split(F.trim(F.col("text")), r"\s+")
     qdf = (
@@ -1972,31 +1897,24 @@ def test_batch_indexed_prf_rm3_equal_loops(spark, tmp_path):
         )
 
 
-def test_hybrid_indexed_ivfsq8_dense_arm(spark, tmp_path):
+def test_hybrid_indexed_ivfsq8_dense_arm(spark, ro_store):
     """dense="ivfsq8": full probe + corpus-wide exact rerank makes
     both hybrid indexed forms BITWISE the scan forms (the rerank tail
     reads the TRUE embeddings, so reconstructed ranks collapse to
     exact cosine); serving settings still return k rows per query."""
     from spark_sorted_spark.functions.retrieval import (
-        build_bm25_index,
         hybrid_join,
         hybrid_join_indexed,
         hybrid_topk,
         hybrid_topk_indexed,
     )
-    from spark_sorted_spark.functions.similarity import (
-        ANN_NLIST,
-        build_ann_ivfsq8_index,
-    )
+    from spark_sorted_spark.functions.similarity import ANN_NLIST
     from spark_sorted_spark.sources.tpch import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     base = emb.filter(F.col("vec_id") != 0)
-    bm25 = str(tmp_path / "bm25")
-    sq8 = str(tmp_path / "sq8")
-    build_bm25_index(docs, bm25)
-    build_ann_ivfsq8_index(base, sq8)
+    bm25, sq8 = ro_store("bm25"), ro_store("sq8")
     toks = F.split(F.trim(F.col("text")), r"\s+")
     qdf = (
         docs.filter(F.col("doc_id").isin([3, 7]))
@@ -2050,7 +1968,7 @@ def test_hybrid_indexed_ivfsq8_dense_arm(spark, tmp_path):
     assert {r.query_id for r in part} == {3, 7}
 
 
-def test_ann_ivfsq8_batch_rerank_matches_cosine_join(spark, tmp_path):
+def test_ann_ivfsq8_batch_rerank_matches_cosine_join(spark, ro_store):
     """The batch SQ8 probe's rerank tail at full probe equals exact
     cosine_join bitwise (the same guarantee the IVF-PQ batch rerank
     pins) — and rerank < k raises."""
@@ -2059,15 +1977,13 @@ def test_ann_ivfsq8_batch_rerank_matches_cosine_join(spark, tmp_path):
     from spark_sorted_spark.functions.similarity import (
         ANN_NLIST,
         ann_ivfsq8_join_indexed,
-        build_ann_ivfsq8_index,
         cosine_join,
     )
     from spark_sorted_spark.sources.tpch import load_table
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
     base = emb.filter(F.col("vec_id") != 0)
-    p = str(tmp_path / "sq8")
-    build_ann_ivfsq8_index(base, p)
+    p = ro_store("sq8")
     qdf = emb.filter(F.col("vec_id").isin([0, 5])).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("query_vec"),

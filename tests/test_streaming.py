@@ -1319,7 +1319,7 @@ def test_truncated_ingest_marker_fails_friendly_not_json_error(
     assert marker["base"] == 1
 
 
-def test_stream_index_embeddings_lifecycle(spark, sf_dir, tmp_path):
+def test_stream_index_embeddings_lifecycle(spark, sf_dir, tmp_path, ro_store):
     """Streaming ANN index maintenance: two drains over a growing
     vector stream must leave an index whose bucket assignment (and
     probe answers) equal a one-shot batch build over the same
@@ -1332,7 +1332,6 @@ def test_stream_index_embeddings_lifecycle(spark, sf_dir, tmp_path):
 
     from spark_sorted_spark.functions.similarity import (
         ann_lsh_topk_indexed,
-        build_ann_lsh_index,
     )
     from spark_sorted_spark.streaming import stream_index_embeddings, stream_table
 
@@ -1362,8 +1361,7 @@ def test_stream_index_embeddings_lifecycle(spark, sf_dir, tmp_path):
     arrive(b2, "b2")
     drain(ckpt)
 
-    built = str(tmp_path / "batch_idx")
-    build_ann_lsh_index(corpus, built)
+    built = ro_store("lsh")
     got_assign = {
         (r.vec_id, r.bucket) for r in spark.read.parquet(idx).collect()
     }
