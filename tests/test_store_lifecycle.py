@@ -186,8 +186,8 @@ def test_store_survives_failed_rebuild_and_compaction(
     assert read() == want
     assert (resolve_root(spark, path) == path) == (layout == "rename")
     if layout == "rename":
-        # the whole-store swap must carry the marker the old
-        # per-subdirectory swaps left in place
+        # the rename publish replaces the directory whole, so the
+        # compaction must carry the marker into the staged store
         compact()
         assert _read_text(spark, f"{path}{marker_path}") == MARKER
         assert not os.path.exists(f"{path}.building")
