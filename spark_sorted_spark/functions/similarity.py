@@ -472,39 +472,39 @@ def build_ann_lsh_index(
     from .dedup import spread_small_input
 
     spark = df.sparkSession
-    _check_corpus_dim(df, vec_col, dim, "build_ann_lsh_index")
-    # n_planes=None derives the depth from the corpus count (the
-    # auto_planes rule — a fixed depth is the measured quadratic at
-    # 10x); the persisted _lsh_meta then makes the choice sticky for
-    # every append/probe. The default stays the shared constant so the
-    # oracle-gated queries keep a bucket space DuckDB can replay from
-    # the same constant.
-    #
-    # target_bucket defaults to 128 here — FOUR TIMES the multi-table
-    # constructions' 32 — because this store is SINGLE-table: with no
-    # OR-construction, every extra plane multiplies per-pair recall at
-    # a given cosine by p_plane < 1 uncompensated, and the per-vector
-    # candidate budget of the multi-table forms (n_tables x 32 = 256)
-    # affords one table a fatter bucket. Adjudicated round 12 (PARITY
-    # "b27 auto-depth"): at 20k vectors the old target-32 auto depth
-    # (9) was SLOWER than depth 8 (7.93 vs 7.17 s min-of-3) AND found
-    # 37% fewer pairs (888 vs 1405) — the cost at this corpus size is
-    # 2^planes directory/file bookkeeping, not candidate volume; the
-    # target-128 depth (7) measured 4.42 s with 2165 pairs. Depth
-    # still grows with log2(n), so the verify stays linear-in-batch at
-    # the 100 TB design point.
-    if n_planes is None:
-        n_planes = auto_planes(df.count(), target_bucket)
-    df = spread_small_input(df)
-    planes = [_hyperplane(p, dim) for p in range(n_planes)]
-    assigned = df.select(
-        F.col(id_col),
-        _dim_guard_col(F.col(vec_col), dim, "build_ann_lsh_index").alias(
-            vec_col
-        ),
-        _sign_bucket_col(F.col(vec_col), planes).alias("bucket"),
-    )
     with staged_store(spark, path, commit) as staged:
+        _check_corpus_dim(df, vec_col, dim, "build_ann_lsh_index")
+        # n_planes=None derives the depth from the corpus count (the
+        # auto_planes rule — a fixed depth is the measured quadratic at
+        # 10x); the persisted _lsh_meta then makes the choice sticky for
+        # every append/probe. The default stays the shared constant so the
+        # oracle-gated queries keep a bucket space DuckDB can replay from
+        # the same constant.
+        #
+        # target_bucket defaults to 128 here — FOUR TIMES the multi-table
+        # constructions' 32 — because this store is SINGLE-table: with no
+        # OR-construction, every extra plane multiplies per-pair recall at
+        # a given cosine by p_plane < 1 uncompensated, and the per-vector
+        # candidate budget of the multi-table forms (n_tables x 32 = 256)
+        # affords one table a fatter bucket. Adjudicated round 12 (PARITY
+        # "b27 auto-depth"): at 20k vectors the old target-32 auto depth
+        # (9) was SLOWER than depth 8 (7.93 vs 7.17 s min-of-3) AND found
+        # 37% fewer pairs (888 vs 1405) — the cost at this corpus size is
+        # 2^planes directory/file bookkeeping, not candidate volume; the
+        # target-128 depth (7) measured 4.42 s with 2165 pairs. Depth
+        # still grows with log2(n), so the verify stays linear-in-batch at
+        # the 100 TB design point.
+        if n_planes is None:
+            n_planes = auto_planes(df.count(), target_bucket)
+        df = spread_small_input(df)
+        planes = [_hyperplane(p, dim) for p in range(n_planes)]
+        assigned = df.select(
+            F.col(id_col),
+            _dim_guard_col(F.col(vec_col), dim, "build_ann_lsh_index").alias(
+                vec_col
+            ),
+            _sign_bucket_col(F.col(vec_col), planes).alias("bucket"),
+        )
         _write_base(assigned, staged, "bucket")
         _write_meta(
             spark, staged, "_lsh_meta",
@@ -912,45 +912,45 @@ def build_ann_ivf_index(
     if lloyd_iters < 0:
         raise ValueError(f"lloyd_iters must be >= 0, got {lloyd_iters}")
     _check_extra_cols(extra_cols, id_col, vec_col)
-    if nlist is None:
-        # auto-size cells from the corpus count (ceil(n/target_cell) —
-        # the semantic_dedup rule; PARITY scale rows: fixed cells make
-        # probe candidate sets grow linearly with the corpus, auto
-        # keeps expected occupancy ~target_cell). The DEFAULT stays
-        # the fixed constant so gated constructions remain
-        # oracle-replayable; pass None at scale.
-        nlist = max(1, -(-df.count() // int(target_cell)))
-    cents = _ivf_centroids(df, nlist, vec_col, id_col)
-    if lloyd_iters and cents:
-        cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
-    if cents:
-        # the write-path guard below adopts the SEEDED CENTROID's
-        # length as the declared dim; if the seeded pick sampled a
-        # minority wrong-length row of a mixed-dim corpus, that guard
-        # would fire on the MAJORITY rows with a misleading "declared
-        # dim" naming the minority length (ADVICE r14). Cross-check
-        # one corpus row against the centroid dim up front so the
-        # loud failure names both lengths (cosmetic — the build fails
-        # loudly either way).
-        _check_corpus_dim(
-            df, vec_col, len(cents[0][1]), "build_ann_ivf_index"
-        )
     spark = df.sparkSession
-    df = spread_small_input(df)
-    vcol = (
-        _dim_guard_col(
-            F.col(vec_col), len(cents[0][1]), "build_ann_ivf_index"
-        ).alias(vec_col)
-        if cents
-        else F.col(vec_col)
-    )
-    celled = df.select(
-        F.col(id_col),
-        vcol,
-        _ivf_cell_col(F.col(vec_col), cents).alias("cell"),
-        *[F.col(c) for c in extra_cols],
-    )
     with staged_store(spark, path, commit) as staged:
+        if nlist is None:
+            # auto-size cells from the corpus count (ceil(n/target_cell) —
+            # the semantic_dedup rule; PARITY scale rows: fixed cells make
+            # probe candidate sets grow linearly with the corpus, auto
+            # keeps expected occupancy ~target_cell). The DEFAULT stays
+            # the fixed constant so gated constructions remain
+            # oracle-replayable; pass None at scale.
+            nlist = max(1, -(-df.count() // int(target_cell)))
+        cents = _ivf_centroids(df, nlist, vec_col, id_col)
+        if lloyd_iters and cents:
+            cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
+        if cents:
+            # the write-path guard below adopts the SEEDED CENTROID's
+            # length as the declared dim; if the seeded pick sampled a
+            # minority wrong-length row of a mixed-dim corpus, that guard
+            # would fire on the MAJORITY rows with a misleading "declared
+            # dim" naming the minority length (ADVICE r14). Cross-check
+            # one corpus row against the centroid dim up front so the
+            # loud failure names both lengths (cosmetic — the build fails
+            # loudly either way).
+            _check_corpus_dim(
+                df, vec_col, len(cents[0][1]), "build_ann_ivf_index"
+            )
+        df = spread_small_input(df)
+        vcol = (
+            _dim_guard_col(
+                F.col(vec_col), len(cents[0][1]), "build_ann_ivf_index"
+            ).alias(vec_col)
+            if cents
+            else F.col(vec_col)
+        )
+        celled = df.select(
+            F.col(id_col),
+            vcol,
+            _ivf_cell_col(F.col(vec_col), cents).alias("cell"),
+            *[F.col(c) for c in extra_cols],
+        )
         _write_base(celled, staged, "cell")
         _write_centroids(spark, staged, cents)
 
@@ -1412,22 +1412,22 @@ def build_ann_pq_index(
     from .dedup import spread_small_input
 
     _check_extra_cols(extra_cols, id_col, vec_col)
-    _check_corpus_dim(df, vec_col, dim, "build_ann_pq_index")
-    cbs = pq_codebooks(df, m, ksub, dim, vec_col, id_col, lloyd_iters)
     spark = df.sparkSession
-    df = spread_small_input(df)
-    coded = df.select(
-        F.col(id_col),
-        _pq_code_col(F.col(vec_col), cbs).alias("code"),
-        _dim_guard_col(F.col(vec_col), dim, "build_ann_pq_index").alias(
-            vec_col
-        ),
-        *[F.col(c) for c in extra_cols],
-    )
-    # batch-partitioned like the LSH/IVF indexes: the build writes the
-    # base partition; append_to_ann_pq_index adds later batches in
-    # their own idempotent partitions (frozen codebooks)
     with staged_store(spark, path, commit) as staged:
+        _check_corpus_dim(df, vec_col, dim, "build_ann_pq_index")
+        cbs = pq_codebooks(df, m, ksub, dim, vec_col, id_col, lloyd_iters)
+        df = spread_small_input(df)
+        coded = df.select(
+            F.col(id_col),
+            _pq_code_col(F.col(vec_col), cbs).alias("code"),
+            _dim_guard_col(F.col(vec_col), dim, "build_ann_pq_index").alias(
+                vec_col
+            ),
+            *[F.col(c) for c in extra_cols],
+        )
+        # batch-partitioned like the LSH/IVF indexes: the build writes the
+        # base partition; append_to_ann_pq_index adds later batches in
+        # their own idempotent partitions (frozen codebooks)
         _write_base(coded, f"{staged}/codes", None)
         _write_codebooks(spark, staged, cbs)
         _write_meta(
@@ -1518,43 +1518,43 @@ def build_ann_ivfpq_index(
     from .dedup import spread_small_input
 
     _check_extra_cols(extra_cols, id_col, vec_col)
-    _check_corpus_dim(df, vec_col, dim, "build_ann_ivfpq_index")
-    if nlist is None:
-        # auto-size cells (see build_ann_ivf_index — same rule, same
-        # fixed-default-for-oracles / None-at-scale contract)
-        nlist = max(1, -(-df.count() // int(target_cell)))
-    cents = _ivf_centroids(df, nlist, vec_col, id_col)
-    if lloyd_iters and cents:
-        cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
-    cents_lit = _planes_lit([c for _cid, c in cents])
-    vd = F.col(vec_col).cast("array<double>")
-    cell = _ivf_cell_col(F.col(vec_col), cents)
-    resid = F.zip_with(
-        vd, F.element_at(cents_lit, cell + 1), lambda a, b: a - b
-    )
     spark = df.sparkSession
-    df = spread_small_input(df)
-    rdf = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        cell.alias("cell"),
-        resid.alias("__resid"),
-        *[F.col(c) for c in extra_cols],
-    )
-    cbs = pq_codebooks(
-        rdf, m, ksub, dim, vec_col="__resid", id_col=id_col,
-        lloyd_iters=pq_lloyd_iters,
-    )
-    coded = rdf.select(
-        F.col(id_col),
-        F.col("cell"),
-        _pq_code_col(F.col("__resid"), cbs).alias("code"),
-        _dim_guard_col(F.col(vec_col), dim, "build_ann_ivfpq_index").alias(
-            vec_col
-        ),
-        *[F.col(c) for c in extra_cols],
-    )
     with staged_store(spark, path, commit) as staged:
+        _check_corpus_dim(df, vec_col, dim, "build_ann_ivfpq_index")
+        if nlist is None:
+            # auto-size cells (see build_ann_ivf_index — same rule, same
+            # fixed-default-for-oracles / None-at-scale contract)
+            nlist = max(1, -(-df.count() // int(target_cell)))
+        cents = _ivf_centroids(df, nlist, vec_col, id_col)
+        if lloyd_iters and cents:
+            cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
+        cents_lit = _planes_lit([c for _cid, c in cents])
+        vd = F.col(vec_col).cast("array<double>")
+        cell = _ivf_cell_col(F.col(vec_col), cents)
+        resid = F.zip_with(
+            vd, F.element_at(cents_lit, cell + 1), lambda a, b: a - b
+        )
+        df = spread_small_input(df)
+        rdf = df.select(
+            F.col(id_col),
+            F.col(vec_col),
+            cell.alias("cell"),
+            resid.alias("__resid"),
+            *[F.col(c) for c in extra_cols],
+        )
+        cbs = pq_codebooks(
+            rdf, m, ksub, dim, vec_col="__resid", id_col=id_col,
+            lloyd_iters=pq_lloyd_iters,
+        )
+        coded = rdf.select(
+            F.col(id_col),
+            F.col("cell"),
+            _pq_code_col(F.col("__resid"), cbs).alias("code"),
+            _dim_guard_col(F.col(vec_col), dim, "build_ann_ivfpq_index").alias(
+                vec_col
+            ),
+            *[F.col(c) for c in extra_cols],
+        )
         _write_base(coded, staged, "cell")
         _write_centroids(spark, staged, cents)
         _write_codebooks(spark, staged, cbs)
@@ -3530,20 +3530,20 @@ def build_ann_ivfsq8_index(
             f"extra_cols {bad_sq8} collide with the IVF-SQ8 layout "
             f"columns {_SQ8_RESERVED_COLS}"
         )
-    _check_corpus_dim(df, vec_col, dim, "build_ann_ivfsq8_index")
-    if nlist is None:
-        # auto-size cells (see build_ann_ivf_index — same rule, same
-        # fixed-default-for-oracles / None-at-scale contract)
-        nlist = max(1, -(-df.count() // int(target_cell)))
-    cents = _ivf_centroids(df, nlist, vec_col, id_col)
-    if lloyd_iters and cents:
-        cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
     spark = df.sparkSession
-    celled = _sq8_rows(
-        spread_small_input(df), cents, vec_col, id_col, extra_cols,
-        dim=dim, caller="build_ann_ivfsq8_index",
-    )
     with staged_store(spark, path, commit) as staged:
+        _check_corpus_dim(df, vec_col, dim, "build_ann_ivfsq8_index")
+        if nlist is None:
+            # auto-size cells (see build_ann_ivf_index — same rule, same
+            # fixed-default-for-oracles / None-at-scale contract)
+            nlist = max(1, -(-df.count() // int(target_cell)))
+        cents = _ivf_centroids(df, nlist, vec_col, id_col)
+        if lloyd_iters and cents:
+            cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
+        celled = _sq8_rows(
+            spread_small_input(df), cents, vec_col, id_col, extra_cols,
+            dim=dim, caller="build_ann_ivfsq8_index",
+        )
         _write_base(celled, staged, "cell")
         _write_centroids(spark, staged, cents)
         _write_meta(

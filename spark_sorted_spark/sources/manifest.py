@@ -69,6 +69,11 @@ __all__ = [
 
 _POINTER = "_current"
 _MARKER = "_ingest_stream"
+# the data tables a store nests below its root (BM25, band store, gram
+# store, flat PQ); every other store keeps its partitions at the root
+_TABLE_DIRS = frozenset(
+    ("postings", "dft", "_bm25_stats", "bands", "counts", "grams", "codes")
+)
 
 
 def _fs(spark, path: str):
@@ -238,9 +243,12 @@ def store_layout(spark, path: str) -> tuple[str, str]:
 
 def _check_store_dir(spark, path: str) -> None:
     """Refuse to replace a directory that is not a store: ``path`` must
-    be missing or empty, or it or a direct subdirectory must hold an
-    ``ingest_batch_id=*`` partition, the ``_current`` pointer or the
-    ``_ingest_stream`` marker."""
+    be missing or empty, or hold an ``ingest_batch_id=*`` partition,
+    the ``_current`` pointer or the ``_ingest_stream`` marker — at its
+    root, or inside one of the data tables the layouts nest
+    (:data:`_TABLE_DIRS`). Any other subdirectory does not count: the
+    parent of a store (``root/{corpus,store,...}``) is not a store,
+    and replacing it would take its siblings with it."""
     names = _ls(spark, path)
 
     def marked(entries) -> bool:
@@ -251,12 +259,14 @@ def _check_store_dir(spark, path: str) -> None:
 
     if not names or marked(names):
         return
-    if any(marked(_ls(spark, f"{path}/{n}")) for n in names):
+    tables = [n for n in names if n in _TABLE_DIRS]
+    if any(marked(_ls(spark, f"{path}/{n}")) for n in tables):
         return
     raise ValueError(
         f"{path!r} is not empty and holds no store (no ingest_batch_id=* "
-        "partition, _current pointer or _ingest_stream marker in it or a "
-        "direct subdirectory); refusing to replace it — check the path"
+        "partition, _current pointer or _ingest_stream marker in it or in "
+        f"one of its {'/'.join(sorted(_TABLE_DIRS))} tables); refusing to "
+        "replace it — check the path"
     )
 
 
@@ -272,6 +282,7 @@ def staged_store(spark, path: str, commit: str):
     leaves the live store untouched."""
     if commit not in ("rename", "manifest"):
         raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
+    path = path.rstrip("/") or path  # '/x/idx/' must stage beside, not in, it
     _check_store_dir(spark, path)
     if commit == "manifest":
         staged = begin_generation(spark, path)

@@ -582,18 +582,6 @@ def _require_table(name: str, msg: str):
     return precheck
 
 
-def _ann_drain(stream_vecs, index_path, checkpoint_dir, append, caller,
-               vec_col, id_col, timeout_sec, allow_restart, precheck):
-    _drain_into_store(
-        stream_vecs, index_path, checkpoint_dir,
-        lambda batch_df, path, part: append(
-            batch_df, path, batch_id=part, vec_col=vec_col, id_col=id_col
-        ),
-        caller=caller, timeout_sec=timeout_sec,
-        allow_restart=allow_restart, precheck=precheck,
-    )
-
-
 def stream_maintain_ann_ivfpq_index(
     stream_vecs: DataFrame,
     index_path: str,
@@ -623,11 +611,14 @@ def stream_maintain_ann_ivfpq_index(
     composite layout's documented trade-off)."""
     from ..functions.similarity import append_to_ann_ivfpq_index
 
-    _ann_drain(
-        stream_vecs, index_path, checkpoint_dir, append_to_ann_ivfpq_index,
-        "stream_maintain_ann_ivfpq_index", vec_col, id_col, timeout_sec,
-        allow_restart,
-        _require_table(
+    _drain_into_store(
+        stream_vecs, index_path, checkpoint_dir,
+        lambda batch_df, path, part: append_to_ann_ivfpq_index(
+            batch_df, path, batch_id=part, vec_col=vec_col, id_col=id_col
+        ),
+        caller="stream_maintain_ann_ivfpq_index", timeout_sec=timeout_sec,
+        allow_restart=allow_restart,
+        precheck=_require_table(
             "_pq_meta",
             "no IVF-PQ index at {path!r}: build it first with "
             "build_ann_ivfpq_index (the stream cannot train the "
@@ -687,10 +678,13 @@ def stream_maintain_ann_ivf_index(
             )
         need_centroids(spark, path)
 
-    _ann_drain(
-        stream_vecs, index_path, checkpoint_dir, append_to_ann_ivf_index,
-        "stream_maintain_ann_ivf_index", vec_col, id_col, timeout_sec,
-        allow_restart, precheck,
+    _drain_into_store(
+        stream_vecs, index_path, checkpoint_dir,
+        lambda batch_df, path, part: append_to_ann_ivf_index(
+            batch_df, path, batch_id=part, vec_col=vec_col, id_col=id_col
+        ),
+        caller="stream_maintain_ann_ivf_index", timeout_sec=timeout_sec,
+        allow_restart=allow_restart, precheck=precheck,
     )
 
 
@@ -736,8 +730,11 @@ def stream_maintain_ann_ivfsq8_index(
             )
         need_centroids(spark, path)
 
-    _ann_drain(
-        stream_vecs, index_path, checkpoint_dir, append_to_ann_ivfsq8_index,
-        "stream_maintain_ann_ivfsq8_index", vec_col, id_col, timeout_sec,
-        allow_restart, precheck,
+    _drain_into_store(
+        stream_vecs, index_path, checkpoint_dir,
+        lambda batch_df, path, part: append_to_ann_ivfsq8_index(
+            batch_df, path, batch_id=part, vec_col=vec_col, id_col=id_col
+        ),
+        caller="stream_maintain_ann_ivfsq8_index", timeout_sec=timeout_sec,
+        allow_restart=allow_restart, precheck=precheck,
     )

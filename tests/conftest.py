@@ -9,12 +9,35 @@ def spark():
     # small local master, few shuffle partitions so multi-partition
     # invariants (key disjointness) are actually exercised.
     s = get_spark("spark_sorted_spark-tests", master="local[4]", shuffle_partitions=4)
+    # list partitioned directories on the driver: past 32 subdirectories
+    # (an LSH index has one per bucket) Spark otherwise lists them with a
+    # distributed job of one task per directory on every read, which on
+    # these tiny stores costs more than the work under test
+    s.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
     yield s
 
 
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def query_schema(spark, sf_dir):
+    """``query_schema(name)``: the schema of registered query ``name``
+    over ``sf_dir``, constructed once per session — the schema audits
+    (gate shape, oracle types) read nothing else, so they share one
+    construction of each query."""
+    from spark_sorted_spark import queries as q
+
+    schemas = {}
+
+    def get(name: str):
+        if name not in schemas:
+            schemas[name] = q.QUERIES[name](spark, sf_dir).schema
+        return schemas[name]
+
+    return get
 
 
 @pytest.fixture(scope="session")
@@ -39,6 +62,12 @@ def ro_store(spark, sf_dir, tmp_path_factory):
     docs = load_table(spark, "documents", sf_dir)
     vecs = load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") != 0)
     vecs = vecs.select("vec_id", "embedding")
+    # the odd half of the corpus: the base the append/compact tests
+    # grow with the even half (copied per test with ``store_copy``)
+    half = vecs.filter(F.col("vec_id") % 2 == 1)
+    half_docs = docs.filter(F.col("doc_id") % 2 == 1)
+    # and the base third the streaming-maintainer tests drain into
+    third = vecs.filter(F.col("vec_id") % 3 == 0)
     builders = {
         "bm25": lambda p: build_bm25_index(docs, p),
         "bm25_source": lambda p: build_bm25_index(docs, p, extra_cols=("source",)),
@@ -50,6 +79,20 @@ def ro_store(spark, sf_dir, tmp_path_factory):
         "bands": lambda p: build_minhash_band_store(
             docs.filter(F.col("doc_id") % 4 != 0), p
         ),
+        "bands_empty": lambda p: build_minhash_band_store(
+            spark.createDataFrame([], docs.schema), p
+        ),
+        "bm25_half": lambda p: build_bm25_index(half_docs, p),
+        "lsh_half": lambda p: build_ann_lsh_index(half, p),
+        "ivf_half": lambda p: build_ann_ivf_index(half, p),
+        "pq_half": lambda p: build_ann_pq_index(half, p),
+        "ivfpq_half": lambda p: build_ann_ivfpq_index(half, p),
+        "ivfpq_half_manifest": lambda p: build_ann_ivfpq_index(
+            half, p, commit="manifest"
+        ),
+        "sq8_half": lambda p: build_ann_ivfsq8_index(half, p),
+        "ivf_third": lambda p: build_ann_ivf_index(third, p),
+        "ivfpq_third": lambda p: build_ann_ivfpq_index(third, p),
     }
     root = tmp_path_factory.mktemp("ro_stores")
     built = {}
@@ -61,6 +104,22 @@ def ro_store(spark, sf_dir, tmp_path_factory):
         return built[kind]
 
     return get
+
+
+@pytest.fixture
+def store_copy(ro_store, tmp_path):
+    """``store_copy(kind, dst)``: a private byte copy of the shared
+    ``ro_store(kind)`` build at ``dst`` (relative to ``tmp_path``), for
+    a test that appends to, compacts or rebuilds its store — a copy,
+    not a second build of the same store."""
+    import shutil
+
+    def copy(kind: str, dst) -> str:
+        dst = str(tmp_path / dst)
+        shutil.copytree(ro_store(kind), dst)
+        return dst
+
+    return copy
 
 
 def plan_of(df, mode: str = "formatted") -> str:

@@ -376,7 +376,7 @@ def test_ann_lsh_persisted_index_pruned_probe(spark, emb, ro_store):
     assert got == [(r.vec_id, r.rank) for r in exact_form.collect()]
 
 
-def test_ann_lsh_index_incremental_append(spark, emb, tmp_path, ro_store):
+def test_ann_lsh_index_incremental_append(spark, emb, ro_store, store_copy):
     # growing-corpus maintenance: build over half, append the rest —
     # probes must equal the full build; replaying the same batch_id
     # must be idempotent (a duplicated index row would surface as a
@@ -396,8 +396,7 @@ def test_ann_lsh_index_incremental_append(spark, emb, tmp_path, ro_store):
     full = ro_store("lsh")
     want = [(r.vec_id, r.rank) for r in ann_lsh_topk_indexed(spark, full, qvec, k=5).collect()]
 
-    inc = str(tmp_path / "inc_idx")
-    build_ann_lsh_index(half_a, inc)
+    inc = store_copy("lsh_half", "inc_idx")
     append_to_ann_lsh_index(half_b, inc, batch_id=0)
     probe = ann_lsh_topk_indexed(spark, inc, qvec, k=5)
     plan = plan_of(probe, "formatted")
@@ -419,7 +418,7 @@ def test_ann_lsh_index_incremental_append(spark, emb, tmp_path, ro_store):
     assert spark.read.parquet(inc).count() == corpus.count()
 
 
-def test_ann_ivf_index_incremental_append(spark, emb, tmp_path):
+def test_ann_ivf_index_incremental_append(spark, emb, tmp_path, store_copy):
     # IVF twin of the LSH append: new batches assign to the PERSISTED
     # centroids, so the incremental index equals the full build only
     # when both use the same centroid set — build over half, append
@@ -431,7 +430,6 @@ def test_ann_ivf_index_incremental_append(spark, emb, tmp_path):
     from spark_sorted_spark.functions.similarity import (
         ann_ivf_topk_indexed,
         append_to_ann_ivf_index,
-        build_ann_ivf_index,
     )
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
@@ -439,8 +437,7 @@ def test_ann_ivf_index_incremental_append(spark, emb, tmp_path):
     half_a = corpus.filter(F.col("vec_id") % 2 == 1)
     half_b = corpus.filter(F.col("vec_id") % 2 == 0)
 
-    inc = str(tmp_path / "ivf_inc")
-    build_ann_ivf_index(half_a, inc)
+    inc = store_copy("ivf_half", "ivf_inc")
     append_to_ann_ivf_index(half_b, inc, batch_id=0)
     # replay idempotence
     append_to_ann_ivf_index(half_b, inc, batch_id=0)
@@ -1569,7 +1566,7 @@ def test_lsh_index_auto_depth_build(spark, emb, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_ann_index_rebuild_from_own_read_survives(spark, emb, tmp_path):
+def test_ann_index_rebuild_from_own_read_survives(spark, emb, store_copy):
     """The rebuild/compaction flow streaming/ann.py recommends feeds
     build_ann_lsh_index a df READ FROM THE INDEX ITSELF (it holds
     id+embedding). The build must stage the new assignment and swap —
@@ -1584,8 +1581,7 @@ def test_ann_index_rebuild_from_own_read_survives(spark, emb, tmp_path):
 
     corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-    path = str(tmp_path / "rebuild_idx")
-    build_ann_lsh_index(corpus, path)
+    path = store_copy("lsh", "rebuild_idx")
     want = [
         (r.vec_id, r.rank)
         for r in ann_lsh_topk_indexed(spark, path, qvec, k=5).collect()
@@ -1606,7 +1602,7 @@ def test_ann_index_rebuild_from_own_read_survives(spark, emb, tmp_path):
     assert not os.path.exists(f"{path}.old")
 
 
-def test_ann_ivf_rebuild_from_own_read_survives(spark, emb, tmp_path):
+def test_ann_ivf_rebuild_from_own_read_survives(spark, emb, store_copy):
     """IVF twin of the rebuild-from-own-read pin."""
     import os
 
@@ -1617,8 +1613,7 @@ def test_ann_ivf_rebuild_from_own_read_survives(spark, emb, tmp_path):
 
     corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-    path = str(tmp_path / "rebuild_ivf")
-    build_ann_ivf_index(corpus, path)
+    path = store_copy("ivf", "rebuild_ivf")
     want = [
         (r.vec_id, r.rank)
         for r in ann_ivf_topk_indexed(spark, path, qvec, k=5).collect()
@@ -1728,7 +1723,7 @@ def test_driver_cache_survives_synthetic_mtime_republish(spark, emb, tmp_path):
     assert after != before, "driver cache served stale centroids"
 
 
-def test_append_negative_batch_id_is_reserved(spark, emb, tmp_path):
+def test_append_negative_batch_id_is_reserved(spark, emb, tmp_path, store_copy):
     """batch_id=-1 (or any negative) on the append paths would silently
     OVERWRITE the ingest_batch_id=-1 base partition the build wrote —
     the whole base corpus assignment replaced by one batch (ADVICE r8).
@@ -1740,15 +1735,11 @@ def test_append_negative_batch_id_is_reserved(spark, emb, tmp_path):
     from spark_sorted_spark.functions.similarity import (
         append_to_ann_ivf_index,
         append_to_ann_lsh_index,
-        build_ann_ivf_index,
-        build_ann_lsh_index,
     )
 
     corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
-    lsh = str(tmp_path / "lsh")
-    ivf = str(tmp_path / "ivf")
-    build_ann_lsh_index(corpus, lsh)
-    build_ann_ivf_index(corpus, ivf)
+    lsh = store_copy("lsh", "lsh")
+    ivf = store_copy("ivf", "ivf")
     with pytest.raises(ValueError, match="reserved"):
         append_to_ann_lsh_index(corpus, lsh, batch_id=-1)
     with pytest.raises(ValueError, match="reserved"):
@@ -2161,7 +2152,7 @@ def test_ann_pq_manifest_commit(spark, emb, tmp_path, ro_store):
     assert got == want
 
 
-def test_ann_pq_index_incremental_append(spark, emb, tmp_path):
+def test_ann_pq_index_incremental_append(spark, emb, store_copy):
     """PQ append: new batches encode against the persisted FROZEN
     codebooks in their own idempotent partitions — probe equals the
     query-time form run with the base build's codebooks over the full
@@ -2170,7 +2161,6 @@ def test_ann_pq_index_incremental_append(spark, emb, tmp_path):
         ann_pq_topk,
         ann_pq_topk_indexed,
         append_to_ann_pq_index,
-        build_ann_pq_index,
         pq_codebooks,
     )
 
@@ -2179,8 +2169,7 @@ def test_ann_pq_index_incremental_append(spark, emb, tmp_path):
     half_a = corpus.filter(F.col("vec_id") % 2 == 1)
     half_b = corpus.filter(F.col("vec_id") % 2 == 0)
 
-    inc = str(tmp_path / "pq_inc")
-    build_ann_pq_index(half_a, inc)
+    inc = store_copy("pq_half", "pq_inc")
     append_to_ann_pq_index(half_b, inc, batch_id=0)
 
     want = [
@@ -2208,7 +2197,7 @@ def test_ann_pq_index_incremental_append(spark, emb, tmp_path):
         append_to_ann_pq_index(half_b, inc, batch_id=-1)
 
 
-def test_ann_ivfpq_index_incremental_append(spark, emb, tmp_path):
+def test_ann_ivfpq_index_incremental_append(spark, emb, tmp_path, store_copy):
     """IVF-PQ append (completes the composite layout's growing-corpus
     story): new batches encode against the persisted FROZEN centroids
     AND residual codebooks in their own cell-subpartitioned idempotent
@@ -2221,7 +2210,6 @@ def test_ann_ivfpq_index_incremental_append(spark, emb, tmp_path):
         ann_ivfpq_join_indexed,
         ann_ivfpq_topk_indexed,
         append_to_ann_ivfpq_index,
-        build_ann_ivfpq_index,
         cosine_join,
         cosine_topk,
     )
@@ -2231,8 +2219,7 @@ def test_ann_ivfpq_index_incremental_append(spark, emb, tmp_path):
     half_a = corpus.filter(F.col("vec_id") % 2 == 1)
     half_b = corpus.filter(F.col("vec_id") % 2 == 0)
 
-    inc = str(tmp_path / "ivfpq_inc")
-    build_ann_ivfpq_index(half_a, inc)
+    inc = store_copy("ivfpq_half", "ivfpq_inc")
     append_to_ann_ivfpq_index(half_b, inc, batch_id=0)
     # replay: same partition overwritten, no duplicate rows
     append_to_ann_ivfpq_index(half_b, inc, batch_id=0)
@@ -2413,43 +2400,37 @@ def test_filtered_ann_probes(spark, emb, tmp_path):
         build_ann_ivf_index(corpus, str(tmp_path / "bad"), extra_cols=("cell",))
 
 
-def test_index_stats_report(spark, emb, docs, tmp_path):
+def test_index_stats_report(spark, emb, docs, tmp_path, ro_store, store_copy):
     """Index health reports: ann_index_stats rows sum to the stored
     row count, expose the batch partitioning, and autodetect the
     layout; bm25_index_stats covers postings AND df deltas."""
     from spark_sorted_spark.functions.retrieval import (
         append_to_bm25_index,
         bm25_index_stats,
-        build_bm25_index,
     )
     from spark_sorted_spark.functions.similarity import (
         ann_index_stats,
         append_to_ann_ivf_index,
-        build_ann_ivf_index,
-        build_ann_pq_index,
     )
 
     corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
     half_a = corpus.filter(F.col("vec_id") % 2 == 1)
     half_b = corpus.filter(F.col("vec_id") % 2 == 0)
 
-    ivf = str(tmp_path / "ivf")
-    build_ann_ivf_index(half_a, ivf)
+    ivf = store_copy("ivf_half", "ivf")
     append_to_ann_ivf_index(half_b, ivf, batch_id=0)
     st = ann_index_stats(spark, ivf).collect()
     assert sum(r.n for r in st) == corpus.count()
     assert {r.ingest_batch_id for r in st} == {-1, 0}
     assert all(r.unit is not None for r in st)
 
-    pq = str(tmp_path / "pq")
-    build_ann_pq_index(half_a, pq)
+    pq = ro_store("pq_half")
     pst = ann_index_stats(spark, pq).collect()
     assert sum(r.n for r in pst) == half_a.count()
     assert all(r.unit is None for r in pst)
 
-    bm25 = str(tmp_path / "bm25")
+    bm25 = store_copy("bm25_half", "bm25")
     d = docs.select("doc_id", "text")
-    build_bm25_index(d.filter(F.col("doc_id") % 2 == 1), bm25)
     append_to_bm25_index(
         d.filter(F.col("doc_id") % 2 == 0), bm25, batch_id=0
     )
@@ -2496,7 +2477,7 @@ def test_ivf_builds_auto_size_nlist(spark, emb, tmp_path):
     assert ann_ivfpq_topk_indexed(spark, ivfpq, qvec, k=5).count() == 5
 
 
-def test_ann_probe_before_batch_fence(spark, emb, tmp_path):
+def test_ann_probe_before_batch_fence(spark, emb, tmp_path, store_copy):
     """before_batch fences an ANN probe to partitions written before
     the given batch id — the BM25 probes' time-travel contract on the
     dense side: a fenced probe equals a probe of an index that only
@@ -2510,7 +2491,6 @@ def test_ann_probe_before_batch_fence(spark, emb, tmp_path):
         ann_lsh_topk_indexed,
         append_to_ann_ivfpq_index,
         append_to_ann_lsh_index,
-        build_ann_ivfpq_index,
         build_ann_lsh_index,
     )
 
@@ -2520,8 +2500,7 @@ def test_ann_probe_before_batch_fence(spark, emb, tmp_path):
     b0 = corpus.filter(F.col("vec_id") % 3 == 1)
     b1 = corpus.filter(F.col("vec_id") % 3 == 2)
 
-    full = str(tmp_path / "ivfpq_full")
-    build_ann_ivfpq_index(base, full)
+    full = store_copy("ivfpq_third", "ivfpq_full")
     append_to_ann_ivfpq_index(b0, full, batch_id=0)
     # ref = base + b0 only: a byte copy of `full` at this point
     ref = str(tmp_path / "ivfpq_ref")
@@ -2564,7 +2543,7 @@ def test_ann_probe_before_batch_fence(spark, emb, tmp_path):
     assert not (lids & b1_ids)
 
 
-def test_compact_ann_index_all_layouts(spark, emb, tmp_path):
+def test_compact_ann_index_all_layouts(spark, emb, tmp_path, store_copy):
     """ANN index compaction: batch partitions collapse to the base,
     probes stay bitwise identical, metadata and the stream marker
     survive — flat PQ (codes subdir), IVF, IVF-PQ (rename layout),
@@ -2584,22 +2563,16 @@ def test_compact_ann_index_all_layouts(spark, emb, tmp_path):
         append_to_ann_ivfsq8_index,
         append_to_ann_lsh_index,
         append_to_ann_pq_index,
-        build_ann_ivf_index,
-        build_ann_ivfpq_index,
-        build_ann_ivfsq8_index,
-        build_ann_lsh_index,
-        build_ann_pq_index,
         compact_ann_index,
     )
 
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
     corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
-    half_a = corpus.filter(F.col("vec_id") % 2 == 1)
     half_b = corpus.filter(F.col("vec_id") % 2 == 0)
 
-    def roundtrip(kind, build, append, probe, data_sub=""):
-        p = str(tmp_path / kind)
-        build(half_a, p)
+    def roundtrip(kind, base, append, probe, data_sub=""):
+        # base: the shared half-corpus build, copied
+        p = store_copy(base, kind)
         append(half_b, p, batch_id=0)
         before = probe(p)
         compact_ann_index(spark, p)
@@ -2611,7 +2584,7 @@ def test_compact_ann_index_all_layouts(spark, emb, tmp_path):
 
     roundtrip(
         "pq",
-        build_ann_pq_index,
+        "pq_half",
         append_to_ann_pq_index,
         lambda p: [
             (r.vec_id, r.rank, r.adot)
@@ -2621,7 +2594,7 @@ def test_compact_ann_index_all_layouts(spark, emb, tmp_path):
     )
     roundtrip(
         "ivf",
-        build_ann_ivf_index,
+        "ivf_half",
         append_to_ann_ivf_index,
         lambda p: [
             (r.vec_id, r.rank, r.cos)
@@ -2630,7 +2603,7 @@ def test_compact_ann_index_all_layouts(spark, emb, tmp_path):
     )
     roundtrip(
         "ivfpq",
-        build_ann_ivfpq_index,
+        "ivfpq_half",
         append_to_ann_ivfpq_index,
         lambda p: [
             (r.vec_id, r.rank, r.adot)
@@ -2639,7 +2612,7 @@ def test_compact_ann_index_all_layouts(spark, emb, tmp_path):
     )
     roundtrip(
         "ivfsq8",
-        build_ann_ivfsq8_index,
+        "sq8_half",
         append_to_ann_ivfsq8_index,
         lambda p: [
             (r.vec_id, r.rank, r.acos)
@@ -2648,7 +2621,7 @@ def test_compact_ann_index_all_layouts(spark, emb, tmp_path):
     )
     roundtrip(
         "lsh",
-        build_ann_lsh_index,
+        "lsh_half",
         lambda d, p, batch_id: append_to_ann_lsh_index(d, p, batch_id=batch_id),
         lambda p: [
             (r.vec_id, r.rank, r.cos)
@@ -2660,8 +2633,7 @@ def test_compact_ann_index_all_layouts(spark, emb, tmp_path):
     # carries the stream marker
     from spark_sorted_spark.streaming.ingest import _read_text, _write_text
 
-    man = str(tmp_path / "ivfpq_man")
-    build_ann_ivfpq_index(half_a, man, commit="manifest")
+    man = store_copy("ivfpq_half_manifest", "ivfpq_man")
     append_to_ann_ivfpq_index(half_b, man, batch_id=0)
     from spark_sorted_spark.sources.manifest import resolve_root
 

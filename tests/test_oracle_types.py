@@ -37,14 +37,15 @@ def duck(sf_dir):
     con.close()
 
 
-def test_every_oracle_type_matches_spark_schema(spark, sf_dir, duck):
+def test_every_oracle_type_matches_spark_schema(query_schema, duck):
     bad = {}
-    for name, fn in q.QUERIES.items():
+    for name in q.QUERIES:
         if name not in q.ORACLE:
             continue
-        sdf = fn(spark, sf_dir)
         ddf = duck.sql(f"SELECT * FROM ({q.ORACLE[name]}) LIMIT 0")
-        mism = type_mismatches(sdf.schema, list(ddf.columns), list(ddf.types))
+        mism = type_mismatches(
+            query_schema(name), list(ddf.columns), list(ddf.types)
+        )
         if mism:
             bad[name] = mism
     assert not bad, (

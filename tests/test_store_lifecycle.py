@@ -187,11 +187,14 @@ def test_store_survives_failed_rebuild_and_compaction(
     assert (resolve_root(spark, path) == path) == (layout == "rename")
     if layout == "rename":
         # the rename publish replaces the directory whole, so the
-        # compaction must carry the marker into the staged store
-        compact()
+        # compaction must carry the marker into the staged store; the
+        # trailing slash must still stage beside the store, not in it
+        fam["compact"](spark, path + "/")
         assert _read_text(spark, f"{path}{marker_path}") == MARKER
-        assert not os.path.exists(f"{path}.building")
-        assert not os.path.exists(f"{path}.old")
+        assert read() == want
+        assert sorted(os.listdir(tmp_path)) == ["store"]
+        leftovers = [n for n in os.listdir(path) if n.endswith((".building", ".old"))]
+        assert not leftovers
 
     # a build over a directory that is not a store writes nothing
     foreign = tmp_path / "not_a_store"
@@ -204,6 +207,18 @@ def test_store_survives_failed_rebuild_and_compaction(
     assert _snapshot(str(foreign)) == before
     assert not os.path.exists(f"{foreign}.building")
     assert not os.path.exists(f"{foreign}/gen-0")
+
+    # nor does a build aimed one level too high, at the directory that
+    # holds this store and a sibling corpus: a store one level down is
+    # not a store here, and replacing the parent would take them along
+    corpus = tmp_path / "corpus" / "ingest_batch_id=0"
+    corpus.mkdir(parents=True)
+    (corpus / "part-0.parquet").write_bytes(b"corpus rows")
+    before = _snapshot(str(tmp_path))
+    with pytest.raises(ValueError, match="not empty and holds no store"):
+        fam["build"](good_input, str(tmp_path), commit=layout, **kw)
+    assert _snapshot(str(tmp_path)) == before
+    assert not os.path.exists(f"{tmp_path}.building")
 
 
 def _corpus(spark, path, layout):

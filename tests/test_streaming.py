@@ -447,17 +447,16 @@ def test_stream_late_drop_query_matches_batch_replay(spark, sf_dir):
     assert got == sorted(map(tuple, replay.collect()))
 
 
-def test_stream_ingest_dedup_two_drain_lifecycle(spark, sf_dir, tmp_path):
+def test_stream_ingest_dedup_two_drain_lifecycle(
+    spark, sf_dir, tmp_path, store_copy
+):
     """The production ingest loop: two drains (two arriving batches)
     through foreachBatch must leave EXACTLY the corpus a sequential
     batch pipeline computes — within-batch self-dedup, cross-batch
     store check (earlier batch wins), store appended as it grows."""
     import shutil
 
-    from spark_sorted_spark.functions.dedup import (
-        build_minhash_band_store,
-        minhash_lsh_pairs,
-    )
+    from spark_sorted_spark.functions.dedup import minhash_lsh_pairs
     from spark_sorted_spark.streaming import stream_table
     from spark_sorted_spark.streaming.ingest import stream_ingest_dedup
 
@@ -471,7 +470,7 @@ def test_stream_ingest_dedup_two_drain_lifecycle(spark, sf_dir, tmp_path):
     corpus = str(tmp_path / "corpus")
     audit = str(tmp_path / "audit")
     ckpt = str(tmp_path / "ckpt")
-    build_minhash_band_store(spark.createDataFrame([], docs.schema), store)
+    store_copy("bands_empty", store)
 
     def arrive(batch, name):
         staged = tmp_path / f"stage_{name}"
@@ -521,7 +520,9 @@ def test_stream_ingest_dedup_two_drain_lifecycle(spark, sf_dir, tmp_path):
     assert dropped <= audit_new
 
 
-def test_stream_ingest_dedup_replay_is_exactly_once(spark, sf_dir, tmp_path):
+def test_stream_ingest_dedup_replay_is_exactly_once(
+    spark, sf_dir, tmp_path, store_copy
+):
     """A crash between the staging write and the rename-publish of a
     batch's corpus partition must (a) leave a RAW corpus reader — no
     before_batch fencing — seeing exactly the pre-batch rows (never a
@@ -532,7 +533,6 @@ def test_stream_ingest_dedup_replay_is_exactly_once(spark, sf_dir, tmp_path):
 
     import pytest
 
-    from spark_sorted_spark.functions.dedup import build_minhash_band_store
     from spark_sorted_spark.streaming import ingest as ing
     from spark_sorted_spark.streaming import stream_table
     from spark_sorted_spark.streaming.ingest import stream_ingest_dedup
@@ -545,7 +545,7 @@ def test_stream_ingest_dedup_replay_is_exactly_once(spark, sf_dir, tmp_path):
         watch = root / "incoming"
         watch.mkdir(parents=True)
         store = str(root / "store")
-        build_minhash_band_store(spark.createDataFrame([], docs.schema), store)
+        store_copy("bands_empty", store)
         return watch, store, str(root / "corpus"), str(root / "audit"), str(
             root / "ckpt"
         )
@@ -602,7 +602,9 @@ def test_stream_ingest_dedup_replay_is_exactly_once(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(xa).collect())) == truth_audit
 
 
-def test_stream_ingest_fresh_checkpoint_restart_guard(spark, sf_dir, tmp_path):
+def test_stream_ingest_fresh_checkpoint_restart_guard(
+    spark, sf_dir, tmp_path, store_copy
+):
     """A NEW stream (fresh checkpoint) pointed at a populated corpus
     is NOT a replay: batch ids restart at 0 and would clobber the
     prior run's partitions and skip dedup against the existing corpus.
@@ -613,7 +615,6 @@ def test_stream_ingest_fresh_checkpoint_restart_guard(spark, sf_dir, tmp_path):
 
     import pytest
 
-    from spark_sorted_spark.functions.dedup import build_minhash_band_store
     from spark_sorted_spark.streaming import stream_table
     from spark_sorted_spark.streaming.ingest import stream_ingest_dedup
 
@@ -626,7 +627,7 @@ def test_stream_ingest_fresh_checkpoint_restart_guard(spark, sf_dir, tmp_path):
     store = str(tmp_path / "store")
     corpus = str(tmp_path / "corpus")
     audit = str(tmp_path / "audit")
-    build_minhash_band_store(spark.createDataFrame([], docs.schema), store)
+    store_copy("bands_empty", store)
 
     def arrive(batch, name):
         staged = tmp_path / f"stage_{name}"
@@ -776,7 +777,9 @@ def test_compact_minhash_band_store_preserves_dedup(spark, sf_dir, tmp_path):
     assert counts.count() <= n_count_rows_before
 
 
-def test_stream_ingest_dedup_heals_partial_crash_writes(spark, sf_dir, tmp_path):
+def test_stream_ingest_dedup_heals_partial_crash_writes(
+    spark, sf_dir, tmp_path, store_copy
+):
     """Simulated mid-batch crash: a previous attempt left WRONG
     partial writes in batch 0's corpus partition and band-store
     partition before dying (the checkpoint never committed). The
@@ -784,7 +787,6 @@ def test_stream_ingest_dedup_heals_partial_crash_writes(spark, sf_dir, tmp_path)
     result — final state identical to a clean single run."""
     import shutil
 
-    from spark_sorted_spark.functions.dedup import build_minhash_band_store
     from spark_sorted_spark.streaming import stream_table
     from spark_sorted_spark.streaming.ingest import stream_ingest_dedup
 
@@ -795,7 +797,7 @@ def test_stream_ingest_dedup_heals_partial_crash_writes(spark, sf_dir, tmp_path)
         watch = root / "incoming"
         watch.mkdir(parents=True)
         store = str(root / "store")
-        build_minhash_band_store(spark.createDataFrame([], docs.schema), store)
+        store_copy("bands_empty", store)
         staged = root / "stage"
         batch.coalesce(1).write.mode("overwrite").parquet(str(staged))
         for f in staged.glob("*.parquet"):
@@ -1390,7 +1392,9 @@ def test_stream_index_embeddings_lifecycle(spark, sf_dir, tmp_path, ro_store):
     } == want_assign
 
 
-def test_compact_corpus_preserves_rows_marker_and_stream(spark, sf_dir, tmp_path):
+def test_compact_corpus_preserves_rows_marker_and_stream(
+    spark, sf_dir, tmp_path, store_copy
+):
     """Corpus compaction: after two drains, compact to one partition —
     identical rows, compacted into the RESERVED base id -1 (so a
     replayed crash batch can never overwrite the compacted corpus,
@@ -1400,7 +1404,6 @@ def test_compact_corpus_preserves_rows_marker_and_stream(spark, sf_dir, tmp_path
     import os
     import shutil
 
-    from spark_sorted_spark.functions.dedup import build_minhash_band_store
     from spark_sorted_spark.streaming import stream_table
     from spark_sorted_spark.streaming.ingest import (
         compact_corpus,
@@ -1416,7 +1419,7 @@ def test_compact_corpus_preserves_rows_marker_and_stream(spark, sf_dir, tmp_path
         watch = root / "incoming"
         watch.mkdir(parents=True)
         store = str(root / "store")
-        build_minhash_band_store(spark.createDataFrame([], docs.schema), store)
+        store_copy("bands_empty", store)
         return watch, store, str(root / "corpus"), str(root / "audit"), str(
             root / "ckpt"
         )
@@ -1696,7 +1699,9 @@ def test_stream_maintain_bm25_index_lifecycle(spark, sf_dir, tmp_path):
     assert probe() == scan(docs)
 
 
-def test_stream_maintain_ann_ivfpq_index_lifecycle(spark, sf_dir, tmp_path):
+def test_stream_maintain_ann_ivfpq_index_lifecycle(
+    spark, sf_dir, tmp_path, store_copy
+):
     """Streaming IVF-PQ maintenance: two drains over a growing
     embedding stream leave an index whose full probe + corpus-wide
     exact rerank equals brute-force cosine over everything that
@@ -1710,7 +1715,6 @@ def test_stream_maintain_ann_ivfpq_index_lifecycle(spark, sf_dir, tmp_path):
     from spark_sorted_spark.functions.similarity import (
         ANN_NLIST,
         ann_ivfpq_topk_indexed,
-        build_ann_ivfpq_index,
         cosine_topk,
     )
     from spark_sorted_spark.streaming import (
@@ -1764,7 +1768,7 @@ def test_stream_maintain_ann_ivfpq_index_lifecycle(spark, sf_dir, tmp_path):
     arrive(b1, "b1")
     with _pytest.raises(ValueError, match="build_ann_ivfpq_index"):
         drain(ckpt)
-    build_ann_ivfpq_index(base, idx)
+    store_copy("ivfpq_third", idx)
     drain(ckpt)
     assert probe() == brute(base.unionByName(b1))
 
@@ -1834,7 +1838,7 @@ def test_stream_adopts_prebuilt_gram_store(spark, sf_dir, tmp_path):
     assert snap(store) == snap(built_all)
 
 
-def test_compact_corpus_manifest_layout(spark, sf_dir, tmp_path):
+def test_compact_corpus_manifest_layout(spark, sf_dir, tmp_path, store_copy):
     """PARITY open item #3: the ingest corpus supports the
     generation-pointer layout. compact_corpus(commit='manifest')
     converts a rename-layout corpus (pointer committed LAST, loose
@@ -1848,7 +1852,6 @@ def test_compact_corpus_manifest_layout(spark, sf_dir, tmp_path):
 
     import pytest as _pytest
 
-    from spark_sorted_spark.functions.dedup import build_minhash_band_store
     from spark_sorted_spark.sources.manifest import resolve_root
     from spark_sorted_spark.streaming import stream_table
     from spark_sorted_spark.streaming.ingest import (
@@ -1864,7 +1867,7 @@ def test_compact_corpus_manifest_layout(spark, sf_dir, tmp_path):
     watch = tmp_path / "incoming"
     watch.mkdir()
     store = str(tmp_path / "store")
-    build_minhash_band_store(spark.createDataFrame([], docs.schema), store)
+    store_copy("bands_empty", store)
     corpus = str(tmp_path / "corpus")
     audit = str(tmp_path / "audit")
     ckpt = str(tmp_path / "ckpt")
@@ -1926,7 +1929,9 @@ def test_compact_corpus_manifest_layout(spark, sf_dir, tmp_path):
         compact_corpus(spark, corpus, commit="copy")
 
 
-def test_stream_maintain_ann_ivf_index_lifecycle(spark, sf_dir, tmp_path):
+def test_stream_maintain_ann_ivf_index_lifecycle(
+    spark, sf_dir, tmp_path, store_copy
+):
     """Streaming plain-IVF maintenance: two drains leave an index
     whose full probe equals brute-force cosine over everything that
     arrived; an idle drain changes nothing; a fresh checkpoint against
@@ -1939,8 +1944,6 @@ def test_stream_maintain_ann_ivf_index_lifecycle(spark, sf_dir, tmp_path):
     from spark_sorted_spark.functions.similarity import (
         ANN_NLIST,
         ann_ivf_topk_indexed,
-        build_ann_ivf_index,
-        build_ann_ivfpq_index,
         cosine_topk,
     )
     from spark_sorted_spark.streaming import (
@@ -1994,7 +1997,7 @@ def test_stream_maintain_ann_ivf_index_lifecycle(spark, sf_dir, tmp_path):
         drain(ckpt)
     # an IVF-PQ index at the path is the WRONG layout for this stream
     pq_idx = str(tmp_path / "pq_idx")
-    build_ann_ivfpq_index(base, pq_idx)
+    store_copy("ivfpq_third", pq_idx)
     with _pytest.raises(ValueError, match="_pq_meta"):
         stream_maintain_ann_ivf_index(
             stream_table(spark, "embeddings", sf_dir, path=str(watch))
@@ -2002,7 +2005,7 @@ def test_stream_maintain_ann_ivf_index_lifecycle(spark, sf_dir, tmp_path):
             pq_idx,
             str(tmp_path / "ckpt_pq"),
         )
-    build_ann_ivf_index(base, idx)
+    store_copy("ivf_third", idx)
     drain(ckpt)
     assert probe() == brute(base.unionByName(b1))
 
@@ -2020,7 +2023,9 @@ def test_stream_maintain_ann_ivf_index_lifecycle(spark, sf_dir, tmp_path):
         drain(str(tmp_path / "ckpt2"))
 
 
-def test_stream_maintain_ann_ivfsq8_index_lifecycle(spark, sf_dir, tmp_path):
+def test_stream_maintain_ann_ivfsq8_index_lifecycle(
+    spark, sf_dir, tmp_path, store_copy
+):
     """Streaming IVF-SQ8 maintenance: two drains leave an index whose
     full probe equals reconstructed-cosine brute force over everything
     that arrived (streamed batches quantize EXACTLY like the build —
@@ -2034,7 +2039,6 @@ def test_stream_maintain_ann_ivfsq8_index_lifecycle(spark, sf_dir, tmp_path):
     from spark_sorted_spark.functions.similarity import (
         ANN_NLIST,
         ann_ivfsq8_topk_indexed,
-        build_ann_ivf_index,
         build_ann_ivfsq8_index,
         cosine_topk,
         dequantize_embeddings,
@@ -2094,7 +2098,7 @@ def test_stream_maintain_ann_ivfsq8_index_lifecycle(spark, sf_dir, tmp_path):
     # a plain-IVF index at the path is the WRONG layout for this
     # stream — and vice versa
     ivf_idx = str(tmp_path / "ivf_idx")
-    build_ann_ivf_index(base, ivf_idx)
+    store_copy("ivf_third", ivf_idx)
     with _pytest.raises(ValueError, match="_sq_meta"):
         stream_maintain_ann_ivfsq8_index(
             stream_table(spark, "embeddings", sf_dir, path=str(watch))
