@@ -1,61 +1,71 @@
 """Similarity search over embedding columns (``array<float>``).
 
-* ``cosine`` — exact-order strict-fold dot product / norms, written so
-  Spark's ``F.aggregate`` and DuckDB's ``list_reduce`` perform the
-  identical IEEE-double operation sequence => bitwise-equal scores,
-  enabling exact (no-tolerance) oracle comparison even through a
-  threshold or a rank.
-* ``cosine_topk`` — brute-force top-k vs a query vector: one narrow
-  scan + a k-limited sort (``ORDER BY ... LIMIT k`` compiles to
-  TakeOrderedAndProject — no global sort materialization).
-* ``cosine_neardup_pairs`` — all-pairs cosine threshold (exact
-  baseline; O(n^2) — for corpus scale, block first);
-  ``cosine_neardup_pairs_lsh`` — the scale path (multi-table sign-bit
-  LSH, auto-sized plane count, exact verify).
-* ``ann_lsh_topk`` / ``ann_ivf_topk`` — approximate top-k: random-
-  hyperplane LSH buckets (md5-seeded deterministic planes, multi-probe
-  ``probe_bits`` recall knob) / inverted-file cells (seeded centroids,
-  native argmax assignment). Approximate in recall, deterministic in
-  output.
-* ``build_ann_{lsh,ivf}_index`` + ``ann_{lsh,ivf}_topk_indexed`` —
-  the repeated-query form: assignment persisted once, probes scan only
-  the probed bucket/cell directories (partition-pruned). Both indexes
-  grow incrementally (``append_to_ann_{lsh,ivf}_index`` — batch-
-  partitioned, replay-idempotent; see also
-  ``streaming.stream_index_embeddings``), and
-  ``cosine_neardup_against_index`` runs incremental embedding
-  near-dup of a new batch against the persisted index.
-* ``ann_pq_topk`` / ``build_ann_pq_index`` / ``ann_pq_topk_indexed``
-  — product quantization (Jégou et al., TPAMI 2011): seeded or
-  Lloyd-trained per-subspace codebooks, native argmin encoding, ADC
-  ranking whose indexed scan reads the code column only (~4 bytes per
-  vector), exact ``rerank=R`` tail. ``build_ann_ivfpq_index`` /
-  ``ann_ivfpq_topk_indexed`` compose IVF cell pruning with
-  residual-PQ codes — the canonical billion-scale layout: a probe
-  touches ``nprobe/nlist`` of the corpus at code width.
+Exact scoring. ``cosine`` is a strict left-fold dot product over
+norms, so Spark's ``F.aggregate`` and DuckDB's ``list_reduce`` run
+the same IEEE-double operation sequence and scores compare exactly
+through a threshold or a rank. ``cosine_topk`` / ``cosine_join`` are
+the brute-force single and batch top-k; ``cosine_neardup_pairs`` is
+the all-pairs baseline.
 
-* IVF-SQ8 (round 12): IVF cells over per-vector int8 scalar-quantized
-  codes (the ``quantize_embeddings`` scheme persisted as an index) —
-  probes read ``(scale, codes)`` at nprobe/nlist of the corpus,
-  reconstruct inline, rank by exact cosine over the reconstruction;
-  no trained codebook, so appended batches quantize exactly like the
-  build (the drift-free member of the quantized family).
+Query-time ANN. ``ann_lsh_topk`` (seeded sign-bit hyperplanes,
+multi-probe), ``ann_ivf_topk`` (seeded or Lloyd-refined centroids)
+and ``ann_pq_topk`` (product quantization, ADC ranking) assign
+buckets, cells or codes at query time: one scan per query.
 
-At 100 TB the brute-force variants are per-partition narrow ops
-(embarrassingly parallel); the LSH/IVF variants turn top-k per query
-into a pruned scan of ~1/2^planes (resp. nprobe/nlist) of the data,
-the standard trade of recall for locality.
+Persisted ANN indexes. Five families share one core:
+
+* the **family record** (``_Lsh``, ``_Ivf``, ``_Pq``, ``_IvfPq``,
+  ``_Sq8``) hides a format: its metadata tables (``_lsh_meta``;
+  ``_centroids``; ``_pq_codebooks`` + ``_pq_meta``; both; ``_centroids``
+  + ``_sq_meta``), its partition key (``bucket``, ``cell``, or none
+  for flat PQ's ``/codes``), ``train`` (planes, centroids or
+  codebooks), ``encode`` (the persisted row), ``probe_keys`` (a
+  query's buckets or cells) and ``score`` (exact cosine, ADC from
+  ``0.0`` or from the cell dot, or the SQ8 reconstructed cosine);
+* **build** (:func:`_ann_build`) stages the store, checks the corpus
+  dim, trains, encodes the base partition and writes the metadata,
+  then publishes once (``sources.manifest.staged_store``);
+* **append** (:func:`_ann_append`) lands one batch partition against
+  the frozen parameters; one layout guard refuses another family's
+  store;
+* **probe** (:func:`_ann_probe`) has one front door (argument, dim
+  and NULL checks), one pruned read (batch fence, key ``isin``,
+  ``where``) and one scorer; a single query finishes with
+  ``orderBy.limit`` (TakeOrderedAndProject), a batch with a per-query
+  rank window, and either can add the exact-cosine ``rerank`` tail;
+* **verify** (:func:`_verify_pairs`) is the one exact-cosine check of
+  candidate id pairs behind ``knn_join_lsh``,
+  ``cosine_neardup_pairs_lsh`` and both ``cosine_neardup_against_*``
+  forms.
+
+The public ``build_ann_*_index`` / ``append_to_ann_*_index`` /
+``ann_*_topk_indexed`` / ``ann_*_join_indexed`` names are thin
+wrappers over that core; ``compact_ann_index`` and
+``ann_index_stats`` read any family's store.
+
+At 100 TB the brute-force forms are per-partition narrow ops; the
+indexed forms turn a top-k into a pruned scan of ~1/2^planes (LSH) or
+nprobe/nlist (IVF family) of the data, at code width for the
+quantized families — the standard trade of recall for locality.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from ..sources.manifest import (
     _carry,
-    _exists,
     _fs,
     _ls,
     _rm_dir,
@@ -96,6 +106,12 @@ __all__ = [
     "append_to_ann_ivfsq8_index",
     "ann_ivfsq8_topk_indexed",
     "ann_ivfsq8_join_indexed",
+    "append_to_ann_ivfpq_index",
+    "compact_ann_index",
+    "ann_index_stats",
+    "ann_pq_join_indexed",
+    "ann_ivfpq_join_indexed",
+    "cosine_neardup_against_ivf_index",
     "semantic_dedup",
     "quantize_embeddings",
     "dequantize_embeddings",
@@ -176,20 +192,45 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine vs a literal query vector. Ties broken by
     id for determinism. Returns (id, rank, cos)."""
-    q = _vec_lit(query_vec)
-    scored = df.select(
-        F.col(id_col), cosine(F.col(vec_col), q).alias("cos")
+    return _top_single(
+        df, cosine(F.col(vec_col), _vec_lit(query_vec)), "cos", k, id_col
     )
+
+
+def _top_single(
+    rows: DataFrame, score: Column, name: str, k: int, id_col: str
+) -> DataFrame:
+    """The single-query finish: ``(id, rank, <name>)`` for the top
+    ``k`` rows by ``score`` DESC, id ASC. ``orderBy.limit`` compiles to
+    TakeOrderedAndProject — a k-bounded take per partition, no global
+    sort."""
+    order = (F.col(name).desc(), F.col(id_col).asc())
     return (
-        scored.orderBy(F.col("cos").desc(), F.col(id_col).asc())
+        rows.select(F.col(id_col), score.alias(name))
+        .orderBy(*order)
         .limit(k)
         .select(
             F.col(id_col),
-            F.row_number()
-            .over(Window.orderBy(F.col("cos").desc(), F.col(id_col).asc()))
-            .alias("rank"),
-            "cos",
+            F.row_number().over(Window.orderBy(*order)).alias("rank"),
+            name,
         )
+    )
+
+
+def _top_batch(
+    rows: DataFrame, score: Column, name: str, k: int, id_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """The batch finish: ``(query_id, id, <name>, rank)`` keeping each
+    query's top ``k`` by ``score`` DESC, id ASC (one per-query rank
+    window; ``rank`` is bigint)."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col(name).desc(), F.col(id_col).asc()
+    )
+    return (
+        rows.select(F.col(query_id_col), F.col(id_col), score.alias(name))
+        .withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -215,8 +256,6 @@ def cosine_join(
     per-query window. This is the honest exact DEFINITIONAL form
     (dense scoring has no sparsity to prune); the 100 TB path is
     :func:`ann_ivf_join_indexed`, which reads only probed cells."""
-    from pyspark.sql import Window
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     q = queries.select(
@@ -226,17 +265,10 @@ def cosine_join(
     # declared-crossjoin: corpus x broadcast QUERY BATCH — the batch
     # is the retrieval workload (bounded), not a second corpus; the
     # product is the definitional exact score relation itself
-    scored = embeddings.crossJoin(F.broadcast(q)).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cosine(F.col(vec_col), F.col("__qv")).alias("cos"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
+    scored = embeddings.crossJoin(F.broadcast(q))
+    return _top_batch(
+        scored, cosine(F.col(vec_col), F.col("__qv")), "cos", k, id_col,
+        query_id_col,
     )
 
 
@@ -340,22 +372,6 @@ def _sign_bucket_bits(query_vec: list[float], planes: list[list[float]]) -> int:
     return qbits
 
 
-def _rank_topk(bucketed: DataFrame, query_vec, k: int, vec_col: str, id_col: str):
-    q = _vec_lit(query_vec)
-    return (
-        bucketed.withColumn("cos", cosine(F.col(vec_col), q))
-        .orderBy(F.col("cos").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(
-            F.col(id_col),
-            F.row_number()
-            .over(Window.orderBy(F.col("cos").desc(), F.col(id_col).asc()))
-            .alias("rank"),
-            "cos",
-        )
-    )
-
-
 def _multiprobe_buckets(
     query_vec: list[float],
     planes: list[list[float]],
@@ -416,15 +432,12 @@ def ann_lsh_topk(
     the assignment once with :func:`build_ann_lsh_index` and probe it
     with :func:`ann_lsh_topk_indexed` (partition-pruned scan of the
     probed bucket directories)."""
-    dim = len(query_vec)
-    planes = [_hyperplane(p, dim) for p in range(n_planes)]
+    planes = [_hyperplane(p, len(query_vec)) for p in range(n_planes)]
     probes = _multiprobe_buckets(query_vec, planes, probe_bits, probe_hamming)
-    bucketed = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        _sign_bucket_col(F.col(vec_col), planes).alias("bucket"),
-    ).filter(F.col("bucket").isin(probes))
-    return _rank_topk(bucketed, query_vec, k, vec_col, id_col)
+    bucketed = df.filter(_sign_bucket_col(F.col(vec_col), planes).isin(probes))
+    return _top_single(
+        bucketed, cosine(F.col(vec_col), _vec_lit(query_vec)), "cos", k, id_col
+    )
 
 
 def build_ann_lsh_index(
@@ -446,7 +459,7 @@ def build_ann_lsh_index(
     assignment into O(corpus / 2^n_planes) — the persist-the-index
     shape the query-time form documents.
 
-    Layout v2 (round 8): batch-partitioned like the MinHash band
+    Batch-partitioned like the MinHash band
     store — the build writes base partition ``ingest_batch_id=-1``;
     :func:`append_to_ann_lsh_index` adds later corpus batches in
     their own partitions (idempotent when ``batch_id`` is set).
@@ -469,118 +482,74 @@ def build_ann_lsh_index(
     local filesystems; on S3-style object stores pass
     ``commit="manifest"`` (generation dir + atomic pointer PUT).
     Appends and probes resolve the pointer transparently."""
-    from .dedup import spread_small_input
-
-    spark = df.sparkSession
-    with staged_store(spark, path, commit) as staged:
-        _check_corpus_dim(df, vec_col, dim, "build_ann_lsh_index")
-        # n_planes=None derives the depth from the corpus count (the
-        # auto_planes rule — a fixed depth is the measured quadratic at
-        # 10x); the persisted _lsh_meta then makes the choice sticky for
-        # every append/probe. The default stays the shared constant so the
-        # oracle-gated queries keep a bucket space DuckDB can replay from
-        # the same constant.
-        #
-        # target_bucket defaults to 128 here — FOUR TIMES the multi-table
-        # constructions' 32 — because this store is SINGLE-table: with no
-        # OR-construction, every extra plane multiplies per-pair recall at
-        # a given cosine by p_plane < 1 uncompensated, and the per-vector
-        # candidate budget of the multi-table forms (n_tables x 32 = 256)
-        # affords one table a fatter bucket. Adjudicated round 12 (PARITY
-        # "b27 auto-depth"): at 20k vectors the old target-32 auto depth
-        # (9) was SLOWER than depth 8 (7.93 vs 7.17 s min-of-3) AND found
-        # 37% fewer pairs (888 vs 1405) — the cost at this corpus size is
-        # 2^planes directory/file bookkeeping, not candidate volume; the
-        # target-128 depth (7) measured 4.42 s with 2165 pairs. Depth
-        # still grows with log2(n), so the verify stays linear-in-batch at
-        # the 100 TB design point.
-        if n_planes is None:
-            n_planes = auto_planes(df.count(), target_bucket)
-        df = spread_small_input(df)
-        planes = [_hyperplane(p, dim) for p in range(n_planes)]
-        assigned = df.select(
-            F.col(id_col),
-            _dim_guard_col(F.col(vec_col), dim, "build_ann_lsh_index").alias(
-                vec_col
-            ),
-            _sign_bucket_col(F.col(vec_col), planes).alias("bucket"),
-        )
-        _write_base(assigned, staged, "bucket")
-        _write_meta(
-            spark, staged, "_lsh_meta",
-            [(int(n_planes), int(dim))], "n_planes int, dim int",
-        )
+    _ann_build(
+        _LSH, df, path, commit, vec_col, id_col, dim, "build_ann_lsh_index",
+        n_planes=n_planes, target_bucket=target_bucket,
+    )
 
 
 def _resolve_lsh_params(
-    spark, path: str, n_planes: int | None, dim: int | None, caller: str
+    spark, path: str, n_planes: int | None, dim: int | None, caller: str,
+    fallback_dim: int = ANN_DIM,
 ) -> tuple[int, int]:
     """Resolve (n_planes, dim) against the index's persisted
-    ``_lsh_meta``: explicit args must MATCH the recorded construction
-    (a mismatch means garbage buckets — raise); ``None`` adopts the
-    recorded values; a pre-metadata index falls back to the shared
-    ANN constants, as before."""
+    ``_lsh_meta`` (cached, :func:`_cached_driver_read`): explicit args
+    must MATCH the recorded construction (a mismatch means garbage
+    buckets — raise); ``None`` adopts the recorded values; an index
+    without the table (a stream-created or pre-metadata index) falls
+    back to ``ANN_N_PLANES`` and ``fallback_dim``."""
     from pyspark.errors import AnalysisException
 
-    try:
-        # bounded-collect: one parameter row from the index metadata
-        meta = spark.read.parquet(f"{path}/_lsh_meta").collect()
-    except AnalysisException:
-        meta = []
-    if meta:
-        mp, md = int(meta[0].n_planes), int(meta[0].dim)
-        if n_planes is not None and n_planes != mp:
-            raise ValueError(
-                f"{caller}: index at {path!r} was built with "
-                f"n_planes={mp}, got n_planes={n_planes} — mismatched "
-                "planes bucket silently wrong; pass None to adopt the "
-                "recorded construction"
-            )
-        if dim is not None and dim != md:
-            raise ValueError(
-                f"{caller}: index at {path!r} was built with dim={md}, "
-                f"got dim={dim}"
-            )
-        return mp, md
-    return (
-        ANN_N_PLANES if n_planes is None else n_planes,
-        ANN_DIM if dim is None else dim,
-    )
+    def _load():
+        try:
+            # bounded-collect: one parameter row from the index metadata
+            meta = spark.read.parquet(f"{path}/_lsh_meta").collect()
+        except AnalysisException:
+            return None
+        return (int(meta[0].n_planes), int(meta[0].dim)) if meta else None
 
-
-def _write_base(rows: DataFrame, staged: str, key: str | None) -> None:
-    """Write an ANN store's base partition ``ingest_batch_id=-1``
-    (``key``-partitioned) and its occupancy side table, counted from a
-    read-back of the partition just written — ``key`` is the
-    directory name, so the aggregate reads no data columns. Flat PQ
-    (``key=None``) is unpartitioned and has no side table."""
-    from ..sources.bucketed import write_partitioned
-
-    base = f"{staged}/ingest_batch_id=-1"
-    if key is None:
-        rows.write.mode("overwrite").parquet(base)
-        return
-    write_partitioned(rows, base, key)
-    _write_occ_counts(
-        _occ_read_back(rows.sparkSession, base, key), key, staged, -1, "overwrite"
-    )
+    meta = _cached_driver_read(spark, path, "_lsh_meta", _load)
+    if meta is None:
+        return (
+            ANN_N_PLANES if n_planes is None else n_planes,
+            fallback_dim if dim is None else dim,
+        )
+    mp, md = meta
+    if n_planes is not None and n_planes != mp:
+        raise ValueError(
+            f"{caller}: index at {path!r} was built with "
+            f"n_planes={mp}, got n_planes={n_planes} — mismatched "
+            "planes bucket silently wrong; pass None to adopt the "
+            "recorded construction"
+        )
+    if dim is not None and dim != md:
+        raise ValueError(
+            f"{caller}: index at {path!r} was built with dim={md}, "
+            f"got dim={dim}"
+        )
+    return mp, md
 
 
 def _write_batch(
-    rows: DataFrame, path: str, key: str, part: int, mode: str
+    rows: DataFrame, path: str, key: str | None, part: int, mode: str
 ) -> None:
-    """Land one append batch (``sources.manifest.batch_dir``'s
+    """Land one batch partition ``ingest_batch_id={part}`` of an ANN
+    store (a build or compaction writes the base ``-1`` with
+    ``mode="overwrite"``; appends take ``sources.manifest.batch_dir``'s
     ``part``/``mode``) ``key``-partitioned, bracketed by its occupancy
-    stats: a batch-id-keyed write first drops its stats partition, and
-    the delta is counted from a read-back (overwrite) or from ``rows``
-    (base-partition appends; column pruning keeps any encode out of
-    the count)."""
+    stats: an overwrite first drops its stats partition and counts
+    the delta from a read-back of the partition just written (``key``
+    is the directory name, so the count reads no data columns); a
+    base-partition append counts from ``rows`` (column pruning keeps
+    any encode out of the count). Flat PQ (``key=None``) is
+    unpartitioned and has no side table."""
     from ..sources.bucketed import write_partitioned
 
-    if mode == "overwrite":
+    if key is not None and mode == "overwrite":
         _invalidate_occ_counts(rows.sparkSession, path, part)
     write_partitioned(rows, f"{path}/ingest_batch_id={part}", key, mode=mode)
-    _append_occ_counts(rows, key, path, part, mode)
+    if key is not None:
+        _append_occ_counts(rows, key, path, part, mode)
 
 
 def _write_meta(spark, staged: str, name: str, rows, schema: str) -> None:
@@ -615,22 +584,10 @@ def append_to_ann_lsh_index(
     Probes (:func:`ann_lsh_topk_indexed`) need no change: partition
     discovery surfaces all batches, bucket pruning applies within
     each."""
-    from .dedup import spread_small_input
-
-    path, part, mode = batch_dir(df.sparkSession, path, batch_id)
-    n_planes, dim = _resolve_lsh_params(
-        df.sparkSession, path, n_planes, dim, "append_to_ann_lsh_index"
+    _ann_append(
+        _LSH, df, path, batch_id, vec_col, id_col, "append_to_ann_lsh_index",
+        n_planes=n_planes, dim=dim,
     )
-    df = spread_small_input(df)
-    planes = [_hyperplane(p, dim) for p in range(n_planes)]
-    assigned = df.select(
-        F.col(id_col),
-        _dim_guard_col(
-            F.col(vec_col), dim, "append_to_ann_lsh_index"
-        ).alias(vec_col),
-        _sign_bucket_col(F.col(vec_col), planes).alias("bucket"),
-    )
-    _write_batch(assigned, path, "bucket", part, mode)
 
 
 def ann_lsh_topk_indexed(
@@ -653,16 +610,11 @@ def ann_lsh_topk_indexed(
     ``ann_lsh_topk`` with the same probe settings on the same data
     (same planes, same folds). ``before_batch`` fences the read to
     earlier batch partitions (see :func:`_before_batch`)."""
-    index_path = resolve_root(spark, index_path)
-    dim = len(query_vec)
-    n_planes, _ = _resolve_lsh_params(
-        spark, index_path, n_planes, dim, "ann_lsh_topk_indexed"
+    return _ann_probe(
+        _LSH, spark, index_path, query_vec, k, "ann_lsh_topk_indexed",
+        vec_col=vec_col, id_col=id_col, before_batch=before_batch,
+        n_planes=n_planes, probe_bits=probe_bits, probe_hamming=probe_hamming,
     )
-    planes = [_hyperplane(p, dim) for p in range(n_planes)]
-    probes = _multiprobe_buckets(query_vec, planes, probe_bits, probe_hamming)
-    idx = _before_batch(spark.read.parquet(index_path), before_batch)
-    bucketed = idx.filter(F.col("bucket").isin(probes))
-    return _rank_topk(bucketed, query_vec, k, vec_col, id_col)
 
 
 def _ivf_centroids(
@@ -765,36 +717,29 @@ def _lloyd_refine(
 
 _RESERVED_INDEX_COLS = ("cell", "code", "bucket", "t", "ingest_batch_id")
 
-# SQ8 layout columns — reserved ONLY for the IVF-SQ8 build/append
-# (a pre-existing IVF/LSH index with a user extra named "scale" keeps
-# working; reserving these repo-wide would make its appends silently
-# drop the column)
-_SQ8_RESERVED_COLS = ("scale", "codes")
 
-
-def _check_extra_cols(extra_cols, id_col: str, vec_col: str) -> None:
-    bad = [
-        c
-        for c in extra_cols
-        if c in _RESERVED_INDEX_COLS or c in (id_col, vec_col)
-    ]
+def _check_extra_cols(
+    extra_cols, id_col: str, vec_col: str, reserved: tuple = ()
+) -> None:
+    """Refuse ``extra_cols`` that collide with an index's layout
+    columns — the shared ones plus the family's own ``reserved``."""
+    layout = _RESERVED_INDEX_COLS + tuple(reserved) + (id_col, vec_col)
+    bad = [c for c in extra_cols if c in layout]
     if bad:
         raise ValueError(
-            f"extra_cols {bad} collide with index layout columns "
-            f"({_RESERVED_INDEX_COLS + (id_col, vec_col)})"
+            f"extra_cols {bad} collide with index layout columns ({layout})"
         )
 
 
-def _index_extra_cols(idx: DataFrame, id_col: str, vec_col: str) -> list[str]:
+def _index_extra_cols(
+    idx: DataFrame, id_col: str, vec_col: str, reserved: tuple = ()
+) -> list[str]:
     """The metadata columns a persisted index carries beyond its
     layout columns — appends introspect these so extras flow through
     without a parameter (and a batch MISSING one fails loudly at the
     select instead of writing silent nulls)."""
-    return [
-        c
-        for c in idx.columns
-        if c not in _RESERVED_INDEX_COLS and c not in (id_col, vec_col)
-    ]
+    layout = _RESERVED_INDEX_COLS + tuple(reserved) + (id_col, vec_col)
+    return [c for c in idx.columns if c not in layout]
 
 
 def _apply_where(df: DataFrame, where) -> DataFrame:
@@ -859,10 +804,10 @@ def ann_ivf_topk(
         # to ~1.0 at the default nprobe (tools/ann_recall.py)
         cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
     probe = _ivf_probe_cells(query_vec, cents, nprobe)
-    celled = df.select(
-        F.col(id_col), F.col(vec_col), _ivf_cell_col(F.col(vec_col), cents).alias("cell")
-    ).filter(F.col("cell").isin(probe))
-    return _rank_topk(celled, query_vec, k, vec_col, id_col)
+    celled = df.filter(_ivf_cell_col(F.col(vec_col), cents).isin(probe))
+    return _top_single(
+        celled, cosine(F.col(vec_col), _vec_lit(query_vec)), "cos", k, id_col
+    )
 
 
 def build_ann_ivf_index(
@@ -891,7 +836,7 @@ def build_ann_ivf_index(
     centroids' ``cent_id`` keeps the seed vector's id as
     provenance.
 
-    Layout v2 (round 8): batch-partitioned like the LSH index —
+    Batch-partitioned like the LSH index —
     base partition ``ingest_batch_id=-1``;
     :func:`append_to_ann_ivf_index` assigns later batches to the
     PERSISTED centroids in their own partitions. The centroid table
@@ -907,59 +852,10 @@ def build_ann_ivf_index(
     pruned scan as an ordinary parquet pushdown instead of a
     post-hoc join against a metadata table. Appends introspect the
     persisted schema and carry the same columns (or fail loudly)."""
-    from .dedup import spread_small_input
-
-    if lloyd_iters < 0:
-        raise ValueError(f"lloyd_iters must be >= 0, got {lloyd_iters}")
-    _check_extra_cols(extra_cols, id_col, vec_col)
-    spark = df.sparkSession
-    with staged_store(spark, path, commit) as staged:
-        if nlist is None:
-            # auto-size cells from the corpus count (ceil(n/target_cell) —
-            # the semantic_dedup rule; PARITY scale rows: fixed cells make
-            # probe candidate sets grow linearly with the corpus, auto
-            # keeps expected occupancy ~target_cell). The DEFAULT stays
-            # the fixed constant so gated constructions remain
-            # oracle-replayable; pass None at scale.
-            nlist = max(1, -(-df.count() // int(target_cell)))
-        cents = _ivf_centroids(df, nlist, vec_col, id_col)
-        if lloyd_iters and cents:
-            cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
-        if cents:
-            # the write-path guard below adopts the SEEDED CENTROID's
-            # length as the declared dim; if the seeded pick sampled a
-            # minority wrong-length row of a mixed-dim corpus, that guard
-            # would fire on the MAJORITY rows with a misleading "declared
-            # dim" naming the minority length (ADVICE r14). Cross-check
-            # one corpus row against the centroid dim up front so the
-            # loud failure names both lengths (cosmetic — the build fails
-            # loudly either way).
-            _check_corpus_dim(
-                df, vec_col, len(cents[0][1]), "build_ann_ivf_index"
-            )
-        df = spread_small_input(df)
-        vcol = (
-            _dim_guard_col(
-                F.col(vec_col), len(cents[0][1]), "build_ann_ivf_index"
-            ).alias(vec_col)
-            if cents
-            else F.col(vec_col)
-        )
-        celled = df.select(
-            F.col(id_col),
-            vcol,
-            _ivf_cell_col(F.col(vec_col), cents).alias("cell"),
-            *[F.col(c) for c in extra_cols],
-        )
-        _write_base(celled, staged, "cell")
-        _write_centroids(spark, staged, cents)
-
-
-def _write_centroids(spark, staged: str, cents) -> None:
-    _write_meta(
-        spark, staged, "_centroids",
-        [(i, cid, vec) for i, (cid, vec) in enumerate(cents)],
-        "cell int, cent_id bigint, centroid array<double>",
+    _ann_build(
+        _IVF, df, path, commit, vec_col, id_col, None, "build_ann_ivf_index",
+        extra_cols, nlist=nlist, lloyd_iters=lloyd_iters,
+        target_cell=target_cell,
     )
 
 
@@ -980,41 +876,9 @@ def append_to_ann_ivf_index(
 
     Same append contract as the LSH twin
     (``sources.manifest.batch_dir``)."""
-    from .dedup import spread_small_input
-
-    spark = df.sparkSession
-    path, part, mode = batch_dir(spark, path, batch_id)
-    # layout guard: a quantized sibling at this path would be silently
-    # corrupted by raw-vector rows (probes would see NULL codes)
-    for meta, kind, fix in (
-        ("_pq_meta", "IVF-PQ", "append_to_ann_ivfpq_index"),
-        ("_sq_meta", "IVF-SQ8", "append_to_ann_ivfsq8_index"),
-    ):
-        if _exists(spark, f"{path}/{meta}"):
-            raise ValueError(
-                f"index at {path!r} is {kind} (has {meta}): its rows "
-                f"carry codes, not raw embeddings — use {fix}"
-            )
-    # bounded-collect: nlist centroid rows from the index metadata
-    cent_rows = (
-        spark.read.parquet(f"{path}/_centroids").orderBy("cell").collect()
+    _ann_append(
+        _IVF, df, path, batch_id, vec_col, id_col, "append_to_ann_ivf_index"
     )
-    if not cent_rows:
-        raise ValueError(f"{path!r} holds no centroid table; build first")
-    cents = [(r.cent_id, [float(x) for x in r.centroid]) for r in cent_rows]
-    extras = _index_extra_cols(
-        spark.read.parquet(path), id_col, vec_col
-    )
-    df = spread_small_input(df)
-    celled = df.select(
-        F.col(id_col),
-        _dim_guard_col(
-            F.col(vec_col), len(cents[0][1]), "append_to_ann_ivf_index"
-        ).alias(vec_col),
-        _ivf_cell_col(F.col(vec_col), cents).alias("cell"),
-        *[F.col(c) for c in extras],
-    )
-    _write_batch(celled, path, "cell", part, mode)
 
 
 def ann_ivf_topk_indexed(
@@ -1037,12 +901,11 @@ def ann_ivf_topk_indexed(
     into the pruned scan and ranking sees only qualifying rows —
     top-k of the filtered set. ``before_batch`` fences the read to
     earlier batch partitions (see :func:`_before_batch`)."""
-    index_path = resolve_root(spark, index_path)
-    cents = _load_centroids(spark, index_path)
-    probe = _ivf_probe_cells(query_vec, cents, nprobe)
-    idx = _before_batch(spark.read.parquet(index_path), before_batch)
-    celled = _apply_where(idx.filter(F.col("cell").isin(probe)), where)
-    return _rank_topk(celled, query_vec, k, vec_col, id_col)
+    return _ann_probe(
+        _IVF, spark, index_path, query_vec, k, "ann_ivf_topk_indexed",
+        nprobe=nprobe, vec_col=vec_col, id_col=id_col, where=where,
+        before_batch=before_batch,
+    )
 
 
 def ann_ivf_join_indexed(
@@ -1081,76 +944,11 @@ def ann_ivf_join_indexed(
     under driver memory); millions of queries should chunk the batch
     and union the outputs (per-query independence makes chunking
     semantics-free)."""
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    index_path = resolve_root(spark, index_path)
-    cents = _load_centroids(spark, index_path)
-    # bounded-collect: the query batch itself — the retrieval
-    # workload, needed driver-side to enumerate the probed cells the
-    # index scan prunes to (the bm25_join_indexed discipline)
-    qrows = queries.select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>")
-    ).collect()
-    if not qrows:
-        raise ValueError("query batch is empty")
-    qid_type = queries.schema[query_id_col].dataType
-    pairs = [
-        (r[0], int(cell))
-        for r in qrows
-        for cell in _ivf_probe_cells([float(x) for x in r[1]], cents, nprobe)
-    ]
-    cells = sorted({c for _, c in pairs})
-    qcells = local_rows_df(
-        spark,
-        pairs,
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField("cell", IntegerType()),
-            ]
-        ),
-    )
-    qvecs = local_rows_df(
-        spark,
-        [(r[0], [float(x) for x in r[1]]) for r in qrows],
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField("__qv", ArrayType(DoubleType())),
-            ]
-        ),
-    )
-    idx = _apply_where(
-        _before_batch(spark.read.parquet(index_path), before_batch)
-        .filter(F.col("cell").isin(cells)),
-        where,
-    )
-    scored = (
-        idx.join(F.broadcast(qcells), "cell")
-        .join(F.broadcast(qvecs), query_id_col)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            cosine(F.col(vec_col), F.col("__qv")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
+    return _ann_probe(
+        _IVF, spark, index_path, queries, k, "ann_ivf_join_indexed",
+        nprobe=nprobe, vec_col=vec_col, id_col=id_col, where=where,
+        before_batch=before_batch, query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
     )
 
 
@@ -1173,14 +971,6 @@ def ann_ivf_join_indexed(
 
 ANN_PQ_M = 4
 ANN_PQ_KSUB = 16
-
-
-def _flat_lit(vals: list[float]) -> Column:
-    """Flat double-array literal via the same constant-folded
-    from_json trick as :func:`_planes_lit`."""
-    import json
-
-    return F.from_json(F.lit(json.dumps(vals)), "array<double>")
 
 
 def pq_codebooks(
@@ -1330,32 +1120,17 @@ def _pq_query_table(
     return out
 
 
-def _pq_adc_rank(
-    coded: DataFrame,
-    query_vec: list[float],
-    codebooks: list[list[list[float]]],
-    k: int,
-    id_col: str,
-) -> DataFrame:
-    """ADC ranking over a (id, code) relation: approximate dot = strict
-    fold over subspaces of table lookups; deterministic top-k by
-    (adot desc, id)."""
-    m, ksub = len(codebooks), len(codebooks[0])
-    tbl = _flat_lit(_pq_query_table(query_vec, codebooks))
-    adot = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
+def _adc(cbs: list[list[list[float]]], tbl: Column, init: Column) -> Column:
+    """ADC approximate dot of a stored ``code`` row: a strict fold from
+    ``init`` (``0.0`` for flat PQ, the query-cell centroid dot for
+    IVF-PQ) over the m per-subspace lookups ``tbl[j*ksub + code[j]]``
+    of the query's ADC table (:func:`_pq_query_table`)."""
+    ksub = len(cbs[0])
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(len(cbs) - 1)),
+        init,
         lambda acc, j: acc
         + F.element_at(tbl, j * ksub + F.element_at(F.col("code"), j + 1) + 1),
-    )
-    ranked = (
-        coded.withColumn("adot", adot)
-        .orderBy(F.desc("adot"), F.col(id_col))
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("adot"), F.col(id_col))
-    return ranked.select(
-        id_col, F.row_number().over(w).alias("rank"), "adot"
     )
 
 
@@ -1386,7 +1161,8 @@ def ann_pq_topk(
     coded = spread_small_input(df).select(
         F.col(id_col), _pq_code_col(F.col(vec_col), codebooks).alias("code")
     )
-    return _pq_adc_rank(coded, query_vec, codebooks, k, id_col)
+    tbl = _vec_lit(_pq_query_table(query_vec, codebooks))
+    return _top_single(coded, _adc(codebooks, tbl, F.lit(0.0)), "adot", k, id_col)
 
 
 def build_ann_pq_index(
@@ -1409,38 +1185,9 @@ def build_ann_pq_index(
     publish contract as the LSH/IVF builds (``commit="rename"`` |
     ``"manifest"``). ``extra_cols`` stores passthrough metadata for
     filtered probes (see :func:`build_ann_ivf_index`)."""
-    from .dedup import spread_small_input
-
-    _check_extra_cols(extra_cols, id_col, vec_col)
-    spark = df.sparkSession
-    with staged_store(spark, path, commit) as staged:
-        _check_corpus_dim(df, vec_col, dim, "build_ann_pq_index")
-        cbs = pq_codebooks(df, m, ksub, dim, vec_col, id_col, lloyd_iters)
-        df = spread_small_input(df)
-        coded = df.select(
-            F.col(id_col),
-            _pq_code_col(F.col(vec_col), cbs).alias("code"),
-            _dim_guard_col(F.col(vec_col), dim, "build_ann_pq_index").alias(
-                vec_col
-            ),
-            *[F.col(c) for c in extra_cols],
-        )
-        # batch-partitioned like the LSH/IVF indexes: the build writes the
-        # base partition; append_to_ann_pq_index adds later batches in
-        # their own idempotent partitions (frozen codebooks)
-        _write_base(coded, f"{staged}/codes", None)
-        _write_codebooks(spark, staged, cbs)
-        _write_meta(
-            spark, staged, "_pq_meta",
-            [(int(m), int(ksub), int(dim))], "m int, ksub int, dim int",
-        )
-
-
-def _write_codebooks(spark, staged: str, cbs) -> None:
-    _write_meta(
-        spark, staged, "_pq_codebooks",
-        [(j, c, sub) for j, book in enumerate(cbs) for c, sub in enumerate(book)],
-        "j int, c int, sub array<double>",
+    _ann_build(
+        _PQ, df, path, commit, vec_col, id_col, dim, "build_ann_pq_index",
+        extra_cols, m=m, ksub=ksub, lloyd_iters=lloyd_iters,
     )
 
 
@@ -1459,24 +1206,9 @@ def append_to_ann_pq_index(
     do NOT retrain on append (quantization drifts as the corpus grows;
     rebuild with ``lloyd_iters`` when ADC error warrants it — the same
     trade-off as the IVF centroids)."""
-    from .dedup import spread_small_input
-
-    spark = df.sparkSession
-    path, part, mode = batch_dir(spark, path, batch_id)
-    _p, _m, _ksub, dim, cbs = _load_pq_index(spark, path)
-    extras = _index_extra_cols(
-        spark.read.parquet(f"{path}/codes"), id_col, vec_col
+    _ann_append(
+        _PQ, df, path, batch_id, vec_col, id_col, "append_to_ann_pq_index"
     )
-    df = spread_small_input(df)
-    coded = df.select(
-        F.col(id_col),
-        _pq_code_col(F.col(vec_col), cbs).alias("code"),
-        _dim_guard_col(F.col(vec_col), dim, "append_to_ann_pq_index").alias(
-            vec_col
-        ),
-        *[F.col(c) for c in extras],
-    )
-    coded.write.mode(mode).parquet(f"{path}/codes/ingest_batch_id={part}")
 
 
 def build_ann_ivfpq_index(
@@ -1515,54 +1247,12 @@ def build_ann_ivfpq_index(
     residual codebooks (same determinism caveat as both parents: the
     PERSISTED index is the reproducible artifact; seeded defaults keep
     the gated query oracle-replayable)."""
-    from .dedup import spread_small_input
-
-    _check_extra_cols(extra_cols, id_col, vec_col)
-    spark = df.sparkSession
-    with staged_store(spark, path, commit) as staged:
-        _check_corpus_dim(df, vec_col, dim, "build_ann_ivfpq_index")
-        if nlist is None:
-            # auto-size cells (see build_ann_ivf_index — same rule, same
-            # fixed-default-for-oracles / None-at-scale contract)
-            nlist = max(1, -(-df.count() // int(target_cell)))
-        cents = _ivf_centroids(df, nlist, vec_col, id_col)
-        if lloyd_iters and cents:
-            cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
-        cents_lit = _planes_lit([c for _cid, c in cents])
-        vd = F.col(vec_col).cast("array<double>")
-        cell = _ivf_cell_col(F.col(vec_col), cents)
-        resid = F.zip_with(
-            vd, F.element_at(cents_lit, cell + 1), lambda a, b: a - b
-        )
-        df = spread_small_input(df)
-        rdf = df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            cell.alias("cell"),
-            resid.alias("__resid"),
-            *[F.col(c) for c in extra_cols],
-        )
-        cbs = pq_codebooks(
-            rdf, m, ksub, dim, vec_col="__resid", id_col=id_col,
-            lloyd_iters=pq_lloyd_iters,
-        )
-        coded = rdf.select(
-            F.col(id_col),
-            F.col("cell"),
-            _pq_code_col(F.col("__resid"), cbs).alias("code"),
-            _dim_guard_col(F.col(vec_col), dim, "build_ann_ivfpq_index").alias(
-                vec_col
-            ),
-            *[F.col(c) for c in extra_cols],
-        )
-        _write_base(coded, staged, "cell")
-        _write_centroids(spark, staged, cents)
-        _write_codebooks(spark, staged, cbs)
-        _write_meta(
-            spark, staged, "_pq_meta",
-            [(int(m), int(ksub), int(dim), int(nlist))],
-            "m int, ksub int, dim int, nlist int",
-        )
+    _ann_build(
+        _IVFPQ, df, path, commit, vec_col, id_col, dim,
+        "build_ann_ivfpq_index", extra_cols, nlist=nlist, m=m, ksub=ksub,
+        lloyd_iters=lloyd_iters, pq_lloyd_iters=pq_lloyd_iters,
+        target_cell=target_cell,
+    )
 
 
 def append_to_ann_ivfpq_index(
@@ -1583,48 +1273,10 @@ def append_to_ann_ivfpq_index(
     it — the documented parents' trade-off, compounded).
 
     Same append contract as every store (``sources.manifest.batch_dir``)."""
-    from .dedup import spread_small_input
-
-    spark = df.sparkSession
-    path, part, mode = batch_dir(spark, path, batch_id)
-    # bounded-collect: nlist centroid rows from the index metadata
-    cent_rows = (
-        spark.read.parquet(f"{path}/_centroids").orderBy("cell").collect()
+    _ann_append(
+        _IVFPQ, df, path, batch_id, vec_col, id_col,
+        "append_to_ann_ivfpq_index",
     )
-    if not cent_rows:
-        raise ValueError(f"{path!r} holds no centroid table; build first")
-    cents = [(r.cent_id, [float(x) for x in r.centroid]) for r in cent_rows]
-    _p, _m, _ksub, _dim, cbs = _load_pq_index(spark, path)
-    extras = _index_extra_cols(
-        spark.read.parquet(path), id_col, vec_col
-    )
-    cents_lit = _planes_lit([c for _cid, c in cents])
-    vd = F.col(vec_col).cast("array<double>")
-    cell = _ivf_cell_col(F.col(vec_col), cents)
-    resid = F.zip_with(
-        vd, F.element_at(cents_lit, cell + 1), lambda a, b: a - b
-    )
-    df = spread_small_input(df)
-    # materialize the residual as a REAL column first (the build's
-    # rdf pattern): element_at/zip_with inside the encode's
-    # interpreted HOF lambdas would re-evaluate it per d2 fold
-    rdf = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        cell.alias("cell"),
-        resid.alias("__resid"),
-        *[F.col(c) for c in extras],
-    )
-    coded = rdf.select(
-        F.col(id_col),
-        F.col("cell"),
-        _pq_code_col(F.col("__resid"), cbs).alias("code"),
-        _dim_guard_col(
-            F.col(vec_col), _dim, "append_to_ann_ivfpq_index"
-        ).alias(vec_col),
-        *[F.col(c) for c in extras],
-    )
-    _write_batch(coded, path, "cell", part, mode)
 
 
 def _list_batch_dirs(spark, root: str) -> list[str]:
@@ -1765,61 +1417,42 @@ def compact_ann_index(spark, path: str) -> None:
     when nightly appends make the per-batch directory count (file
     listing, small files) matter; correctness never depends on it.
 
-    Layout is AUTODETECTED: flat PQ (``codes`` subdir), IVF / IVF-PQ
-    (``cell``-partitioned root), LSH (``bucket``-partitioned root).
+    Layout is AUTODETECTED from the store's metadata tables
+    (:func:`_stored_family`; none means a stream-created LSH index).
     The compacted data, a fresh occupancy side table, the metadata
-    tables (``_centroids``, ``_pq_*``, ``_lsh_meta``, ``_sq_meta``)
-    and the ``_ingest_stream`` marker are staged whole and published
-    once (``sources.manifest.staged_store``). Stop any maintenance
-    stream first (the shared compact contract)."""
+    tables and the ``_ingest_stream`` marker are staged whole and
+    published once (``sources.manifest.staged_store``). Stop any
+    maintenance stream first (the shared compact contract)."""
     cur, commit = store_layout(spark, path)
-    data_sub, key = _ann_layout(spark, cur)
-    if not _list_batch_dirs(spark, f"{cur}{data_sub}"):
+    fam = _stored_family(spark, cur) or _LSH
+    if not _list_batch_dirs(spark, f"{cur}{fam.data}"):
         raise ValueError(f"{path!r} holds no batch partitions; build first")
-    merged = spark.read.parquet(f"{cur}{data_sub}").drop("ingest_batch_id")
+    merged = spark.read.parquet(f"{cur}{fam.data}").drop("ingest_batch_id")
     with staged_store(spark, path, commit) as staged:
-        _write_base(merged, f"{staged}{data_sub}", key)
-        _carry(
-            spark, cur, staged, "_centroids", "_pq_codebooks", "_pq_meta",
-            "_lsh_meta", "_sq_meta", "_ingest_stream",
-        )
-
-
-def _ann_layout(spark, cur: str) -> tuple[str, str | None]:
-    """``(data subdir, partition key)`` of a resolved ANN index: flat
-    PQ keeps unpartitioned rows under ``/codes``; IVF-family indexes
-    are ``cell``-partitioned, LSH ``bucket``-partitioned, at the
-    root."""
-    if _exists(spark, f"{cur}/codes"):
-        return "/codes", None
-    return "", ("cell" if _exists(spark, f"{cur}/_centroids") else "bucket")
+        _write_batch(merged, f"{staged}{fam.data}", fam.key, -1, "overwrite")
+        _carry(spark, cur, staged, *sorted(_ANN_META), "_ingest_stream")
 
 
 def ann_index_stats(spark, path: str) -> DataFrame:
     """Operational health report for a persisted ANN index (layout
     autodetected like :func:`compact_ann_index`): one row per
     ``(ingest_batch_id, unit)`` with its row count, where ``unit`` is
-    the cell (IVF / IVF-PQ), the bucket (LSH), or NULL (flat PQ).
+    the cell (IVF family), the bucket (LSH), or NULL (flat PQ).
     This is the relation the two maintenance decisions read from:
     many batch partitions -> :func:`compact_ann_index`; skewed or
     oversized units -> rebuild with ``lloyd_iters`` / auto ``nlist``.
     Store-only read (ids never leave the executors — the aggregate is
     batchxunit-bounded)."""
     cur = resolve_root(spark, path)
-    data_sub, _key = _ann_layout(spark, cur)
-    if not _list_batch_dirs(spark, f"{cur}{data_sub}"):
+    fam = _stored_family(spark, cur) or _LSH
+    if not _list_batch_dirs(spark, f"{cur}{fam.data}"):
         raise ValueError(f"{path!r} holds no batch partitions; build first")
-    df = spark.read.parquet(f"{cur}{data_sub}")
-    if data_sub:
-        unit = F.lit(None).cast("int")
-    elif "cell" in df.columns:
-        unit = F.col("cell").cast("int")
-    else:
-        unit = F.col("bucket").cast("int")
+    unit = F.col(fam.key) if fam.key else F.lit(None)
     return (
-        df.groupBy(
+        spark.read.parquet(f"{cur}{fam.data}")
+        .groupBy(
             F.col("ingest_batch_id").cast("bigint").alias("ingest_batch_id"),
-            unit.alias("unit"),
+            unit.cast("int").alias("unit"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1845,46 +1478,11 @@ def ann_ivfpq_topk_indexed(
     cosine, reading embeddings for those R ids alone. ``where``
     filters inside the doubly-pruned scan over the index's stored
     ``extra_cols`` (pre-filter semantics)."""
-    path = resolve_root(spark, index_path)
-    cents = _load_centroids(spark, path)
-    _p, m, ksub, dim, cbs = _load_pq_index(spark, path)
-    if len(query_vec) != dim:
-        raise ValueError(f"query dim {len(query_vec)} != index dim {dim}")
-    probes = _ivf_probe_cells(query_vec, cents, nprobe)
-    cell_dots = []
-    for _cid, cvec in cents:
-        acc = 0.0
-        for x, y in zip(query_vec, cvec):
-            acc = acc + x * y
-        cell_dots.append(acc)
-    tbl = _flat_lit(_pq_query_table(query_vec, cbs))
-    cd_lit = _flat_lit(cell_dots)
-    idx = _before_batch(spark.read.parquet(path), before_batch)
-    filt = _apply_where(
-        idx.filter(F.col("cell").isin(probes)), where
-    ).select(id_col, "cell", "code")
-    adot = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.element_at(cd_lit, F.col("cell") + 1),
-        lambda acc, j: acc
-        + F.element_at(tbl, j * ksub + F.element_at(F.col("code"), j + 1) + 1),
+    return _ann_probe(
+        _IVFPQ, spark, index_path, query_vec, k, "ann_ivfpq_topk_indexed",
+        nprobe=nprobe, rerank=rerank, vec_col=vec_col, id_col=id_col,
+        where=where, before_batch=before_batch,
     )
-    take = k if rerank is None else rerank
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    ranked = (
-        filt.withColumn("adot", adot)
-        .orderBy(F.desc("adot"), F.col(id_col))
-        .limit(take)
-    )
-    if rerank is None:
-        w = Window.orderBy(F.desc("adot"), F.col(id_col))
-        return ranked.select(
-            id_col, F.row_number().over(w).alias("rank"), "adot"
-        )
-    cand = ranked.select(id_col)
-    vecs = idx.select(id_col, vec_col).join(cand, id_col)
-    return _rank_topk(vecs, query_vec, k, vec_col, id_col)
 
 
 _INDEX_DRIVER_CACHE: dict = {}
@@ -1954,16 +1552,18 @@ def _cached_driver_read(spark, path: str, sub: str, load):
 
 def _load_centroids(spark, path: str):
     """Cached ``(cent_id, vector)`` centroid table of a RESOLVED index
-    path — the shared front door of every IVF-family probe (see
-    :func:`_cached_driver_read` for the staleness contract; appends
-    keep reading the table directly, uncached, since they also need
-    its emptiness as a loud build-first error)."""
+    path — the shared front door of every IVF-family append and probe
+    (see :func:`_cached_driver_read` for the staleness contract). An
+    empty table (a build over an empty corpus) raises: there is
+    nothing to assign to or probe."""
 
     def _load():
         # bounded-collect: nlist centroid rows from the index metadata
         rows = (
             spark.read.parquet(f"{path}/_centroids").orderBy("cell").collect()
         )
+        if not rows:
+            raise ValueError(f"{path!r} holds no centroid table; build first")
         return [(r.cent_id, [float(x) for x in r.centroid]) for r in rows]
 
     return _cached_driver_read(spark, path, "_centroids", _load)
@@ -1979,15 +1579,15 @@ def _load_sq_meta_dim(spark, path: str) -> int:
 
 
 def _load_pq_index(spark, path: str):
-
-    path = resolve_root(spark, path)
+    """Cached ``(dim, codebooks)`` of a RESOLVED PQ / IVF-PQ index
+    path, ``codebooks[j][c]`` the j-th subspace's codeword c."""
 
     def _load():
         # bounded-collect: one construction-parameter row
         meta = spark.read.parquet(f"{path}/_pq_meta").collect()
         if not meta:
             raise ValueError(f"{path!r} holds no _pq_meta; build first")
-        m, ksub, dim = int(meta[0].m), int(meta[0].ksub), int(meta[0].dim)
+        m, ksub = int(meta[0].m), int(meta[0].ksub)
         # bounded-collect: m*ksub codebook rows from the index metadata
         cb_rows = spark.read.parquet(f"{path}/_pq_codebooks").collect()
         cbs: list[list[list[float]]] = [
@@ -1995,10 +1595,9 @@ def _load_pq_index(spark, path: str):
         ]
         for r in cb_rows:
             cbs[int(r.j)][int(r.c)] = [float(x) for x in r.sub]
-        return m, ksub, dim, cbs
+        return int(meta[0].dim), cbs
 
-    m, ksub, dim, cbs = _cached_driver_read(spark, path, "_pq_meta", _load)
-    return path, m, ksub, dim, cbs
+    return _cached_driver_read(spark, path, "_pq_meta", _load)
 
 
 def ann_pq_topk_indexed(
@@ -2020,23 +1619,11 @@ def ann_pq_topk_indexed(
     compressed-scan-then-exact-tail pattern. ``where`` filters inside
     the scan over the index's stored ``extra_cols`` (pre-filter
     semantics, see :func:`ann_ivf_topk_indexed`)."""
-    path, m, ksub, dim, cbs = _load_pq_index(spark, index_path)
-    if len(query_vec) != dim:
-        raise ValueError(
-            f"query dim {len(query_vec)} != index dim {dim}"
-        )
-    idx = _apply_where(
-        _before_batch(spark.read.parquet(f"{path}/codes"), before_batch),
-        where,
+    return _ann_probe(
+        _PQ, spark, index_path, query_vec, k, "ann_pq_topk_indexed",
+        rerank=rerank, vec_col=vec_col, id_col=id_col, where=where,
+        before_batch=before_batch,
     )
-    coded = idx.select(id_col, "code")
-    if rerank is None:
-        return _pq_adc_rank(coded, query_vec, cbs, k, id_col)
-    if rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    cand = _pq_adc_rank(coded, query_vec, cbs, rerank, id_col).select(id_col)
-    vecs = idx.select(id_col, vec_col).join(cand, id_col)
-    return _rank_topk(vecs, query_vec, k, vec_col, id_col)
 
 
 def _check_corpus_dim(df: DataFrame, vec_col: str, dim: int, caller: str) -> None:
@@ -2118,7 +1705,10 @@ def _dim_guard_col(vec: Column, dim: int, caller: str) -> Column:
     makes any non-NULL wrong-length row fail the BUILD loudly
     instead. NULL vectors pass through (probes already skip them via
     the norm filter). One size() comparison per row — noise next to
-    the per-row encode/dot folds."""
+    the per-row encode/dot folds. ``dim=None`` (an IVF build over an
+    empty corpus: no centroid to adopt a dim from) passes through."""
+    if dim is None:
+        return vec
     return _dim_guard_wrap(
         vec,
         vec,
@@ -2158,81 +1748,500 @@ def _collect_query_batch(
     return qid_type, out
 
 
-def _adc_topk_batch(
-    scored_src: DataFrame,
-    qtbl: DataFrame,
-    init: Column,
-    m: int,
-    ksub: int,
-    take: int,
-    id_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """Per-query ADC top-``take`` over a (query_id-joined) code
-    relation: approximate dot = strict fold of per-subspace table
-    lookups starting from ``init`` (0.0 for flat PQ, the per-cell
-    centroid dot for IVF-PQ), deterministic (adot desc, id) window
-    per query. ``qtbl`` is the broadcast (query_id, __tbl) relation
-    (skipped when the source already carries ``__tbl`` — the flat-PQ
-    cross form)."""
-    from pyspark.sql import Window
+# ---------------------------------------------------------------------------
+# The ANN index core. A family record hides one persisted layout (its
+# metadata tables, partition key, training, row encoding, probe keys
+# and score); _ann_build / _ann_append / _ann_probe run every build,
+# append and indexed probe of the five families over those records.
+# ---------------------------------------------------------------------------
 
-    scored = (
-        scored_src
-        if "__tbl" in scored_src.columns
-        else scored_src.join(F.broadcast(qtbl), query_id_col)
-    )
-    adot = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        init,
-        lambda acc, j: acc
-        + F.element_at(
-            F.col("__tbl"),
-            j * ksub + F.element_at(F.col("code"), j + 1) + 1,
-        ),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adot").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("adot", adot)
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= take)
-        .select(query_id_col, id_col, "adot", "rank")
-    )
+_ANN_META = frozenset(
+    ("_lsh_meta", "_centroids", "_pq_codebooks", "_pq_meta", "_sq_meta")
+)
 
 
-def _batch_exact_rerank(
-    cand: DataFrame,
-    vecs: DataFrame,
-    qvecs: DataFrame,
-    k: int,
-    vec_col: str,
-    id_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """Exact-cosine tail of a batch compressed probe: join embeddings
-    for the candidate (query, id) pairs ALONE (the corpus embedding
-    column stays on disk for everything else), score against the
-    broadcast query vectors, re-window to the final top-``k``. Returns
-    ``(query_id, id, cos, rank)`` — the ``cosine_join`` shape."""
-    from pyspark.sql import Window
+@dataclass
+class _Params:
+    """The frozen parameters of one index: its vector dim plus the LSH
+    planes, IVF centroids and/or PQ codebooks its family uses (``nlist``
+    is the cell count IVF-PQ records in ``_pq_meta``)."""
 
-    scored = (
-        cand.join(vecs, id_col)
-        .join(F.broadcast(qvecs), query_id_col)
-        .select(
-            F.col(query_id_col),
+    dim: int | None
+    planes: list | None = None
+    cents: list | None = None
+    cbs: list | None = None
+    nlist: int | None = None
+
+
+class _Family:
+    """One persisted ANN index family. Attributes: ``name``;
+    ``append`` (its public append, named by the layout guard);
+    ``meta`` (the metadata tables that mark the layout); ``key`` (the
+    partition key, or None for flat PQ's unpartitioned rows under
+    ``data``); ``reserved`` (layout columns ``extra_cols`` may not
+    use); ``extras`` (whether the rows carry ``extra_cols``);
+    ``score_col`` (the probe's score column).
+
+    Methods: ``train`` the parameters from a corpus (build only);
+    ``load`` them from a built store (cached driver reads); ``encode``
+    the persisted rows; ``write_meta``; ``probe_keys`` — the buckets
+    or cells a query reads (None: no pruning); ``qvals`` — the
+    per-query arrays ``score`` reads, as literals for one query or
+    broadcast columns for a batch; ``score`` a stored row."""
+
+    key: str | None = None
+    data = ""
+    reserved: tuple = ()
+    extras = True
+    score_col = "cos"
+
+    def probe_keys(self, q, p: _Params, **_):
+        return None
+
+    def qvals(self, q, p: _Params) -> dict:
+        return {"__qv": q}
+
+    def score(self, p: _Params, qc: dict, vec_col: str) -> Column:
+        return cosine(F.col(vec_col), qc["__qv"])
+
+
+class _Lsh(_Family):
+    name, append = "LSH", "append_to_ann_lsh_index"
+    meta = frozenset({"_lsh_meta"})
+    key = "bucket"
+    extras = False
+
+    def train(self, df, vec_col, id_col, dim, caller, n_planes, target_bucket):
+        # n_planes=None derives the depth from the corpus count (the
+        # auto_planes rule — a fixed depth is the measured quadratic at
+        # 10x); the persisted _lsh_meta then makes the choice sticky for
+        # every append/probe. The default stays the shared constant so the
+        # oracle-gated queries keep a bucket space DuckDB can replay from
+        # the same constant.
+        #
+        # target_bucket defaults to 128 here — FOUR TIMES the multi-table
+        # constructions' 32 — because this store is SINGLE-table: with no
+        # OR-construction, every extra plane multiplies per-pair recall at
+        # a given cosine by p_plane < 1 uncompensated, and the per-vector
+        # candidate budget of the multi-table forms (n_tables x 32 = 256)
+        # affords one table a fatter bucket (PARITY "b27 auto-depth": at
+        # 20k vectors the target-32 depth 9 was slower than depth 8 AND
+        # found 37% fewer pairs; the target-128 depth 7 was fastest with
+        # the most pairs). Depth still grows with log2(n), so the verify
+        # stays linear-in-batch at the 100 TB design point.
+        if n_planes is None:
+            n_planes = auto_planes(df.count(), target_bucket)
+        return _Params(dim, planes=[_hyperplane(i, dim) for i in range(n_planes)])
+
+    def load(self, spark, path, caller, n_planes=None, dim=None, **kw):
+        n_planes, dim = _resolve_lsh_params(spark, path, n_planes, dim, caller, **kw)
+        return _Params(dim, planes=[_hyperplane(i, dim) for i in range(n_planes)])
+
+    def encode(self, df, p, vec_col, id_col, extras, caller):
+        return df.select(
             F.col(id_col),
-            cosine(F.col(vec_col), F.col("__qv")).alias("cos"),
+            _dim_guard_col(F.col(vec_col), p.dim, caller).alias(vec_col),
+            _sign_bucket_col(F.col(vec_col), p.planes).alias("bucket"),
         )
+
+    def write_meta(self, spark, staged, p):
+        _write_meta(
+            spark, staged, "_lsh_meta",
+            [(len(p.planes), int(p.dim))], "n_planes int, dim int",
+        )
+
+    def probe_keys(self, q, p, probe_bits=0, probe_hamming=1, **_):
+        return _multiprobe_buckets(q, p.planes, probe_bits, probe_hamming)
+
+
+class _Ivf(_Family):
+    name, append = "IVF", "append_to_ann_ivf_index"
+    meta = frozenset({"_centroids"})
+    key = "cell"
+
+    def train(
+        self, df, vec_col, id_col, dim, caller, nlist, lloyd_iters,
+        target_cell, **_,
+    ):
+        if nlist is None:
+            # auto-size cells from the corpus count (ceil(n/target_cell) —
+            # the semantic_dedup rule; PARITY scale rows: fixed cells make
+            # probe candidate sets grow linearly with the corpus, auto
+            # keeps expected occupancy ~target_cell). The DEFAULT stays
+            # the fixed constant so gated constructions remain
+            # oracle-replayable; pass None at scale.
+            nlist = max(1, -(-df.count() // int(target_cell)))
+        cents = _ivf_centroids(df, nlist, vec_col, id_col)
+        if lloyd_iters and cents:
+            cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
+        if dim is None and cents:
+            # no declared dim: the write-path guard adopts the SEEDED
+            # CENTROID's length. If the pick sampled a minority
+            # wrong-length row of a mixed-dim corpus, that guard would
+            # fail the MAJORITY rows naming the minority length (ADVICE
+            # r14) — cross-check a corpus sample up front so the loud
+            # failure names both lengths.
+            dim = len(cents[0][1])
+            _check_corpus_dim(df, vec_col, dim, caller)
+        return _Params(dim, cents=cents, nlist=nlist)
+
+    def load(self, spark, path, caller, **_):
+        cents = _load_centroids(spark, path)
+        return _Params(len(cents[0][1]), cents=cents)
+
+    def encode(self, df, p, vec_col, id_col, extras, caller):
+        return df.select(
+            F.col(id_col),
+            _dim_guard_col(F.col(vec_col), p.dim, caller).alias(vec_col),
+            _ivf_cell_col(F.col(vec_col), p.cents).alias("cell"),
+            *extras,
+        )
+
+    def write_meta(self, spark, staged, p):
+        _write_meta(
+            spark, staged, "_centroids",
+            [(i, cid, vec) for i, (cid, vec) in enumerate(p.cents)],
+            "cell int, cent_id bigint, centroid array<double>",
+        )
+
+    def probe_keys(self, q, p, nprobe=ANN_NPROBE, **_):
+        return _ivf_probe_cells(q, p.cents, nprobe)
+
+
+class _Pq(_Family):
+    name, append = "PQ", "append_to_ann_pq_index"
+    meta = frozenset({"_pq_codebooks", "_pq_meta"})
+    data = "/codes"
+    score_col = "adot"
+
+    def train(self, df, vec_col, id_col, dim, caller, m, ksub, lloyd_iters):
+        cbs = pq_codebooks(df, m, ksub, dim, vec_col, id_col, lloyd_iters)
+        return _Params(dim, cbs=cbs)
+
+    def load(self, spark, path, caller, **_):
+        dim, cbs = _load_pq_index(spark, path)
+        return _Params(dim, cbs=cbs)
+
+    def encode(self, df, p, vec_col, id_col, extras, caller):
+        return df.select(
+            F.col(id_col),
+            _pq_code_col(F.col(vec_col), p.cbs).alias("code"),
+            _dim_guard_col(F.col(vec_col), p.dim, caller).alias(vec_col),
+            *extras,
+        )
+
+    def write_meta(self, spark, staged, p):
+        _write_meta(
+            spark, staged, "_pq_codebooks",
+            [(j, c, sub) for j, book in enumerate(p.cbs) for c, sub in enumerate(book)],
+            "j int, c int, sub array<double>",
+        )
+        row = (len(p.cbs), len(p.cbs[0]), int(p.dim))
+        schema = "m int, ksub int, dim int"
+        if p.nlist is not None:  # IVF-PQ also records its cell count
+            row, schema = row + (int(p.nlist),), schema + ", nlist int"
+        _write_meta(spark, staged, "_pq_meta", [row], schema)
+
+    def qvals(self, q, p):
+        return {"__tbl": _pq_query_table(q, p.cbs)}
+
+    def score(self, p, qc, vec_col):
+        return _adc(p.cbs, qc["__tbl"], F.lit(0.0))
+
+
+class _IvfPq(_Ivf):
+    name, append = "IVF-PQ", "append_to_ann_ivfpq_index"
+    meta = _Ivf.meta | _Pq.meta
+    score_col = "adot"
+
+    def train(self, df, vec_col, id_col, dim, caller, m, ksub, pq_lloyd_iters, **kw):
+        p = super().train(df, vec_col, id_col, dim, caller, **kw)
+        p.cbs = pq_codebooks(
+            self._residuals(df, p, vec_col, id_col, ()), m, ksub, dim,
+            vec_col="__resid", id_col=id_col, lloyd_iters=pq_lloyd_iters,
+        )
+        return p
+
+    def load(self, spark, path, caller, **_):
+        dim, cbs = _load_pq_index(spark, path)
+        return _Params(dim, cents=_load_centroids(spark, path), cbs=cbs)
+
+    @staticmethod
+    def _residuals(df, p, vec_col, id_col, extras):
+        """``(id, vec, cell, __resid, extras...)``: each vector's cell and
+        its residual ``x - centroid(cell)`` as a REAL column — referenced
+        inside the encode's interpreted HOF lambdas, an inline
+        element_at/zip_with would be re-evaluated per d2 fold."""
+        cell = _ivf_cell_col(F.col(vec_col), p.cents)
+        resid = F.zip_with(
+            F.col(vec_col).cast("array<double>"),
+            F.element_at(_planes_lit([c for _cid, c in p.cents]), cell + 1),
+            lambda a, b: a - b,
+        )
+        return df.select(
+            F.col(id_col), F.col(vec_col), cell.alias("cell"),
+            resid.alias("__resid"), *extras,
+        )
+
+    def encode(self, df, p, vec_col, id_col, extras, caller):
+        return self._residuals(df, p, vec_col, id_col, extras).select(
+            F.col(id_col),
+            F.col("cell"),
+            _pq_code_col(F.col("__resid"), p.cbs).alias("code"),
+            _dim_guard_col(F.col(vec_col), p.dim, caller).alias(vec_col),
+            *extras,
+        )
+
+    def write_meta(self, spark, staged, p):
+        _Ivf.write_meta(self, spark, staged, p)
+        _Pq.write_meta(self, spark, staged, p)
+
+    def qvals(self, q, p):
+        return {
+            "__tbl": _pq_query_table(q, p.cbs),
+            "__cds": [dot_py(q, c) for _cid, c in p.cents],
+        }
+
+    def score(self, p, qc, vec_col):
+        # residual ADC: the query-cell centroid dot, then the table fold
+        cell_dot = F.element_at(qc["__cds"], F.col("cell") + 1)
+        return _adc(p.cbs, qc["__tbl"], cell_dot)
+
+
+class _Sq8(_Ivf):
+    name, append = "IVF-SQ8", "append_to_ann_ivfsq8_index"
+    meta = _Ivf.meta | {"_sq_meta"}
+    # reserved for this family only: an IVF/LSH index with a user extra
+    # named "scale" keeps working
+    reserved = ("scale", "codes")
+    score_col = "acos"
+
+    def load(self, spark, path, caller, **_):
+        dim = _load_sq_meta_dim(spark, path)
+        return _Params(dim, cents=_load_centroids(spark, path))
+
+    def encode(self, df, p, vec_col, id_col, extras, caller):
+        # the raw vector is KEPT (like IVF-PQ) so rerank can read exact
+        # embeddings for R ids; columnar pruning keeps it out of
+        # code-only probe scans
+        staged = df.select(
+            F.col(id_col),
+            _dim_guard_col(F.col(vec_col), p.dim, caller).alias(vec_col),
+            _to_double(F.col(vec_col)).alias("__v"),
+            _ivf_cell_col(F.col(vec_col), p.cents).alias("cell"),
+            *extras,
+        ).withColumn("scale", _sq8_scale(F.col("__v")))
+        return staged.select(
+            F.col(id_col),
+            F.col("cell"),
+            F.col("scale"),
+            _sq8_codes(F.col("__v"), F.col("scale")).alias("codes"),
+            F.col(vec_col),
+            *extras,
+        )
+
+    def write_meta(self, spark, staged, p):
+        super().write_meta(spark, staged, p)
+        _write_meta(
+            spark, staged, "_sq_meta",
+            [(int(p.dim), "sq8_pervec")], "dim int, scheme string",
+        )
+
+    def score(self, p, qc, vec_col):
+        # scale == 0 <=> the stored vector is all-zero: its reconstructed
+        # cosine is 0/0 — NULL it explicitly (sorts last under DESC) so
+        # ANSI mode never trips on the degenerate row
+        dec = _sq8_decode(F.col("codes"), F.col("scale"))
+        return F.when(F.col("scale") > 0, cosine(dec, qc["__qv"]))
+
+
+_LSH, _IVF, _PQ, _IVFPQ, _SQ8 = _Lsh(), _Ivf(), _Pq(), _IvfPq(), _Sq8()
+_FAMILIES = (_LSH, _IVF, _PQ, _IVFPQ, _SQ8)
+
+
+def _stored_family(spark, path: str) -> _Family | None:
+    """The family whose metadata tables the store at ``path`` holds;
+    None when it holds none (missing, empty, or an LSH index a stream
+    created without a build)."""
+    present = frozenset(_ls(spark, path)) & _ANN_META
+    if not present:
+        return None
+    for fam in _FAMILIES:
+        if fam.meta == present:
+            return fam
+    raise ValueError(
+        f"{path!r} holds ANN metadata tables {sorted(present)} of no "
+        "known index layout"
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
+
+
+def _ann_build(
+    fam: _Family, df: DataFrame, path: str, commit: str, vec_col: str,
+    id_col: str, dim: int | None, caller: str, extra_cols=(), **train_kw,
+) -> None:
+    """Build a ``fam`` index at ``path``: stage the whole store, check
+    a corpus sample against the declared ``dim``, train, encode the
+    spread corpus into the base partition, write the metadata tables,
+    publish once (``sources.manifest.staged_store``)."""
+    from .dedup import spread_small_input
+
+    for knob in ("lloyd_iters", "pq_lloyd_iters"):
+        if train_kw.get(knob, 0) < 0:
+            raise ValueError(f"{knob} must be >= 0, got {train_kw[knob]}")
+    _check_extra_cols(extra_cols, id_col, vec_col, fam.reserved)
+    spark = df.sparkSession
+    with staged_store(spark, path, commit) as staged:
+        if dim is not None:
+            _check_corpus_dim(df, vec_col, dim, caller)
+        p = fam.train(df, vec_col, id_col, dim, caller, **train_kw)
+        rows = fam.encode(
+            spread_small_input(df), p, vec_col, id_col, list(extra_cols), caller
+        )
+        _write_batch(rows, f"{staged}{fam.data}", fam.key, -1, "overwrite")
+        fam.write_meta(spark, staged, p)
+
+
+def _ann_append(
+    fam: _Family, df: DataFrame, path: str, batch_id: int | None,
+    vec_col: str, id_col: str, caller: str, **load_kw,
+) -> None:
+    """Append one batch to a ``fam`` index: resolve the batch
+    partition (``sources.manifest.batch_dir``), refuse a store of
+    another family (its rows would not match this layout — probes
+    would fail on the partition key or read NULL codes), load the
+    FROZEN parameters, carry the store's extra columns, encode, write
+    the partition and its occupancy stats. A store with no metadata
+    bootstraps an LSH index; every other family's loader raises
+    "build first" on it."""
+    from .dedup import spread_small_input
+
+    spark = df.sparkSession
+    path, part, mode = batch_dir(spark, path, batch_id)
+    found = _stored_family(spark, path)
+    if found not in (None, fam):
+        diff = [f"missing {t}" for t in sorted(fam.meta - found.meta)]
+        diff += [f"has {t}" for t in sorted(found.meta - fam.meta)]
+        raise ValueError(
+            f"{caller}: {path!r} holds an {found.name} index, not "
+            f"{fam.name} ({', '.join(diff)}) — use {found.append}"
+        )
+    p = fam.load(spark, path, caller, **load_kw)
+    extras = []
+    if fam.extras:
+        idx = spark.read.parquet(f"{path}{fam.data}")
+        extras = _index_extra_cols(idx, id_col, vec_col, fam.reserved)
+    rows = fam.encode(spread_small_input(df), p, vec_col, id_col, extras, caller)
+    _write_batch(rows, f"{path}{fam.data}", fam.key, part, mode)
+
+
+def _ann_probe(
+    fam: _Family, spark, index_path: str, query, k: int, caller: str, *,
+    nprobe: int | None = None, rerank: int | None = None,
+    vec_col: str = "embedding", id_col: str = "vec_id", where=None,
+    before_batch: int | None = None, query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec", n_planes: int | None = None,
+    probe_bits: int = 0, probe_hamming: int = 1,
+) -> DataFrame:
+    """Probe a ``fam`` index with one query vector — ``(id, rank,
+    <score_col>)`` — or with a DataFrame of queries — ``(query_id, id,
+    <score_col>, rank)``. One front door validates ``k``/``nprobe``/
+    ``rerank`` and every query's dim (NULL or mismatched vectors would
+    NULL-fold every score), one read prunes the store (batch fence,
+    key ``isin`` over the probed buckets/cells — the union over a
+    batch — and the ``where`` pre-filter), and ``fam.score`` ranks it.
+    A single query keeps ``orderBy.limit`` (TakeOrderedAndProject)
+    with literal query values; a batch joins its (query, key) pairs
+    and per-query values as broadcasts and ranks per query in one
+    window. ``rerank=R`` re-ranks each query's top R by exact cosine,
+    reading embeddings for those ids alone, and returns ``cos``."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if nprobe is not None and nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    if rerank is not None and rerank < k:
+        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
+    path = resolve_root(spark, index_path)
+    single = not isinstance(query, DataFrame)
+    if single:
+        q = [float(x) for x in query]
+        # an index with no recorded dim (stream-created LSH) adopts it
+        p = fam.load(
+            spark, path, caller, n_planes=n_planes, fallback_dim=len(q)
+        )
+        if len(q) != p.dim:
+            raise ValueError(f"query dim {len(q)} != index dim {p.dim}")
+        qbatch = [(None, q)]
+    else:
+        p = fam.load(spark, path, caller)
+        qid_type, qbatch = _collect_query_batch(
+            query, query_id_col, query_vec_col, p.dim
+        )
+    idx = _before_batch(
+        spark.read.parquet(f"{path}{fam.data}"), before_batch
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
+    rows = idx
+    if fam.key is not None:
+        pairs = [
+            (qid, int(key))
+            for qid, v in qbatch
+            for key in fam.probe_keys(
+                v, p, nprobe=nprobe, probe_bits=probe_bits,
+                probe_hamming=probe_hamming,
+            )
+        ]
+        keys = sorted({key for _, key in pairs})
+        rows = rows.filter(F.col(fam.key).isin(keys))
+    rows = _apply_where(rows, where)
+    take = k if rerank is None else rerank
+    if single:
+        qc = {n: _vec_lit(v) for n, v in fam.qvals(q, p).items()}
+        ranked = _top_single(
+            rows, fam.score(p, qc, vec_col), fam.score_col, take, id_col
+        )
+        if rerank is None:
+            return ranked
+        vecs = idx.select(id_col, vec_col).join(ranked.select(id_col), id_col)
+        return _top_single(
+            vecs, cosine(F.col(vec_col), _vec_lit(q)), "cos", k, id_col
+        )
+
+    def query_rows(data, fields):
+        schema = StructType([StructField(query_id_col, qid_type), *fields])
+        return local_rows_df(spark, data, schema)
+
+    vals = [(qid, fam.qvals(v, p)) for qid, v in qbatch]
+    names = list(vals[0][1])
+    qv = query_rows(
+        [(qid, *d.values()) for qid, d in vals],
+        [StructField(n, ArrayType(DoubleType())) for n in names],
+    )
+    if fam.key is None:
+        # declared-crossjoin: code scan x broadcast QUERY BATCH — the
+        # batch is the retrieval workload (bounded), and the product is
+        # the definitional score relation (flat PQ scores every query
+        # against every code; the IVF families prune by cell)
+        scored = rows.crossJoin(F.broadcast(qv))
+    else:
+        qkeys = query_rows(pairs, [StructField(fam.key, IntegerType())])
+        scored = rows.join(F.broadcast(qkeys), fam.key).join(
+            F.broadcast(qv), query_id_col
+        )
+    score = fam.score(p, {n: F.col(n) for n in names}, vec_col)
+    ranked = _top_batch(
+        scored, score, fam.score_col, take, id_col, query_id_col
+    )
+    if rerank is None:
+        return ranked
+    if names != ["__qv"]:
+        qv = query_rows(qbatch, [StructField("__qv", ArrayType(DoubleType()))])
+    cand = (
+        ranked.select(query_id_col, id_col)
+        .join(idx.select(id_col, vec_col), id_col)
+        .join(F.broadcast(qv), query_id_col)
+    )
+    return _top_batch(
+        cand, cosine(F.col(vec_col), F.col("__qv")), "cos", k, id_col,
+        query_id_col,
     )
 
 
@@ -2270,60 +2279,11 @@ def ann_pq_join_indexed(
     whole batch against each Arrow batch executor-side (broadcast
     tables, no shuffle before the per-query top-k window), and only
     the rerank tail ever touches float data."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        StructField,
-        StructType,
-    )
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    path, m, ksub, dim, cbs = _load_pq_index(spark, index_path)
-    qid_type, qbatch = _collect_query_batch(
-        queries, query_id_col, query_vec_col, dim
-    )
-    qtbl = local_rows_df(
-        spark,
-        [(qid, _pq_query_table(vec, cbs)) for qid, vec in qbatch],
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField("__tbl", ArrayType(DoubleType())),
-            ]
-        ),
-    )
-    idx = _apply_where(
-        _before_batch(spark.read.parquet(f"{path}/codes"), before_batch),
-        where,
-    )
-    # declared-crossjoin: code scan x broadcast QUERY BATCH — the
-    # batch is the retrieval workload (bounded), and the product is
-    # the definitional ADC score relation (flat PQ scores every
-    # query against every code; IVF-PQ is the pruned form)
-    coded = idx.select(id_col, "code").crossJoin(F.broadcast(qtbl))
-    take = k if rerank is None else rerank
-    ranked = _adc_topk_batch(
-        coded, qtbl, F.lit(0.0), m, ksub, take, id_col, query_id_col
-    )
-    if rerank is None:
-        return ranked
-    qvecs = local_rows_df(
-        spark,
-        qbatch,
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField("__qv", ArrayType(DoubleType())),
-            ]
-        ),
-    )
-    cand = ranked.select(query_id_col, id_col)
-    return _batch_exact_rerank(
-        cand, idx.select(id_col, vec_col), qvecs, k,
-        vec_col, id_col, query_id_col,
+    return _ann_probe(
+        _PQ, spark, index_path, queries, k, "ann_pq_join_indexed",
+        rerank=rerank, vec_col=vec_col, id_col=id_col, where=where,
+        before_batch=before_batch, query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
     )
 
 
@@ -2349,8 +2309,8 @@ def ann_ivfpq_join_indexed(
     planning time (``PartitionFilters``) reading the CODE column only,
     and each (query, candidate) pair scores by residual ADC —
     ``dot(q, centroid(cell)) + ordered table fold`` — with the
-    per-(query, cell) centroid dots and per-query tables riding in as
-    broadcasts. Cell pruning x columnar pruning x batch amortization:
+    (query, cell) pairs and each query's centroid dots and ADC table
+    riding in as broadcasts. Cell pruning x columnar pruning x batch amortization:
     no full-table scan, no embedding bytes read (until the optional
     rerank tail).
 
@@ -2361,86 +2321,17 @@ def ann_ivfpq_join_indexed(
     ``rerank >= |corpus|`` the output is BITWISE :func:`cosine_join`
     (pinned in tests).
 
-    |Q| ceiling: the query batch (vectors + per-query ADC tables,
-    8*(dim + m*ksub) bytes per query) is driver-materialized by
+    |Q| ceiling: the query batch (vectors + per-query ADC tables and
+    centroid dots, 8*(dim + m*ksub + nlist) bytes per query) is
+    driver-materialized by
     design — 10^5 queries at the defaults is well under 1 GB;
     millions of queries should chunk the batch and union the outputs
     (per-query independence makes chunking semantics-free)."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    path = resolve_root(spark, index_path)
-    cents = _load_centroids(spark, path)
-    _p, m, ksub, dim, cbs = _load_pq_index(spark, path)
-    qid_type, qbatch = _collect_query_batch(
-        queries, query_id_col, query_vec_col, dim
-    )
-    # per-(query, cell) probe pairs + centroid dots, driver-side in
-    # the engine's strict fold order (the single-query probe's
-    # cell_dots, batched)
-    pairs = []
-    for qid, vec in qbatch:
-        for cell in _ivf_probe_cells(vec, cents, nprobe):
-            pairs.append((qid, int(cell), dot_py(vec, cents[cell][1])))
-    cells = sorted({c for _q, c, _d in pairs})
-    qcells = local_rows_df(
-        spark,
-        pairs,
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField("cell", IntegerType()),
-                StructField("__cd", DoubleType()),
-            ]
-        ),
-    )
-    qtbl = local_rows_df(
-        spark,
-        [(qid, _pq_query_table(vec, cbs)) for qid, vec in qbatch],
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField("__tbl", ArrayType(DoubleType())),
-            ]
-        ),
-    )
-    idx = _before_batch(spark.read.parquet(path), before_batch)
-    coded = (
-        _apply_where(idx.filter(F.col("cell").isin(cells)), where)
-        .select(id_col, "cell", "code")
-        .join(F.broadcast(qcells), "cell")
-    )
-    take = k if rerank is None else rerank
-    ranked = _adc_topk_batch(
-        coded, qtbl, F.col("__cd"), m, ksub, take, id_col, query_id_col
-    )
-    if rerank is None:
-        return ranked
-    qvecs = local_rows_df(
-        spark,
-        qbatch,
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField("__qv", ArrayType(DoubleType())),
-            ]
-        ),
-    )
-    cand = ranked.select(query_id_col, id_col)
-    return _batch_exact_rerank(
-        cand, idx.select(id_col, vec_col), qvecs, k,
-        vec_col, id_col, query_id_col,
+    return _ann_probe(
+        _IVFPQ, spark, index_path, queries, k, "ann_ivfpq_join_indexed",
+        nprobe=nprobe, rerank=rerank, vec_col=vec_col, id_col=id_col,
+        where=where, before_batch=before_batch, query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
     )
 
 
@@ -2759,37 +2650,106 @@ def knn_join_lsh(
             # declared-crossjoin: opt-in exact fallback, misses only
             misses.crossJoin(right.select(F.col(id_col).alias("right_id")))
         )
-    sc = left.sparkSession.sparkContext
-    cand = cand.repartition(sc.defaultParallelism)
-    vec_d = F.col(vec_col).cast("array<double>")
-    # zero-norm vectors (empty documents) have no defined cosine and
-    # under ANSI mode 1.0/0.0 aborts the whole job — exclude them from
-    # the verify on BOTH sides (the oracle mirrors this filter)
-    el = left.select(
-        F.col(id_col).alias("left_id"),
-        vec_d.alias("emb_l"),
-        F.sqrt(dot_strict(F.col(vec_col), F.col(vec_col))).alias("norm_l"),
-    ).filter(F.col("norm_l") > 0)
-    er = right.select(
-        F.col(id_col).alias("right_id"),
-        vec_d.alias("emb_r"),
-        F.sqrt(dot_strict(F.col(vec_col), F.col(vec_col))).alias("norm_r"),
-    ).filter(F.col("norm_r") > 0)
     w = Window.partitionBy("left_id").orderBy(
         F.desc("cos"), F.asc("right_id")
     )
     return (
-        cand.join(el, "left_id")
-        .join(er, "right_id")
-        .withColumn(
-            "cos",
-            _dot_dbl(F.col("emb_l"), F.col("emb_r"))
-            / (F.col("norm_l") * F.col("norm_r")),
-        )
+        _verify_pairs(cand, left, right, ("left_id", "right_id"), vec_col, id_col)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("left_id", "right_id", "cos", "rank")
     )
+
+
+def _verify_pairs(
+    cand: DataFrame, left: DataFrame, right: DataFrame, ids: tuple,
+    vec_col: str, id_col: str, threshold: float | None = None,
+) -> DataFrame:
+    """The one exact-cosine verify of candidate id pairs: ``cand``
+    holds the ``ids = (left id, right id)`` columns naming rows of
+    ``left`` and ``right``. Returns ``cand`` plus ``cos`` (and its
+    verify columns), filtered to ``cos >= threshold`` when given.
+
+    Each side's vectors are cast to double and their norms folded
+    ONCE per vector, so a pair costs one strict fold, not three —
+    the same products in the same order as ``cosine``, so ``cos``
+    stays bitwise-equal to the oracle's inline cosine. Zero-norm
+    vectors have no defined cosine (under ANSI mode 1.0/0.0 aborts
+    the job) and are dropped on both sides. ``cand`` is re-spread
+    first: AQE sizes post-shuffle partitions by BYTES, and two-id
+    rows would coalesce the CPU-heavy verify onto one or two
+    cores."""
+    sc = cand.sparkSession.sparkContext
+    cand = cand.repartition(sc.defaultParallelism)
+    norm = F.sqrt(dot_strict(F.col(vec_col), F.col(vec_col)))
+    for i, (df, name) in enumerate(zip((left, right), ids)):
+        side = df.select(
+            F.col(id_col).alias(name),
+            F.col(vec_col).cast("array<double>").alias(f"__e{i}"),
+            norm.alias(f"__n{i}"),
+        )
+        cand = cand.join(side.filter(F.col(f"__n{i}") > 0), name)
+    out = cand.withColumn(
+        "cos",
+        _dot_dbl(F.col("__e0"), F.col("__e1")) / (F.col("__n0") * F.col("__n1")),
+    )
+    return out if threshold is None else out.filter(F.col("cos") >= threshold)
+
+
+def _neardup_against(
+    fam: _Family, batch: DataFrame, index_path: str, threshold: float,
+    vec_col: str, id_col: str, cap: int | None, cap_name: str, caller: str,
+    batch_keys, **load_kw,
+) -> DataFrame:
+    """Near-dup of a new batch against a persisted ``fam`` index: the
+    body both ``cosine_neardup_against_*`` forms share. They differ
+    only in the candidate key — ``batch_keys(batch, params)`` gives
+    the batch's ``(doc_new, <fam.key>)`` rows. Candidates are the key
+    equi-join against the index's ``(doc_old, key)`` columns (ids only
+    through the shuffle; the ``cap`` hot-key guard drops index keys
+    holding more than ``cap`` vectors, from the persisted occupancy
+    side table when it is fresh), then :func:`_verify_pairs`."""
+    from .dedup import spread_small_input
+
+    if cap is not None and cap < 1:
+        raise ValueError(f"{cap_name} must be >= 1, got {cap}")
+    spark = batch.sparkSession
+    path = resolve_root(spark, index_path)
+    p = fam.load(spark, path, caller, **load_kw)
+    # dim discipline: a wrong-dim batch NULL-folds every key
+    # assignment AND every verify cosine, so the job would silently
+    # report ZERO duplicate pairs. Eager one-row check first (fails
+    # before any work); the per-row guard inside batch_keys catches
+    # MIXED-dim batches the sample can't see.
+    # bounded-collect: one sampled row for eager dim validation
+    sample = batch.filter(F.col(vec_col).isNotNull()).select(vec_col).head()
+    if sample is not None and len(sample[0]) != p.dim:
+        raise ValueError(
+            f"{caller}: batch {vec_col!r} has dim {len(sample[0])} but the "
+            f"index at {path!r} holds dim-{p.dim} vectors — a mismatched "
+            f"batch would NULL-fold every {fam.key} assignment and silently "
+            "return zero duplicate pairs"
+        )
+    batch = spread_small_input(batch)
+    idx = spark.read.parquet(path)
+    idxk = idx.select(F.col(id_col).alias("doc_old"), fam.key)
+    if cap is not None:
+        # occupancy is measured on the INDEX side: the factor that
+        # multiplies every colliding batch vector's candidate count
+        idxk = _occupancy_filter(
+            idxk, cap, keys=(fam.key,), arg_name=cap_name,
+            stats=_load_occ_counts(spark, path, fam.key),
+        )
+    cand = (
+        batch_keys(batch, p)
+        .join(idxk, on=fam.key)
+        .filter(F.col("doc_old") != F.col("doc_new"))
+        .select("doc_old", "doc_new")
+        .distinct()
+    )
+    return _verify_pairs(
+        cand, batch, idx, ("doc_new", "doc_old"), vec_col, id_col, threshold
+    ).select("doc_old", "doc_new", "cos")
 
 
 def cosine_neardup_against_index(
@@ -2832,93 +2792,23 @@ def cosine_neardup_against_index(
     defensively (a vector must not near-dup itself).
 
     ``max_bucket`` (optional) is the hot-bucket guard of the IVF
-    twin's ``max_cell`` (round 14 — the incremental LSH form was the
-    one remaining candidate join without a degenerate-blob bound):
+    twin's ``max_cell``:
     index buckets holding more than ``max_bucket`` vectors are
     dropped from candidate generation. Recall trade: pairs whose
     INDEXED member sits in a dropped hot bucket are not reported.
     Default ``None`` keeps the construction exact w.r.t. the bucket
     rule — the oracle-gated row relies on that."""
-    spark = batch.sparkSession
-    from .dedup import spread_small_input
+    caller = "cosine_neardup_against_index"
 
-    if max_bucket is not None and max_bucket < 1:
-        raise ValueError(f"max_bucket must be >= 1, got {max_bucket}")
-    index_path = resolve_root(spark, index_path)
-    n_planes, dim = _resolve_lsh_params(
-        spark, index_path, n_planes, dim, "cosine_neardup_against_index"
-    )
-    # dim discipline (ADVICE r14 — the IVF twin's r13 contract): a
-    # wrong-dim batch NULL-folds every sign-bit dot AND every verify
-    # cosine, so the job would silently report ZERO duplicate pairs —
-    # duplicates would survive the nightly dedup. Eager one-row check
-    # against the resolved _lsh_meta dim first (fails before any
-    # work); the per-row guard armed below (guard_caller) catches
-    # MIXED-dim batches the sample can't see.
-    # bounded-collect: one sampled row for eager dim validation
-    sample = batch.filter(F.col(vec_col).isNotNull()).select(vec_col).head()
-    if sample is not None and len(sample[0]) != dim:
-        raise ValueError(
-            f"cosine_neardup_against_index: batch {vec_col!r} has dim "
-            f"{len(sample[0])} but the index at {index_path!r} holds "
-            f"dim-{dim} buckets — a mismatched batch would NULL-fold "
-            "every bucket assignment and silently return zero "
-            "duplicate pairs"
-        )
-    batch = spread_small_input(batch)
-    idx = spark.read.parquet(index_path)
-    bb = _multi_table_buckets(
-        batch,
-        n_planes,
-        1,
-        dim,
-        vec_col,
-        id_col,
-        probe_bits,
-        guard_caller="cosine_neardup_against_index",
-    ).select(F.col(id_col).alias("doc_new"), "bucket")
-    idxb = idx.select(F.col(id_col).alias("doc_old"), "bucket")
-    if max_bucket is not None:
-        # hot-bucket guard: occupancy measured on the INDEX side (the
-        # factor multiplying every colliding batch vector's candidate
-        # count) — the shared _occupancy_filter, like the IVF twin.
-        # The persisted _occ_counts side table (written by every
-        # build/append/compact) makes the guard a metadata read; a
-        # store whose stats are absent or stale recounts (r15).
-        idxb = _occupancy_filter(
-            idxb,
-            max_bucket,
-            keys=("bucket",),
-            stats=_load_occ_counts(spark, index_path, "bucket"),
-        )
-    cand = (
-        bb.join(idxb, on="bucket")
-        .filter(F.col("doc_old") != F.col("doc_new"))
-        .select("doc_old", "doc_new")
-        .distinct()
-    )
-    cand = cand.repartition(spark.sparkContext.defaultParallelism)
-    vec_d = F.col(vec_col).cast("array<double>")
-    eb = batch.select(
-        F.col(id_col).alias("doc_new"),
-        vec_d.alias("emb_new"),
-        F.sqrt(dot_strict(F.col(vec_col), F.col(vec_col))).alias("norm_new"),
-    ).filter(F.col("norm_new") > 0)
-    ei = idx.select(
-        F.col(id_col).alias("doc_old"),
-        vec_d.alias("emb_old"),
-        F.sqrt(dot_strict(F.col(vec_col), F.col(vec_col))).alias("norm_old"),
-    ).filter(F.col("norm_old") > 0)
-    return (
-        cand.join(eb, "doc_new")
-        .join(ei, "doc_old")
-        .withColumn(
-            "cos",
-            _dot_dbl(F.col("emb_old"), F.col("emb_new"))
-            / (F.col("norm_old") * F.col("norm_new")),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("doc_old", "doc_new", "cos")
+    def buckets(b: DataFrame, p: _Params) -> DataFrame:
+        return _multi_table_buckets(
+            b, len(p.planes), 1, p.dim, vec_col, id_col, probe_bits,
+            guard_caller=caller,
+        ).select(F.col(id_col).alias("doc_new"), "bucket")
+
+    return _neardup_against(
+        _LSH, batch, index_path, threshold, vec_col, id_col, max_bucket,
+        "max_bucket", caller, buckets, n_planes=n_planes, dim=dim,
     )
 
 
@@ -2972,100 +2862,28 @@ def cosine_neardup_against_ivf_index(
     the bound). Default ``None`` keeps the construction exact w.r.t.
     the ``nprobe`` probe rule — the oracle-gated row relies on
     that."""
-    spark = batch.sparkSession
-    from .dedup import spread_small_input
-
+    caller = "cosine_neardup_against_ivf_index"
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    if max_cell is not None and max_cell < 1:
-        raise ValueError(f"max_cell must be >= 1, got {max_cell}")
-    path = resolve_root(spark, index_path)
-    cents = _load_centroids(spark, path)
-    if not cents:
-        raise ValueError(
-            f"{path!r} holds no centroid table; build the IVF/IVF-SQ8 "
-            "index first"
+
+    def cells(b: DataFrame, p: _Params) -> DataFrame:
+        # the per-row guard wraps the probe OUTPUT, not the vector fed
+        # into the HOF folds (ADVICE r14): expressions referenced inside
+        # interpreted HOF lambdas are re-evaluated per element, so a
+        # guarded VECTOR would recompute the size() check per centroid;
+        # the guarded probe-cells array is evaluated ONCE per row
+        # (explode materializes its child a single time)
+        probe = _batch_dim_guard(
+            _ivf_probe_cells_col(F.col(vec_col), p.cents, nprobe),
+            F.col(vec_col), p.dim, caller,
         )
-    # dim discipline (ADVICE r13): a wrong-dim batch vector NULL-folds
-    # every centroid dot in _ivf_probe_cells_col AND every verify
-    # cosine, so the job would silently report ZERO duplicate pairs —
-    # duplicates would survive the nightly dedup. Eager one-row check
-    # first (fails before any work, like the probes), then the exact
-    # per-row _dim_guard_col below catches MIXED-dim batches the
-    # sample can't see.
-    # bounded-collect: one sampled row for eager dim validation
-    cdim = len(cents[0][1])
-    sample = batch.filter(F.col(vec_col).isNotNull()).select(vec_col).head()
-    if sample is not None and len(sample[0]) != cdim:
-        raise ValueError(
-            f"cosine_neardup_against_ivf_index: batch {vec_col!r} has "
-            f"dim {len(sample[0])} but the index at {path!r} holds "
-            f"dim-{cdim} centroids — a mismatched batch "
-            "would NULL-fold every cell assignment and silently "
-            "return zero duplicate pairs"
+        return b.select(
+            F.col(id_col).alias("doc_new"), F.explode(probe).alias("cell")
         )
-    batch = spread_small_input(batch)
-    idx = spark.read.parquet(path)
-    # the per-row guard wraps the probe OUTPUT, not the vector fed
-    # into the HOF folds (ADVICE r14): expressions referenced inside
-    # interpreted HOF lambdas are re-evaluated per element (the r6
-    # __bits note), so a guarded VECTOR recomputes the size() check
-    # per centroid; wrapping the probe-cells array evaluates it ONCE
-    # per row — explode materializes its child a single time — while
-    # the centroid folds reference the raw column attribute.
-    probe_cells = _batch_dim_guard(
-        _ivf_probe_cells_col(F.col(vec_col), cents, nprobe),
-        F.col(vec_col),
-        cdim,
-        "cosine_neardup_against_ivf_index",
-    )
-    bb = batch.select(
-        F.col(id_col).alias("doc_new"),
-        F.explode(probe_cells).alias("cell"),
-    )
-    idxc = idx.select(F.col(id_col).alias("doc_old"), "cell")
-    if max_cell is not None:
-        # hot-cell guard (VERDICT r13 #1): occupancy is measured on
-        # the INDEX side — that is the factor that multiplies every
-        # colliding batch vector's candidate count. The persisted
-        # _occ_counts side table (written by every build/append/
-        # compact) makes the guard a metadata read; a store whose
-        # stats are absent or stale recounts (r15).
-        idxc = _occupancy_filter(
-            idxc,
-            max_cell,
-            keys=("cell",),
-            arg_name="max_cell",
-            stats=_load_occ_counts(spark, path, "cell"),
-        )
-    cand = (
-        bb.join(idxc, on="cell")
-        .filter(F.col("doc_old") != F.col("doc_new"))
-        .select("doc_old", "doc_new")
-        .distinct()
-    )
-    cand = cand.repartition(spark.sparkContext.defaultParallelism)
-    vec_d = F.col(vec_col).cast("array<double>")
-    eb = batch.select(
-        F.col(id_col).alias("doc_new"),
-        vec_d.alias("emb_new"),
-        F.sqrt(dot_strict(F.col(vec_col), F.col(vec_col))).alias("norm_new"),
-    ).filter(F.col("norm_new") > 0)
-    ei = idx.select(
-        F.col(id_col).alias("doc_old"),
-        vec_d.alias("emb_old"),
-        F.sqrt(dot_strict(F.col(vec_col), F.col(vec_col))).alias("norm_old"),
-    ).filter(F.col("norm_old") > 0)
-    return (
-        cand.join(eb, "doc_new")
-        .join(ei, "doc_old")
-        .withColumn(
-            "cos",
-            _dot_dbl(F.col("emb_old"), F.col("emb_new"))
-            / (F.col("norm_old") * F.col("norm_new")),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("doc_old", "doc_new", "cos")
+
+    return _neardup_against(
+        _IVF, batch, index_path, threshold, vec_col, id_col, max_cell,
+        "max_cell", caller, cells,
     )
 
 
@@ -3115,8 +2933,6 @@ def cosine_neardup_pairs_lsh(
     if n_planes is None:
         n_planes = auto_planes(df.count(), target_bucket)
     df = spread_small_input(df)
-
-    vec_d = F.col(vec_col).cast("array<double>")
     # n_tables short rows per vector: materialize once instead of
     # running the sign-bit bucket construction on BOTH self-join
     # sides (same build-once rationale as minhash_lsh_pairs)
@@ -3133,40 +2949,9 @@ def cosine_neardup_pairs_lsh(
         .select("vec_a", "vec_b")
         .distinct()
     )
-    # AQE sizes post-shuffle partitions by BYTES; the candidate rows are
-    # two ids but each costs a 64-dim fold in the verify, so the
-    # coalesced 1-2 partitions would serialize the CPU-heavy stage onto
-    # as many cores. Re-spread explicitly — the id-pair shuffle is tiny.
-    sc = df.sparkSession.sparkContext
-    cand = cand.repartition(sc.defaultParallelism)
-    # per-vector norms are computed ONCE here instead of twice per
-    # candidate pair inside cosine() — sqrt(dot(v,v)) is the identical
-    # fold either way, so cos stays bitwise-equal to the oracle's
-    # inline cosine while the verify does 1 fold per pair, not 3.
-    # Embeddings are likewise cast to array<double> ONCE per vector so
-    # the per-pair fold skips dot_strict's two per-element cast
-    # transforms (same products, same order — bitwise-identical cos).
-    ea = df.select(
-        F.col(id_col).alias("vec_a"),
-        vec_d.alias("emb_a"),
-        F.sqrt(dot_strict(F.col(vec_col), F.col(vec_col))).alias("norm_a"),
-    )
-    eb = df.select(
-        F.col(id_col).alias("vec_b"),
-        vec_d.alias("emb_b"),
-        F.sqrt(dot_strict(F.col(vec_col), F.col(vec_col))).alias("norm_b"),
-    )
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .withColumn(
-            "cos",
-            _dot_dbl(F.col("emb_a"), F.col("emb_b"))
-            / (F.col("norm_a") * F.col("norm_b")),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("vec_a", "vec_b")
-    )
+    return _verify_pairs(
+        cand, df, df, ("vec_a", "vec_b"), vec_col, id_col, threshold
+    ).select("vec_a", "vec_b")
 
 
 def semantic_dedup(
@@ -3459,44 +3244,6 @@ def _sq8_decode(codes: Column, scale: Column) -> Column:
     return F.transform(codes, lambda c: c.cast("double") * scale)
 
 
-def _sq8_rows(
-    df: DataFrame,
-    cents: list[tuple],
-    vec_col: str,
-    id_col: str,
-    extras: tuple[str, ...] | list[str],
-    dim: int | None = None,
-    caller: str = "_sq8_rows",
-) -> DataFrame:
-    """``(id, cell, scale, codes, vec, extras...)`` for every input
-    vector — the row layout both the build and the append land: cell
-    from the shared native argmax, scale/codes per vector. The raw
-    vector column is KEPT (like the IVF-PQ index) so ``rerank=R`` can
-    read exact embeddings for R ids alone; columnar pruning keeps it
-    out of code-only probe scans. ``dim`` (when known) arms the exact
-    write-path guard (:func:`_dim_guard_col`)."""
-    vcol = (
-        _dim_guard_col(F.col(vec_col), dim, caller).alias(vec_col)
-        if dim is not None
-        else F.col(vec_col)
-    )
-    staged = df.select(
-        F.col(id_col),
-        vcol,
-        _to_double(F.col(vec_col)).alias("__v"),
-        _ivf_cell_col(F.col(vec_col), cents).alias("cell"),
-        *[F.col(c) for c in extras],
-    ).withColumn("scale", _sq8_scale(F.col("__v")))
-    return staged.select(
-        F.col(id_col),
-        F.col("cell"),
-        F.col("scale"),
-        _sq8_codes(F.col("__v"), F.col("scale")).alias("codes"),
-        F.col(vec_col),
-        *[F.col(c) for c in extras],
-    )
-
-
 def build_ann_ivfsq8_index(
     df: DataFrame,
     path: str,
@@ -3519,37 +3266,11 @@ def build_ann_ivfsq8_index(
     marking the layout for autodetection (compaction, stats, the
     maintenance planner). ``commit``/``extra_cols`` carry the shared
     storage and filtered-ANN contracts of the IVF build."""
-    from .dedup import spread_small_input
-
-    if lloyd_iters < 0:
-        raise ValueError(f"lloyd_iters must be >= 0, got {lloyd_iters}")
-    _check_extra_cols(extra_cols, id_col, vec_col)
-    bad_sq8 = [c for c in extra_cols if c in _SQ8_RESERVED_COLS]
-    if bad_sq8:
-        raise ValueError(
-            f"extra_cols {bad_sq8} collide with the IVF-SQ8 layout "
-            f"columns {_SQ8_RESERVED_COLS}"
-        )
-    spark = df.sparkSession
-    with staged_store(spark, path, commit) as staged:
-        _check_corpus_dim(df, vec_col, dim, "build_ann_ivfsq8_index")
-        if nlist is None:
-            # auto-size cells (see build_ann_ivf_index — same rule, same
-            # fixed-default-for-oracles / None-at-scale contract)
-            nlist = max(1, -(-df.count() // int(target_cell)))
-        cents = _ivf_centroids(df, nlist, vec_col, id_col)
-        if lloyd_iters and cents:
-            cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
-        celled = _sq8_rows(
-            spread_small_input(df), cents, vec_col, id_col, extra_cols,
-            dim=dim, caller="build_ann_ivfsq8_index",
-        )
-        _write_base(celled, staged, "cell")
-        _write_centroids(spark, staged, cents)
-        _write_meta(
-            spark, staged, "_sq_meta",
-            [(int(dim), "sq8_pervec")], "dim int, scheme string",
-        )
+    _ann_build(
+        _SQ8, df, path, commit, vec_col, id_col, dim,
+        "build_ann_ivfsq8_index", extra_cols, nlist=nlist,
+        lloyd_iters=lloyd_iters, target_cell=target_cell,
+    )
 
 
 def append_to_ann_ivfsq8_index(
@@ -3566,36 +3287,10 @@ def append_to_ann_ivfsq8_index(
     replay-safe, unset -> at-least-once base append). Because SQ8 has
     no trained codebook, appended batches quantize EXACTLY like the
     build — no quantizer drift, the property PQ appends give up."""
-    from .dedup import spread_small_input
-
-    spark = df.sparkSession
-    path, part, mode = batch_dir(spark, path, batch_id)
-    if not _exists(spark, f"{path}/_sq_meta"):
-        raise ValueError(
-            f"no IVF-SQ8 index at {path!r} (missing _sq_meta): build "
-            "it first with build_ann_ivfsq8_index, or use the append "
-            "matching the store's layout"
-        )
-    meta_dim = int(spark.read.parquet(f"{path}/_sq_meta").head().dim)
-    _check_corpus_dim(df, vec_col, meta_dim, "append_to_ann_ivfsq8_index")
-    # bounded-collect: nlist centroid rows from the index metadata
-    cent_rows = (
-        spark.read.parquet(f"{path}/_centroids").orderBy("cell").collect()
+    _ann_append(
+        _SQ8, df, path, batch_id, vec_col, id_col,
+        "append_to_ann_ivfsq8_index",
     )
-    if not cent_rows:
-        raise ValueError(f"{path!r} holds no centroid table; build first")
-    cents = [(r.cent_id, [float(x) for x in r.centroid]) for r in cent_rows]
-    extras = [
-        c
-        for c in _index_extra_cols(spark.read.parquet(path), id_col, vec_col)
-        if c not in _SQ8_RESERVED_COLS
-    ]
-    df = spread_small_input(df)
-    celled = _sq8_rows(
-        df, cents, vec_col, id_col, extras,
-        dim=meta_dim, caller="append_to_ann_ivfsq8_index",
-    )
-    _write_batch(celled, path, "cell", part, mode)
 
 
 def ann_ivfsq8_topk_indexed(
@@ -3620,41 +3315,11 @@ def ann_ivfsq8_topk_indexed(
     R ids alone), returning ``(id, rank, cos)``. ``where`` filters
     inside the pruned scan over stored ``extra_cols``;
     ``before_batch`` fences the read to earlier batch partitions."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    path = resolve_root(spark, index_path)
-    meta_dim = _load_sq_meta_dim(spark, path)
-    if len(query_vec) != meta_dim:
-        raise ValueError(f"query dim {len(query_vec)} != index dim {meta_dim}")
-    cents = _load_centroids(spark, path)
-    probes = _ivf_probe_cells(query_vec, cents, nprobe)
-    idx = _before_batch(spark.read.parquet(path), before_batch)
-    filt = _apply_where(idx.filter(F.col("cell").isin(probes)), where)
-    dec = _sq8_decode(F.col("codes"), F.col("scale"))
-    take = k if rerank is None else rerank
-    # scale == 0 <=> the stored vector is all-zero: its reconstructed
-    # cosine is 0/0 — NULL it explicitly (sorts last under DESC) so
-    # ANSI mode never trips on the degenerate row
-    acos = F.when(
-        F.col("scale") > 0, cosine(dec, _vec_lit(query_vec))
+    return _ann_probe(
+        _SQ8, spark, index_path, query_vec, k, "ann_ivfsq8_topk_indexed",
+        nprobe=nprobe, rerank=rerank, vec_col=vec_col, id_col=id_col,
+        where=where, before_batch=before_batch,
     )
-    ranked = (
-        filt.select(F.col(id_col), acos.alias("acos"))
-        .orderBy(F.desc("acos"), F.col(id_col))
-        .limit(take)
-    )
-    if rerank is None:
-        w = Window.orderBy(F.desc("acos"), F.col(id_col))
-        return ranked.select(
-            id_col, F.row_number().over(w).alias("rank"), "acos"
-        )
-    cand = ranked.select(id_col)
-    vecs = idx.select(id_col, vec_col).join(cand, id_col)
-    return _rank_topk(vecs, query_vec, k, vec_col, id_col)
 
 
 def ann_ivfsq8_join_indexed(
@@ -3695,87 +3360,9 @@ def ann_ivfsq8_join_indexed(
     under driver memory); millions of queries should chunk the batch
     and union the outputs (per-query independence makes chunking
     semantics-free)."""
-    from pyspark.sql import Window as W
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
-    path = resolve_root(spark, index_path)
-    dim = _load_sq_meta_dim(spark, path)
-    cents = _load_centroids(spark, path)
-    # shared batch-probe front door (collect + empty check + NULL/dim
-    # validation) — the same helper the IVF-PQ twin uses, so the dense
-    # batch probes cannot drift apart (ADVICE r12)
-    qid_type, qbatch = _collect_query_batch(
-        queries, query_id_col, query_vec_col, dim
-    )
-    pairs = [
-        (qid, int(cell))
-        for qid, vec in qbatch
-        for cell in _ivf_probe_cells(vec, cents, nprobe)
-    ]
-    cells = sorted({c for _, c in pairs})
-    qcells = local_rows_df(
-        spark,
-        pairs,
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField("cell", IntegerType()),
-            ]
-        ),
-    )
-    qvecs = local_rows_df(
-        spark,
-        qbatch,
-        StructType(
-            [
-                StructField(query_id_col, qid_type),
-                StructField("__qv", ArrayType(DoubleType())),
-            ]
-        ),
-    )
-    idx = _apply_where(
-        _before_batch(spark.read.parquet(path), before_batch)
-        .filter(F.col("cell").isin(cells)),
-        where,
-    )
-    dec = _sq8_decode(F.col("codes"), F.col("scale"))
-    scored = (
-        idx.join(F.broadcast(qcells), "cell")
-        .join(F.broadcast(qvecs), query_id_col)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            # NULL for all-zero stored vectors (scale == 0) — same
-            # ANSI guard as the single probe
-            F.when(
-                F.col("scale") > 0, cosine(dec, F.col("__qv"))
-            ).alias("acos"),
-        )
-    )
-    w = W.partitionBy(query_id_col).orderBy(
-        F.col("acos").desc(), F.col(id_col).asc()
-    )
-    take = k if rerank is None else rerank
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= take)
-    )
-    if rerank is None:
-        return ranked
-    cand = ranked.select(query_id_col, id_col)
-    return _batch_exact_rerank(
-        cand, idx.select(id_col, vec_col), qvecs, k,
-        vec_col, id_col, query_id_col,
+    return _ann_probe(
+        _SQ8, spark, index_path, queries, k, "ann_ivfsq8_join_indexed",
+        nprobe=nprobe, rerank=rerank, vec_col=vec_col, id_col=id_col,
+        where=where, before_batch=before_batch, query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
     )

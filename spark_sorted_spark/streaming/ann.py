@@ -20,11 +20,13 @@ invisible to the partitioned parquet read), so
 
 Scale: per-batch cost is one narrow scan of the batch (bucket
 assignment is seeded-plane dot products — no shuffle, no read of the
-existing index). Probes (``ann_lsh_topk_indexed``) read all batch
-partitions with bucket-directory pruning within each; run
-``build_ann_lsh_index`` over the accumulated corpus when partition
-count (small files) warrants a compaction — with the stream STOPPED,
-same contract as every compact path in this package.
+existing index beyond its ``_lsh_meta`` row). Probes
+(``ann_lsh_topk_indexed``) read all batch partitions with
+bucket-directory pruning within each; when the partition count
+(small files) matters, ``functions.similarity.compact_ann_index``
+folds the batch partitions back into the base partition from the
+store alone — with the stream STOPPED, same contract as every compact
+path in this package.
 """
 
 from __future__ import annotations

@@ -3352,55 +3352,136 @@ def test_ann_ivfsq8_append_fence_and_filtered_probe(spark, emb, tmp_path):
     )
 
 
-def test_ann_ivfsq8_validation_errors(spark, emb, tmp_path):
+# (ro_store kind, probe, batch form, takes nprobe, takes rerank)
+_INDEXED_PROBES = [
+    ("lsh", "ann_lsh_topk_indexed", False, False, False),
+    ("ivf", "ann_ivf_topk_indexed", False, True, False),
+    ("pq", "ann_pq_topk_indexed", False, False, True),
+    ("ivfpq", "ann_ivfpq_topk_indexed", False, True, True),
+    ("sq8", "ann_ivfsq8_topk_indexed", False, True, True),
+    ("ivf", "ann_ivf_join_indexed", True, True, False),
+    ("pq", "ann_pq_join_indexed", True, False, True),
+    ("ivfpq", "ann_ivfpq_join_indexed", True, True, True),
+    ("sq8", "ann_ivfsq8_join_indexed", True, True, True),
+]
+
+
+@pytest.mark.parametrize(
+    "kind, probe, batch, has_nprobe, has_rerank",
+    _INDEXED_PROBES,
+    ids=[row[1] for row in _INDEXED_PROBES],
+)
+def test_ann_ivfsq8_validation_errors(
+    spark, emb, ro_store, store_copy, kind, probe, batch, has_nprobe,
+    has_rerank,
+):
+    """Every indexed probe validates k, nprobe, rerank and each query's
+    dim (a NULL or mismatched vector would NULL-fold every score) the
+    same way; the IVF-SQ8 row also pins the SQ8 build/append checks."""
+    from spark_sorted_spark.functions import similarity
+
+    fn = getattr(similarity, probe)
+    p = ro_store(kind)
+    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
+
+    def queries(vec):
+        return spark.createDataFrame(
+            [(1, vec)], "query_id bigint, query_vec array<double>"
+        )
+
+    def call(q=None, **kw):
+        if q is None:
+            q = queries(qvec) if batch else qvec
+        return fn(spark, p, q, **kw)
+
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        call(k=0)
+    if has_rerank:
+        with pytest.raises(ValueError, match="rerank"):
+            call(k=10, rerank=5)
+    if has_nprobe:
+        with pytest.raises(ValueError, match="nprobe must be"):
+            call(k=3, nprobe=0)
+    if not batch:
+        with pytest.raises(ValueError, match="query dim"):
+            call([1.0, 2.0], k=3)
+    else:
+        # the batch validates every query's dim against the index's
+        # recorded dim — a mismatched vector would NULL-fold every
+        # score silently
+        for bad in (None, [1.0, 2.0]):
+            with pytest.raises(ValueError, match="!= index dim"):
+                call(queries(bad), k=3)
+    if probe != "ann_ivfsq8_topk_indexed":
+        return
     from spark_sorted_spark.functions.similarity import (
-        ann_ivfsq8_topk_indexed,
+        append_to_ann_ivf_index,
         append_to_ann_ivfsq8_index,
         build_ann_ivfsq8_index,
     )
 
     corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
-    p = str(tmp_path / "sq8")
-    build_ann_ivfsq8_index(corpus, p)
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-    with pytest.raises(ValueError, match="k must be >= 1"):
-        ann_ivfsq8_topk_indexed(spark, p, qvec, k=0)
-    with pytest.raises(ValueError, match="rerank"):
-        ann_ivfsq8_topk_indexed(spark, p, qvec, k=10, rerank=5)
-    with pytest.raises(ValueError, match="query dim"):
-        ann_ivfsq8_topk_indexed(spark, p, [1.0, 2.0], k=3)
-    with pytest.raises(ValueError, match="nprobe must be"):
-        ann_ivfsq8_topk_indexed(spark, p, qvec, k=3, nprobe=0)
-    # the batch twin validates every query's dim against _sq_meta —
-    # a mismatched vector would NULL-fold every cosine silently
-    from spark_sorted_spark.functions.similarity import ann_ivfsq8_join_indexed
-
-    badq = spark.createDataFrame(
-        [(1, [1.0, 2.0])], "query_id bigint, query_vec array<double>"
-    )
-    with pytest.raises(ValueError, match="!= index dim"):
-        ann_ivfsq8_join_indexed(spark, p, badq, k=3)
+    sq8 = store_copy("sq8", "sq8")
     with pytest.raises(ValueError, match="batch_id must be >= 0"):
-        append_to_ann_ivfsq8_index(corpus, p, batch_id=-1)
+        append_to_ann_ivfsq8_index(corpus, sq8, batch_id=-1)
     with pytest.raises(ValueError, match="commit must be"):
-        build_ann_ivfsq8_index(corpus, str(tmp_path / "x"), commit="nope")
+        build_ann_ivfsq8_index(corpus, f"{sq8}_x", commit="nope")
     with pytest.raises(ValueError, match="extra_cols"):
-        build_ann_ivfsq8_index(
-            corpus, str(tmp_path / "y"), extra_cols=("scale",)
-        )
+        build_ann_ivfsq8_index(corpus, f"{sq8}_y", extra_cols=("scale",))
     # cross-layout appends corrupt silently without the guards: raw
     # vectors into an SQ8 store, or scale+codes into a plain IVF store
-    from spark_sorted_spark.functions.similarity import (
-        append_to_ann_ivf_index,
-        build_ann_ivf_index,
-    )
-
     with pytest.raises(ValueError, match="append_to_ann_ivfsq8_index"):
-        append_to_ann_ivf_index(corpus, p)
-    ivf = str(tmp_path / "plain_ivf")
-    build_ann_ivf_index(corpus, ivf)
+        append_to_ann_ivf_index(corpus, sq8)
+    ivf = store_copy("ivf", "plain_ivf")
     with pytest.raises(ValueError, match="missing _sq_meta"):
         append_to_ann_ivfsq8_index(corpus, ivf)
+
+
+_ANN_APPENDS = {
+    "lsh": "append_to_ann_lsh_index",
+    "ivf": "append_to_ann_ivf_index",
+    "pq": "append_to_ann_pq_index",
+    "ivfpq": "append_to_ann_ivfpq_index",
+    "sq8": "append_to_ann_ivfsq8_index",
+}
+
+
+@pytest.mark.parametrize(
+    "family, store",
+    [(f, s) for f in _ANN_APPENDS for s in _ANN_APPENDS if s != f],
+)
+def test_ann_append_refuses_foreign_layout(spark, emb, store_copy, family, store):
+    """Every ANN append refuses a store of another family and writes
+    nothing: its rows would not match the layout (an LSH batch landed
+    in an IVF store made the next IVF probe fail on conflicting
+    partition columns). The error names the store's own append."""
+    from test_store_lifecycle import _snapshot
+
+    from spark_sorted_spark.functions import similarity
+
+    path = store_copy(store, store)
+    before = _snapshot(path)
+    batch = emb.filter(F.col("vec_id") % 7 == 0).select("vec_id", "embedding")
+    with pytest.raises(ValueError, match=_ANN_APPENDS[store]):
+        getattr(similarity, _ANN_APPENDS[family])(batch, path, batch_id=0)
+    assert _snapshot(path) == before
+
+
+def test_similarity_all_lists_every_public_function():
+    import inspect
+
+    from spark_sorted_spark.functions import similarity
+
+    public = {
+        n
+        for n, o in vars(similarity).items()
+        if inspect.isfunction(o)
+        and not n.startswith("_")
+        and o.__module__ == similarity.__name__
+    }
+    assert public <= set(similarity.__all__), sorted(
+        public - set(similarity.__all__)
+    )
 
 
 def test_ann_ivfsq8_auto_nlist_and_zero_vector(spark, tmp_path):
