@@ -1,14 +1,52 @@
+import glob
+import os
+import shutil
+import subprocess
+
 import pytest
 
 from spark_sorted_spark.session import get_spark
 
 
+def _nio_chmod_fs_conf(out_dir) -> dict[str, str]:
+    """Session settings that swap in ``localfs/NioChmodLocalFileSystem``
+    for ``file:`` paths, compiled into ``out_dir``: without Hadoop's
+    native library every file and directory a write creates starts a
+    ``chmod`` process (~8 ms each on a 4-core host, several thousand
+    per minute of this suite). No settings when there is no ``javac``
+    or Hadoop jar to compile against: the suite then runs on the
+    default local file system."""
+    import pyspark
+
+    jars = glob.glob(
+        os.path.join(os.path.dirname(pyspark.__file__), "jars", "hadoop-client-api-*.jar")
+    )
+    src = os.path.join(os.path.dirname(__file__), "localfs", "NioChmodLocalFileSystem.java")
+    if not jars or shutil.which("javac") is None:
+        return {}
+    built = subprocess.run(
+        ["javac", "-nowarn", "-cp", jars[0], "-d", str(out_dir), src],
+        capture_output=True,
+    )
+    if built.returncode != 0:
+        return {}
+    return {
+        "spark.driver.extraClassPath": str(out_dir),
+        "spark.hadoop.fs.file.impl": "localfs.NioChmodLocalFileSystem",
+    }
+
+
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     # Mirrors the reference's shared test session (SparkSuite.scala:10-19):
     # small local master, few shuffle partitions so multi-partition
     # invariants (key disjointness) are actually exercised.
-    s = get_spark("spark_sorted_spark-tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark(
+        "spark_sorted_spark-tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        conf=_nio_chmod_fs_conf(tmp_path_factory.mktemp("localfs")),
+    )
     # list partitioned directories on the driver: past 32 subdirectories
     # (an LSH index has one per bucket) Spark otherwise lists them with a
     # distributed job of one task per directory on every read, which on
