@@ -20,8 +20,10 @@ Persisted ANN indexes. Five families share one core:
   + ``_sq_meta``), its partition key (``bucket``, ``cell``, or none
   for flat PQ's ``/codes``), ``train`` (planes, centroids or
   codebooks), ``encode`` (the persisted row), ``probe_keys`` (a
-  query's buckets or cells) and ``score`` (exact cosine, ADC from
-  ``0.0`` or from the cell dot, or the SQ8 reconstructed cosine);
+  query's buckets or cells), ``qvals`` / ``key_vals`` (the values a
+  score reads per query and per probed (query, cell) pair) and
+  ``score`` (exact cosine, ADC from ``0.0`` or from the cell dot, or
+  the SQ8 reconstructed cosine);
 * **build** (:func:`_ann_build`) stages the store, checks the corpus
   dim, trains, encodes the base partition and writes the metadata,
   then publishes once (``sources.manifest.staged_store``);
@@ -1787,19 +1789,26 @@ class _Family:
     the persisted rows; ``write_meta``; ``probe_keys`` — the buckets
     or cells a query reads (None: no pruning); ``qvals`` — the
     per-query arrays ``score`` reads, as literals for one query or
-    broadcast columns for a batch; ``score`` a stored row."""
+    broadcast columns for a batch; ``key_vals`` — the per-(query, key)
+    doubles named ``key_cols`` that ``score`` also reads (a batch
+    carries them on its probed pairs, so a query's row never grows with
+    the key count); ``score`` a stored row."""
 
     key: str | None = None
     data = ""
     reserved: tuple = ()
     extras = True
     score_col = "cos"
+    key_cols: tuple = ()
 
     def probe_keys(self, q, p: _Params, **_):
         return None
 
     def qvals(self, q, p: _Params) -> dict:
         return {"__qv": q}
+
+    def key_vals(self, q, p: _Params, key: int) -> tuple:
+        return ()
 
     def score(self, p: _Params, qc: dict, vec_col: str) -> Column:
         return cosine(F.col(vec_col), qc["__qv"])
@@ -1955,9 +1964,13 @@ class _IvfPq(_Ivf):
     score_col = "adot"
 
     def train(self, df, vec_col, id_col, dim, caller, m, ksub, pq_lloyd_iters, **kw):
+        from .dedup import spread_small_input
+
         p = super().train(df, vec_col, id_col, dim, caller, **kw)
+        # the residual encode is the CPU-heavy part of codebook training
         p.cbs = pq_codebooks(
-            self._residuals(df, p, vec_col, id_col, ()), m, ksub, dim,
+            self._residuals(spread_small_input(df), p, vec_col, id_col, ()),
+            m, ksub, dim,
             vec_col="__resid", id_col=id_col, lloyd_iters=pq_lloyd_iters,
         )
         return p
@@ -1996,16 +2009,17 @@ class _IvfPq(_Ivf):
         _Ivf.write_meta(self, spark, staged, p)
         _Pq.write_meta(self, spark, staged, p)
 
+    key_cols = ("__cd",)
+
     def qvals(self, q, p):
-        return {
-            "__tbl": _pq_query_table(q, p.cbs),
-            "__cds": [dot_py(q, c) for _cid, c in p.cents],
-        }
+        return {"__tbl": _pq_query_table(q, p.cbs)}
+
+    def key_vals(self, q, p, cell):
+        return (dot_py(q, p.cents[cell][1]),)
 
     def score(self, p, qc, vec_col):
         # residual ADC: the query-cell centroid dot, then the table fold
-        cell_dot = F.element_at(qc["__cds"], F.col("cell") + 1)
-        return _adc(p.cbs, qc["__tbl"], cell_dot)
+        return _adc(p.cbs, qc["__tbl"], qc["__cd"])
 
 
 class _Sq8(_Ivf):
@@ -2182,19 +2196,23 @@ def _ann_probe(
     rows = idx
     if fam.key is not None:
         pairs = [
-            (qid, int(key))
+            (qid, int(key), *fam.key_vals(v, p, key))
             for qid, v in qbatch
             for key in fam.probe_keys(
                 v, p, nprobe=nprobe, probe_bits=probe_bits,
                 probe_hamming=probe_hamming,
             )
         ]
-        keys = sorted({key for _, key in pairs})
+        keys = sorted({pair[1] for pair in pairs})
         rows = rows.filter(F.col(fam.key).isin(keys))
     rows = _apply_where(rows, where)
     take = k if rerank is None else rerank
     if single:
         qc = {n: _vec_lit(v) for n, v in fam.qvals(q, p).items()}
+        for i, n in enumerate(fam.key_cols):
+            # one literal over every cell, indexed by the row's cell
+            per_cell = [fam.key_vals(q, p, c)[i] for c in range(len(p.cents))]
+            qc[n] = F.element_at(_vec_lit(per_cell), F.col(fam.key) + 1)
         ranked = _top_single(
             rows, fam.score(p, qc, vec_col), fam.score_col, take, id_col
         )
@@ -2222,11 +2240,17 @@ def _ann_probe(
         # against every code; the IVF families prune by cell)
         scored = rows.crossJoin(F.broadcast(qv))
     else:
-        qkeys = query_rows(pairs, [StructField(fam.key, IntegerType())])
+        qkeys = query_rows(
+            pairs,
+            [
+                StructField(fam.key, IntegerType()),
+                *[StructField(n, DoubleType()) for n in fam.key_cols],
+            ],
+        )
         scored = rows.join(F.broadcast(qkeys), fam.key).join(
             F.broadcast(qv), query_id_col
         )
-    score = fam.score(p, {n: F.col(n) for n in names}, vec_col)
+    score = fam.score(p, {n: F.col(n) for n in names + list(fam.key_cols)}, vec_col)
     ranked = _top_batch(
         scored, score, fam.score_col, take, id_col, query_id_col
     )
@@ -2309,8 +2333,8 @@ def ann_ivfpq_join_indexed(
     planning time (``PartitionFilters``) reading the CODE column only,
     and each (query, candidate) pair scores by residual ADC —
     ``dot(q, centroid(cell)) + ordered table fold`` — with the
-    (query, cell) pairs and each query's centroid dots and ADC table
-    riding in as broadcasts. Cell pruning x columnar pruning x batch amortization:
+    per-(query, cell) centroid dots and per-query tables riding in as
+    broadcasts. Cell pruning x columnar pruning x batch amortization:
     no full-table scan, no embedding bytes read (until the optional
     rerank tail).
 
@@ -2321,9 +2345,8 @@ def ann_ivfpq_join_indexed(
     ``rerank >= |corpus|`` the output is BITWISE :func:`cosine_join`
     (pinned in tests).
 
-    |Q| ceiling: the query batch (vectors + per-query ADC tables and
-    centroid dots, 8*(dim + m*ksub + nlist) bytes per query) is
-    driver-materialized by
+    |Q| ceiling: the query batch (vectors + per-query ADC tables,
+    8*(dim + m*ksub) bytes per query) is driver-materialized by
     design — 10^5 queries at the defaults is well under 1 GB;
     millions of queries should chunk the batch and union the outputs
     (per-query independence makes chunking semantics-free)."""

@@ -20,11 +20,7 @@ def get_spark(
     app_name: str = "spark_sorted_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """The session; ``conf`` adds settings on top of these defaults
-    (launch-time ones, such as the driver classpath, only take effect
-    when this call starts the JVM)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
@@ -44,8 +40,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
-    for key, value in (conf or {}).items():
-        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -1,21 +1,23 @@
 import glob
 import os
+import shlex
 import shutil
 import subprocess
+import warnings
 
 import pytest
 
 from spark_sorted_spark.session import get_spark
 
 
-def _nio_chmod_fs_conf(out_dir) -> dict[str, str]:
-    """Session settings that swap in ``localfs/NioChmodLocalFileSystem``
-    for ``file:`` paths, compiled into ``out_dir``: without Hadoop's
-    native library every file and directory a write creates starts a
-    ``chmod`` process (~8 ms each on a 4-core host, several thousand
-    per minute of this suite). No settings when there is no ``javac``
-    or Hadoop jar to compile against: the suite then runs on the
-    default local file system."""
+def _nio_chmod_fs_args(out_dir) -> str | None:
+    """spark-submit arguments that swap in
+    ``localfs/NioChmodLocalFileSystem`` for ``file:`` paths, compiled
+    into ``out_dir``: without Hadoop's native library every file and
+    directory a write creates starts a ``chmod`` process (~8 ms each on
+    a 4-core host, several thousand per minute of this suite). None
+    when there is no ``javac`` or Hadoop jar to compile against, or the
+    build fails."""
     import pyspark
 
     jars = glob.glob(
@@ -23,30 +25,52 @@ def _nio_chmod_fs_conf(out_dir) -> dict[str, str]:
     )
     src = os.path.join(os.path.dirname(__file__), "localfs", "NioChmodLocalFileSystem.java")
     if not jars or shutil.which("javac") is None:
-        return {}
+        return None
     built = subprocess.run(
         ["javac", "-nowarn", "-cp", jars[0], "-d", str(out_dir), src],
         capture_output=True,
     )
     if built.returncode != 0:
-        return {}
-    return {
-        "spark.driver.extraClassPath": str(out_dir),
-        "spark.hadoop.fs.file.impl": "localfs.NioChmodLocalFileSystem",
-    }
+        return None
+    return (
+        f"--driver-class-path {shlex.quote(str(out_dir))} "
+        "--conf spark.hadoop.fs.file.impl=localfs.NioChmodLocalFileSystem"
+    )
+
+
+def _zipcache_daemon_args() -> str:
+    """spark-submit arguments that run the Python workers under
+    ``pyworker/zipcache_daemon.py``, which keeps each task from
+    re-reading the zip archives on the worker path (~200 ms per Python
+    task on CPython 3.11)."""
+    pyworker = os.path.join(os.path.dirname(__file__), "pyworker")
+    return (
+        "--conf spark.python.daemon.module=zipcache_daemon "
+        f"--conf spark.executorEnv.PYTHONPATH={shlex.quote(pyworker)}"
+    )
 
 
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
-    # Mirrors the reference's shared test session (SparkSuite.scala:10-19):
-    # small local master, few shuffle partitions so multi-partition
-    # invariants (key disjointness) are actually exercised.
-    s = get_spark(
-        "spark_sorted_spark-tests",
-        master="local[4]",
-        shuffle_partitions=4,
-        conf=_nio_chmod_fs_conf(tmp_path_factory.mktemp("localfs")),
-    )
+    # The local file system and the worker daemon are launch-time
+    # settings: hand them to the JVM through the arguments pyspark
+    # passes to spark-submit, for this launch only (child processes
+    # start their own JVMs unchanged).
+    fs_args = _nio_chmod_fs_args(tmp_path_factory.mktemp("localfs"))
+    if fs_args is None:
+        warnings.warn(
+            "tests run on Hadoop's default local file system (no javac or "
+            "hadoop-client-api jar to build tests/localfs): every file a "
+            "write creates forks a chmod process, and the suite runs slower"
+        )
+    args = " ".join(a for a in (fs_args, _zipcache_daemon_args()) if a)
+    with pytest.MonkeyPatch.context() as env:
+        submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+        env.setenv("PYSPARK_SUBMIT_ARGS", f"{args} {submit}")
+        # Mirrors the reference's shared test session (SparkSuite.scala:10-19):
+        # small local master, few shuffle partitions so multi-partition
+        # invariants (key disjointness) are actually exercised.
+        s = get_spark("spark_sorted_spark-tests", master="local[4]", shuffle_partitions=4)
     # list partitioned directories on the driver: past 32 subdirectories
     # (an LSH index has one per bucket) Spark otherwise lists them with a
     # distributed job of one task per directory on every read, which on

@@ -918,6 +918,63 @@ def test_ann_ivfpq_join_indexed_matches_per_query_probe(spark, ro_store):
         )
 
 
+def test_ann_ivfpq_join_indexed_query_rows_do_not_grow_with_nlist(
+    spark, tmp_path, monkeypatch
+):
+    """With many more cells than probes, the batch IVF-PQ probe ships
+    each query's ADC table plus one centroid dot per probed (query,
+    cell) pair — no per-query row of all nlist cell dots — and still
+    equals the per-query probe."""
+    import random
+
+    from spark_sorted_spark.functions import similarity
+    from spark_sorted_spark.functions.similarity import (
+        ann_ivfpq_join_indexed,
+        ann_ivfpq_topk_indexed,
+        build_ann_ivfpq_index,
+    )
+
+    dim, m, ksub, nlist, nprobe = 8, 2, 4, 40, 2
+    rnd = random.Random(7)
+    vecs = {i: [rnd.gauss(0.0, 1.0) for _ in range(dim)] for i in range(320)}
+    df = spark.createDataFrame(
+        list(vecs.items()), "vec_id long, embedding array<double>"
+    )
+    idx = str(tmp_path / "ivfpq")
+    build_ann_ivfpq_index(df, idx, nlist=nlist, m=m, ksub=ksub, dim=dim)
+    qids = [3, 50, 111]
+    qdf = spark.createDataFrame(
+        [(i, vecs[i]) for i in qids], "query_id long, query_vec array<double>"
+    )
+    shipped = []
+
+    def recording(spark_, rows, schema):
+        shipped.append((list(rows), schema.fieldNames()))
+        return local_rows_df(spark_, rows, schema)
+
+    local_rows_df = similarity.local_rows_df
+    monkeypatch.setattr(similarity, "local_rows_df", recording)
+    got = {
+        (r.query_id, r.vec_id): (r.adot, r.rank)
+        for r in ann_ivfpq_join_indexed(
+            spark, idx, qdf, k=5, nprobe=nprobe
+        ).collect()
+    }
+    monkeypatch.undo()
+    by_fields = {tuple(f): rows for rows, f in shipped}
+    assert by_fields.keys() == {("query_id", "cell", "__cd"), ("query_id", "__tbl")}
+    assert len(by_fields["query_id", "cell", "__cd"]) == len(qids) * nprobe
+    assert all(len(r[1]) == m * ksub for r in by_fields["query_id", "__tbl"])
+    n = 0
+    for qid in qids:
+        for r in ann_ivfpq_topk_indexed(
+            spark, idx, vecs[qid], k=5, nprobe=nprobe
+        ).collect():
+            assert got[(qid, r.vec_id)] == (r.adot, r.rank)
+            n += 1
+    assert len(got) == n
+
+
 def test_hybrid_join_matches_per_query_hybrid_topk(spark):
     """The batch hybrid must equal running hybrid_topk per query (the
     same two candidate lists, the same exact RRF)."""
