@@ -12,7 +12,9 @@ differs from its last read. Python 3.12 made that re-read lazy, and
 the patch changes nothing there that matters.
 
 Run by Spark as ``python -m zipcache_daemon`` (``spark.python.daemon.module``
-with this directory on ``spark.executorEnv.PYTHONPATH``).
+with this directory on ``spark.executorEnv.PYTHONPATH``; ``session.get_spark``
+sets both for local masters). The directory holds this module alone, so
+the daemon imports nothing of the package.
 """
 
 import os

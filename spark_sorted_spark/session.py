@@ -3,6 +3,12 @@
 Local-mode defaults mirror what we'd set on a real cluster: AQE on
 (runtime re-plan + skew-join handling), Arrow enabled for the pandas
 paths, shuffle partitions sized to cores rather than the 200 default.
+Local masters also run the Python workers under
+``pyworker/zipcache_daemon.py`` (``spark.python.daemon.module``): on
+CPython 3.11 the stock daemon re-reads the zip directories of
+pyspark.zip and the spark-core jar at every task (~200 ms a task).
+The module sits alone in its directory, which goes on the workers'
+``PYTHONPATH``, so the daemon starts without importing this package.
 On a 1000-executor cluster the same builder applies with
 ``spark.sql.shuffle.partitions`` sized to ~2-3x total cores and
 ``spark.sql.files.maxPartitionBytes`` left at 128m so scan tasks stay
@@ -14,6 +20,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PYWORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker")
 
 
 def get_spark(
@@ -40,6 +48,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
+    if master.startswith("local"):
+        # the daemon module must exist on every executor's file system:
+        # true only when the executors share the driver's
+        builder = builder.config(
+            "spark.python.daemon.module", "zipcache_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", _PYWORKER_DIR)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

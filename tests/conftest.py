@@ -38,24 +38,11 @@ def _nio_chmod_fs_args(out_dir) -> str | None:
     )
 
 
-def _zipcache_daemon_args() -> str:
-    """spark-submit arguments that run the Python workers under
-    ``pyworker/zipcache_daemon.py``, which keeps each task from
-    re-reading the zip archives on the worker path (~200 ms per Python
-    task on CPython 3.11)."""
-    pyworker = os.path.join(os.path.dirname(__file__), "pyworker")
-    return (
-        "--conf spark.python.daemon.module=zipcache_daemon "
-        f"--conf spark.executorEnv.PYTHONPATH={shlex.quote(pyworker)}"
-    )
-
-
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
-    # The local file system and the worker daemon are launch-time
-    # settings: hand them to the JVM through the arguments pyspark
-    # passes to spark-submit, for this launch only (child processes
-    # start their own JVMs unchanged).
+    # The local file system is a launch-time setting: hand it to the JVM
+    # through the arguments pyspark passes to spark-submit, for this
+    # launch only (child processes start their own JVMs unchanged).
     fs_args = _nio_chmod_fs_args(tmp_path_factory.mktemp("localfs"))
     if fs_args is None:
         warnings.warn(
@@ -63,10 +50,9 @@ def spark(tmp_path_factory):
             "hadoop-client-api jar to build tests/localfs): every file a "
             "write creates forks a chmod process, and the suite runs slower"
         )
-    args = " ".join(a for a in (fs_args, _zipcache_daemon_args()) if a)
     with pytest.MonkeyPatch.context() as env:
         submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
-        env.setenv("PYSPARK_SUBMIT_ARGS", f"{args} {submit}")
+        env.setenv("PYSPARK_SUBMIT_ARGS", f"{fs_args or ''} {submit}")
         # Mirrors the reference's shared test session (SparkSuite.scala:10-19):
         # small local master, few shuffle partitions so multi-partition
         # invariants (key disjointness) are actually exercised.
