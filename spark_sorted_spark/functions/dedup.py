@@ -231,16 +231,19 @@ def _resolve_verify_scope(
     which is exactly what a 100 TB corpus cannot afford.
 
     ``auto`` switches to ``candidates`` at the point the corpus form
-    stops broadcasting, using the planner's own size estimate of the
-    ``(id, text)`` projection vs the session broadcast threshold — so
+    stops broadcasting, using the planner's size estimate of the
+    relation's leaf scans (the sum of ``sizeInBytes`` over the
+    optimized plan's leaves) vs the session broadcast threshold — so
     for parquet-backed inputs at bench/test scale the plan is
     byte-identical to the recorded ``corpus`` form, and the flip
-    happens exactly where the corpus form's cost model changes regime.
-    Relations the planner cannot estimate (RDD-backed inputs default
-    to ``Long.MaxValue``; join outputs multiply and over-estimate)
-    resolve to ``candidates`` — the conservative direction: when the
-    size is unknown, take the form whose cost is bounded by the
-    candidate set rather than the corpus."""
+    happens where the corpus form's cost model changes regime. The
+    leaves, not the relation's own estimate: a join's output estimate
+    is the PRODUCT of its sides, so ``docs ⋈ exact_dedup(docs)`` would
+    read as corpus-squared while its rows are bounded by its scans.
+    Relations the planner cannot estimate (RDD-backed leaves default
+    to ``Long.MaxValue``) resolve to ``candidates`` — the conservative
+    direction: when the size is unknown, take the form whose cost is
+    bounded by the candidate set rather than the corpus."""
     if scope not in _VERIFY_SCOPES:
         raise ValueError(
             f"{caller}: verify_scope must be one of {_VERIFY_SCOPES}, "
@@ -257,12 +260,15 @@ def _resolve_verify_scope(
         # regime at ANY size; keep the broadcast-threshold default as
         # the cheap/heavy crossover
         thr = _DEFAULT_BROADCAST_BYTES
-    est = int(
+    leaves = (
         df.select(F.col(id_col), F.col(text_col))
         ._jdf.queryExecution()
         .optimizedPlan()
-        .stats()
-        .sizeInBytes()
+        .collectLeaves()
+    )
+    est = sum(
+        int(leaves.apply(i).stats().sizeInBytes())
+        for i in range(leaves.size())
     )
     return "candidates" if est > thr else "corpus"
 

@@ -41,11 +41,24 @@ context as its FIRST argument: ``f(ctx, key, ...)``.
 Empty output for a key is fine in both tiers (the reference needed a
 dedicated fix for this — github issue #5, ``package.scala:30-38``; in
 the Arrow world an empty/yielded-nothing result is naturally legal).
+
+Output batching (stream and arrow tiers): Spark pays a fixed cost per
+output Arrow batch, so the tiers do not hand over each key's output on
+its own. They buffer the non-empty frames (RecordBatches) ``f`` yields,
+across keys, while consecutive ones have the same columns and dtypes
+(an equal schema), and send one concatenated batch when the buffer
+reaches the session's ``spark.sql.execution.arrow.maxRecordsPerBatch``
+rows (read on the driver when the op is built; ``<= 0`` means no row
+limit, as in Spark), when the next frame's columns or dtypes differ, and
+when the partition ends. A frame already at the limit goes out as it
+is. Output rows, their order and their types are exactly those of
+sending every frame alone, and state stays O(one batch) — provided
+``f`` does not mutate a frame after yielding it.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -53,6 +66,55 @@ from ..core import GroupSortedFrame
 from .streaming_engine import iter_key_runs
 
 __all__ = ["map_stream_by_key", "take_by_key"]
+
+
+def _batch_rows(spark) -> int:
+    """The session's Arrow batch size in rows (Spark's default 10,000);
+    0 when it sets no limit."""
+    n = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    return max(n, 0)
+
+
+def _coalesce(
+    outs: Iterable, limit: int, rows: Callable, signature: Callable, concat: Callable
+) -> Iterator:
+    """Merge consecutive non-empty outputs of equal ``signature`` into
+    one per ``limit`` rows (see the module docstring). ``None`` and
+    empty outputs are dropped; an output of ``limit`` rows or more
+    passes through unconcatenated."""
+    buf: list = []
+    n = 0
+    sig = None
+    for x in outs:
+        if x is None or rows(x) == 0:
+            continue
+        s = signature(x)
+        if buf and (s != sig or (limit and rows(x) >= limit)):
+            yield buf[0] if len(buf) == 1 else concat(buf)
+            buf, n = [], 0
+        buf.append(x)
+        sig = s
+        n += rows(x)
+        if limit and n >= limit:
+            yield buf[0] if len(buf) == 1 else concat(buf)
+            buf, n = [], 0
+    if buf:
+        yield buf[0] if len(buf) == 1 else concat(buf)
+
+
+def _frame_signature(pdf: pd.DataFrame) -> tuple:
+    return tuple(pdf.columns), tuple(pdf.dtypes)
+
+
+def _concat_frames(buf: list) -> pd.DataFrame:
+    return pd.concat(buf, ignore_index=True)
+
+
+def _concat_batches(buf: list):
+    import pyarrow as pa
+
+    # pyarrow 16 has no concat_batches
+    return pa.Table.from_batches(buf).combine_chunks().to_batches()[0]
 
 
 def map_stream_by_key(
@@ -86,14 +148,16 @@ def map_stream_by_key(
                 out = func(ctx_cell[0], key, pdf)
             else:
                 out = func(key, pdf)
-            return out if out is not None else pdf.iloc[0:0]
+            # no columns at all: Spark accepts an empty result of any shape
+            return out if out is not None else pd.DataFrame()
 
         return gsf.df.groupBy(*key_cols).applyInPandas(per_group, schema)
 
     if tier == "stream":
         key_cols = gsf.key_cols
+        limit = _batch_rows(gsf.df.sparkSession)
 
-        def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def outputs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # context created once per partition (package.scala:13)
             ctx = context() if context is not None else None
             for key, chunks in iter_key_runs(batches, key_cols):
@@ -101,9 +165,10 @@ def map_stream_by_key(
                     key, chunks
                 )
                 if out is not None:
-                    for pdf in out:
-                        if pdf is not None and len(pdf):
-                            yield pdf
+                    yield from out
+
+        def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            return _coalesce(outputs(batches), limit, len, _frame_signature, _concat_frames)
 
         return gsf.df.mapInPandas(part, schema)
 
@@ -114,15 +179,23 @@ def map_stream_by_key(
         from .streaming_engine import iter_key_runs_arrow
 
         key_cols = gsf.key_cols
+        limit = _batch_rows(gsf.df.sparkSession)
 
-        def part_arrow(batches):
+        def outputs_arrow(batches):
             ctx = context() if context is not None else None
             for key, rbs in iter_key_runs_arrow(batches, key_cols):
                 out = func(ctx, key, rbs) if context is not None else func(key, rbs)
                 if out is not None:
-                    for rb in out:
-                        if rb is not None and rb.num_rows:
-                            yield rb
+                    yield from out
+
+        def part_arrow(batches):
+            return _coalesce(
+                outputs_arrow(batches),
+                limit,
+                lambda rb: rb.num_rows,
+                lambda rb: rb.schema,
+                _concat_batches,
+            )
 
         return gsf.df.mapInArrow(part_arrow, schema)
 

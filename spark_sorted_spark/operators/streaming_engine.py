@@ -27,6 +27,14 @@ Used by the streaming ("never materialize") tier of
 ``map_stream_by_key`` / ``fold_left_by_key`` / ``reduce_left_by_key``
 / ``scan_left_by_key``. The materializing tier uses ``applyInPandas``
 instead and doesn't come through here.
+
+Output is batched across keys, never one Arrow batch per key (Spark's
+fixed cost per batch would dominate when groups are small):
+``run_fold_partition`` buffers one row per key and builds a frame per
+``emit_every`` keys; ``map_stream_by_key``'s stream and arrow tiers
+concatenate consecutive user frames of equal columns and dtypes up to
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows; the scan tier
+emits one frame per input batch.
 """
 
 from __future__ import annotations

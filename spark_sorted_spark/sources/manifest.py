@@ -57,6 +57,7 @@ generations for long-running readers.
 
 from __future__ import annotations
 
+import re
 from contextlib import contextmanager
 
 __all__ = [
@@ -82,6 +83,70 @@ def _fs(spark, path: str):
     stores), not just the driver's local disk."""
     hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
+_DRIVER_CACHE: dict = {}
+
+
+def _cached_driver_read(spark, path: str, sub: str, load, stamp=None):
+    """Driver-side cache of what ``load()`` derives from the files at
+    ``{path}/{sub}``, reused while that file generation is unchanged:
+    the bounded metadata of an ANN index (codebooks, centroid tables,
+    meta rows — a repeated probe skips their collect) and the inferred
+    schema of a catalog table (``tpch.load_table`` — a repeated scan
+    skips the inference job). ``stamp`` is folded into the generation:
+    the session settings ``load()`` depends on.
+
+    Staleness: the generation stamp is the mtime of ``{path}/{sub}``
+    plus its listing (names, lengths and mtimes of the entries directly
+    under a directory; the file itself for a file). Every store publish
+    replaces the metadata directory — the rename layout stages to a
+    sibling and swaps whole dirs, the manifest layout resolves to a
+    fresh ``gen-{k}`` path — and a rewrite of a table replaces its file
+    or its part files, so the stamp changes and a stale hit cannot
+    survive. Directory mtimes are millisecond-granular and SYNTHETIC
+    (often 0) on object stores like S3A, hence the listing: Spark part
+    filenames embed the write's UUID, so a rewrite at the same path
+    changes the listing even where the mtime does not. Appends never
+    rewrite index metadata (codebooks/centroids are frozen by
+    contract), so append-then-probe reuses the cache. If the path is
+    unreadable ``load()`` runs uncached (a missing path keeps its loud
+    error). One entry per (path, sub): a new generation evicts the
+    prior one."""
+    try:
+        fs, hpath = _fs(spark, f"{path}/{sub}")
+        st = fs.getFileStatus(hpath)
+        listing = tuple(
+            sorted(
+                (s.getPath().getName(), s.getLen(), s.getModificationTime())
+                for s in fs.listStatus(hpath)
+            )
+        )
+        gen = (st.getModificationTime(), listing, stamp)
+    except Exception:
+        return load()
+    key = (path, sub)
+    hit = _DRIVER_CACHE.get(key)
+    if hit is not None and hit[0] == gen:
+        return hit[1]
+    val = load()
+    _DRIVER_CACHE[key] = (gen, val)
+    # manifest-layout eviction: a republish resolves to a NEW
+    # ``{root}/gen-{k}`` path, so the same-key replacement above never
+    # fires — drop the prior generations of the same root or a
+    # long-lived serving driver leaks one centroid table/codebook set
+    # per nightly republish
+    root = re.sub(r"/gen-\d+$", "", path)
+    if root != path:
+        for stale in [
+            k2
+            for k2 in _DRIVER_CACHE
+            if k2 != key
+            and k2[1] == sub
+            and re.sub(r"/gen-\d+$", "", k2[0]) == root
+        ]:
+            del _DRIVER_CACHE[stale]
+    return val
 
 
 def _exists(spark, path: str) -> bool:

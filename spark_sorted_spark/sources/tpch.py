@@ -30,12 +30,41 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Session settings parquet schema inference reads: part of the
+# generation a cached schema is valid for.
+_INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.session.timeZone",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
+    """Scan of ``{sf_dir}/{name}.parquet`` (a file or a directory).
+
+    The parquet schema is inferred once per file generation: inference
+    runs a Spark job of its own, so a repeated scan of an unchanged
+    table reads with the schema inferred before
+    (``spark.read.schema(cached)``) and fires no job while the query is
+    built. Staleness contract (``manifest._cached_driver_read``, the
+    one ANN index metadata uses): the generation is the path's mtime
+    plus its listing — names, lengths and mtimes of the part files of a
+    directory, the file itself otherwise — and the session's parquet
+    inference settings (``_INFERENCE_CONFS``). Rewriting the table, in
+    place or under new part names, changes the generation and the next
+    scan infers again; a missing path raises Spark's own error."""
     sf_dir = sf_dir or DEFAULT_SF_DIR
     # Worker closures (mapInPandas etc.) reference this package by
     # module path; ship it so any driver session resolves it (no-op
     # after the first call per context).
     from ..shipping import ensure_workers_can_import
+    from .manifest import _cached_driver_read
 
     ensure_workers_can_import(spark)
     # Event-time portability: the driver's parquet has carried `ts` as
@@ -49,7 +78,15 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # event_ts below, which dispatch on the actual column type.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _cached_driver_read(
+        spark,
+        sf_dir,
+        f"{name}.parquet",
+        lambda: spark.read.parquet(path).schema,
+        stamp=tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def event_ts_us(df: DataFrame, col: str = "ts") -> Column:

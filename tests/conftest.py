@@ -12,29 +12,31 @@ from spark_sorted_spark.session import get_spark
 
 def _nio_chmod_fs_args(out_dir) -> str | None:
     """spark-submit arguments that swap in
-    ``localfs/NioChmodLocalFileSystem`` for ``file:`` paths, compiled
-    into ``out_dir``: without Hadoop's native library every file and
-    directory a write creates starts a ``chmod`` process (~8 ms each on
-    a 4-core host, several thousand per minute of this suite). None
-    when there is no ``javac`` or Hadoop jar to compile against, or the
-    build fails."""
+    ``localfs/NioChmodLocalFileSystem`` (FileSystem writes) and
+    ``localfs/NioChmodFs`` (FileContext writes: streaming checkpoints)
+    for ``file:`` paths, compiled into ``out_dir``: without Hadoop's
+    native library every file and directory a write creates starts a
+    ``chmod`` process (~8 ms each on a 4-core host, several thousand
+    per minute of this suite). None when there is no ``javac`` or
+    Hadoop jar to compile against, or the build fails."""
     import pyspark
 
     jars = glob.glob(
         os.path.join(os.path.dirname(pyspark.__file__), "jars", "hadoop-client-api-*.jar")
     )
-    src = os.path.join(os.path.dirname(__file__), "localfs", "NioChmodLocalFileSystem.java")
+    srcs = sorted(glob.glob(os.path.join(os.path.dirname(__file__), "localfs", "*.java")))
     if not jars or shutil.which("javac") is None:
         return None
     built = subprocess.run(
-        ["javac", "-nowarn", "-cp", jars[0], "-d", str(out_dir), src],
+        ["javac", "-nowarn", "-cp", jars[0], "-d", str(out_dir), *srcs],
         capture_output=True,
     )
     if built.returncode != 0:
         return None
     return (
         f"--driver-class-path {shlex.quote(str(out_dir))} "
-        "--conf spark.hadoop.fs.file.impl=localfs.NioChmodLocalFileSystem"
+        "--conf spark.hadoop.fs.file.impl=localfs.NioChmodLocalFileSystem "
+        "--conf spark.hadoop.fs.AbstractFileSystem.file.impl=localfs.NioChmodFs"
     )
 
 

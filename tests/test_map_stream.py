@@ -230,3 +230,216 @@ def test_arrow_tier_matches_stream_tier(spark):
     got_a = sorted(map(tuple, map_stream_by_key(gs, fn_arrow, schema, tier="arrow").collect()))
     got_p = sorted(map(tuple, map_stream_by_key(gs, fn_pandas, schema, tier="stream").collect()))
     assert got_a == got_p and len(got_a) == 3
+
+
+# -- output batching (stream and arrow tiers) ------------------------------
+# The tiers concatenate consecutive user frames of equal columns and
+# dtypes up to the session's maxRecordsPerBatch rows. The fixture's
+# function switches, key by key, between column orders, int and float
+# (NaN) dtypes, object columns, empty frames and None, so a
+# concatenation across a signature change would show: int64 values past
+# 2**53 lose precision once upcast to float64.
+_BIG = 2**53 + 1
+
+
+def _mixed_fns():
+    """``(stream_fn, pandas_fn, arrow_fn)`` — nested, so that Spark
+    ships them by value (workers cannot import this test module)."""
+    import pyarrow as pa
+
+    big = _BIG
+
+    def frames(key, n):
+        k = key[0]
+        kind = k % 6
+        xs = [big + k + i for i in range(n)]
+        if kind == 0:
+            yield pd.DataFrame({"k": [k] * n, "x": xs, "s": [f"s{k}"] * n})
+        elif kind == 1:  # same columns, other order
+            yield pd.DataFrame({"s": [f"r{k}"] * n, "x": xs, "k": [k] * n})
+        elif kind == 2:  # float x with NaN: must not be merged with int x
+            x = [float(k)] * n
+            x[0] = float("nan")
+            yield pd.DataFrame({"k": [k] * n, "x": x, "s": [None] * n})
+        elif kind == 3:  # empty frames and None are dropped
+            yield pd.DataFrame({"k": [], "x": [], "s": []})
+            yield None
+            yield pd.DataFrame({"k": [k], "x": [big], "s": [None]})
+        elif kind == 4:  # object x column
+            yield pd.DataFrame(
+                {"k": [k] * n, "x": pd.Series(xs, dtype=object), "s": ["o"] * n}
+            )
+        # kind 5: no output at all
+
+    def stream_fn(key, chunks):
+        n = sum(len(c) for c in chunks)
+        yield from frames(key, n)
+
+    def pandas_fn(key, pdf):
+        out = [f for f in frames(key, len(pdf)) if f is not None and len(f)]
+        if not out:
+            return None
+        cols = ["k", "x", "s"]
+        return pd.concat([f[cols].astype(object) for f in out], ignore_index=True)
+
+    def arrow_fn(key, rbs):
+        # mapInArrow needs one schema for all of a task's batches, so
+        # only the sizes vary here
+        n = sum(rb.num_rows for rb in rbs)
+        k = key[0]
+        kind = k % 4
+        if kind == 0:
+            yield pa.RecordBatch.from_pydict(
+                {"k": [k] * n, "x": [big + k + i for i in range(n)], "s": [f"s{k}"] * n}
+            )
+        elif kind == 1:
+            yield pa.RecordBatch.from_pydict(
+                {"k": [k] * n, "x": pa.array([None] * n, pa.int64()),
+                 "s": pa.array([None] * n, pa.string())}
+            )
+        elif kind == 2:
+            yield pa.RecordBatch.from_pydict(
+                {"k": pa.array([], pa.int64()), "x": pa.array([], pa.int64()),
+                 "s": pa.array([], pa.string())}
+            )
+            yield None
+            yield pa.RecordBatch.from_pydict({"k": [k], "x": [big], "s": ["one"]})
+        # kind 3: no output at all
+
+    return stream_fn, pandas_fn, arrow_fn
+
+
+def _mixed_input(spark, n_keys=60, per_key=3):
+    rows = [(k, i) for k in range(n_keys) for i in range(per_key)]
+    return spark.createDataFrame(rows, "k bigint, v bigint")
+
+
+_MIXED_SCHEMA = "k bigint, x bigint, s string"
+
+
+def _typed_rows(df):
+    return [tuple(repr(v) for v in r) for r in df.collect()]
+
+
+def _with_batch_rows(spark, n, build):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        return _typed_rows(build())
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_stream_tier_batching_keeps_rows_order_and_types(spark):
+    gs = group_sort(_mixed_input(spark), "k", order_by="v", num_partitions=1)
+    stream_fn, pandas_fn, _ = _mixed_fns()
+
+    def build():
+        return map_stream_by_key(gs, stream_fn, _MIXED_SCHEMA, tier="stream")
+
+    # limit 1: every frame is sent alone, as a per-key emitter would
+    per_frame = _with_batch_rows(spark, 1, build)
+    batched = _with_batch_rows(spark, 7, build)
+    default = _typed_rows(build())
+    pandas = _typed_rows(map_stream_by_key(gs, pandas_fn, _MIXED_SCHEMA, tier="pandas"))
+    assert per_frame and len(per_frame) == len(pandas)
+    assert batched == per_frame == default  # same order within the partition
+    assert sorted(default) == sorted(pandas)
+    assert repr(_BIG) in {r[1] for r in default}
+
+
+def test_arrow_tier_batching_keeps_rows_order_and_types(spark):
+    gs = group_sort(_mixed_input(spark), "k", order_by="v", num_partitions=1)
+    arrow_fn = _mixed_fns()[2]
+
+    def build():
+        return map_stream_by_key(gs, arrow_fn, _MIXED_SCHEMA, tier="arrow")
+
+    per_frame = _with_batch_rows(spark, 1, build)
+    batched = _with_batch_rows(spark, 7, build)
+    default = _typed_rows(build())
+    assert per_frame and batched == per_frame == default
+    # kind 0 keys keep their exact int64 values
+    assert repr(_BIG + 4) in {r[1] for r in default}
+
+
+class _Stub:
+    """Just enough of a GroupSortedFrame for map_stream_by_key to hand
+    back the partition function it would give Spark."""
+
+    def __init__(self, limit):
+        conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": str(limit)}
+        self.key_cols = ("k",)
+        self.df = self
+        self.sparkSession = self
+        self.conf = conf
+
+    def mapInPandas(self, part, schema):
+        return part
+
+    def mapInArrow(self, part, schema):
+        return part
+
+
+@pytest.mark.parametrize("tier", ["stream", "arrow"])
+def test_partition_function_yields_few_batches(tier):
+    import math
+
+    import pyarrow as pa
+
+    limit, n_keys, flip_every = 64, 1000, 250
+    ks = list(range(n_keys))
+    inputs = [pd.DataFrame({"k": ks[i:i + 100], "v": ks[i:i + 100]})
+              for i in range(0, n_keys, 100)]
+
+    def frame(k):
+        # one row per key; x flips dtype every ``flip_every`` keys
+        x = [k] if (k // flip_every) % 2 == 0 else [float(k)]
+        return {"k": [k], "x": x}
+
+    if tier == "stream":
+        fn = lambda key, chunks: iter([pd.DataFrame(frame(key[0]))])  # noqa: E731
+        batches = inputs
+        rows = len
+    else:
+        fn = lambda key, rbs: iter([pa.RecordBatch.from_pydict(frame(key[0]))])  # noqa: E731
+        batches = [pa.RecordBatch.from_pandas(b, preserve_index=False) for b in inputs]
+        rows = lambda b: b.num_rows  # noqa: E731
+
+    part = map_stream_by_key(_Stub(limit), fn, "k bigint, x double", tier=tier)
+    out = list(part(iter(batches)))
+    changes = n_keys // flip_every - 1
+    assert sum(rows(b) for b in out) == n_keys
+    assert len(out) <= math.ceil(n_keys / limit) + changes
+    # a per-key emitter would have sent n_keys batches
+    assert len(out) < n_keys // 10
+    got = pd.concat([b if tier == "stream" else b.to_pandas() for b in out])
+    assert got["k"].tolist() == ks
+    # no limit (<= 0, as in Spark): one batch per run of equal dtypes
+    part = map_stream_by_key(_Stub(0), fn, "k bigint, x double", tier=tier)
+    assert len(list(part(iter(batches)))) == changes + 1
+
+
+def test_partition_function_passes_large_frames_through():
+    big = pd.DataFrame({"k": [1] * 10, "x": range(10)})
+    small = pd.DataFrame({"k": [2], "x": [0]})
+    outs = {1: [small, big], 2: [small]}
+    inputs = [pd.DataFrame({"k": [1, 2], "v": [0, 0]})]
+    part = map_stream_by_key(
+        _Stub(4), lambda key, chunks: iter(outs[key[0]]), "k bigint, x bigint", tier="stream"
+    )
+    out = list(part(iter(inputs)))
+    # the small frame goes out first, the 10-row frame as it is
+    assert [len(b) for b in out] == [1, 10, 1]
+    assert out[1] is big
+
+
+def test_sessionize_stream_plans_map_in_pandas(spark, sf_dir):
+    from spark_sorted_spark.queries import QUERIES
+
+    from tests.conftest import plan_of
+
+    plan = plan_of(QUERIES["sessionize_stream"](spark, sf_dir), "simple")
+    assert "MapInPandas" in plan, plan
+    assert plan.count("Exchange") == 1, plan

@@ -18,6 +18,7 @@ from spark_sorted_spark.functions.dedup import (
     _parse_byte_conf,
     _resolve_verify_scope,
     contains_join,
+    exact_dedup,
     jaccard_prefix_join,
     jaccard_prefix_pairs,
     minhash_lsh_pairs,
@@ -98,6 +99,12 @@ def test_auto_flips_at_broadcast_threshold(spark, sf_dir):
     # form (the recorded PLANS.md pins)
     docs = load_table(spark, "documents", sf_dir)
     assert _resolve_verify_scope(docs, "text", "doc_id", "auto", "t") == "corpus"
+    # a join of parquet relations (pipeline_clean_corpus's d1) is sized
+    # by its leaf scans, not by the join's product estimate, so it
+    # stays corpus too
+    keep = exact_dedup(docs).select(F.col("keep_id").alias("doc_id"))
+    d1 = docs.join(keep, "doc_id", "inner")
+    assert _resolve_verify_scope(d1, "text", "doc_id", "auto", "t") == "corpus"
     # an RDD-backed relation has NO size estimate (stats default to
     # Long.MaxValue), so auto conservatively picks the
     # candidate-bounded form — lossless either way

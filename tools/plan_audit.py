@@ -106,6 +106,12 @@ _NOTES = {
         "batch-PRF serving form: same pass structure as the RM3 twin "
         "with binary expansion weights; identical final-plan shape"
     ),
+    "pipeline_clean_corpus": (
+        "near-dup verify in the corpus form (verify_scope auto sizes the "
+        "deduped join by its leaf scans): the candidate-side "
+        "localCheckpoint jobs moved into this plan, 14 -> 16 shuffles "
+        "and 14 -> 7 build jobs per call"
+    ),
 }
 
 # Every BM25 ranker collects its |terms|-row df aggregate at
