@@ -21,7 +21,9 @@ import os
 import runpy
 import zipimport
 
-_reread = zipimport.zipimporter.invalidate_caches
+# zipimporter.invalidate_caches exists from CPython 3.10; before that
+# the worker has no archive re-read to spare and runs as it is
+_reread = getattr(zipimport.zipimporter, "invalidate_caches", None)
 
 
 def _invalidate_if_changed(self):
@@ -35,5 +37,6 @@ def _invalidate_if_changed(self):
         self._stamp = stamp
 
 
-zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+if _reread is not None:
+    zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
 runpy.run_module("pyspark.daemon", run_name="__main__", alter_sys=True)
