@@ -232,14 +232,15 @@ def _resolve_verify_scope(
 
     ``auto`` switches to ``candidates`` at the point the corpus form
     stops broadcasting, using the planner's size estimate of the
-    relation's leaf scans (the sum of ``sizeInBytes`` over the
-    optimized plan's leaves) vs the session broadcast threshold — so
-    for parquet-backed inputs at bench/test scale the plan is
-    byte-identical to the recorded ``corpus`` form, and the flip
+    ``(id, text)`` projection vs the session broadcast threshold — so
+    for parquet-backed single-table inputs at bench/test scale the plan
+    is byte-identical to the recorded ``corpus`` form, and the flip
     happens where the corpus form's cost model changes regime. The
-    leaves, not the relation's own estimate: a join's output estimate
-    is the PRODUCT of its sides, so ``docs ⋈ exact_dedup(docs)`` would
-    read as corpus-squared while its rows are bounded by its scans.
+    estimate is capped by the sum of the relation's leaf scans
+    (``sizeInBytes`` over the optimized plan's leaves): a join's output
+    estimate is the PRODUCT of its sides, so ``docs ⋈ exact_dedup(docs)``
+    would read as corpus-squared while its rows are bounded by its
+    scans (such a join resolves to ``corpus`` at sf0.001 and sf0.01).
     Relations the planner cannot estimate (RDD-backed leaves default
     to ``Long.MaxValue``) resolve to ``candidates`` — the conservative
     direction: when the size is unknown, take the form whose cost is
@@ -260,15 +261,18 @@ def _resolve_verify_scope(
         # regime at ANY size; keep the broadcast-threshold default as
         # the cheap/heavy crossover
         thr = _DEFAULT_BROADCAST_BYTES
-    leaves = (
+    plan = (
         df.select(F.col(id_col), F.col(text_col))
         ._jdf.queryExecution()
         .optimizedPlan()
-        .collectLeaves()
     )
-    est = sum(
-        int(leaves.apply(i).stats().sizeInBytes())
-        for i in range(leaves.size())
+    leaves = plan.collectLeaves()
+    est = min(
+        int(plan.stats().sizeInBytes()),
+        sum(
+            int(leaves.apply(i).stats().sizeInBytes())
+            for i in range(leaves.size())
+        ),
     )
     return "candidates" if est > thr else "corpus"
 

@@ -44,16 +44,19 @@ the Arrow world an empty/yielded-nothing result is naturally legal).
 
 Output batching (stream and arrow tiers): Spark pays a fixed cost per
 output Arrow batch, so the tiers do not hand over each key's output on
-its own. They buffer the non-empty frames (RecordBatches) ``f`` yields,
-across keys, while consecutive ones have the same columns and dtypes
-(an equal schema), and send one concatenated batch when the buffer
-reaches the session's ``spark.sql.execution.arrow.maxRecordsPerBatch``
-rows (read on the driver when the op is built; ``<= 0`` means no row
-limit, as in Spark), when the next frame's columns or dtypes differ, and
-when the partition ends. A frame already at the limit goes out as it
-is. Output rows, their order and their types are exactly those of
-sending every frame alone, and state stays O(one batch) — provided
-``f`` does not mutate a frame after yielding it.
+its own. They send one batch per INPUT Arrow batch, as the scan tier
+does: the non-empty frames (RecordBatches) ``f`` yields while one input
+batch is current are buffered, across keys, and concatenated when the
+partition moves on to the next input batch, when the next frame's
+columns or dtypes (schema) differ from the buffered ones, and when the
+partition ends. A lone frame goes out as it is. Output rows, their
+order and their types are exactly those of sending every frame alone.
+The buffer holds only what ``f`` yielded while the current input batch
+was read, so frames that are views of their input (``pdf.iloc[:n]``,
+``rb.slice``) keep one earlier input batch alive, not one per key (two
+when ``f`` yields a view of a key's last chunk after the engine has
+read ahead into the next batch). ``f`` must not mutate a frame after
+yielding it.
 """
 
 from __future__ import annotations
@@ -68,36 +71,32 @@ from .streaming_engine import iter_key_runs
 __all__ = ["map_stream_by_key", "take_by_key"]
 
 
-def _batch_rows(spark) -> int:
-    """The session's Arrow batch size in rows (Spark's default 10,000);
-    0 when it sets no limit."""
-    n = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
-    return max(n, 0)
-
-
-def _coalesce(
-    outs: Iterable, limit: int, rows: Callable, signature: Callable, concat: Callable
+def _per_input_batch(
+    batches: Iterable, outputs: Callable, signature: Callable, concat: Callable
 ) -> Iterator:
-    """Merge consecutive non-empty outputs of equal ``signature`` into
-    one per ``limit`` rows (see the module docstring). ``None`` and
-    empty outputs are dropped; an output of ``limit`` rows or more
-    passes through unconcatenated."""
+    """Run ``outputs(batches)`` and merge its consecutive non-empty
+    outputs of equal ``signature`` produced while the same input batch
+    is current into one (see the module docstring). ``None`` and empty
+    outputs are dropped."""
+    pulled = 0
+
+    def counted() -> Iterator:
+        nonlocal pulled
+        for b in batches:
+            pulled += 1
+            yield b
+
     buf: list = []
-    n = 0
-    sig = None
-    for x in outs:
-        if x is None or rows(x) == 0:
+    sig = at = None
+    for x in outputs(counted()):
+        if x is None or not len(x):
             continue
         s = signature(x)
-        if buf and (s != sig or (limit and rows(x) >= limit)):
+        if buf and (s != sig or pulled != at):
             yield buf[0] if len(buf) == 1 else concat(buf)
-            buf, n = [], 0
+            buf = []
         buf.append(x)
-        sig = s
-        n += rows(x)
-        if limit and n >= limit:
-            yield buf[0] if len(buf) == 1 else concat(buf)
-            buf, n = [], 0
+        sig, at = s, pulled
     if buf:
         yield buf[0] if len(buf) == 1 else concat(buf)
 
@@ -155,7 +154,6 @@ def map_stream_by_key(
 
     if tier == "stream":
         key_cols = gsf.key_cols
-        limit = _batch_rows(gsf.df.sparkSession)
 
         def outputs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # context created once per partition (package.scala:13)
@@ -168,7 +166,7 @@ def map_stream_by_key(
                     yield from out
 
         def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            return _coalesce(outputs(batches), limit, len, _frame_signature, _concat_frames)
+            return _per_input_batch(batches, outputs, _frame_signature, _concat_frames)
 
         return gsf.df.mapInPandas(part, schema)
 
@@ -179,7 +177,6 @@ def map_stream_by_key(
         from .streaming_engine import iter_key_runs_arrow
 
         key_cols = gsf.key_cols
-        limit = _batch_rows(gsf.df.sparkSession)
 
         def outputs_arrow(batches):
             ctx = context() if context is not None else None
@@ -189,12 +186,8 @@ def map_stream_by_key(
                     yield from out
 
         def part_arrow(batches):
-            return _coalesce(
-                outputs_arrow(batches),
-                limit,
-                lambda rb: rb.num_rows,
-                lambda rb: rb.schema,
-                _concat_batches,
+            return _per_input_batch(
+                batches, outputs_arrow, lambda rb: rb.schema, _concat_batches
             )
 
         return gsf.df.mapInArrow(part_arrow, schema)

@@ -32,13 +32,14 @@ Output is batched across keys, never one Arrow batch per key (Spark's
 fixed cost per batch would dominate when groups are small):
 ``run_fold_partition`` buffers one row per key and builds a frame per
 ``emit_every`` keys; ``map_stream_by_key``'s stream and arrow tiers
-concatenate consecutive user frames of equal columns and dtypes up to
-``spark.sql.execution.arrow.maxRecordsPerBatch`` rows; the scan tier
-emits one frame per input batch.
+concatenate the consecutive user frames of equal columns and dtypes
+yielded while one input batch is current; the scan tier emits one frame
+per input batch.
 """
 
 from __future__ import annotations
 
+from collections import deque
 from typing import Any, Callable, Iterable, Iterator
 
 import pandas as pd
@@ -138,8 +139,8 @@ def iter_key_runs(
 
         ci = chunk_iter()
         yield key, ci
-        for _ in ci:  # drain the tail the consumer didn't pull
-            pass
+        # drain the tail the consumer didn't pull, keeping no chunk alive
+        deque(ci, maxlen=0)
 
 
 def run_fold_partition(
@@ -222,5 +223,4 @@ def iter_key_runs_arrow(batches, key_cols: tuple[str, ...]):
 
         bi = batch_iter()
         yield key, bi
-        for _ in bi:  # drain unconsumed tail
-            pass
+        deque(bi, maxlen=0)  # drain unconsumed tail, keeping no slice alive

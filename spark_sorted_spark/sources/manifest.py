@@ -98,13 +98,13 @@ def _cached_driver_read(spark, path: str, sub: str, load, stamp=None):
     the session settings ``load()`` depends on.
 
     Staleness: the generation stamp is the mtime of ``{path}/{sub}``
-    plus its listing (names, lengths and mtimes of the entries directly
-    under a directory; the file itself for a file). Every store publish
-    replaces the metadata directory — the rename layout stages to a
-    sibling and swaps whole dirs, the manifest layout resolves to a
-    fresh ``gen-{k}`` path — and a rewrite of a table replaces its file
-    or its part files, so the stamp changes and a stale hit cannot
-    survive. Directory mtimes are millisecond-granular and SYNTHETIC
+    plus its recursive listing (paths, lengths and mtimes of every file
+    under a directory, partition subdirectories at any depth included;
+    the file itself for a file). Every store publish replaces the
+    metadata directory — the rename layout stages to a sibling and swaps
+    whole dirs, the manifest layout resolves to a fresh ``gen-{k}`` path
+    — and a rewrite of a table replaces its file or its part files, so
+    the stamp changes and a stale hit cannot survive. Directory mtimes are millisecond-granular and SYNTHETIC
     (often 0) on object stores like S3A, hence the listing: Spark part
     filenames embed the write's UUID, so a rewrite at the same path
     changes the listing even where the mtime does not. Appends never
@@ -116,12 +116,14 @@ def _cached_driver_read(spark, path: str, sub: str, load, stamp=None):
     try:
         fs, hpath = _fs(spark, f"{path}/{sub}")
         st = fs.getFileStatus(hpath)
-        listing = tuple(
-            sorted(
-                (s.getPath().getName(), s.getLen(), s.getModificationTime())
-                for s in fs.listStatus(hpath)
+        files = fs.listFiles(hpath, True)
+        listing = []
+        while files.hasNext():
+            f = files.next()
+            listing.append(
+                (f.getPath().toString(), f.getLen(), f.getModificationTime())
             )
-        )
+        listing = tuple(sorted(listing))
         gen = (st.getModificationTime(), listing, stamp)
     except Exception:
         return load()

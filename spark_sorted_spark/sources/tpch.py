@@ -54,8 +54,9 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     (``spark.read.schema(cached)``) and fires no job while the query is
     built. Staleness contract (``manifest._cached_driver_read``, the
     one ANN index metadata uses): the generation is the path's mtime
-    plus its listing — names, lengths and mtimes of the part files of a
-    directory, the file itself otherwise — and the session's parquet
+    plus its recursive listing — paths, lengths and mtimes of every file
+    of a directory, inside partition subdirectories too, the file itself
+    otherwise — and the session's parquet
     inference settings (``_INFERENCE_CONFS``). Rewriting the table, in
     place or under new part names, changes the generation and the next
     scan infers again; a missing path raises Spark's own error."""

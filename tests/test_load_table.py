@@ -65,6 +65,19 @@ def test_rewritten_table_returns_new_schema(spark, tmp_path, layout):
     assert sorted(map(tuple, df.collect())) == [(1, "a", 0.5), (2, "b", 1.0), (3, "c", 1.5)]
 
 
+def test_rewrite_inside_a_nested_partition_returns_new_schema(spark, tmp_path):
+    # the top level of the table does not change: only a file two
+    # partition levels down is rewritten
+    part = tmp_path / "t.parquet" / "a=1" / "b=2"
+    part.mkdir(parents=True)
+    _write_file(str(part / "part-0.parquet"))
+    assert load_table(spark, "t", str(tmp_path)).columns == ["id", "name", "a", "b"]
+    _write_file(str(part / "part-0.parquet"), extra=True)
+    df = load_table(spark, "t", str(tmp_path))
+    assert df.columns == ["id", "name", "score", "a", "b"]
+    assert sorted(map(tuple, df.collect()))[0] == (1, "a", 0.5, 1, 2)
+
+
 def test_inference_settings_are_part_of_the_generation(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)

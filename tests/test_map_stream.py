@@ -233,8 +233,8 @@ def test_arrow_tier_matches_stream_tier(spark):
 
 
 # -- output batching (stream and arrow tiers) ------------------------------
-# The tiers concatenate consecutive user frames of equal columns and
-# dtypes up to the session's maxRecordsPerBatch rows. The fixture's
+# The tiers concatenate the consecutive user frames of equal columns and
+# dtypes yielded while one input batch is current. The fixture's
 # function switches, key by key, between column orders, int and float
 # (NaN) dtypes, object columns, empty frames and None, so a
 # concatenation across a signature change would show: int64 values past
@@ -338,7 +338,8 @@ def test_stream_tier_batching_keeps_rows_order_and_types(spark):
     def build():
         return map_stream_by_key(gs, stream_fn, _MIXED_SCHEMA, tier="stream")
 
-    # limit 1: every frame is sent alone, as a per-key emitter would
+    # input batches of 1 row: every key's frames are sent on their own,
+    # as a per-key emitter would
     per_frame = _with_batch_rows(spark, 1, build)
     batched = _with_batch_rows(spark, 7, build)
     default = _typed_rows(build())
@@ -365,15 +366,18 @@ def test_arrow_tier_batching_keeps_rows_order_and_types(spark):
 
 
 class _Stub:
-    """Just enough of a GroupSortedFrame for map_stream_by_key to hand
-    back the partition function it would give Spark."""
+    """Just enough of a GroupSortedFrame for map_stream_by_key and
+    take_by_key to hand back the partition function they would give
+    Spark."""
 
-    def __init__(self, limit):
-        conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": str(limit)}
-        self.key_cols = ("k",)
+    key_cols = ("k",)
+    hidden_cols = ()
+
+    def __init__(self):
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        self.schema = StructType([StructField(c, LongType()) for c in ("k", "v")])
         self.df = self
-        self.sparkSession = self
-        self.conf = conf
 
     def mapInPandas(self, part, schema):
         return part
@@ -383,15 +387,18 @@ class _Stub:
 
 
 @pytest.mark.parametrize("tier", ["stream", "arrow"])
-def test_partition_function_yields_few_batches(tier):
-    import math
-
+def test_partition_function_yields_one_batch_per_input_batch(tier):
     import pyarrow as pa
 
-    limit, n_keys, flip_every = 64, 1000, 250
+    n_keys, flip_every = 1000, 250
     ks = list(range(n_keys))
-    inputs = [pd.DataFrame({"k": ks[i:i + 100], "v": ks[i:i + 100]})
-              for i in range(0, n_keys, 100)]
+
+    def inputs(rows_per_batch):
+        frames = [pd.DataFrame({"k": ks[i:i + rows_per_batch], "v": ks[i:i + rows_per_batch]})
+                  for i in range(0, n_keys, rows_per_batch)]
+        if tier == "arrow":
+            return [pa.RecordBatch.from_pandas(b, preserve_index=False) for b in frames]
+        return frames
 
     def frame(k):
         # one row per key; x flips dtype every ``flip_every`` keys
@@ -400,39 +407,93 @@ def test_partition_function_yields_few_batches(tier):
 
     if tier == "stream":
         fn = lambda key, chunks: iter([pd.DataFrame(frame(key[0]))])  # noqa: E731
-        batches = inputs
-        rows = len
     else:
         fn = lambda key, rbs: iter([pa.RecordBatch.from_pydict(frame(key[0]))])  # noqa: E731
-        batches = [pa.RecordBatch.from_pandas(b, preserve_index=False) for b in inputs]
-        rows = lambda b: b.num_rows  # noqa: E731
 
-    part = map_stream_by_key(_Stub(limit), fn, "k bigint, x double", tier=tier)
-    out = list(part(iter(batches)))
+    part = map_stream_by_key(_Stub(), fn, "k bigint, x double", tier=tier)
     changes = n_keys // flip_every - 1
-    assert sum(rows(b) for b in out) == n_keys
-    assert len(out) <= math.ceil(n_keys / limit) + changes
-    # a per-key emitter would have sent n_keys batches
-    assert len(out) < n_keys // 10
+    out = list(part(iter(inputs(100))))
+    assert sum(len(b) for b in out) == n_keys
+    # one batch per input batch, plus one per change of dtype; a
+    # per-key emitter would have sent n_keys batches
+    assert len(out) <= n_keys // 100 + changes
     got = pd.concat([b if tier == "stream" else b.to_pandas() for b in out])
     assert got["k"].tolist() == ks
-    # no limit (<= 0, as in Spark): one batch per run of equal dtypes
-    part = map_stream_by_key(_Stub(0), fn, "k bigint, x double", tier=tier)
-    assert len(list(part(iter(batches)))) == changes + 1
+    # one input batch: one output batch per run of equal dtypes
+    assert len(list(part(iter(inputs(n_keys))))) == changes + 1
 
 
-def test_partition_function_passes_large_frames_through():
-    big = pd.DataFrame({"k": [1] * 10, "x": range(10)})
-    small = pd.DataFrame({"k": [2], "x": [0]})
-    outs = {1: [small, big], 2: [small]}
-    inputs = [pd.DataFrame({"k": [1, 2], "v": [0, 0]})]
+def test_partition_function_sends_a_lone_frame_as_it_is():
+    lone = pd.DataFrame({"k": [1] * 10, "x": range(10)})
+    inputs = [pd.DataFrame({"k": [1], "v": [0]}), pd.DataFrame({"k": [2], "v": [0]})]
+    outs = {1: [lone], 2: [lone.iloc[:1], lone.iloc[1:3]]}
     part = map_stream_by_key(
-        _Stub(4), lambda key, chunks: iter(outs[key[0]]), "k bigint, x bigint", tier="stream"
+        _Stub(), lambda key, chunks: iter(outs[key[0]]), "k bigint, x bigint", tier="stream"
     )
     out = list(part(iter(inputs)))
-    # the small frame goes out first, the 10-row frame as it is
-    assert [len(b) for b in out] == [1, 10, 1]
-    assert out[1] is big
+    assert [len(b) for b in out] == [10, 3]
+    assert out[0] is lone
+
+
+@pytest.mark.parametrize("tier", ["stream", "arrow"])
+def test_take_by_key_holds_at_most_two_input_chunks(tier, monkeypatch):
+    """``take_by_key(n=1)`` yields a one-row view of each key's first
+    chunk; the output buffer must not keep one chunk per key alive
+    until it flushes."""
+    import weakref
+
+    import numpy as np
+    import pyarrow as pa
+
+    from spark_sorted_spark.operators import streaming_engine
+
+    n_keys, run, batch = 40, 250, 100  # every key spans 3 input batches
+    live: list = []
+
+    def alive():
+        # chunks of one key run can share one array
+        return len({id(a) for a in (r() for r in live) if a is not None})
+
+    if tier == "stream":
+        # the chunks are split_runs' copies of each key run
+        split_runs = streaming_engine.split_runs
+
+        def tracked(pdf, key_cols):
+            for sub in split_runs(pdf, key_cols):
+                # the array a view of the chunk keeps alive: pandas
+                # cuts the runs of one input batch from one copy
+                a = sub["k"].to_numpy()
+                while isinstance(a.base, np.ndarray):
+                    a = a.base
+                live.append(weakref.ref(a))
+                yield sub
+
+        monkeypatch.setattr(streaming_engine, "split_runs", tracked)
+
+    ks = np.repeat(np.arange(n_keys, dtype=np.int64), run)
+
+    def input_batch(i):
+        k = ks[i:i + batch].copy()
+        if tier == "stream":
+            return pd.DataFrame({"k": k, "v": k})
+        # the slices the tier hands on are zero-copy views of k
+        live.append(weakref.ref(k))
+        return pa.RecordBatch.from_arrays([pa.array(k), pa.array(k)], ["k", "v"])
+
+    def inputs():
+        for i in range(0, len(ks), batch):
+            yield input_batch(i)
+            peak[0] = max(peak[0], alive())
+
+    peak = [0]
+    part = take_by_key(_Stub(), 1, tier=tier)
+    rows = 0
+    for b in part(inputs()):
+        peak[0] = max(peak[0], alive())
+        rows += len(b)
+        del b
+    assert rows == n_keys
+    assert live and peak[0] <= 2, peak[0]
 
 
 def test_sessionize_stream_plans_map_in_pandas(spark, sf_dir):
