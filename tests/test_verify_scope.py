@@ -130,6 +130,29 @@ def test_auto_flips_at_broadcast_threshold(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+def test_auto_sizes_a_single_relation_by_its_projection(spark, sf_dir):
+    """The leaf-scan sum caps the estimate, it does not replace it: a
+    single scan is still sized by its ``(id, text)`` projection, which
+    is smaller than the file's full size."""
+    from spark_sorted_spark.sources.tpch import load_table
+
+    docs = load_table(spark, "documents", sf_dir)
+
+    def size(df):
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+    projected = size(docs.select("doc_id", "text"))
+    assert projected < size(docs), "fixture: the projection must be smaller"
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", f"{projected}b")
+        assert _resolve_verify_scope(docs, "text", "doc_id", "auto", "t") == "corpus"
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", f"{projected - 1}b")
+        assert _resolve_verify_scope(docs, "text", "doc_id", "auto", "t") == "candidates"
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
 def test_candidates_scope_bounds_verify_sides(spark):
     from tests.conftest import plan_of
 
