@@ -104,10 +104,11 @@ def _cached_driver_read(spark, path: str, sub: str, load, stamp=None):
     metadata directory — the rename layout stages to a sibling and swaps
     whole dirs, the manifest layout resolves to a fresh ``gen-{k}`` path
     — and a rewrite of a table replaces its file or its part files, so
-    the stamp changes and a stale hit cannot survive. Directory mtimes are millisecond-granular and SYNTHETIC
-    (often 0) on object stores like S3A, hence the listing: Spark part
-    filenames embed the write's UUID, so a rewrite at the same path
-    changes the listing even where the mtime does not. Appends never
+    the stamp changes and a stale hit cannot survive. Directory mtimes
+    are millisecond-granular and SYNTHETIC (often 0) on object stores
+    like S3A, hence the listing: Spark part filenames embed the write's
+    UUID, so a rewrite at the same path changes the listing even where
+    the mtime does not. Appends never
     rewrite index metadata (codebooks/centroids are frozen by
     contract), so append-then-probe reuses the cache. If the path is
     unreadable ``load()`` runs uncached (a missing path keeps its loud
