@@ -40,7 +40,7 @@ from ..sources.manifest import (  # noqa: F401  (_rename, _swap_in: re-exported)
     store_layout,
 )
 from .local_rows import local_rows_df
-from .text import md5_int32, tokens
+from .text import md5_int32, ngrams, over_tokens, tokens
 
 
 __all__ = [
@@ -94,12 +94,60 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     rest idle. At corpus scale inputs already have thousands of file
     splits and this is a no-op; the round-robin repartition only fires
     when partitions < cores, where the shuffle of the small input is
-    noise next to the CPU it unlocks."""
+    noise next to the CPU it unlocks. The count comes from the plan
+    (:func:`_planned_partitions`), so deciding runs no Spark job."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    n = _planned_partitions(df)
+    if n is None:
+        n = df.rdd.getNumPartitions()
+    if n < target:
         return df.repartition(target)
     return df
+
+
+def _planned_partitions(df: DataFrame) -> int | None:
+    """How many partitions ``df`` is as wide as, read from its physical
+    plan before anything runs: a repartition to a fixed count gives
+    that count, a file scan its splits (the scan's RDD, built on the
+    driver from the already listed files), a range or local relation
+    its slices and a checkpointed RDD its partitions; a cached relation
+    is as wide as the plan it caches; a union sums its children and
+    every other node takes its widest child. A shuffle the planner
+    inserts (a join's or an aggregate's) is sized at run time by AQE
+    from the bytes it moves, so the input it serves is judged by its
+    scans: a one-file table joined with itself stays one file wide.
+    ``None`` when a leaf is of another kind."""
+
+    def width(node) -> int | None:
+        kind = node.getClass().getSimpleName()
+        if kind == "ShuffleExchangeExec" and (
+            node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+        ):
+            return int(node.outputPartitioning().numPartitions())
+        if kind == "InMemoryTableScanExec":
+            return width(node.relation().cachedPlan())
+        if kind == "AdaptiveSparkPlanExec":
+            return width(node.inputPlan())
+        kids = node.children()
+        if kids.size() == 0:
+            if kind == "FileSourceScanExec":
+                return int(node.inputRDD().getNumPartitions())
+            if kind == "RangeExec":
+                return int(node.numSlices())
+            if kind in ("LocalTableScanExec", "RDDScanExec"):
+                return int(node.execute().getNumPartitions())
+            return None
+        widths = [width(kids.apply(i)) for i in range(kids.size())]
+        if None in widths:
+            return None
+        if kind == "UnionExec":
+            return sum(widths)
+        if kind == "CoalesceExec":
+            return min(int(node.numPartitions()), widths[0])
+        return max(widths)
+
+    return width(df._jdf.queryExecution().sparkPlan())
 
 
 # Conservative punctuation class for near-exact normalization — the
@@ -153,16 +201,8 @@ def exact_dedup(
 
 def shingles(text_col: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column (empty array when
-    the document has fewer than n tokens — guarded because Spark's
-    ``sequence(1, k)`` with k < 1 would count *down*)."""
-    toks = tokens(text_col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
-    )
+    the document has fewer than n tokens), tokenized once per row."""
+    return over_tokens(text_col, lambda toks: F.array_distinct(ngrams(toks, n)))
 
 
 def _exploded_shingles(
@@ -1070,17 +1110,13 @@ def minhash_lsh_pairs(
         df, text_col, id_col, verify_scope, "minhash_lsh_pairs"
     )
     df = spread_small_input(df)
-    # materialize the band table ONCE: it feeds the bucket-size guard
-    # AND both sides of the candidate self-join, and its lineage is
-    # the whole md5/min-aggregate signature build — without this the
-    # signatures are computed three times (profiled round 6: 2.7 s ->
-    # 1.8 s at sf0.1). Scale-sound because bands are ~4 short rows
-    # per document, orders of magnitude smaller than the text they
-    # index (unlike the exploded shingle table, which is
-    # corpus-sized — ngram_jaccard_pairs deliberately recomputes it).
-    bands = minhash_band_table(df, text_col, id_col, n).localCheckpoint(
-        eager=True
-    )
+    # the band table feeds the bucket-size guard AND both sides of the
+    # candidate self-join, and its lineage is the whole md5/min-aggregate
+    # signature build. All three read one signature exchange: the
+    # planner reuses identical exchanges (AQE runs one query stage for
+    # them), so the signatures are computed once, inside the query,
+    # with no construction-time job.
+    bands = minhash_band_table(df, text_col, id_col, n)
     small = (
         bands.groupBy("band", "band_key")
         .agg(F.count(F.lit(1)).alias("bn"))
@@ -1621,15 +1657,7 @@ def _positioned_windows(
     (expected collisions ~ n^2 / 2^129 — immaterial even at 10^13
     windows) AND DuckDB-replayable; engine-only callers wanting a
     cheaper key can swap xxhash64 in, at the price of the oracle."""
-    toks = tokens(text_col)
-    n = int(min_len)
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = over_tokens(text_col, lambda toks: ngrams(toks, int(min_len)))
     return df.select(
         F.col(id_col), F.posexplode(grams).alias("pos0", "gram")
     ).select(

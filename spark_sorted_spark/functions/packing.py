@@ -30,10 +30,10 @@ crosses workers).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import tokens
+from .text import over_tokens, tokens
 
 __all__ = ["pack_sequences", "pack_sequences_bestfit", "chunk_documents"]
 
@@ -186,9 +186,9 @@ def chunk_documents(
     reproduces it), and it keeps every doc_id present in the output.
 
     Output: ``(id_col, chunk_idx, chunk_text, n_chunk_tokens)``,
-    ``chunk_idx`` 0-based. Pure Catalyst (tokenize -> sequence ->
-    explode -> slice -> concat_ws): a flat map at scan speed, no
-    shuffle at all. Deterministic and engine-portable (DuckDB list
+    ``chunk_idx`` 0-based. Pure Catalyst (tokenize once per row ->
+    sequence -> explode -> slice -> concat_ws): a flat map at scan
+    speed, no shuffle at all. Deterministic and engine-portable (DuckDB list
     slicing reproduces chunks byte-for-byte on whitespace-clean
     text; reconstruction loses only the original whitespace runs,
     the same contract whitespace tokenization always has).
@@ -199,27 +199,26 @@ def chunk_documents(
         raise ValueError(
             f"overlap must be in [0, chunk_tokens), got {overlap}"
         )
-    from .text import tokens
-
     stride = chunk_tokens - overlap
-    toks = tokens(text_col)
-    n = F.size(toks)
-    # chunk count: 1 + ceil((n - chunk_tokens) / stride) for n > chunk,
-    # else 1 — as integer arithmetic: 1 + max(0, ceildiv) via div
-    extra = F.greatest(
-        F.lit(0),
-        ((n - F.lit(chunk_tokens)) + F.lit(stride - 1)).cast("bigint")
-        / F.lit(stride),
-    ).cast("bigint")
-    n_chunks = (F.lit(1) + F.floor(extra)).cast("int")
+
+    def chunks(toks: Column) -> Column:
+        n = F.size(toks)
+        # chunk count: 1 + ceil((n - chunk_tokens) / stride) for n > chunk,
+        # else 1 — as integer arithmetic: 1 + max(0, ceildiv) via div
+        extra = F.greatest(
+            F.lit(0),
+            ((n - F.lit(chunk_tokens)) + F.lit(stride - 1)).cast("bigint")
+            / F.lit(stride),
+        ).cast("bigint")
+        n_chunks = (F.lit(1) + F.floor(extra)).cast("int")
+        return F.transform(
+            F.sequence(F.lit(0), n_chunks - 1),
+            lambda i: F.slice(toks, i * stride + 1, chunk_tokens),
+        )
+
     return df.select(
         F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), n_chunks - 1),
-                lambda i: F.slice(toks, i * stride + 1, chunk_tokens),
-            )
-        ).alias("chunk_idx", "__chunk"),
+        F.posexplode(over_tokens(text_col, chunks)).alias("chunk_idx", "__chunk"),
     ).select(
         id_col,
         F.col("chunk_idx").cast("bigint"),

@@ -134,6 +134,15 @@ def _corpus_stats(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
+def _tokenized(docs: DataFrame, text_col: str, *cols: str) -> DataFrame:
+    """``cols`` plus ``__toks``, the token array as a real column: the
+    document length and the explode both read it, and a projection
+    above does not re-inline an expression it reads twice, so the text
+    is split once per document (inline, the explode's node and the
+    length's node would each split it)."""
+    return docs.select(*cols, tokens(text_col).alias("__toks"))
+
+
 def _postings(
     docs: DataFrame,
     text_col: str,
@@ -146,11 +155,10 @@ def _postings(
     and the scan rankers score. ``vocab`` filters the exploded stream
     against a driver-side literal in the SAME codegen stage (no
     vocabulary relation, no join, no distinct exchange)."""
-    toks = tokens(text_col)
-    occ = docs.select(
+    occ = _tokenized(docs, text_col, id_col, *extra_cols).select(
         F.col(id_col),
-        F.size(toks).alias("dl"),
-        F.explode(toks).alias("tok"),
+        F.size("__toks").alias("dl"),
+        F.explode("__toks").alias("tok"),
         *[F.col(c) for c in extra_cols],
     )
     if vocab is not None:
@@ -162,36 +170,66 @@ def _postings(
     )
 
 
-def _scan_postings(docs, text_col, id_col, stats=None, where=None):
+def _stats_and_df(docs: DataFrame, text_col: str, vocab: list) -> DataFrame:
+    """``(tok, n, sum_dl)``: the corpus statistics and the vocabulary's
+    document frequencies in ONE aggregate (one shuffle, so one map
+    stage and one result stage). The NULL-``tok`` row is ``(n_docs,
+    sum_dl)`` over every row of ``docs``; each other row is a
+    vocabulary term with ``n`` = its df. A document counts a term once
+    (its distinct tokens), as the per-(id, term) postings do when ids
+    are unique."""
+    present = F.coalesce(
+        F.array_distinct("__toks"), F.array().cast("array<string>")
+    )
+    return (
+        _tokenized(docs, text_col)
+        .select(
+            F.size("__toks").alias("dl"),
+            F.explode(
+                F.concat(F.array(F.lit(None).cast("string")), present)
+            ).alias("tok"),
+        )
+        .filter(F.col("tok").isNull() | F.col("tok").isin(vocab))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl"))
+    )
+
+
+def _scan_postings(docs, text_col, id_col, stats=None, where=None, spread=False):
     """Corpus-scan postings source: ``vocab -> (tf, n_docs, sum_dl,
     df_rows)``, plus ``.feedback(ids)``, the (id, tok, tf) postings of
-    feedback documents. The stats scan runs once per source, so both
-    passes of a feedback ranker share it; ``stats=(n_docs, sum_dl)``
-    skips it (exact integers, so a matching pair is bitwise-neutral).
-    ``where`` restricts CANDIDATES only: df is counted on the
-    unfiltered postings, so idf/avgdl stay corpus-wide (the standard
-    filtered-search contract, and the index's ``where`` contract)."""
+    feedback documents. Each call runs one collect,
+    :func:`_stats_and_df`, for its vocabulary's df; the corpus stats of
+    the first call are kept, so both passes of a feedback ranker share
+    them. ``stats=(n_docs, sum_dl)`` replaces them (exact integers, so
+    a matching pair is bitwise-neutral). ``where`` restricts
+    CANDIDATES only: df is counted on the unfiltered corpus, so
+    idf/avgdl stay corpus-wide (the standard filtered-search contract,
+    and the index's ``where`` contract). ``spread`` scores postings
+    built over :func:`~.dedup.spread_small_input` of ``docs``; the
+    collect reads ``docs`` as they are, so it adds no job."""
+    from .dedup import spread_small_input
     from .similarity import _apply_where
 
-    cache = []
+    if stats is not None:
+        n_docs, sum_dl = int(stats[0]), int(stats[1])
+        if n_docs <= 0 or sum_dl < 0:
+            raise ValueError(f"invalid precomputed stats {stats!r}")
+    cache = [] if stats is None else [(n_docs, sum_dl)]
 
     def source(vocab):
+        # bounded-collect: |vocab| df rows plus the stats row
+        rows = _stats_and_df(docs, text_col, vocab).collect()
         if not cache:
-            if stats is not None:
-                n_docs, sum_dl = int(stats[0]), int(stats[1])
-                if n_docs <= 0 or sum_dl < 0:
-                    raise ValueError(f"invalid precomputed stats {stats!r}")
-            else:
-                st = _corpus_stats(docs, text_col).head()
-                # n_docs first — on an empty corpus sum_dl is NULL
-                n_docs = int(st.n_docs)
-                if n_docs == 0:
-                    raise ValueError("corpus is empty")
-                sum_dl = int(st.sum_dl)
-            cache.append((n_docs, sum_dl))
-        tf = _postings(docs, text_col, id_col, vocab)
-        # bounded-collect: |vocab| df rows
-        dfrows = tf.groupBy("tok").agg(F.count(F.lit(1))).collect()
+            st = next((r for r in rows if r.tok is None), None)
+            # n_docs first — on an empty corpus sum_dl is NULL
+            if st is None:
+                raise ValueError("corpus is empty")
+            cache.append((int(st.n), int(st.sum_dl)))
+        dfrows = [(r.tok, r.n) for r in rows if r.tok is not None]
+        tf = _postings(
+            spread_small_input(docs) if spread else docs, text_col, id_col, vocab
+        )
         if where is not None:
             tf = tf.join(
                 _apply_where(docs, where).select(id_col), id_col, "left_semi"
@@ -791,15 +829,12 @@ def bm25_join(
     workload-bounded (|Q| x terms); weights must be positive and
     (query, term) pairs unique — validated driver-side on the
     collected workload."""
-    from .dedup import spread_small_input
-
     qrows, qid_type = _batch_rows(queries, weights, query_id_col, query_text_col)
     # a small parquet corpus arrives as ONE scan partition, which
-    # would serialize the tokenize+explode onto a single core; no-op
-    # at corpus scale where splits >= cores
-    docs = spread_small_input(docs)
+    # would serialize the tokenize+explode onto a single core: spread
+    # the postings (a no-op at corpus scale where splits >= cores)
     return _bm25(
-        _scan_postings(docs, text_col, id_col, stats, where),
+        _scan_postings(docs, text_col, id_col, stats, where, spread=True),
         qrows, k, k1, b, id_col, query_id_col, qid_type,
     )
 
@@ -832,11 +867,9 @@ def bm25_join_prf(
     kept terms. Millions of queries should chunk the batch (outputs
     are per-query independent, so chunk-and-union is
     semantics-free)."""
-    from .dedup import spread_small_input
-
     orig = _collect_query_texts(queries, query_id_col, query_text_col)
     return _two_pass(
-        _scan_postings(spread_small_input(docs), text_col, id_col, where=where),
+        _scan_postings(docs, text_col, id_col, where=where, spread=True),
         orig, k, fb_docs, fb_terms, None, k1, b, id_col,
         query_id_col, queries.schema[query_id_col].dataType,
     )
@@ -864,11 +897,9 @@ def bm25_join_rm3(
     batch ranking. Per-query output is IDENTICAL to looping
     :func:`bm25_topk_rm3` (pinned). Same driver traffic and |Q|
     ceiling as :func:`bm25_join_prf`."""
-    from .dedup import spread_small_input
-
     orig = _collect_query_texts(queries, query_id_col, query_text_col)
     return _two_pass(
-        _scan_postings(spread_small_input(docs), text_col, id_col, where=where),
+        _scan_postings(docs, text_col, id_col, where=where, spread=True),
         orig, k, fb_docs, fb_terms, lam, k1, b, id_col,
         query_id_col, queries.schema[query_id_col].dataType,
     )

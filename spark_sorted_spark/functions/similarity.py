@@ -620,17 +620,21 @@ def ann_lsh_topk_indexed(
 
 
 def _ivf_centroids(
-    df: DataFrame, nlist: int, vec_col: str, id_col: str
+    df: DataFrame, nlist: int, vec_col: str, id_col: str, after_ids=()
 ) -> list[tuple]:
     """Deterministic centroid pick: the ``nlist`` vectors with the
     smallest ``(md5(id), id)`` — a seeded sample, no training loop.
+    Rows whose id is in ``after_ids`` sort after every other row.
     Bounded ``nlist``-row collect after TakeOrdered (not a data-flow
     collect)."""
+    order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
+    if after_ids:
+        order.insert(0, F.col(id_col).isin(list(after_ids)))
     # bounded-collect: nlist centroid seed rows (limit above)
     return [
         (r[0], [float(x) for x in r[1]])
         for r in df.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        .orderBy(*order)
         .limit(nlist)
         .collect()
     ]
@@ -999,10 +1003,16 @@ def pq_codebooks(
     float means over partition order — the PERSISTED index is the
     reproducible artifact; the seeded pick stays the default so the
     oracle-gated query replays bit-for-bit."""
+    return _pq_train(df, m, ksub, dim, vec_col, id_col, lloyd_iters)
+
+
+def _pq_train(df, m, ksub, dim, vec_col, id_col, lloyd_iters, after_ids=()):
+    """:func:`pq_codebooks` with its seeds picked by
+    ``_ivf_centroids(..., after_ids)``."""
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dsub = dim // m
-    seeds = _ivf_centroids(df, ksub, vec_col, id_col)
+    seeds = _ivf_centroids(df, ksub, vec_col, id_col, after_ids)
     if len(seeds) < ksub:
         raise ValueError(
             f"corpus has only {len(seeds)} rows; need >= ksub={ksub}"
@@ -1902,11 +1912,15 @@ class _IvfPq(_Ivf):
         from .dedup import spread_small_input
 
         p = super().train(df, vec_col, id_col, dim, caller, **kw)
-        # the residual encode is the CPU-heavy part of codebook training
-        p.cbs = pq_codebooks(
+        # the residual encode is the CPU-heavy part of codebook training.
+        # The codebooks are seeded from vectors that are NOT centroid
+        # seeds (those sort last): a seed's residual against its own
+        # centroid is zero, and with ksub <= nlist the smallest-md5
+        # picks would all be seeds, leaving every codeword zero.
+        p.cbs = _pq_train(
             self._residuals(spread_small_input(df), p, vec_col, id_col, ()),
-            m, ksub, dim,
-            vec_col="__resid", id_col=id_col, lloyd_iters=pq_lloyd_iters,
+            m, ksub, dim, "__resid", id_col, pq_lloyd_iters,
+            after_ids=[cid for cid, _ in p.cents],
         )
         return p
 

@@ -45,6 +45,37 @@ def tokens(col: Column | str) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
+def bind(value: Column, fn) -> Column:
+    """``fn(v)`` with ``value`` evaluated ONCE per row and bound to the
+    lambda variable ``v``. Higher-order-function lambdas run
+    interpreted, with no common-subexpression elimination, so an
+    expression a lambda body repeats (``tokens(text)`` inside a
+    per-gram ``transform``) is evaluated again for every element:
+    O(tokens^2) per document. The rule for every lambda here: its body
+    reads only lambda variables and attributes."""
+    return F.transform(F.array(value), fn)[0]
+
+
+def over_tokens(col: Column | str, fn) -> Column:
+    """``fn(toks)`` over :func:`tokens` of ``col``, tokenized once per
+    row (see :func:`bind`)."""
+    return bind(tokens(col), fn)
+
+
+def ngrams(toks: Column, n: int) -> Column:
+    """Contiguous word n-grams of the token array ``toks`` (a bound
+    lambda variable, see :func:`bind`), in order; empty when there are
+    fewer than ``n`` tokens (guarded because ``sequence(1, k)`` with
+    k < 1 would count *down*)."""
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def md5_int32(col: Column) -> Column:
     """First 32 bits of md5 as a non-negative bigint — identical in
     DuckDB via hex cast (verified: md5('hello') -> 1564557354)."""
@@ -163,17 +194,6 @@ def repetition_score(
     per-row ``F.aggregate`` fold — no explode/groupBy, so the whole
     operator stays a narrow projection at scan speed (at 100 TB an
     explode would multiply the shuffle by tokens-per-doc)."""
-    toks = tokens(text_col)
-
-    def grams(n: int) -> Column:
-        g = F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-        return F.when(F.size(toks) >= n, g).otherwise(
-            F.array().cast("array<string>")
-        )
-
     def max_run(arr: Column) -> Column:
         # count of the most frequent element = longest equal-run in
         # the sorted array; one in-row left fold, no shuffle
@@ -197,23 +217,36 @@ def repetition_score(
             F.array_sort(arr), acc0, step, lambda acc: acc.getField("best")
         )
 
-    cols = [F.col(id_col), F.size(toks).alias("n_tokens")]
-    for n in ns:
-        g = grams(n)
-        total = F.size(g)
-        dup = total - F.size(F.array_distinct(g))
-        pct = F.when(total > 0, (F.lit(100) * dup).cast("bigint") / total).otherwise(
-            F.lit(0)
-        )
-        cols.append(F.floor(pct).cast("bigint").alias(f"dup_ngram_pct_{n}"))
-    for n in top_ns:
-        g = grams(n)
-        total = F.size(g)
-        pct = F.when(
-            total > 0, (F.lit(100) * max_run(g)).cast("bigint") / total
+    def pct(part: Column, total: Column) -> Column:
+        p = F.when(
+            total > 0, (F.lit(100) * part).cast("bigint") / total
         ).otherwise(F.lit(0))
-        cols.append(F.floor(pct).cast("bigint").alias(f"top_ngram_pct_{n}"))
-    return df.select(*cols)
+        return F.floor(p).cast("bigint")
+
+    def metrics(toks: Column) -> Column:
+        # every gram array is bound once too: each is read two or
+        # three times below
+        fields = [F.size(toks).alias("n_tokens")]
+        for n in ns:
+            fields.append(
+                bind(
+                    ngrams(toks, n),
+                    lambda g: pct(
+                        F.size(g) - F.size(F.array_distinct(g)), F.size(g)
+                    ),
+                ).alias(f"dup_ngram_pct_{n}")
+            )
+        for n in top_ns:
+            fields.append(
+                bind(
+                    ngrams(toks, n), lambda g: pct(max_run(g), F.size(g))
+                ).alias(f"top_ngram_pct_{n}")
+            )
+        return F.struct(*fields)
+
+    return df.select(
+        F.col(id_col), over_tokens(text_col, metrics).alias("__m")
+    ).select(id_col, "__m.*")
 
 
 def build_vocab(

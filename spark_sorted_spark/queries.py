@@ -5108,7 +5108,8 @@ _D2_SQL = (
     "similarity_ann_ivfpq",
     # Full SQL replay of the composite IVF-PQ construction: IVF cell
     # assignment (max-dot over seeded centroids), RESIDUAL x - cent,
-    # residual-PQ codebooks (md5-smallest rows' residuals, sliced),
+    # residual-PQ codebooks (md5-smallest residuals of the rows that
+    # are not centroid seeds, whose residuals would be 0; sliced),
     # argmin-L2 residual encoding, and ADC = list_reduce starting FROM
     # the per-cell dot(q, centroid) over the ordered per-subspace
     # lookups — the exact IEEE fold order the engine uses — restricted
@@ -5137,9 +5138,13 @@ _D2_SQL = (
              list_transform(list_zip(a.e, c.cent), s -> s[1] - s[2]) AS r
       FROM assigned a JOIN cents c USING (cell)),
     rseeds AS (
-      SELECT row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1
+      SELECT row_number() OVER (ORDER BY seed, md5(vec_id::VARCHAR), vec_id) - 1
                  AS c, r
-      FROM resid ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 16),
+      FROM (SELECT vec_id, r, vec_id IN (
+              SELECT vec_id FROM base
+              ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {{nlist}}) AS seed
+            FROM resid)
+      ORDER BY seed, md5(vec_id::VARCHAR), vec_id LIMIT 16),
     cb AS (
       SELECT js.j, s.c, list_slice(s.r, js.j*16+1, (js.j+1)*16) AS sub
       FROM rseeds s CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS j) js),
@@ -5230,9 +5235,13 @@ def similarity_ann_ivfpq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
              list_transform(list_zip(a.e, c.cent), s -> s[1] - s[2]) AS r
       FROM assigned a JOIN cents c USING (cell)),
     rseeds AS (
-      SELECT row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1
+      SELECT row_number() OVER (ORDER BY seed, md5(vec_id::VARCHAR), vec_id) - 1
                  AS c, r
-      FROM resid ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 16),
+      FROM (SELECT vec_id, r, vec_id IN (
+              SELECT vec_id FROM base
+              ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {{nlist}}) AS seed
+            FROM resid)
+      ORDER BY seed, md5(vec_id::VARCHAR), vec_id LIMIT 16),
     cb AS (
       SELECT js.j, s.c, list_slice(s.r, js.j*16+1, (js.j+1)*16) AS sub
       FROM rseeds s CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS j) js),

@@ -28,7 +28,12 @@ def run_available_now(
     offsets, and operator state persist there, so a second call with
     the same dir continues where the first stopped — the
     incremental-backfill pattern (and how the watermark tests pin
-    late-data semantics deterministically)."""
+    late-data semantics deterministically).
+
+    The sink's temp view is dropped once the result is resolved: the
+    returned DataFrame keeps the sink's rows alive for as long as it
+    is referenced, and the session catalog does not collect one view
+    per call."""
     name = query_name or f"q_{uuid.uuid4().hex[:12]}"
     writer = (
         sdf.writeStream.format("memory")
@@ -40,7 +45,9 @@ def run_available_now(
         writer = writer.option("checkpointLocation", checkpoint_dir)
     _drain(writer, timeout_sec, name)
     spark: SparkSession = sdf.sparkSession
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def _drain(writer, timeout_sec: int, what: str) -> None:

@@ -59,11 +59,6 @@ def spark(tmp_path_factory):
         # small local master, few shuffle partitions so multi-partition
         # invariants (key disjointness) are actually exercised.
         s = get_spark("spark_sorted_spark-tests", master="local[4]", shuffle_partitions=4)
-    # list partitioned directories on the driver: past 32 subdirectories
-    # (an LSH index has one per bucket) Spark otherwise lists them with a
-    # distributed job of one task per directory on every read, which on
-    # these tiny stores costs more than the work under test
-    s.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
     yield s
 
 

@@ -1,0 +1,126 @@
+"""Fixed costs a repeated corpus pass must not pay: generated classes
+compiled again, documents tokenized once per n-gram, and Spark jobs
+fired while a query is constructed."""
+
+from __future__ import annotations
+
+import os
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+
+from spark_sorted_spark.functions import dedup, packing, text
+from spark_sorted_spark.queries import QUERIES
+from spark_sorted_spark.sources.tpch import load_table
+
+_PASS = ("pipeline_clean_corpus", "bm25_join")
+
+
+@pytest.fixture(scope="module")
+def corpus_dir(sf_dir, tmp_path_factory):
+    """A private copy of the documents table, the only table the pass
+    reads: a DataFrame another test cached over ``sf_dir`` would
+    otherwise stand in for the scan (AQE then flips broadcast build
+    sides between passes, and each side compiles its own classes)."""
+    out = tmp_path_factory.mktemp("corpus")
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), out)
+    return str(out)
+
+
+def _jobs(spark, build):
+    """``(result of build(), Spark jobs it started)``."""
+    sc = spark.sparkContext
+    group = f"pass-costs-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "corpus pass costs")
+    try:
+        out = build()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _compilations(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def _run_pass(spark, sf_dir):
+    for name in _PASS:
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+
+def test_second_pass_compiles_almost_nothing(spark, corpus_dir):
+    # the first pass fills the class cache (112 classes); at Spark's
+    # default size (100 entries) a second pass compiled 57-78 again
+    _run_pass(spark, corpus_dir)
+    before = _compilations(spark)
+    _run_pass(spark, corpus_dir)
+    assert _compilations(spark) - before <= 5
+
+
+@pytest.mark.parametrize(
+    "name, build_jobs",
+    [("pipeline_clean_corpus", 0), ("bm25_join", 3)],
+)
+def test_construction_fires_few_jobs(spark, corpus_dir, name, build_jobs):
+    # bm25_join: the query batch collect, then ONE aggregate (a map
+    # and a result stage) for n_docs, sum_dl and the vocabulary's df
+    QUERIES[name](spark, corpus_dir)  # first build: the table schema
+    _, jobs = _jobs(spark, lambda: QUERIES[name](spark, corpus_dir))
+    assert jobs <= build_jobs
+
+
+def test_spread_small_input_decides_from_the_plan(spark, sf_dir):
+    docs = load_table(spark, "documents", sf_dir)
+    keep = dedup.exact_dedup(docs).select(F.col("keep_id").alias("doc_id"))
+    # an adaptive input: its partition count after the join's shuffle
+    # exists only once the shuffle ran
+    joined = docs.join(keep, "doc_id")
+    out, jobs = _jobs(spark, lambda: dedup.spread_small_input(joined))
+    assert jobs == 0
+    # one file wide, so it is spread over the cores
+    assert out is not joined
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    # a cached input is as wide as the plan it caches, known before
+    # it ran
+    cached = docs.repartition(2).cache()
+    try:
+        out, jobs = _jobs(spark, lambda: dedup.spread_small_input(cached))
+        assert jobs == 0 and out is not cached
+    finally:
+        cached.unpersist()
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    out, start = [], 0
+    while (i := plan.find("lambdafunction(", start)) >= 0:
+        depth, j = 0, i + len("lambdafunction")
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+            if depth == 0:
+                break
+        out.append(plan[i:j])
+        start = i + 1
+    return out
+
+
+_NGRAM_BUILDERS = {
+    "shingles": lambda d: d.select("doc_id", dedup.shingles("text").alias("sh")),
+    "positioned_windows": lambda d: dedup._positioned_windows(d, "text", "doc_id", 8),
+    "repetition_score": lambda d: text.repetition_score(d, top_ns=(2,)),
+    "chunk_documents": lambda d: packing.chunk_documents(d, 16, overlap=4),
+}
+
+
+@pytest.mark.parametrize("builder", sorted(_NGRAM_BUILDERS))
+def test_ngram_builders_tokenize_once_per_row(spark, sf_dir, builder):
+    df = _NGRAM_BUILDERS[builder](load_table(spark, "documents", sf_dir))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    # lambdas run interpreted, with no common-subexpression
+    # elimination: a tokenizer in a lambda body runs once per element
+    assert plan.count("split(") == 1
+    bodies = _lambda_bodies(plan)
+    assert bodies and not any("split(" in b for b in bodies)

@@ -92,6 +92,24 @@ def test_stream_dedup_matches_distinct(spark, sf_dir):
     assert _rows(out) == _rows(batch)
 
 
+def test_run_available_now_leaves_no_sink_view(spark, sf_dir):
+    # every drain used to leave its q_<uuid> memory-sink view, and the
+    # sink's rows with it, in the session catalog
+    def drain():
+        sdf = stream_table(spark, "events", sf_dir)
+        return run_available_now(
+            stream_dedup(sdf.select("user_id", "event_type"), ["user_id", "event_type"])
+        )
+
+    tables = len(spark.catalog.listTables())
+    first = drain()
+    rows = _rows(first)
+    second = drain()
+    assert len(spark.catalog.listTables()) == tables
+    assert _rows(first) == rows == _rows(second)
+    assert first.filter(F.col("user_id") >= 0).count() == len(rows)
+
+
 def test_stream_fold_single_batch_equals_batch_fold(spark, sf_dir):
     sdf = stream_table(spark, "events", sf_dir)
     out = run_available_now(

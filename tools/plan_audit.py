@@ -67,6 +67,15 @@ def audit(df) -> dict:
 # full-scan twin of an index/banded serving form, kept gated so the
 # cheap form stays pinned bitwise against ground truth. A cold reader
 # auditing shuffle counts should read the note, not flag the row.
+# minhash_lsh_pairs no longer checkpoints its band table at
+# construction: the plan now holds the table's lineage once per reader
+# and AQE runs the readers' shared signature exchange once.
+_BANDS_IN_PLAN = (
+    "the band-table localCheckpoint jobs moved into this plan (the "
+    "bucket guard and both self-join sides each show the signature "
+    "lineage; AQE runs their shared exchange once)"
+)
+
 _NOTES = {
     "hybrid_join": (
         "scan twin of hybrid_join_indexed: composes two scan-form "
@@ -110,8 +119,10 @@ _NOTES = {
         "near-dup verify in the corpus form (verify_scope auto sizes the "
         "deduped join by its leaf scans): the candidate-side "
         "localCheckpoint jobs moved into this plan, 14 -> 16 shuffles "
-        "and 14 -> 7 build jobs per call"
+        "and 14 -> 7 build jobs per call; then " + _BANDS_IN_PLAN
+        + ", 16 -> 28 shuffles and 7 -> 0 build jobs per call"
     ),
+    "dedup_minhash_lsh": _BANDS_IN_PLAN + ", 6 -> 13 shuffles",
 }
 
 # Every BM25 ranker collects its |terms|-row df aggregate at
