@@ -344,6 +344,47 @@ def _verify_side_sets(
     )
 
 
+def _jaccard_verify(
+    cand: DataFrame, left: DataFrame, right: DataFrame, ids: tuple,
+    sizes: tuple, id_col: str, text_col: str, n: int, scope: str,
+    tau_num: int, tau_den: int,
+) -> DataFrame:
+    """The one exact shingle-Jaccard verify of candidate id pairs:
+    ``cand`` holds the ``ids`` = (left id, right id) columns naming
+    documents of ``left`` and ``right``. Returns ``(*ids, n_common,
+    *sizes)`` for the pairs meeting the integer threshold
+    ``tau_den*c >= tau_num*(na+nb-c)`` over the distinct-shingle sets
+    (``array_intersect`` of the per-document arrays, so every emitted
+    pair's Jaccard is exact).
+
+    ``cand`` is re-spread first: AQE coalesces the tiny id-pair
+    shuffle to ~1 partition, which would serialize the CPU-heavy
+    verify. Under ``candidates`` scope it is then checkpointed, so
+    each side's shingle sets are computed only for documents in some
+    pair (:func:`_verify_side_sets`)."""
+    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+    if scope == "candidates":
+        cand = cand.localCheckpoint(eager=True)
+    sets = ["sh_" + size[2] for size in sizes]  # n_a -> sh_a, n_left -> sh_l
+    out = cand
+    for df, pair_col, set_col in zip((left, right), ids, sets):
+        out = out.join(
+            _verify_side_sets(df, cand, pair_col, id_col, text_col, n, scope, set_col),
+            pair_col,
+        )
+    na, nb = sizes
+    return (
+        out.withColumn("n_common", F.size(F.array_intersect(*sets)))
+        .withColumn(na, F.size(sets[0]))
+        .withColumn(nb, F.size(sets[1]))
+        .filter(
+            F.lit(tau_den) * F.col("n_common")
+            >= F.lit(tau_num) * (F.col(na) + F.col(nb) - F.col("n_common"))
+        )
+        .select(*ids, "n_common", na, nb)
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -404,24 +445,9 @@ def ngram_jaccard_pairs(
         )
         .distinct()
     )
-    # AQE coalesces the tiny id-pair shuffle to ~1 partition, which
-    # would serialize the array_intersect verify; re-spread explicitly
-    cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    if scope == "candidates":
-        cand = cand.localCheckpoint(eager=True)
-    sa = _verify_side_sets(df, cand, "doc_a", id_col, text_col, n, scope, "sh_a")
-    sb = _verify_side_sets(df, cand, "doc_b", id_col, text_col, n, scope, "sh_b")
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("n_a", F.size("sh_a"))
-        .withColumn("n_b", F.size("sh_b"))
-        .filter(
-            F.lit(tau_den) * F.col("n_common")
-            >= F.lit(tau_num) * (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-        )
-        .select("doc_a", "doc_b", "n_common", "n_a", "n_b")
+    return _jaccard_verify(
+        cand, df, df, ("doc_a", "doc_b"), ("n_a", "n_b"), id_col, text_col,
+        n, scope, tau_num, tau_den,
     )
 
 
@@ -515,7 +541,10 @@ def jaccard_prefix_pairs(
     splitter canNOT rescue it — measured on this Spark build: a
     self-join is skewed on BOTH sides in the SAME partitions, a shape
     ``OptimizeSkewedJoin`` skips (and even the one-sided R-S form did
-    not engage; tools/skew_probe evidence in PARITY.md). So the split
+    not engage at skewedPartitionThresholdInBytes=1k, factor 1.0,
+    while a plain skewed sort-merge join in the same session split:
+    PARITY.md round 9, item 4, measured with tools/skew_probe.py as of
+    commit eef5ea7). So the split
     is done explicitly and LOSSLESSLY: shingles whose corpus document
     frequency exceeds ``hot_shingle_rows`` (exact detection — ``dfreq``
     is already computed; df upper-bounds the prefix bucket) take a
@@ -642,24 +671,9 @@ def jaccard_prefix_pairs(
         )
     else:
         cand = _pairs_of(a.join(b, on="shingle")).distinct()
-    # AQE coalesces the tiny id-pair shuffle to ~1 partition, which
-    # would serialize the array_intersect verify; re-spread explicitly
-    cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    if scope == "candidates":
-        cand = cand.localCheckpoint(eager=True)
-    sa = _verify_side_sets(df, cand, "doc_a", id_col, text_col, n, scope, "sh_a")
-    sb = _verify_side_sets(df, cand, "doc_b", id_col, text_col, n, scope, "sh_b")
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("n_a", F.size("sh_a"))
-        .withColumn("n_b", F.size("sh_b"))
-        .filter(
-            F.lit(tau_den) * F.col("n_common")
-            >= F.lit(tau_num) * (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-        )
-        .select("doc_a", "doc_b", "n_common", "n_a", "n_b")
+    return _jaccard_verify(
+        cand, df, df, ("doc_a", "doc_b"), ("n_a", "n_b"), id_col, text_col,
+        n, scope, tau_num, tau_den,
     )
 
 
@@ -817,27 +831,9 @@ def jaccard_prefix_join(
         .select("left_id", "right_id")
         .distinct()
     )
-    cand = cand.repartition(left.sparkSession.sparkContext.defaultParallelism)
-    if scope == "candidates":
-        cand = cand.localCheckpoint(eager=True)
-    sl = _verify_side_sets(
-        left, cand, "left_id", id_col, text_col, n, scope, "sh_l"
-    )
-    sr = _verify_side_sets(
-        right, cand, "right_id", id_col, text_col, n, scope, "sh_r"
-    )
-    return (
-        cand.join(sl, "left_id")
-        .join(sr, "right_id")
-        .withColumn("n_common", F.size(F.array_intersect("sh_l", "sh_r")))
-        .withColumn("n_left", F.size("sh_l"))
-        .withColumn("n_right", F.size("sh_r"))
-        .filter(
-            F.lit(tau_den) * F.col("n_common")
-            >= F.lit(tau_num)
-            * (F.col("n_left") + F.col("n_right") - F.col("n_common"))
-        )
-        .select("left_id", "right_id", "n_common", "n_left", "n_right")
+    return _jaccard_verify(
+        cand, left, right, ("left_id", "right_id"), ("n_left", "n_right"),
+        id_col, text_col, n, scope, tau_num, tau_den,
     )
 
 
@@ -1134,24 +1130,9 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    # see ngram_jaccard_pairs: keep the CPU-heavy exact verify spread
-    # across cores despite AQE's bytes-based coalescing
-    cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    if scope == "candidates":
-        cand = cand.localCheckpoint(eager=True)
-    sa = _verify_side_sets(df, cand, "doc_a", id_col, text_col, n, scope, "sh_a")
-    sb = _verify_side_sets(df, cand, "doc_b", id_col, text_col, n, scope, "sh_b")
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("n_a", F.size("sh_a"))
-        .withColumn("n_b", F.size("sh_b"))
-        .filter(
-            F.lit(tau_den) * F.col("n_common")
-            >= F.lit(tau_num) * (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-        )
-        .select("doc_a", "doc_b", "n_common", "n_a", "n_b")
+    return _jaccard_verify(
+        cand, df, df, ("doc_a", "doc_b"), ("n_a", "n_b"), id_col, text_col,
+        n, scope, tau_num, tau_den,
     )
 
 

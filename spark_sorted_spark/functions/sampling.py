@@ -183,7 +183,7 @@ def semantic_mix(
     rounded, hence SQL-replayable bitwise (see temperature_quotas)."""
     from pyspark.sql.types import IntegerType, StructField
 
-    from .similarity import _ivf_cell_col, _ivf_centroids, _lloyd_refine
+    from .similarity import _ivf_cell_col, _ivf_train
 
     if n_clusters < 1:
         raise ValueError(f"n_clusters must be >= 1, got {n_clusters}")
@@ -199,12 +199,9 @@ def semantic_mix(
     emb_d = embeddings.select(
         F.col(vec_id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     ).distinct()
-    cents = _ivf_centroids(emb_d, n_clusters, vec_col, vec_id_col)
-    cluster_field = StructField("cluster", IntegerType())
+    cents = _ivf_train(emb_d, n_clusters, lloyd_iters, vec_col, vec_id_col).cents
     if not cents:
-        return _empty_mix(df, id_col, cluster_field)
-    if lloyd_iters:
-        cents = _lloyd_refine(emb_d, cents, lloyd_iters, vec_col)
+        return _empty_mix(df, id_col, StructField("cluster", IntegerType()))
     assigned = emb_d.select(
         F.col(vec_id_col).alias(id_col),
         _ivf_cell_col(F.col(vec_col), cents).alias("cluster"),

@@ -10,12 +10,17 @@ the all-pairs baseline.
 Query-time ANN. ``ann_lsh_topk`` (seeded sign-bit hyperplanes,
 multi-probe), ``ann_ivf_topk`` (seeded or Lloyd-refined centroids)
 and ``ann_pq_topk`` (product quantization, ADC ranking) assign
-buckets, cells or codes at query time: one scan per query.
+buckets, cells or codes at query time: one scan per query. Each is
+its family's train + encode + the probes' rank tail over the fresh
+encode (:func:`_ann_query_time`).
 
 Persisted ANN indexes. Five families share one core:
 
 * the **family record** (``_Lsh``, ``_Ivf``, ``_Pq``, ``_IvfPq``,
-  ``_Sq8``) hides a format: its metadata tables (``_lsh_meta``;
+  ``_Sq8``) is the one encoder — the only code that computes a
+  bucket (:func:`_multi_table_buckets`), a cell
+  (:func:`_ivf_cell_col`, trained by :func:`_ivf_train`) or a code —
+  and hides a format: its metadata tables (``_lsh_meta``;
   ``_centroids``; ``_pq_codebooks`` + ``_pq_meta``; both; ``_centroids``
   + ``_sq_meta``), its partition key (``bucket``, ``cell``, or none
   for flat PQ's ``/codes``), ``train`` (planes, centroids or
@@ -28,11 +33,12 @@ Persisted ANN indexes. Five families share one core:
   dim, trains, encodes the base partition and writes the metadata,
   then publishes once (``sources.manifest.staged_store``);
 * **append** (:func:`_ann_append`) lands one batch partition against
-  the frozen parameters; one layout guard refuses another family's
-  store;
+  the frozen parameters; one layout guard (:func:`_family_guard`)
+  refuses a missing store or another family's store, for the appends
+  and the stream maintainers alike;
 * **probe** (:func:`_ann_probe`) has one front door (argument, dim
-  and NULL checks), one pruned read (batch fence, key ``isin``,
-  ``where``) and one scorer; a single query finishes with
+  and NULL checks, batch fence) and one rank tail (:func:`_ann_rank`:
+  key ``isin``, ``where``, one scorer); a single query finishes with
   ``orderBy.limit`` (TakeOrderedAndProject), a batch with a per-query
   rank window, and either can add the exact-cosine ``rerank`` tail;
 * **verify** (:func:`_verify_pairs`) is the one exact-cosine check of
@@ -347,33 +353,6 @@ def _dot_dbl(a: Column, b: Column) -> Column:
     )
 
 
-def _sign_bucket_col(vec: Column, planes: list[list[float]]) -> Column:
-    """Engine-side sign-bit bucket of ``vec`` under seeded hyperplanes
-    (strict-fold dots — bitwise-equal to the oracle's). bits and pow2
-    are zipped BEFORE the fold so the plane-dot transform is evaluated
-    once (element_at into a transform expression would re-evaluate it
-    per lookup — interpreted HOFs have no CSE inside lambdas)."""
-    vd = vec.cast("array<double>")
-    bits = F.transform(
-        _planes_lit(planes), lambda p: F.when(_dot_dbl(vd, p) >= 0, 1).otherwise(0)
-    )
-    pow2 = F.array(*[F.lit(1 << p) for p in range(len(planes))])
-    return F.aggregate(
-        F.zip_with(bits, pow2, lambda b, w: b * w),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _sign_bucket_bits(query_vec: list[float], planes: list[list[float]]) -> int:
-    """Driver-side bucket of a query vector — same fold as the engine."""
-    qbits = 0
-    for p, plane in enumerate(planes):
-        if dot_py(query_vec, plane) >= 0:
-            qbits |= 1 << p
-    return qbits
-
-
 def _multiprobe_buckets(
     query_vec: list[float],
     planes: list[list[float]],
@@ -389,13 +368,13 @@ def _multiprobe_buckets(
     clustered data this is what lifts sign-LSH recall@10 from ~0.6 to
     >0.9 at m=6 (tools/ann_recall.py; PARITY.md "ANN recall") — a near
     neighbor of a query sitting near TWO plane boundaries disagrees on
-    both. Deterministic: |dot| ties break on plane index."""
+    both. Deterministic: |dot| ties break on plane index. The
+    driver-side twin of :func:`_multi_table_buckets`' flips."""
     if probe_hamming not in (1, 2):
         raise ValueError(f"probe_hamming must be 1 or 2, got {probe_hamming}")
-    qbits = _sign_bucket_bits(query_vec, planes)
-    confidence = sorted(
-        range(len(planes)), key=lambda p: (abs(dot_py(query_vec, planes[p])), p)
-    )
+    dots = [dot_py(query_vec, plane) for plane in planes]
+    qbits = sum(1 << p for p, d in enumerate(dots) if d >= 0)
+    confidence = sorted(range(len(planes)), key=lambda p: (abs(dots[p]), p))
     flip = confidence[:probe_bits]
     probes = [qbits] + [qbits ^ (1 << p) for p in flip]
     if probe_hamming == 2:
@@ -434,11 +413,10 @@ def ann_lsh_topk(
     the assignment once with :func:`build_ann_lsh_index` and probe it
     with :func:`ann_lsh_topk_indexed` (partition-pruned scan of the
     probed bucket directories)."""
-    planes = [_hyperplane(p, len(query_vec)) for p in range(n_planes)]
-    probes = _multiprobe_buckets(query_vec, planes, probe_bits, probe_hamming)
-    bucketed = df.filter(_sign_bucket_col(F.col(vec_col), planes).isin(probes))
-    return _top_single(
-        bucketed, cosine(F.col(vec_col), _vec_lit(query_vec)), "cos", k, id_col
+    return _ann_query_time(
+        _LSH, df, query_vec, k, vec_col, id_col, "ann_lsh_topk",
+        dict(n_planes=n_planes, target_bucket=128),
+        probe_bits=probe_bits, probe_hamming=probe_hamming,
     )
 
 
@@ -490,48 +468,6 @@ def build_ann_lsh_index(
     )
 
 
-def _resolve_lsh_params(
-    spark, path: str, n_planes: int | None, dim: int | None, caller: str,
-    fallback_dim: int = ANN_DIM,
-) -> tuple[int, int]:
-    """Resolve (n_planes, dim) against the index's persisted
-    ``_lsh_meta`` (cached, :func:`_cached_driver_read`): explicit args
-    must MATCH the recorded construction (a mismatch means garbage
-    buckets — raise); ``None`` adopts the recorded values; an index
-    without the table (a stream-created or pre-metadata index) falls
-    back to ``ANN_N_PLANES`` and ``fallback_dim``."""
-    from pyspark.errors import AnalysisException
-
-    def _load():
-        try:
-            # bounded-collect: one parameter row from the index metadata
-            meta = spark.read.parquet(f"{path}/_lsh_meta").collect()
-        except AnalysisException:
-            return None
-        return (int(meta[0].n_planes), int(meta[0].dim)) if meta else None
-
-    meta = _cached_driver_read(spark, path, "_lsh_meta", _load)
-    if meta is None:
-        return (
-            ANN_N_PLANES if n_planes is None else n_planes,
-            fallback_dim if dim is None else dim,
-        )
-    mp, md = meta
-    if n_planes is not None and n_planes != mp:
-        raise ValueError(
-            f"{caller}: index at {path!r} was built with "
-            f"n_planes={mp}, got n_planes={n_planes} — mismatched "
-            "planes bucket silently wrong; pass None to adopt the "
-            "recorded construction"
-        )
-    if dim is not None and dim != md:
-        raise ValueError(
-            f"{caller}: index at {path!r} was built with dim={md}, "
-            f"got dim={dim}"
-        )
-    return mp, md
-
-
 def _write_batch(
     rows: DataFrame, path: str, key: str | None, part: int, mode: str
 ) -> None:
@@ -539,19 +475,42 @@ def _write_batch(
     store (a build or compaction writes the base ``-1`` with
     ``mode="overwrite"``; appends take ``sources.manifest.batch_dir``'s
     ``part``/``mode``) ``key``-partitioned, bracketed by its occupancy
-    stats: an overwrite first drops its stats partition and counts
-    the delta from a read-back of the partition just written (``key``
-    is the directory name, so the count reads no data columns); a
-    base-partition append counts from ``rows`` (column pruning keeps
-    any encode out of the count). Flat PQ (``key=None``) is
-    unpartitioned and has no side table."""
+    stats under ``{path}/_occ_counts/ingest_batch_id={part}`` (the
+    per-``key`` row counts the hot-key guards read instead of a
+    corpus-scale groupBy; see :func:`_load_occ_counts`). Flat PQ
+    (``key=None``) is unpartitioned and has no side table.
+
+    What the stats count: an overwrite counts from a read-back of the
+    partition just written (:func:`_occ_read_back` — ``key`` is the
+    directory name, so the count reads no data columns, and it cannot
+    disagree with the data when the input is nondeterministic or runs
+    an encode a second time); a base-partition append counts from
+    ``rows`` (a read-back of the base partition would include prior
+    rows; column pruning keeps any encode out of the count) and
+    appends delta rows, which readers sum per key.
+
+    Crash contract (shared with the band store, whose ``counts`` table
+    this mirrors): an overwrite drops its stats partition FIRST, then
+    lands data, then stats — every crash point leaves the batch's
+    stats MISSING, which :func:`_load_occ_counts`'s listing check
+    detects (guards fall back to the recount) even when the batch is
+    a RE-LAND of an id whose earlier attempt completed both writes. A
+    base-partition append has no stats partition of its own to drop;
+    a crash between its two appended writes is recoverable by the
+    store's documented replay."""
     from ..sources.bucketed import write_partitioned
 
+    spark = rows.sparkSession
     if key is not None and mode == "overwrite":
-        _invalidate_occ_counts(rows.sparkSession, path, part)
+        _invalidate_occ_counts(spark, path, part)
     write_partitioned(rows, f"{path}/ingest_batch_id={part}", key, mode=mode)
-    if key is not None:
-        _append_occ_counts(rows, key, path, part, mode)
+    if key is None:
+        return
+    if mode == "overwrite":
+        rows = _occ_read_back(spark, f"{path}/ingest_batch_id={part}", key)
+    rows.groupBy(key).agg(F.count(F.lit(1)).alias("occ_n")).write.mode(
+        mode
+    ).parquet(f"{path}/{_OCC_DIR}/ingest_batch_id={part}")
 
 
 def _write_meta(spark, staged: str, name: str, rows, schema: str) -> None:
@@ -640,43 +599,53 @@ def _ivf_centroids(
     ]
 
 
-def _ivf_cell_col(vec: Column, cents: list[tuple]) -> Column:
-    """Nearest-by-dot centroid as a native argmax: struct ordering
-    compares fields in order, so the array_min of (-dot, idx) structs
-    is the deterministic argmax with lowest-cell tiebreak — no Python
-    in the scan. Centroids ride in as one constant-folded literal
-    (_planes_lit) — the nlist*dim inlined-F.lit tree costs ~1 s of
-    py4j construction per call (the b13 lesson, r6)."""
+def _ivf_cell_col(
+    vec: Column, cents: list[tuple], nprobe: int | None = None
+) -> Column:
+    """The IVF cell rule, engine side: cells ordered by dot with
+    ``vec`` DESC, lowest cell first on ties — the order of the struct
+    array of ``(-dot, cell)``. ``nprobe=None`` gives the nearest cell
+    (its ``array_min``: a native argmax, no Python in the scan); an
+    int gives the ``nprobe`` nearest as an array (its ascending sort),
+    the batch twin of :meth:`_Ivf.probe_keys`. Centroids ride in as one
+    constant-folded literal (_planes_lit) — the nlist*dim inlined-F.lit
+    tree costs ~1 s of py4j construction per call (the b13 lesson,
+    r6)."""
     vd = vec.cast("array<double>")
-    cents_lit = _planes_lit([c for _cid, c in cents])
-    idxs = F.sequence(F.lit(0), F.lit(len(cents) - 1))
     scored = F.zip_with(
-        cents_lit,
-        idxs,
+        _planes_lit([c for _cid, c in cents]),
+        F.sequence(F.lit(0), F.lit(len(cents) - 1)),
         lambda c, i: F.struct((-_dot_dbl(vd, c)).alias("nd"), i.alias("cell")),
     )
-    return F.array_min(scored)["cell"]
-
-
-def _ivf_probe_cells_col(vec: Column, cents: list[tuple], nprobe: int) -> Column:
-    """The ``nprobe`` nearest-by-dot cells of every row as a native
-    array — the batch generalization of the driver-side
-    :func:`_ivf_probe_cells` (same rule: dot DESC, lowest cell
-    tiebreak; struct ``(-dot, cell)`` ascending sort replays it
-    exactly). No Python in the scan; centroids ride in as one
-    constant-folded literal like :func:`_ivf_cell_col`."""
-    vd = vec.cast("array<double>")
-    cents_lit = _planes_lit([c for _cid, c in cents])
-    idxs = F.sequence(F.lit(0), F.lit(len(cents) - 1))
-    scored = F.zip_with(
-        cents_lit,
-        idxs,
-        lambda c, i: F.struct((-_dot_dbl(vd, c)).alias("nd"), i.alias("cell")),
-    )
+    if nprobe is None:
+        return F.array_min(scored)["cell"]
     return F.transform(
         F.slice(F.array_sort(scored), 1, min(nprobe, len(cents))),
         lambda s: s["cell"],
     )
+
+
+def _ivf_train(
+    df: DataFrame, nlist: int | None, lloyd_iters: int, vec_col: str,
+    id_col: str, target_cell: int = 256,
+) -> _Params:
+    """The IVF training rule every cell consumer shares (the IVF-family
+    builds and query-time form, ``semantic_dedup``, ``semantic_mix``):
+    ``nlist=None`` sizes the cell count from the corpus count,
+    ``max(1, ceil(n / target_cell))`` (one count job: fixed cells make
+    probe candidate sets and within-cell work grow linearly with the
+    corpus, auto keeps expected occupancy ~target_cell); then the
+    seeded pick (:func:`_ivf_centroids`) and ``lloyd_iters`` optional
+    Lloyd steps (:func:`_lloyd_refine`). Returns ``_Params`` with the
+    centroids and ``nlist``; the dim is left to the caller."""
+    if nlist is None:
+        nlist = max(1, -(-df.count() // int(target_cell)))
+    if nlist < 1:
+        raise ValueError(f"nlist must be >= 1, got {nlist}")
+    cents = _ivf_centroids(df, nlist, vec_col, id_col)
+    if lloyd_iters and cents:
+        cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
+    return _Params(None, cents=cents, nlist=nlist)
 
 
 def _lloyd_refine(
@@ -771,13 +740,6 @@ def _before_batch(df: DataFrame, before_batch) -> DataFrame:
     return df.filter(F.col("ingest_batch_id") < int(before_batch))
 
 
-def _ivf_probe_cells(query_vec, cents: list[tuple], nprobe: int) -> list[int]:
-    order = sorted(
-        range(len(cents)), key=lambda i: (-dot_py(query_vec, cents[i][1]), i)
-    )
-    return order[:nprobe]
-
-
 def ann_ivf_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -801,18 +763,14 @@ def ann_ivf_topk(
     and probe via :func:`ann_ivf_topk_indexed` — per-query cost is then
     ``nprobe/nlist`` of the data (partition-pruned), embarrassingly
     parallel. Driver-side work is ``nlist`` centroid vectors —
-    constants in the plan, not a data-flow collect.
+    constants in the plan, not a data-flow collect. ``lloyd_iters``
+    is the refinement the index build offers (one assign shuffle per
+    iteration); on clustered corpora it lifts probe recall to ~1.0 at
+    the default nprobe (tools/ann_recall.py).
     """
-    cents = _ivf_centroids(df, nlist, vec_col, id_col)
-    if lloyd_iters and cents:
-        # same refinement the index build offers (one assign shuffle
-        # per iteration); on clustered corpora this lifts probe recall
-        # to ~1.0 at the default nprobe (tools/ann_recall.py)
-        cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
-    probe = _ivf_probe_cells(query_vec, cents, nprobe)
-    celled = df.filter(_ivf_cell_col(F.col(vec_col), cents).isin(probe))
-    return _top_single(
-        celled, cosine(F.col(vec_col), _vec_lit(query_vec)), "cos", k, id_col
+    return _ann_query_time(
+        _IVF, df, query_vec, k, vec_col, id_col, "ann_ivf_topk",
+        dict(nlist=nlist, lloyd_iters=lloyd_iters), nprobe=nprobe,
     )
 
 
@@ -1116,20 +1074,15 @@ def _pq_code_col(
 def _pq_query_table(
     query_vec: list[float], codebooks: list[list[list[float]]]
 ) -> list[float]:
-    """Driver-side ADC table: ``table[j*ksub + c]`` = strict ascending
-    dot of the query's j-th subvector with codeword c — python float64
-    in the same IEEE order as the engine/oracle folds."""
-    m, ksub = len(codebooks), len(codebooks[0])
+    """Driver-side ADC table: ``table[j*ksub + c]`` = the strict
+    :func:`dot_py` of the query's j-th subvector with codeword c — the
+    same IEEE order as the engine/oracle folds."""
     dsub = len(codebooks[0][0])
-    out: list[float] = []
-    for j in range(m):
-        q = query_vec[j * dsub : (j + 1) * dsub]
-        for c in range(ksub):
-            acc = 0.0
-            for x, y in zip(q, codebooks[j][c]):
-                acc = acc + x * y
-            out.append(acc)
-    return out
+    return [
+        dot_py(query_vec[j * dsub : (j + 1) * dsub], codeword)
+        for j, book in enumerate(codebooks)
+        for codeword in book
+    ]
 
 
 def _adc(cbs: list[list[list[float]]], tbl: Column, init: Column) -> Column:
@@ -1164,17 +1117,18 @@ def ann_pq_topk(
     indexed form offers exact rerank."""
     from .dedup import spread_small_input
 
-    dim = len(query_vec)
+    caller, dim = "ann_pq_topk", len(query_vec)
     if codebooks is None:
-        codebooks = pq_codebooks(df, m, ksub, dim, vec_col, id_col)
+        p = _PQ.train(df, vec_col, id_col, dim, caller, m, ksub, 0)
+    else:
+        p = _Params(dim, cbs=codebooks)
     # the per-vector argmin encode (m*ksub strict d2 folds) is the CPU
     # hot spot — a one-file parquet input would serialize it on one
     # core (measured 3.4s -> see PARITY; every other ANN entry spreads)
-    coded = spread_small_input(df).select(
-        F.col(id_col), _pq_code_col(F.col(vec_col), codebooks).alias("code")
+    return _ann_query_time(
+        _PQ, spread_small_input(df), query_vec, k, vec_col, id_col, caller,
+        p=p,
     )
-    tbl = _vec_lit(_pq_query_table(query_vec, codebooks))
-    return _top_single(coded, _adc(codebooks, tbl, F.lit(0.0)), "adot", k, id_col)
 
 
 def build_ann_pq_index(
@@ -1311,35 +1265,6 @@ def _list_batch_dirs(spark, root: str) -> list[str]:
 _OCC_DIR = "_occ_counts"
 
 
-def _write_occ_counts(
-    counted: DataFrame, key: str, root: str, part: int, mode: str
-) -> None:
-    """Persist the per-``key`` occupancy of ONE batch partition's rows
-    (``counted``: the rows that were just written — a read-back of the
-    fresh partition for builds/compacts and batch-id-keyed appends,
-    the assignment frame itself for base-partition appends) under
-    ``{root}/_occ_counts/ingest_batch_id={part}``. Column pruning
-    keeps the aggregate scan to the key column alone — for a read-back
-    of a just-written partition the key IS the directory name, so the
-    job reads no data columns at all.
-
-    Crash contract (shared with the band store, whose ``counts`` table
-    this mirrors): a batch-id-keyed write drops its stats partition
-    FIRST (:func:`_invalidate_occ_counts`), then lands data, then
-    stats — every crash point leaves the batch's stats MISSING, which
-    :func:`_load_occ_counts`'s listing check detects (guards fall back
-    to the recount) even when the batch is a RE-LAND of an id whose
-    earlier attempt completed both writes. A base-partition append has
-    no stats partition of its own to drop; a crash between its two
-    appended writes is recoverable by the store's documented replay."""
-    (
-        counted.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("occ_n"))
-        .write.mode(mode)
-        .parquet(f"{root}/{_OCC_DIR}/ingest_batch_id={part}")
-    )
-
-
 def _occ_read_back(spark, part_dir: str, key: str) -> DataFrame:
     """The just-written batch partition of ``part_dir`` re-read for
     occupancy counting: ``key`` is the partition directory name, so
@@ -1367,31 +1292,9 @@ def _occ_read_back(spark, part_dir: str, key: str) -> DataFrame:
 
 def _invalidate_occ_counts(spark, root: str, part: int) -> None:
     """Drop the stats partition of a batch ABOUT to be overwritten,
-    BEFORE its data partition is touched: a crash anywhere between
-    then and the stats rewrite leaves the batch's stats MISSING
-    (listing-detectable — guards recount) rather than silently stale
-    (describing the replaced rows of a re-landed batch id, which the
-    listing check alone cannot see). No-op when the batch is new."""
+    BEFORE its data partition is touched (the crash contract of
+    :func:`_write_batch`). No-op when the batch is new."""
     _rm_dir(spark, f"{root}/{_OCC_DIR}/ingest_batch_id={part}")
-
-
-def _append_occ_counts(
-    assigned: DataFrame, key: str, root: str, part: int, mode: str
-) -> None:
-    """Write the occupancy stats for an append batch. Overwrite mode
-    (batch-id-keyed) counts from a read-back of the partition just
-    written — directory-name key, no second execution of the
-    assignment expressions (sign-dots / centroid-dots run once per
-    batch, which also keeps streaming maintainers at one assignment
-    pass per micro-batch). Append mode counts from the frame: a
-    read-back of the base partition would include prior rows."""
-    if mode == "overwrite":
-        counted = _occ_read_back(
-            assigned.sparkSession, f"{root}/ingest_batch_id={part}", key
-        )
-    else:
-        counted = assigned
-    _write_occ_counts(counted, key, root, part, mode)
 
 
 def _load_occ_counts(spark, path: str, key: str) -> DataFrame | None:
@@ -1514,15 +1417,6 @@ def _load_centroids(spark, path: str):
         return [(r.cent_id, [float(x) for x in r.centroid]) for r in rows]
 
     return _cached_driver_read(spark, path, "_centroids", _load)
-
-
-def _load_sq_meta_dim(spark, path: str) -> int:
-    """Cached SQ8 meta dim of a RESOLVED index path."""
-
-    def _load():
-        return int(spark.read.parquet(f"{path}/_sq_meta").head().dim)
-
-    return _cached_driver_read(spark, path, "_sq_meta", _load)
 
 
 def _load_pq_index(spark, path: str):
@@ -1698,8 +1592,10 @@ def _collect_query_batch(
 # ---------------------------------------------------------------------------
 # The ANN index core. A family record hides one persisted layout (its
 # metadata tables, partition key, training, row encoding, probe keys
-# and score); _ann_build / _ann_append / _ann_probe run every build,
-# append and indexed probe of the five families over those records.
+# and score) and is the only code that computes a bucket, a cell or a
+# code; _ann_build / _ann_append / _ann_probe run every build, append
+# and indexed probe of the five families over those records, and the
+# query-time forms rank a fresh encode with the probe's own tail.
 # ---------------------------------------------------------------------------
 
 _ANN_META = frozenset(
@@ -1721,23 +1617,27 @@ class _Params:
 
 
 class _Family:
-    """One persisted ANN index family. Attributes: ``name``;
-    ``append`` (its public append, named by the layout guard);
+    """One persisted ANN index family. Attributes: ``name``; ``build``,
+    ``append`` and ``stream`` (its public build, append and stream
+    maintainer — None when it has none — named by the layout guard);
     ``meta`` (the metadata tables that mark the layout); ``key`` (the
     partition key, or None for flat PQ's unpartitioned rows under
     ``data``); ``reserved`` (layout columns ``extra_cols`` may not
     use); ``extras`` (whether the rows carry ``extra_cols``);
     ``score_col`` (the probe's score column).
 
-    Methods: ``train`` the parameters from a corpus (build only);
-    ``load`` them from a built store (cached driver reads); ``encode``
-    the persisted rows; ``write_meta``; ``probe_keys`` — the buckets
-    or cells a query reads (None: no pruning); ``qvals`` — the
-    per-query arrays ``score`` reads, as literals for one query or
-    broadcast columns for a batch; ``key_vals`` — the per-(query, key)
-    doubles named ``key_cols`` that ``score`` also reads (a batch
-    carries them on its probed pairs, so a query's row never grows with
-    the key count); ``score`` a stored row."""
+    Methods: ``train`` the parameters from a corpus (builds and the
+    query-time forms); ``load`` them from a built store (cached driver
+    reads); ``encode`` the persisted rows; ``write_meta``;
+    ``probe_keys`` — the buckets or cells a query reads (None: no
+    pruning); ``batch_keys`` — its engine-side twin, the ``(doc_new,
+    key)`` rows of a batch joining a store (the near-dup forms);
+    ``qvals`` — the per-query arrays ``score`` reads, as
+    literals for one query or broadcast columns for a batch;
+    ``key_vals`` — the per-(query, key) doubles named ``key_cols`` that
+    ``score`` also reads (a batch carries them on its probed pairs, so
+    a query's row never grows with the key count); ``score`` a stored
+    row."""
 
     key: str | None = None
     data = ""
@@ -1745,6 +1645,7 @@ class _Family:
     extras = True
     score_col = "cos"
     key_cols: tuple = ()
+    stream: str | None = None
 
     def probe_keys(self, q, p: _Params, **_):
         return None
@@ -1760,7 +1661,8 @@ class _Family:
 
 
 class _Lsh(_Family):
-    name, append = "LSH", "append_to_ann_lsh_index"
+    name, build, append = "LSH", "build_ann_lsh_index", "append_to_ann_lsh_index"
+    stream = "stream_index_embeddings"
     meta = frozenset({"_lsh_meta"})
     key = "bucket"
     extras = False
@@ -1787,16 +1689,49 @@ class _Lsh(_Family):
             n_planes = auto_planes(df.count(), target_bucket)
         return _Params(dim, planes=[_hyperplane(i, dim) for i in range(n_planes)])
 
-    def load(self, spark, path, caller, n_planes=None, dim=None, **kw):
-        n_planes, dim = _resolve_lsh_params(spark, path, n_planes, dim, caller, **kw)
+    def load(
+        self, spark, path, caller, n_planes=None, dim=None, fallback_dim=ANN_DIM
+    ):
+        """Resolve ``(n_planes, dim)`` against the index's persisted
+        ``_lsh_meta`` (cached, :func:`_cached_driver_read`): explicit
+        args must MATCH the recorded construction (a mismatch means
+        garbage buckets — raise); ``None`` adopts the recorded values;
+        an index without the table (a stream-created or pre-metadata
+        index) falls back to ``ANN_N_PLANES`` and ``fallback_dim``."""
+        from pyspark.errors import AnalysisException
+
+        def _load():
+            try:
+                # bounded-collect: one parameter row from the index metadata
+                meta = spark.read.parquet(f"{path}/_lsh_meta").collect()
+            except AnalysisException:
+                return None
+            return (int(meta[0].n_planes), int(meta[0].dim)) if meta else None
+
+        meta = _cached_driver_read(spark, path, "_lsh_meta", _load)
+        if meta is None:
+            meta = (ANN_N_PLANES, fallback_dim)
+        elif n_planes not in (None, meta[0]):
+            raise ValueError(
+                f"{caller}: index at {path!r} was built with "
+                f"n_planes={meta[0]}, got n_planes={n_planes} — mismatched "
+                "planes bucket silently wrong; pass None to adopt the "
+                "recorded construction"
+            )
+        elif dim not in (None, meta[1]):
+            raise ValueError(
+                f"{caller}: index at {path!r} was built with dim={meta[1]}, "
+                f"got dim={dim}"
+            )
+        n_planes = meta[0] if n_planes is None else n_planes
+        dim = meta[1] if dim is None else dim
         return _Params(dim, planes=[_hyperplane(i, dim) for i in range(n_planes)])
 
     def encode(self, df, p, vec_col, id_col, extras, caller):
-        return df.select(
-            F.col(id_col),
-            _dim_guard_col(F.col(vec_col), p.dim, caller).alias(vec_col),
-            _sign_bucket_col(F.col(vec_col), p.planes).alias("bucket"),
-        )
+        vec = _dim_guard_col(F.col(vec_col), p.dim, caller)
+        return _multi_table_buckets(
+            df, len(p.planes), 1, p.dim, vec_col, id_col, keep={vec_col: vec}
+        ).drop("t")
 
     def write_meta(self, spark, staged, p):
         _write_meta(
@@ -1807,37 +1742,37 @@ class _Lsh(_Family):
     def probe_keys(self, q, p, probe_bits=0, probe_hamming=1, **_):
         return _multiprobe_buckets(q, p.planes, probe_bits, probe_hamming)
 
+    def batch_keys(self, df, p, vec_col, id_col, caller, probe_bits=0):
+        return _multi_table_buckets(
+            df, len(p.planes), 1, p.dim, vec_col, id_col, probe_bits,
+            guard_caller=caller,
+        ).select(F.col(id_col).alias("doc_new"), "bucket")
+
 
 class _Ivf(_Family):
-    name, append = "IVF", "append_to_ann_ivf_index"
+    name, build, append = "IVF", "build_ann_ivf_index", "append_to_ann_ivf_index"
+    stream = "stream_maintain_ann_ivf_index"
     meta = frozenset({"_centroids"})
     key = "cell"
 
     def train(
         self, df, vec_col, id_col, dim, caller, nlist, lloyd_iters,
-        target_cell, **_,
+        target_cell=256, **_,
     ):
-        if nlist is None:
-            # auto-size cells from the corpus count (ceil(n/target_cell) —
-            # the semantic_dedup rule; PARITY scale rows: fixed cells make
-            # probe candidate sets grow linearly with the corpus, auto
-            # keeps expected occupancy ~target_cell). The DEFAULT stays
-            # the fixed constant so gated constructions remain
-            # oracle-replayable; pass None at scale.
-            nlist = max(1, -(-df.count() // int(target_cell)))
-        cents = _ivf_centroids(df, nlist, vec_col, id_col)
-        if lloyd_iters and cents:
-            cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
-        if dim is None and cents:
+        # the DEFAULT nlist stays the fixed constant so gated
+        # constructions remain oracle-replayable; pass None at scale
+        p = _ivf_train(df, nlist, lloyd_iters, vec_col, id_col, target_cell)
+        if dim is None and p.cents:
             # no declared dim: the write-path guard adopts the SEEDED
             # CENTROID's length. If the pick sampled a minority
             # wrong-length row of a mixed-dim corpus, that guard would
             # fail the MAJORITY rows naming the minority length (ADVICE
             # r14) — cross-check a corpus sample up front so the loud
             # failure names both lengths.
-            dim = len(cents[0][1])
+            dim = len(p.cents[0][1])
             _check_corpus_dim(df, vec_col, dim, caller)
-        return _Params(dim, cents=cents, nlist=nlist)
+        p.dim = dim
+        return p
 
     def load(self, spark, path, caller, **_):
         cents = _load_centroids(spark, path)
@@ -1859,11 +1794,30 @@ class _Ivf(_Family):
         )
 
     def probe_keys(self, q, p, nprobe=ANN_NPROBE, **_):
-        return _ivf_probe_cells(q, p.cents, nprobe)
+        # the driver twin of _ivf_cell_col's rule: dot DESC, lowest cell
+        order = sorted(
+            range(len(p.cents)), key=lambda i: (-dot_py(q, p.cents[i][1]), i)
+        )
+        return order[:nprobe]
+
+    def batch_keys(self, df, p, vec_col, id_col, caller, nprobe=ANN_NPROBE):
+        # the per-row guard wraps the probe OUTPUT, not the vector fed
+        # into the HOF folds (ADVICE r14): expressions referenced inside
+        # interpreted HOF lambdas are re-evaluated per element, so a
+        # guarded VECTOR would recompute the size() check per centroid;
+        # the guarded probe-cells array is evaluated ONCE per row
+        # (explode materializes its child a single time)
+        probe = _batch_dim_guard(
+            _ivf_cell_col(F.col(vec_col), p.cents, nprobe),
+            F.col(vec_col), p.dim, caller,
+        )
+        return df.select(
+            F.col(id_col).alias("doc_new"), F.explode(probe).alias("cell")
+        )
 
 
 class _Pq(_Family):
-    name, append = "PQ", "append_to_ann_pq_index"
+    name, build, append = "PQ", "build_ann_pq_index", "append_to_ann_pq_index"
     meta = frozenset({"_pq_codebooks", "_pq_meta"})
     data = "/codes"
     score_col = "adot"
@@ -1904,9 +1858,12 @@ class _Pq(_Family):
 
 
 class _IvfPq(_Ivf):
-    name, append = "IVF-PQ", "append_to_ann_ivfpq_index"
+    name, build = "IVF-PQ", "build_ann_ivfpq_index"
+    append, stream = "append_to_ann_ivfpq_index", "stream_maintain_ann_ivfpq_index"
     meta = _Ivf.meta | _Pq.meta
     score_col = "adot"
+    key_cols = ("__cd",)
+    qvals = _Pq.qvals
 
     def train(self, df, vec_col, id_col, dim, caller, m, ksub, pq_lloyd_iters, **kw):
         from .dedup import spread_small_input
@@ -1958,11 +1915,6 @@ class _IvfPq(_Ivf):
         _Ivf.write_meta(self, spark, staged, p)
         _Pq.write_meta(self, spark, staged, p)
 
-    key_cols = ("__cd",)
-
-    def qvals(self, q, p):
-        return {"__tbl": _pq_query_table(q, p.cbs)}
-
     def key_vals(self, q, p, cell):
         return (dot_py(q, p.cents[cell][1]),)
 
@@ -1972,7 +1924,8 @@ class _IvfPq(_Ivf):
 
 
 class _Sq8(_Ivf):
-    name, append = "IVF-SQ8", "append_to_ann_ivfsq8_index"
+    name, build = "IVF-SQ8", "build_ann_ivfsq8_index"
+    append, stream = "append_to_ann_ivfsq8_index", "stream_maintain_ann_ivfsq8_index"
     meta = _Ivf.meta | {"_sq_meta"}
     # reserved for this family only: an IVF/LSH index with a user extra
     # named "scale" keeps working
@@ -1980,7 +1933,10 @@ class _Sq8(_Ivf):
     score_col = "acos"
 
     def load(self, spark, path, caller, **_):
-        dim = _load_sq_meta_dim(spark, path)
+        dim = _cached_driver_read(
+            spark, path, "_sq_meta",
+            lambda: int(spark.read.parquet(f"{path}/_sq_meta").head().dim),
+        )
         return _Params(dim, cents=_load_centroids(spark, path))
 
     def encode(self, df, p, vec_col, id_col, extras, caller):
@@ -2038,6 +1994,35 @@ def _stored_family(spark, path: str) -> _Family | None:
     )
 
 
+def _family_guard(
+    fam: _Family, spark, path: str, caller: str, use: str = "append",
+    **load_kw,
+) -> _Params:
+    """The layout guard of every append and stream maintainer: refuse
+    a store of another family at the RESOLVED ``path`` (its rows would
+    not match this layout — probes would fail on the partition key or
+    read NULL codes; the message names that store's own ``use``
+    function: its ``append`` or ``stream``), refuse a missing store
+    unless ``fam`` is LSH (an empty LSH store bootstraps: its planes
+    are seeded constants), and load the FROZEN parameters."""
+    found = _stored_family(spark, path)
+    if found is None and fam is not _LSH:
+        raise ValueError(
+            f"{caller}: no {fam.name} index at {path!r} (missing "
+            f"{', '.join(sorted(fam.meta))}): build it first with "
+            f"{fam.build} (appends cannot train its parameters)"
+        )
+    if found not in (None, fam):
+        diff = [f"missing {t}" for t in sorted(fam.meta - found.meta)]
+        diff += [f"has {t}" for t in sorted(found.meta - fam.meta)]
+        raise ValueError(
+            f"{caller}: {path!r} holds an {found.name} index, not "
+            f"{fam.name} ({', '.join(diff)}) — use "
+            f"{getattr(found, use) or found.append}"
+        )
+    return fam.load(spark, path, caller, **load_kw)
+
+
 def _ann_build(
     fam: _Family, df: DataFrame, path: str, commit: str, vec_col: str,
     id_col: str, dim: int | None, caller: str, extra_cols=(), **train_kw,
@@ -2069,26 +2054,14 @@ def _ann_append(
     vec_col: str, id_col: str, caller: str, **load_kw,
 ) -> None:
     """Append one batch to a ``fam`` index: resolve the batch
-    partition (``sources.manifest.batch_dir``), refuse a store of
-    another family (its rows would not match this layout — probes
-    would fail on the partition key or read NULL codes), load the
-    FROZEN parameters, carry the store's extra columns, encode, write
-    the partition and its occupancy stats. A store with no metadata
-    bootstraps an LSH index; every other family's loader raises
-    "build first" on it."""
+    partition (``sources.manifest.batch_dir``), run the layout guard
+    (:func:`_family_guard`), carry the store's extra columns, encode,
+    write the partition and its occupancy stats."""
     from .dedup import spread_small_input
 
     spark = df.sparkSession
     path, part, mode = batch_dir(spark, path, batch_id)
-    found = _stored_family(spark, path)
-    if found not in (None, fam):
-        diff = [f"missing {t}" for t in sorted(fam.meta - found.meta)]
-        diff += [f"has {t}" for t in sorted(found.meta - fam.meta)]
-        raise ValueError(
-            f"{caller}: {path!r} holds an {found.name} index, not "
-            f"{fam.name} ({', '.join(diff)}) — use {found.append}"
-        )
-    p = fam.load(spark, path, caller, **load_kw)
+    p = _family_guard(fam, spark, path, caller, **load_kw)
     extras = []
     if fam.extras:
         idx = spark.read.parquet(f"{path}{fam.data}")
@@ -2107,16 +2080,11 @@ def _ann_probe(
 ) -> DataFrame:
     """Probe a ``fam`` index with one query vector — ``(id, rank,
     <score_col>)`` — or with a DataFrame of queries — ``(query_id, id,
-    <score_col>, rank)``. One front door validates ``k``/``nprobe``/
-    ``rerank`` and every query's dim (NULL or mismatched vectors would
-    NULL-fold every score), one read prunes the store (batch fence,
-    key ``isin`` over the probed buckets/cells — the union over a
-    batch — and the ``where`` pre-filter), and ``fam.score`` ranks it.
-    A single query keeps ``orderBy.limit`` (TakeOrderedAndProject)
-    with literal query values; a batch joins its (query, key) pairs
-    and per-query values as broadcasts and ranks per query in one
-    window. ``rerank=R`` re-ranks each query's top R by exact cosine,
-    reading embeddings for those ids alone, and returns ``cos``."""
+    <score_col>, rank)``: the store front. One front door validates
+    ``k``/``nprobe``/``rerank`` and every query's dim (NULL or
+    mismatched vectors would NULL-fold every score), loads the frozen
+    parameters and reads the store behind the batch fence; the rank
+    tail (:func:`_ann_rank`) prunes, filters and scores it."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if nprobe is not None and nprobe < 1:
@@ -2124,43 +2092,64 @@ def _ann_probe(
     if rerank is not None and rerank < k:
         raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
     path = resolve_root(spark, index_path)
-    single = not isinstance(query, DataFrame)
-    if single:
-        q = [float(x) for x in query]
+    qid_type = None
+    if not isinstance(query, DataFrame):
+        query = [float(x) for x in query]
         # an index with no recorded dim (stream-created LSH) adopts it
         p = fam.load(
-            spark, path, caller, n_planes=n_planes, fallback_dim=len(q)
+            spark, path, caller, n_planes=n_planes, fallback_dim=len(query)
         )
-        if len(q) != p.dim:
-            raise ValueError(f"query dim {len(q)} != index dim {p.dim}")
-        qbatch = [(None, q)]
+        if len(query) != p.dim:
+            raise ValueError(f"query dim {len(query)} != index dim {p.dim}")
     else:
         p = fam.load(spark, path, caller)
-        qid_type, qbatch = _collect_query_batch(
+        qid_type, query = _collect_query_batch(
             query, query_id_col, query_vec_col, p.dim
         )
     idx = _before_batch(
         spark.read.parquet(f"{path}{fam.data}"), before_batch
     )
+    return _ann_rank(
+        fam, idx, p, query, k, qid_type, rerank=rerank, where=where,
+        vec_col=vec_col, id_col=id_col, query_id_col=query_id_col,
+        nprobe=nprobe, probe_bits=probe_bits, probe_hamming=probe_hamming,
+    )
+
+
+def _ann_rank(
+    fam: _Family, idx: DataFrame, p: _Params, query, k: int, qid_type=None,
+    *, rerank: int | None = None, where=None, vec_col: str = "embedding",
+    id_col: str = "vec_id", query_id_col: str = "query_id", **probe_kw,
+) -> DataFrame:
+    """The rank tail of every ANN probe: rank the encoded rows ``idx``
+    of a ``fam`` index (a store read, or a query-time encode) for one
+    query vector ``query`` or, with ``qid_type`` set, the ``(qid,
+    vector)`` list of a batch. One read prunes the rows (key ``isin``
+    over the probed buckets/cells — the union over a batch — then the
+    ``where`` pre-filter) and ``fam.score`` ranks them. A single query
+    keeps ``orderBy.limit`` (TakeOrderedAndProject) with literal query
+    values; a batch joins its (query, key) pairs and per-query values
+    as broadcasts and ranks per query in one window. ``rerank=R``
+    re-ranks each query's top R by exact cosine, reading embeddings
+    for those ids alone, and returns ``cos``."""
+    single = qid_type is None
+    qbatch = [(None, query)] if single else query
     rows = idx
     if fam.key is not None:
         pairs = [
             (qid, int(key), *fam.key_vals(v, p, key))
             for qid, v in qbatch
-            for key in fam.probe_keys(
-                v, p, nprobe=nprobe, probe_bits=probe_bits,
-                probe_hamming=probe_hamming,
-            )
+            for key in fam.probe_keys(v, p, **probe_kw)
         ]
         keys = sorted({pair[1] for pair in pairs})
         rows = rows.filter(F.col(fam.key).isin(keys))
     rows = _apply_where(rows, where)
     take = k if rerank is None else rerank
     if single:
-        qc = {n: _vec_lit(v) for n, v in fam.qvals(q, p).items()}
+        qc = {n: _vec_lit(v) for n, v in fam.qvals(query, p).items()}
         for i, n in enumerate(fam.key_cols):
             # one literal over every cell, indexed by the row's cell
-            per_cell = [fam.key_vals(q, p, c)[i] for c in range(len(p.cents))]
+            per_cell = [fam.key_vals(query, p, c)[i] for c in range(len(p.cents))]
             qc[n] = F.element_at(_vec_lit(per_cell), F.col(fam.key) + 1)
         ranked = _top_single(
             rows, fam.score(p, qc, vec_col), fam.score_col, take, id_col
@@ -2169,12 +2158,12 @@ def _ann_probe(
             return ranked
         vecs = idx.select(id_col, vec_col).join(ranked.select(id_col), id_col)
         return _top_single(
-            vecs, cosine(F.col(vec_col), _vec_lit(q)), "cos", k, id_col
+            vecs, cosine(F.col(vec_col), _vec_lit(query)), "cos", k, id_col
         )
 
     def query_rows(data, fields):
         schema = StructType([StructField(query_id_col, qid_type), *fields])
-        return local_rows_df(spark, data, schema)
+        return local_rows_df(idx.sparkSession, data, schema)
 
     vals = [(qid, fam.qvals(v, p)) for qid, v in qbatch]
     names = list(vals[0][1])
@@ -2215,6 +2204,24 @@ def _ann_probe(
     return _top_batch(
         cand, cosine(F.col(vec_col), F.col("__qv")), "cos", k, id_col,
         query_id_col,
+    )
+
+
+def _ann_query_time(
+    fam: _Family, df: DataFrame, query_vec, k: int, vec_col: str,
+    id_col: str, caller: str, train_kw=None, p: _Params | None = None,
+    **probe_kw,
+) -> DataFrame:
+    """A query-time ANN form: train ``fam`` on ``df`` unless ``p`` is
+    given (the query fixes the dim, so no corpus sample job runs),
+    encode every row exactly as a build would persist it, and rank the
+    encode with the probes' single-query tail (:func:`_ann_rank`)."""
+    q = [float(x) for x in query_vec]
+    if p is None:
+        p = fam.train(df, vec_col, id_col, len(q), caller, **train_kw)
+    rows = fam.encode(df, p, vec_col, id_col, [], caller)
+    return _ann_rank(
+        fam, rows, p, q, k, vec_col=vec_col, id_col=id_col, **probe_kw
     )
 
 
@@ -2332,16 +2339,23 @@ def _multi_table_buckets(
     id_col: str,
     probe_bits: int = 0,
     guard_caller: str | None = None,
+    keep: dict | None = None,
 ) -> DataFrame:
-    """(id, t, bucket) rows for the multi-table sign-bit LSH — table
-    ``t`` buckets by the sign bits of planes ``t*n_planes ..
-    t*n_planes+n_planes-1``. Shared bitwise-identically by
-    ``cosine_neardup_pairs_lsh`` (self near-dup) and ``knn_join_lsh``
-    (cross-corpus retrieval); the gate queries pin the construction
-    against DuckDB's replay. ``probe_bits=m`` additionally emits, per
-    table, the ``m`` buckets at one-bit flips of the least-confident
-    planes — the query-side multiprobe expansion (1+m rows per
-    (vector, table) instead of 1).
+    """The one engine-side sign-bucket construction: ``(id, *keep, t,
+    bucket)`` rows (``keep`` maps carried column names to columns).
+    Table ``t`` buckets by the sign bits of planes
+    ``t*n_planes .. t*n_planes+n_planes-1`` (bit ``p`` set iff the
+    strict-fold dot with plane ``p`` is >= 0). ``probe_bits=m``
+    additionally emits, per table, the ``m`` buckets at one-bit flips
+    of the least-confident planes — the query-side multiprobe
+    expansion (1+m rows per (vector, table) instead of 1); 0 means no
+    flips. The LSH index encode (one table, ``keep`` = the guarded
+    vector), ``cosine_neardup_pairs_lsh`` (self near-dup),
+    ``knn_join_lsh`` (cross-corpus retrieval) and
+    ``cosine_neardup_against_index`` all bucket here; the gate queries
+    pin the construction against DuckDB's replay, and
+    :func:`_multiprobe_buckets` is its driver-side twin (pinned
+    bucket for bucket in tests).
 
     The plane matrix rides in as ONE constant-folded literal
     (_planes_lit) instead of n_tables*n_planes*dim inlined F.lit()
@@ -2349,86 +2363,53 @@ def _multi_table_buckets(
     tree cost ~4 s PER CALL of pure Python/py4j DataFrame
     construction before Spark ever saw the plan — 70%+ of b13's
     wall-clock was driver-side expression building, not execution.
-    Worker-side math is untouched: same planes, same strict left-fold
-    dot, bitwise-identical buckets.
+    The plane dots are materialized as a REAL column first:
+    element_at(<expr>, i) re-evaluates <expr> per lookup in
+    interpreted HOF context (no CSE inside lambdas), so referencing
+    the dots by name keeps them evaluated once per vector. Apart from
+    ``keep``, the bucket rows carry IDS ONLY — the explode and the
+    (t, bucket) join never ship the embeddings.
 
     ``guard_caller`` (ADVICE r14) arms the per-row read-path dim
-    guard: the ``__bits``/``__dots`` projection that materializes the
-    sign construction is wrapped with :func:`_batch_dim_guard`, so a
-    MIXED-dim input fails loudly at bucket time instead of NULL-
-    folding its rows' buckets away. Riding the already-materialized
-    column keeps the size() check at once per row (wrapping the
-    VECTOR would re-evaluate it per plane inside the HOF lambdas)."""
+    guard: the ``__dots`` projection is wrapped with
+    :func:`_batch_dim_guard`, so a MIXED-dim input fails loudly at
+    bucket time instead of NULL-folding its rows' buckets away.
+    Riding the already-materialized column keeps the size() check at
+    once per row (wrapping the VECTOR would re-evaluate it per plane
+    inside the HOF lambdas)."""
     if probe_bits < 0:
         raise ValueError(f"probe_bits must be >= 0, got {probe_bits}")
-    flat = [
-        _hyperplane(t * n_planes + p, dim)
-        for t in range(n_tables)
-        for p in range(n_planes)
-    ]
-    planes = _planes_lit(flat)
-    vec_d = F.col(vec_col).cast("array<double>")
-
-    # sign bits of all planes in one pass, materialized as a REAL
-    # column: element_at(<expr>, i) re-evaluates <expr> per lookup in
-    # interpreted HOF context (no CSE inside lambdas), so referencing
-    # the 48-dot transform by name is what keeps it evaluated once
-    bits = F.transform(
-        planes, lambda p: F.when(_dot_dbl(vec_d, p) >= 0, 1).otherwise(0)
+    keep = keep or {}
+    planes = _planes_lit(
+        [_hyperplane(i, dim) for i in range(n_tables * n_planes)]
     )
-    if guard_caller is not None:
-        bits = _batch_dim_guard(bits, F.col(vec_col), dim, guard_caller)
-    pow2 = F.array(*[F.lit(1 << p) for p in range(n_planes)])
-    bcol = F.col("__bits")
-
-    def base_bucket(t):
-        return F.aggregate(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)),
-            F.lit(0),
-            lambda acc, p: acc
-            + F.element_at(bcol, t * n_planes + p + 1)
-            * F.element_at(pow2, p + 1),
-        )
-
-    if probe_bits == 0:
-        tb = F.transform(
-            F.sequence(F.lit(0), F.lit(n_tables - 1)),
-            lambda t: F.struct(t.alias("t"), base_bucket(t).alias("bucket")),
-        )
-        # bucket table carries IDS ONLY — the 8-way explode and the
-        # (t, bucket) join never ship the 64-float embeddings (that
-        # would push 8 copies of every vector through the shuffle);
-        # embeddings are joined back exactly once per side for the verify.
-        return (
-            df.select(F.col(id_col), bits.alias("__bits"))
-            .select(F.col(id_col), F.explode(tb).alias("tb"))
-            .select(id_col, "tb.t", "tb.bucket")
-        )
-
-    # multiprobe: per table, also emit the buckets reached by flipping
-    # each of the probe_bits LEAST-CONFIDENT sign bits (smallest |dot|
-    # — the engine-side twin of the driver-side _multiprobe_buckets
-    # heuristic; ties break on plane index via the struct sort). All
-    # pure Catalyst array ops: dots are computed once per vector,
-    # ranked per table with array_sort, and each flip is one XOR of
-    # the base bucket with that plane's power of two.
+    vec_d = F.col(vec_col).cast("array<double>")
     dots = F.transform(planes, lambda p: _dot_dbl(vec_d, p))
     if guard_caller is not None:
         dots = _batch_dim_guard(dots, F.col(vec_col), dim, guard_caller)
     dcol = F.col("__dots")
-    bits_from_dots = F.transform(
-        dcol, lambda d: F.when(d >= 0, 1).otherwise(0)
-    )
+    pow2 = F.array(*[F.lit(1 << p) for p in range(n_planes)])
+    plane_ids = F.sequence(F.lit(0), F.lit(n_planes - 1))
 
-    def probed(t):
-        base = base_bucket(t)
+    def buckets(t):
+        base = F.aggregate(
+            plane_ids,
+            F.lit(0),
+            lambda acc, p: acc
+            + F.when(
+                F.element_at(dcol, t * n_planes + p + 1) >= 0,
+                F.element_at(pow2, p + 1),
+            ).otherwise(0),
+        )
+        if not probe_bits:
+            return base
+        # the driver heuristic's least-confident planes: smallest |dot|,
+        # ties on plane index via the struct sort; each flip is one XOR
         conf = F.array_sort(
             F.transform(
-                F.sequence(F.lit(0), F.lit(n_planes - 1)),
+                plane_ids,
                 lambda p: F.struct(
-                    F.abs(
-                        F.element_at(dcol, t * n_planes + p + 1)
-                    ).alias("a"),
+                    F.abs(F.element_at(dcol, t * n_planes + p + 1)).alias("a"),
                     p.alias("p"),
                 ),
             )
@@ -2444,13 +2425,17 @@ def _multi_table_buckets(
 
     tb = F.transform(
         F.sequence(F.lit(0), F.lit(n_tables - 1)),
-        lambda t: F.struct(t.alias("t"), probed(t).alias("buckets")),
+        lambda t: F.struct(t.alias("t"), buckets(t).alias("bucket")),
     )
+    names = [id_col, *keep]
+    bucket = F.explode("tb.bucket") if probe_bits else F.col("tb.bucket")
     return (
-        df.select(F.col(id_col), dots.alias("__dots"))
-        .select(F.col(id_col), bits_from_dots.alias("__bits"), dcol)
-        .select(F.col(id_col), F.explode(tb).alias("tb"))
-        .select(id_col, "tb.t", F.explode("tb.buckets").alias("bucket"))
+        df.select(
+            F.col(id_col), *[c.alias(n) for n, c in keep.items()],
+            dots.alias("__dots"),
+        )
+        .select(*names, F.explode(tb).alias("tb"))
+        .select(*names, "tb.t", bucket.alias("bucket"))
     )
 
 
@@ -2563,8 +2548,9 @@ def knn_join_lsh(
 
     SCALING — ``n_planes`` must grow with corpus size, like shuffle
     partition count: bucket occupancy is N / 2^n_planes, so candidate
-    pairs grow ~|L||R|/2^n_planes. Measured (tools/scale_probe.py,
-    PARITY.md round-7 scaling rows): 10x both sides at a FIXED
+    pairs grow ~|L||R|/2^n_planes. Measured (PARITY.md round-7
+    scaling rows, by tools/scale_probe.py as of commit eef5ea7): 10x
+    both sides at a FIXED
     n_planes=4 is 11.1x wall-clock (the quadratic term); deepening to
     n_planes=7 for the 10x corpus restores 2.2x. The default
     ``n_planes=None`` therefore derives the depth from the corpus:
@@ -2671,12 +2657,12 @@ def _verify_pairs(
 def _neardup_against(
     fam: _Family, batch: DataFrame, index_path: str, threshold: float,
     vec_col: str, id_col: str, cap: int | None, cap_name: str, caller: str,
-    batch_keys, **load_kw,
+    probe_kw: dict, **load_kw,
 ) -> DataFrame:
     """Near-dup of a new batch against a persisted ``fam`` index: the
     body both ``cosine_neardup_against_*`` forms share. They differ
-    only in the candidate key — ``batch_keys(batch, params)`` gives
-    the batch's ``(doc_new, <fam.key>)`` rows. Candidates are the key
+    only in the candidate key — ``fam.batch_keys`` (with ``probe_kw``)
+    gives the batch's ``(doc_new, <fam.key>)`` rows. Candidates are the key
     equi-join against the index's ``(doc_old, key)`` columns (ids only
     through the shuffle; the ``cap`` hot-key guard drops index keys
     holding more than ``cap`` vectors, from the persisted occupancy
@@ -2713,7 +2699,7 @@ def _neardup_against(
             stats=_load_occ_counts(spark, path, fam.key),
         )
     cand = (
-        batch_keys(batch, p)
+        fam.batch_keys(batch, p, vec_col, id_col, caller, **probe_kw)
         .join(idxk, on=fam.key)
         .filter(F.col("doc_old") != F.col("doc_new"))
         .select("doc_old", "doc_new")
@@ -2770,17 +2756,10 @@ def cosine_neardup_against_index(
     INDEXED member sits in a dropped hot bucket are not reported.
     Default ``None`` keeps the construction exact w.r.t. the bucket
     rule — the oracle-gated row relies on that."""
-    caller = "cosine_neardup_against_index"
-
-    def buckets(b: DataFrame, p: _Params) -> DataFrame:
-        return _multi_table_buckets(
-            b, len(p.planes), 1, p.dim, vec_col, id_col, probe_bits,
-            guard_caller=caller,
-        ).select(F.col(id_col).alias("doc_new"), "bucket")
-
     return _neardup_against(
         _LSH, batch, index_path, threshold, vec_col, id_col, max_bucket,
-        "max_bucket", caller, buckets, n_planes=n_planes, dim=dim,
+        "max_bucket", "cosine_neardup_against_index",
+        dict(probe_bits=probe_bits), n_planes=n_planes, dim=dim,
     )
 
 
@@ -2799,7 +2778,7 @@ def cosine_neardup_against_ivf_index(
     just for :func:`cosine_neardup_against_index`): each new-batch
     vector joins only the index rows in its ``nprobe``
     nearest-centroid cells (the same native argmax/top-n cell rule
-    the index build and probes use — ``_ivf_probe_cells_col``), and
+    the index build and probes use — ``_ivf_cell_col``), and
     the exact strict-fold cosine verifies each candidate once.
     Works unchanged against every IVF-family layout — raw-float
     (``build_ann_ivf_index``), IVF-SQ8 (``build_ann_ivfsq8_index``)
@@ -2834,28 +2813,11 @@ def cosine_neardup_against_ivf_index(
     the bound). Default ``None`` keeps the construction exact w.r.t.
     the ``nprobe`` probe rule — the oracle-gated row relies on
     that."""
-    caller = "cosine_neardup_against_ivf_index"
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-
-    def cells(b: DataFrame, p: _Params) -> DataFrame:
-        # the per-row guard wraps the probe OUTPUT, not the vector fed
-        # into the HOF folds (ADVICE r14): expressions referenced inside
-        # interpreted HOF lambdas are re-evaluated per element, so a
-        # guarded VECTOR would recompute the size() check per centroid;
-        # the guarded probe-cells array is evaluated ONCE per row
-        # (explode materializes its child a single time)
-        probe = _batch_dim_guard(
-            _ivf_probe_cells_col(F.col(vec_col), p.cents, nprobe),
-            F.col(vec_col), p.dim, caller,
-        )
-        return b.select(
-            F.col(id_col).alias("doc_new"), F.explode(probe).alias("cell")
-        )
-
     return _neardup_against(
         _IVF, batch, index_path, threshold, vec_col, id_col, max_cell,
-        "max_cell", caller, cells,
+        "max_cell", "cosine_neardup_against_ivf_index", dict(nprobe=nprobe),
     )
 
 
@@ -3005,24 +2967,17 @@ def semantic_dedup(
         df.filter(dot_strict(F.col(vec_col), F.col(vec_col)) > 0)
     )
 
-    if nlist is None:
-        # one count job; same pattern as auto_planes for the kNN join
-        nlist = max(1, -(-df.count() // int(target_cell)))
-    if nlist < 1:
-        raise ValueError(f"nlist must be >= 1, got {nlist}")
-
-    cents = _ivf_centroids(df, nlist, vec_col, id_col)
-    if lloyd_iters:
-        cents = _lloyd_refine(df, cents, lloyd_iters, vec_col)
+    ivf = _ivf_train(df, nlist, lloyd_iters, vec_col, id_col, target_cell)
+    nlist = ivf.nlist
     cent_df = local_rows_df(
         df.sparkSession,
-        [(i, c) for i, (_cid, c) in enumerate(cents)],
+        [(i, c) for i, (_cid, c) in enumerate(ivf.cents)],
         "cell int, __cent array<double>",
     )
     assigned = df.select(
         F.col(id_col),
         F.col(vec_col),
-        _ivf_cell_col(F.col(vec_col), cents).alias("cell"),
+        _ivf_cell_col(F.col(vec_col), ivf.cents).alias("cell"),
     ).join(F.broadcast(cent_df), "cell")
     w_cell = Window.partitionBy("cell").orderBy(
         F.col("__cos_cent").asc(), F.col(id_col)

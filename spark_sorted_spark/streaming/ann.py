@@ -33,8 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..functions.similarity import append_to_ann_lsh_index
-from .ingest import _drain_into_store
+from ..functions.similarity import _LSH
+from .ingest import _maintain_ann
 
 __all__ = ["stream_index_embeddings"]
 
@@ -56,16 +56,12 @@ def stream_index_embeddings(
     start empty (the first batch creates it) or hold a prior
     ``build_ann_lsh_index`` base — either way every batch lands in
     its own idempotent partition. ``n_planes``/``dim`` default to the
-    index's persisted ``_lsh_meta`` (explicit mismatches raise — see
-    ``_resolve_lsh_params``); a stream-created index with no prior
-    build uses the shared ANN constants. A manifest-committed index
+    index's persisted ``_lsh_meta`` (explicit mismatches raise before
+    the checkpoint exists — see ``similarity._Lsh.load`` — and so does
+    another family's store at the path); a stream-created index with
+    no prior build uses the shared ANN constants. A manifest-committed index
     is pinned to its current generation for the whole run."""
-    _drain_into_store(
-        stream_emb, index_path, checkpoint_dir,
-        lambda batch_df, path, part: append_to_ann_lsh_index(
-            batch_df, path, batch_id=part, n_planes=n_planes, dim=dim,
-            vec_col=vec_col, id_col=id_col,
-        ),
-        caller="stream_index_embeddings", timeout_sec=timeout_sec,
-        allow_restart=allow_restart,
+    _maintain_ann(
+        _LSH, stream_emb, index_path, checkpoint_dir, vec_col, id_col,
+        timeout_sec, allow_restart, n_planes=n_planes, dim=dim,
     )

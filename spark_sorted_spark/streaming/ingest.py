@@ -73,10 +73,10 @@ from ..functions.dedup import (
     dedup_against_store,
     minhash_lsh_pairs,
 )
+from ..functions.similarity import _IVF, _IVFPQ, _SQ8, _ann_append, _family_guard
 from ..sources.manifest import (
     _batch_ids,
     _carry,
-    _exists,
     _fs,
     _ls,
     _rm_dir,
@@ -582,6 +582,33 @@ def _require_table(name: str, msg: str):
     return precheck
 
 
+def _maintain_ann(
+    fam, stream_vecs: DataFrame, index_path: str, checkpoint_dir: str,
+    vec_col: str, id_col: str, timeout_sec: int, allow_restart: bool,
+    **load_kw,
+) -> None:
+    """The one ANN stream maintainer: drain ``stream_vecs`` into the
+    ``fam`` index at ``index_path``, each micro-batch through the
+    family's append (``similarity._ann_append``) into its own
+    idempotent ``ingest_batch_id`` partition. The eager precheck is
+    that append's own layout guard (``similarity._family_guard``), run
+    before the checkpoint exists: a missing store (an LSH store may
+    start empty — the first batch creates it) or another family's
+    store fails here, naming the right build or maintainer, instead
+    of as an opaque StreamingQueryException."""
+    _drain_into_store(
+        stream_vecs, index_path, checkpoint_dir,
+        lambda batch_df, path, part: _ann_append(
+            fam, batch_df, path, part, vec_col, id_col, fam.append, **load_kw
+        ),
+        caller=fam.stream, timeout_sec=timeout_sec,
+        allow_restart=allow_restart,
+        precheck=lambda spark, path: _family_guard(
+            fam, spark, path, fam.stream, use="stream", **load_kw
+        ),
+    )
+
+
 def stream_maintain_ann_ivfpq_index(
     stream_vecs: DataFrame,
     index_path: str,
@@ -609,21 +636,9 @@ def stream_maintain_ann_ivfpq_index(
     never read beyond its bounded metadata tables. Rebuild with
     ``lloyd_iters`` when quantization drift erodes probe recall (the
     composite layout's documented trade-off)."""
-    from ..functions.similarity import append_to_ann_ivfpq_index
-
-    _drain_into_store(
-        stream_vecs, index_path, checkpoint_dir,
-        lambda batch_df, path, part: append_to_ann_ivfpq_index(
-            batch_df, path, batch_id=part, vec_col=vec_col, id_col=id_col
-        ),
-        caller="stream_maintain_ann_ivfpq_index", timeout_sec=timeout_sec,
-        allow_restart=allow_restart,
-        precheck=_require_table(
-            "_pq_meta",
-            "no IVF-PQ index at {path!r}: build it first with "
-            "build_ann_ivfpq_index (the stream cannot train the "
-            "centroids or codebooks)",
-        ),
+    _maintain_ann(
+        _IVFPQ, stream_vecs, index_path, checkpoint_dir, vec_col, id_col,
+        timeout_sec, allow_restart,
     )
 
 
@@ -655,36 +670,9 @@ def stream_maintain_ann_ivf_index(
     O(batch): one centroid assignment (``append_to_ann_ivf_index``),
     cell-subpartitioned so probes prune streamed data exactly like
     the base."""
-    from ..functions.similarity import append_to_ann_ivf_index
-
-    need_centroids = _require_table(
-        "_centroids",
-        "no IVF index at {path!r}: build it first with "
-        "build_ann_ivf_index (the stream cannot train the centroids)",
-    )
-
-    def precheck(spark, path: str) -> None:
-        if _exists(spark, f"{path}/_pq_meta"):
-            raise ValueError(
-                f"index at {path!r} is IVF-PQ (has _pq_meta): its "
-                "batches carry codes, not raw embeddings — use "
-                "stream_maintain_ann_ivfpq_index"
-            )
-        if _exists(spark, f"{path}/_sq_meta"):
-            raise ValueError(
-                f"index at {path!r} is IVF-SQ8 (has _sq_meta): its "
-                "batches carry scale+codes — use "
-                "stream_maintain_ann_ivfsq8_index"
-            )
-        need_centroids(spark, path)
-
-    _drain_into_store(
-        stream_vecs, index_path, checkpoint_dir,
-        lambda batch_df, path, part: append_to_ann_ivf_index(
-            batch_df, path, batch_id=part, vec_col=vec_col, id_col=id_col
-        ),
-        caller="stream_maintain_ann_ivf_index", timeout_sec=timeout_sec,
-        allow_restart=allow_restart, precheck=precheck,
+    _maintain_ann(
+        _IVF, stream_vecs, index_path, checkpoint_dir, vec_col, id_col,
+        timeout_sec, allow_restart,
     )
 
 
@@ -713,28 +701,7 @@ def stream_maintain_ann_ivfsq8_index(
     and because SQ8 has no trained codebook, streamed batches
     quantize EXACTLY like the base build (no quantizer drift, the
     property the IVF-PQ maintainer's docstring trades away)."""
-    from ..functions.similarity import append_to_ann_ivfsq8_index
-
-    need_centroids = _require_table(
-        "_centroids",
-        "no centroid table at {path!r}: the store is incomplete — "
-        "rebuild with build_ann_ivfsq8_index",
-    )
-
-    def precheck(spark, path: str) -> None:
-        if not _exists(spark, f"{path}/_sq_meta"):
-            raise ValueError(
-                f"no IVF-SQ8 index at {path!r} (missing _sq_meta): "
-                "build it first with build_ann_ivfsq8_index (the stream "
-                "cannot train the centroids)"
-            )
-        need_centroids(spark, path)
-
-    _drain_into_store(
-        stream_vecs, index_path, checkpoint_dir,
-        lambda batch_df, path, part: append_to_ann_ivfsq8_index(
-            batch_df, path, batch_id=part, vec_col=vec_col, id_col=id_col
-        ),
-        caller="stream_maintain_ann_ivfsq8_index", timeout_sec=timeout_sec,
-        allow_restart=allow_restart, precheck=precheck,
+    _maintain_ann(
+        _SQ8, stream_vecs, index_path, checkpoint_dir, vec_col, id_col,
+        timeout_sec, allow_restart,
     )

@@ -205,3 +205,30 @@ def test_ivfpq_default_build_recall_floor(spark, tmp_path):
     )
     assert rec >= 0.7, f"default IVF-PQ rerank recall@10 fell to {rec}"
     emb.unpersist()
+
+
+def test_ivfsq8_default_build_recall_floor(spark, tmp_path):
+    """IVF-SQ8 with the DEFAULT build (seeded cells, per-vector int8
+    codes) on clustered data, ranked by the reconstructed cosine with
+    no rerank: measured 0.96875 over one query per cluster at
+    nprobe=4."""
+    from spark_sorted_spark.functions.similarity import (
+        ann_ivfsq8_topk_indexed,
+        build_ann_ivfsq8_index,
+    )
+
+    emb = _clustered(spark).persist()  # 16 clusters x 40
+    queries = [
+        list(r.embedding)
+        for r in emb.filter("vec_id % 40 = 3").orderBy("vec_id").collect()
+    ]
+    assert len(queries) == 16
+    path = str(tmp_path / "ivfsq8_default")
+    build_ann_ivfsq8_index(emb, path)
+    rec = _recall(
+        emb,
+        queries,
+        lambda q: ann_ivfsq8_topk_indexed(spark, path, q, k=10, nprobe=4),
+    )
+    assert rec >= 0.85, f"default IVF-SQ8 recall@10 fell to {rec}"
+    emb.unpersist()

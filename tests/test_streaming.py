@@ -2150,6 +2150,42 @@ def test_stream_maintain_ann_ivfsq8_index_lifecycle(
         drain(str(tmp_path / "ckpt2"))
 
 
+# maintainer -> (its build, another family's store, that store's maintainer)
+_ANN_MAINTAINERS = {
+    "stream_maintain_ann_ivf_index": (
+        "build_ann_ivf_index", "ivfpq", "stream_maintain_ann_ivfpq_index"
+    ),
+    "stream_maintain_ann_ivfpq_index": (
+        "build_ann_ivfpq_index", "sq8", "stream_maintain_ann_ivfsq8_index"
+    ),
+    "stream_maintain_ann_ivfsq8_index": (
+        "build_ann_ivfsq8_index", "ivf", "stream_maintain_ann_ivf_index"
+    ),
+}
+
+
+@pytest.mark.parametrize("maintainer", sorted(_ANN_MAINTAINERS))
+def test_ann_maintainer_rejects_bad_store_before_checkpoint(
+    spark, sf_dir, tmp_path, ro_store, maintainer
+):
+    """An ANN maintainer refuses a missing store and another family's
+    store eagerly — before its checkpoint directory exists, so a
+    refused start leaves no stream identity behind — and names the
+    build to run or the maintainer that fits the store."""
+    from spark_sorted_spark import streaming
+
+    build, foreign, use = _ANN_MAINTAINERS[maintainer]
+    sdf = stream_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
+    for path, match in (
+        (str(tmp_path / "missing"), build),
+        (ro_store(foreign), use),
+    ):
+        ckpt = tmp_path / f"ckpt_{match}"
+        with pytest.raises(ValueError, match=match):
+            getattr(streaming, maintainer)(sdf, path, str(ckpt))
+        assert not ckpt.exists()
+
+
 def test_stream_kmv_matches_batch_and_survives_replay(
     spark, sf_dir, tmp_path
 ):
