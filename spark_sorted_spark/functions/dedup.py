@@ -89,10 +89,11 @@ MINHASH_BANDS = 4  # 4 bands x 4 rows
 def spread_small_input(df: DataFrame) -> DataFrame:
     """Ensure a CPU-heavy narrow stage has at least
     ``defaultParallelism`` partitions. A small parquet table arrives as
-    one file => ONE scan partition, serializing per-document work (md5,
-    16-perm MinHash, 32 hyperplane dots) onto a single core while the
-    rest idle. At corpus scale inputs already have thousands of file
-    splits and this is a no-op; the round-robin repartition only fires
+    one file of one row group => ONE scan partition that reads rows,
+    serializing per-document work (md5, 16-perm MinHash, 32 hyperplane
+    dots) onto a single core while the rest idle. At corpus scale
+    inputs already have thousands of file splits and this is a no-op;
+    the round-robin repartition only fires
     when partitions < cores, where the shuffle of the small input is
     noise next to the CPU it unlocks. The count comes from the plan
     (:func:`_planned_partitions`), so deciding runs no Spark job."""
@@ -109,15 +110,16 @@ def spread_small_input(df: DataFrame) -> DataFrame:
 def _planned_partitions(df: DataFrame) -> int | None:
     """How many partitions ``df`` is as wide as, read from its physical
     plan before anything runs: a repartition to a fixed count gives
-    that count, a file scan its splits (the scan's RDD, built on the
-    driver from the already listed files), a range or local relation
-    its slices and a checkpointed RDD its partitions; a cached relation
+    that count, a file scan its splits that read rows
+    (:func:`_scan_width`), a range or local relation its slices and a
+    checkpointed RDD its partitions; a cached relation
     is as wide as the plan it caches; a union sums its children and
     every other node takes its widest child. A shuffle the planner
     inserts (a join's or an aggregate's) is sized at run time by AQE
     from the bytes it moves, so the input it serves is judged by its
     scans: a one-file table joined with itself stays one file wide.
     ``None`` when a leaf is of another kind."""
+    spark = df.sparkSession
 
     def width(node) -> int | None:
         kind = node.getClass().getSimpleName()
@@ -132,7 +134,7 @@ def _planned_partitions(df: DataFrame) -> int | None:
         kids = node.children()
         if kids.size() == 0:
             if kind == "FileSourceScanExec":
-                return int(node.inputRDD().getNumPartitions())
+                return _scan_width(spark, node)
             if kind == "RangeExec":
                 return int(node.numSlices())
             if kind in ("LocalTableScanExec", "RDDScanExec"):
@@ -148,6 +150,40 @@ def _planned_partitions(df: DataFrame) -> int | None:
         return max(widths)
 
     return width(df._jdf.queryExecution().sparkPlan())
+
+
+def _scan_width(spark, scan) -> int:
+    """The splits of a file scan (its RDD, built on the driver from the
+    already listed files) that read rows. A parquet split reads the row
+    groups whose midpoint it holds, so a file smaller than the split
+    size times the parallelism can plan splits that read nothing: the
+    10.8 MB, one-row-group sf0.1 ``lineitem`` plans 4 splits on 4
+    cores, and 1 of them reads rows. When the table has fewer files
+    than the session's parallelism, those splits are counted from the
+    files' footers, with the range filter Spark's reader applies (one
+    footer read per split). With more, every split counts: the files
+    alone are as many as the cores, and a large scan's thousands of
+    splits are not walked."""
+    rdd = scan.inputRDD()
+    relation = scan.relation()
+    if (
+        relation.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        or len(relation.location().inputFiles()) >= spark.sparkContext.defaultParallelism
+    ):
+        return int(rdd.getNumPartitions())
+    jvm = spark._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    footers = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+    open_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath
+
+    def reads_rows(f) -> bool:
+        # buildFilter(.., skipRowGroups=False): the split's range filter
+        footer = footers.readFooter(
+            open_file(f.toPath(), conf), footers.buildFilter(conf, f, False)
+        )
+        return footer.getBlocks().size() > 0
+
+    return sum(any(reads_rows(f) for f in p.files()) for p in rdd.partitions())
 
 
 # Conservative punctuation class for near-exact normalization — the

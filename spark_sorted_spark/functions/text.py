@@ -153,17 +153,26 @@ def quality_score(
     """Heuristic quality score, all-integer arithmetic:
     length component (capped tokens/10) + lexical-diversity component
     (100*uniq/tokens) + a chars-in-range bonus. Matches the classic
-    pretraining-filter shape (length / diversity / structure)."""
-    toks = tokens(text_col)
+    pretraining-filter shape (length / diversity / structure).
+
+    Each document is split once: the token array is the output of a
+    one-element explode, not a projected expression. A filter on the
+    score above (``quality >= 60``) is pushed through a projection by
+    inlining it, which put the split 4 times in the filter and 4 more
+    in the projection; it cannot pass the explode that binds it."""
+    toks = F.col("__toks")
     n_tok = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
     n_chars = F.length(text_col)
-    base = f"split(trim({text_col}), '\\\\s+')"
-    len_comp = F.least(F.lit(100), F.expr(f"size({base}) div 10"))
+    len_comp = F.least(F.lit(100), F.expr("size(__toks) div 10"))
     # floor integer division on both sides (DuckDB oracle uses //)
-    div_comp = F.expr(f"(100 * size(array_distinct({base}))) div size({base})")
+    div_comp = F.expr("(100 * size(array_distinct(__toks))) div size(__toks)")
     bonus = F.when((n_chars >= 100) & (n_chars <= 1000), 20).otherwise(0)
     return df.select(
+        F.col(id_col),
+        F.col(text_col),
+        F.explode(F.array(tokens(text_col))).alias("__toks"),
+    ).select(
         F.col(id_col),
         n_tok.alias("n_tokens"),
         n_uniq.alias("n_uniq_tokens"),

@@ -24,10 +24,12 @@ one of two on-disk layouts:
   atomic on HDFS and local filesystems, NOT on S3-style object stores,
   where a directory "rename" is a per-object copy+delete.
 * ``"manifest"``: a GENERATION pointer. The new store is written
-  under ``{root}/gen-{k}/`` (no renames at all) and the commit writes
-  the small ``{root}/_current`` pointer LAST. A single-object PUT is
-  atomic on every store Hadoop supports (S3 included), so readers
-  resolve either the old generation or the new one — never a mix.
+  under ``{root}/gen-{k}/`` (no directory renames) and the commit
+  writes the small ``{root}/_current`` pointer LAST. A single-object
+  PUT is atomic on every store Hadoop supports (S3 included), and on
+  local and HDFS file systems the pointer is renamed into place, so
+  readers resolve either the old generation or the new one — never a
+  mix, and a crash mid-commit never tears the pointer.
   Compactions of a manifest store publish a new generation, so they
   are also safe under concurrent readers.
 
@@ -35,8 +37,8 @@ Generation protocol:
 
 * ``begin_generation(spark, root)``  — returns the next staged
   generation dir (``{root}/gen-{k}``); nothing under it is visible.
-* ``commit_generation(spark, root, gen_dir)`` — writes ``_current``
-  pointing at ``gen_dir`` (the atomic commit), then best-effort
+* ``commit_generation(spark, root, gen_dir)`` — points ``_current``
+  at ``gen_dir`` (the atomic commit), then best-effort
   deletes older generations (a crash before GC leaves garbage
   generations, never a broken store; the next commit retries the GC).
 * ``resolve_root(spark, root)`` — follows ``_current`` when present,
@@ -117,15 +119,7 @@ def _cached_driver_read(spark, path: str, sub: str, load, stamp=None):
     try:
         fs, hpath = _fs(spark, f"{path}/{sub}")
         st = fs.getFileStatus(hpath)
-        files = fs.listFiles(hpath, True)
-        listing = []
-        while files.hasNext():
-            f = files.next()
-            listing.append(
-                (f.getPath().toString(), f.getLen(), f.getModificationTime())
-            )
-        listing = tuple(sorted(listing))
-        gen = (st.getModificationTime(), listing, stamp)
+        gen = (st.getModificationTime(), _listing(fs, hpath), stamp)
     except Exception:
         return load()
     key = (path, sub)
@@ -150,6 +144,24 @@ def _cached_driver_read(spark, path: str, sub: str, load, stamp=None):
         ]:
             del _DRIVER_CACHE[stale]
     return val
+
+
+def _listing(fs, hpath) -> tuple:
+    """Sorted ``(path, length, mtime)`` of every file at or under
+    ``hpath``, by recursive ``listStatus``. Not ``listFiles``: each
+    ``LocatedFileStatus`` it returns copies its file's permission, which
+    the local file system without Hadoop's native library reads by
+    forking ``ls -ld``, once per file listed."""
+    out, todo = [], [hpath]
+    while todo:
+        for f in fs.listStatus(todo.pop()):
+            if f.isDirectory():
+                todo.append(f.getPath())
+            else:
+                out.append(
+                    (f.getPath().toString(), f.getLen(), f.getModificationTime())
+                )
+    return tuple(sorted(out))
 
 
 def _exists(spark, path: str) -> bool:
@@ -258,25 +270,59 @@ def begin_generation(spark, root: str) -> str:
     return f"{root}/gen-{nxt}"
 
 
-def commit_generation(spark, root: str, gen_dir: str, keep: int = 1) -> None:
-    """Atomically publish ``gen_dir`` (write the ``_current`` pointer
-    LAST — one small-object PUT), then best-effort delete all but the
-    newest ``keep`` generations at or below the committed one."""
-    gen_name = gen_dir.rstrip("/").rsplit("/", 1)[-1]
-    if not gen_name.startswith("gen-"):
-        raise ValueError(f"{gen_dir!r} is not a generation dir")
+def _write_pointer(spark, root: str, gen_name: str) -> None:
+    """Point ``{root}/_current`` at ``gen_name`` in one atomic step.
+
+    On local and HDFS file systems, where a rename is atomic, the
+    pointer is written to ``._current.tmp`` and renamed over
+    ``_current``: a crash mid-write leaves the old pointer whole, where
+    a create-overwrite truncates it first. Object stores keep the
+    single create-overwrite: a PUT is their atomic primitive and a
+    rename is a copy.
+
+    On a local disk the rename is one ``rename(2)`` through the raw
+    file system: the checksummed one renames a file's ``.crc`` after
+    the file, and the session's may refuse to replace a file. The
+    pointer is left without a checksum; the old ``._current.crc`` is
+    deleted first, because a pointer whose checksum no longer matches
+    fails to read, and one without a checksum reads unchecked."""
     fs, ppath = _fs(spark, f"{root}/{_POINTER}")
-    # single create-overwrite: one PUT on object stores. (On HDFS/local
-    # a crash mid-write could leave a torn pointer; those filesystems
-    # have atomic rename, so the rename layout is the right tool there
-    # — this protocol targets stores where the PUT is the atomic
-    # primitive. resolve_root treats an unreadable/dangling pointer as
-    # loud, not silent.)
-    stream = fs.create(ppath, True)
+    scheme = fs.getScheme()
+    out = ppath
+    if scheme in ("file", "hdfs"):
+        out = _fs(spark, f"{root}/.{_POINTER}.tmp")[1]
+    stream = fs.create(out, True)
     try:
         stream.write(bytearray(gen_name + "\n", "utf-8"))
     finally:
         stream.close()
+    hadoop = spark.sparkContext._jvm.org.apache.hadoop
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    if scheme == "file":
+        raw = hadoop.fs.RawLocalFileSystem()
+        raw.initialize(fs.getUri(), conf)
+        # the old pointer's checksum, and the one the temporary's
+        # checksummed write left
+        for crc in (f".{_POINTER}.crc", f"..{_POINTER}.tmp.crc"):
+            raw.delete(_fs(spark, f"{root}/{crc}")[1], False)
+        if not raw.rename(out, ppath):
+            raise IOError(f"rename {out} -> {ppath} failed")
+    elif scheme == "hdfs":
+        # FileSystem.rename refuses an existing target; FileContext
+        # replaces it atomically
+        opts = spark.sparkContext._gateway.new_array(hadoop.fs.Options.Rename, 1)
+        opts[0] = hadoop.fs.Options.Rename.OVERWRITE
+        hadoop.fs.FileContext.getFileContext(fs.getUri(), conf).rename(out, ppath, opts)
+
+
+def commit_generation(spark, root: str, gen_dir: str, keep: int = 1) -> None:
+    """Atomically publish ``gen_dir`` (write the ``_current`` pointer
+    LAST, see :func:`_write_pointer`), then best-effort delete all but
+    the newest ``keep`` generations at or below the committed one."""
+    gen_name = gen_dir.rstrip("/").rsplit("/", 1)[-1]
+    if not gen_name.startswith("gen-"):
+        raise ValueError(f"{gen_dir!r} is not a generation dir")
+    _write_pointer(spark, root, gen_name)
     committed = int(gen_name[4:])
     older = [g for g in _numbered(spark, root, "gen-") if g <= committed]
     survivors = set(older[-max(1, keep):]) | {committed}

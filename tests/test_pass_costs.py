@@ -1,12 +1,14 @@
-"""Fixed costs a repeated corpus pass must not pay: generated classes
-compiled again, documents tokenized once per n-gram, and Spark jobs
-fired while a query is constructed."""
+"""Fixed costs a repeated pass must not pay: generated classes
+compiled again, documents tokenized once per n-gram, Spark jobs fired
+while a query is constructed, and a few-MB file scanned by one task."""
 
 from __future__ import annotations
 
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,6 +94,49 @@ def test_spread_small_input_decides_from_the_plan(spark, sf_dir):
         cached.unpersist()
 
 
+def _write_longs(path, n_rows: int, row_groups: int) -> str:
+    """A parquet file of ``n_rows`` uncompressed longs (8 bytes each) in
+    ``row_groups`` row groups."""
+    table = pa.table({"v": pa.array(range(n_rows), pa.int64())})
+    pq.write_table(
+        table, str(path), row_group_size=n_rows // row_groups,
+        compression="none", use_dictionary=False,
+    )
+    return str(path)
+
+
+def _tasks_with_rows(df) -> int:
+    return df.select(F.spark_partition_id().alias("p")).distinct().count()
+
+
+def test_few_mb_file_scans_by_row_group(spark, tmp_path):
+    # 3.1 MB in 3 row groups: under Spark's 4 MiB open-cost floor the
+    # whole file was one split, one task
+    path = _write_longs(tmp_path / "three.parquet", 3 * 131072, 3)
+    assert _tasks_with_rows(spark.read.parquet(path)) == 3
+
+
+def test_planned_partitions_count_only_splits_with_rows(spark, tmp_path):
+    # one row group over at least parallelism splits: one split reads
+    # it, the others read only the footer
+    path = _write_longs(tmp_path / "one.parquet", 262144, 1)
+    target = spark.sparkContext.defaultParallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(os.path.getsize(path) // (target + 1)))
+    try:
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() >= target
+        assert dedup._planned_partitions(df) == 1
+        assert _tasks_with_rows(df) == 1
+        out, jobs = _jobs(spark, lambda: dedup.spread_small_input(df))
+    finally:
+        spark.conf.set(key, old)
+    assert jobs == 0
+    assert out is not df
+    assert out.rdd.getNumPartitions() == target
+
+
 def _lambda_bodies(plan: str) -> list[str]:
     """The text of every ``lambdafunction(...)`` in a plan string."""
     out, start = [], 0
@@ -124,3 +169,13 @@ def test_ngram_builders_tokenize_once_per_row(spark, sf_dir, builder):
     assert plan.count("split(") == 1
     bodies = _lambda_bodies(plan)
     assert bodies and not any("split(" in b for b in bodies)
+
+
+def test_quality_score_tokenizes_once_under_a_filter(spark, sf_dir):
+    # pipeline_clean_corpus's filter: pushed through a projection by
+    # inlining it, it put the split 4 times in the filter and 4 more in
+    # the projection
+    scored = text.quality_score(load_table(spark, "documents", sf_dir))
+    kept = scored.filter((F.col("quality") >= 60) & (F.col("n_tokens") >= 30))
+    plan = kept._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1

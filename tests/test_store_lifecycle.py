@@ -1,8 +1,9 @@
 """The store-lifecycle crash matrix (``sources/manifest.py``): every
 persisted-store family, on both publish layouts, survives a failed
 rebuild and a failed compaction — whether the failure hits inside the
-write or at the publish step — with its store byte-identical, still
-answering its read and still carrying its ``_ingest_stream`` marker.
+write, at the publish step or half-way through the manifest layout's
+pointer write — with its store byte-identical, still answering its
+read and still carrying its ``_ingest_stream`` marker.
 A build over a directory that is not a store raises and leaves it
 untouched. Inputs are at most 8 rows."""
 
@@ -137,6 +138,42 @@ def _fail_publish(monkeypatch):
     monkeypatch.setattr(manifest, "commit_generation", boom)
 
 
+def _tear_pointer(monkeypatch):
+    """The ``_current`` pointer's write dies half-way: a crash in the
+    commit itself."""
+    real = manifest._fs
+
+    class TornStream:
+        def __init__(self, stream):
+            self.stream = stream
+
+        def write(self, data):
+            self.stream.write(data[: len(data) // 2])
+            raise RuntimeError("injected torn pointer write")
+
+        def close(self):
+            self.stream.close()
+
+    class TearingFs:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def create(self, path, *args):
+            stream = self.fs.create(path, *args)
+            if manifest._POINTER in path.getName():
+                return TornStream(stream)
+            return stream
+
+    def tearing(spark, path):
+        fs, hpath = real(spark, path)
+        return TearingFs(fs), hpath
+
+    monkeypatch.setattr(manifest, "_fs", tearing)
+
+
 def _survives(spark, path, op, inject, monkeypatch, marker_path):
     """Run ``op`` with ``inject`` applied: it must raise, and leave the
     live store byte-identical with its marker in place."""
@@ -176,12 +213,15 @@ def test_store_survives_failed_rebuild_and_compaction(
         return lambda: fam["build"](df, path, commit=layout, **kw, **more)
 
     compact = lambda: fam["compact"](spark, path)  # noqa: E731
-    for op, inject in (
+    matrix = [
         (rebuild(bad_input, **extra), lambda m: None),
         (rebuild(good_input), _fail_publish),
         (compact, _poison_reads),
         (compact, _fail_publish),
-    ):
+    ]
+    if layout == "manifest":
+        matrix.append((rebuild(good_input), _tear_pointer))
+    for op, inject in matrix:
         _survives(spark, path, op, inject, monkeypatch, marker_path)
     assert read() == want
     assert (resolve_root(spark, path) == path) == (layout == "rename")

@@ -283,6 +283,36 @@ def test_stream_fold_checkpoint_resume_across_runs(spark, tmp_path):
     assert got == {"a": 3, "c": 1}
 
 
+def test_run_available_now_resumes_under_filesystem_checkpoints(spark, tmp_path):
+    # the program's local sessions checkpoint through the FileSystem
+    # manager (FileContext renames fork readlink without Hadoop's native
+    # library); a drain resumed over a second batch must equal one drain
+    # of both
+    manager = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+    assert manager.endswith(".FileSystemBasedCheckpointFileManager")
+    src = str(tmp_path / "src")
+    schema = "k string, v long"
+    spark.createDataFrame([("a", 1), ("a", 2), ("b", 5)], schema).coalesce(
+        1
+    ).write.parquet(src)
+
+    def drain(ckpt):
+        sdf = spark.readStream.schema(schema).parquet(src)
+        agg = sdf.groupBy("k").agg(F.count("*").alias("n"), F.sum("v").alias("s"))
+        # complete mode: the memory sink recovers its checkpoint only then
+        out = run_available_now(
+            agg, output_mode="complete", checkpoint_dir=str(tmp_path / ckpt)
+        )
+        return _rows(out)
+
+    assert drain("resumed") == [("a", 2, 3), ("b", 1, 5)]
+    spark.createDataFrame([("a", 9), ("c", 0)], schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    resumed = drain("resumed")
+    assert resumed == drain("whole") == [("a", 3, 12), ("b", 1, 5), ("c", 1, 0)]
+
+
 def test_stream_dir_shim_reused_not_leaked(spark, sf_dir):
     # repeated stream construction reuses one scratch dir per
     # (table, sf) instead of leaking a tempdir+symlink each time
