@@ -14,12 +14,26 @@ results bit-for-bit. Thresholds are compared in integer arithmetic
 (``den*c >= num*(na+nb-c)``) — no float tolerance anywhere.
 
 Scale design (100 TB corpus): the shingle explode is a flat map at
-scan speed; the expensive step is the shingle/band self-join, whose
-key cardinality (distinct shingles / band buckets) is what matters,
-not document count. MinHash-LSH caps join fan-out at bucket size;
-hot buckets (boilerplate shingles) are the skew risk — AQE skew-join
-handles moderate cases, and ``max_bucket`` drops degenerate buckets
-the way production dedup pipelines drop stop-shingles.
+scan speed; the expensive step is candidate generation, whose key
+cardinality (distinct shingles / band buckets) is what matters, not
+document count. Hot buckets (boilerplate shingles) are the skew risk
+— AQE skew-join handles moderate cases, and ``max_bucket`` drops
+degenerate buckets the way production dedup pipelines drop
+stop-shingles.
+
+MinHash-LSH generates its candidates inside each bucket, in one pass
+over the band table (``_bucket_pairs``), not with a band self-join.
+The hot-bucket guard is a ``count(1)`` window: WindowExec buffers a
+bucket in a spilling row array, so a boilerplate bucket is counted
+and dropped without sitting in one in-memory buffer. Collecting every
+bucket first and filtering on the list's size would hold each hot
+bucket whole. After the guard, ``collect_list`` holds at most
+``max_bucket`` ids, and one generated-SQL ``inline`` emits the
+``x < y`` pairs. SimHash banding (``simhash_pairs_banded``) and the
+cosine LSH self-joins (``similarity.py``) keep their band self-joins:
+the first has no bucket bound and the second none by default
+(``max_bucket=None``), so a collected bucket there would be an
+unbounded list, while a sort-merge join streams one side of a bucket.
 """
 
 from __future__ import annotations
@@ -1118,6 +1132,34 @@ def minhash_band_table(
     ).select(id_col, "bb.band", "bb.band_key")
 
 
+def _bucket_pairs(bands: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)`` id pairs, ``doc_a < doc_b``, of the
+    band buckets (rows sharing ``(band, band_key)``) with 2 to
+    ``max_bucket`` members: the LSH candidates, in one pass over
+    ``bands`` (the window guard and the collect share one exchange;
+    the module docstring says why the guard is a window). Every row
+    counts as a member, a null or repeated id too, as in a
+    ``groupBy`` count; ``collect_list`` drops a null id and ``y > x``
+    a repeated one, as ``<`` does in a self-join."""
+    return (
+        bands.selectExpr(
+            "band",
+            "band_key",
+            f"`{id_col}` AS __id",
+            "count(1) OVER (PARTITION BY band, band_key) AS __bn",
+        )
+        .where(f"__bn BETWEEN 2 AND {max_bucket}")
+        .groupBy("band", "band_key")
+        .agg(F.expr("collect_list(__id) AS __ids"))
+        .selectExpr(
+            "inline(flatten(transform(__ids, x -> transform("
+            "filter(__ids, y -> y > x), "
+            "y -> named_struct('doc_a', x, 'doc_b', y)))))"
+        )
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1133,42 +1175,33 @@ def minhash_lsh_pairs(
     become candidates; candidates are verified with the EXACT
     distinct-shingle Jaccard (so output precision is 1.0 — LSH only
     affects recall). Buckets larger than ``max_bucket`` are dropped
-    (degenerate boilerplate guard, keeps worst-case fan-out bounded).
+    (degenerate boilerplate guard, keeps worst-case fan-out bounded);
+    the bound is required, since each kept bucket is collected as one
+    id list (:func:`_bucket_pairs`).
     ``verify_scope`` picks the verify build form (lossless either way;
     see :func:`_resolve_verify_scope`).
+
+    Candidates are the pairs inside one bucket (Leskovec, Rajaraman
+    and Ullman, *Mining of Massive Datasets*, §3.4), generated in one
+    windowed pass over the band table, so the table and the signature
+    lineage beneath it appear once in the plan (a band self-join read
+    them three times: 28 static shuffles in ``pipeline_clean_corpus``
+    at sf0.01, now 16).
     """
     _check_max_bucket(max_bucket, "minhash_lsh_pairs")
+    if max_bucket is None:
+        raise ValueError(
+            "minhash_lsh_pairs: max_bucket must be an int, got None "
+            "(each kept bucket is collected as one id list)"
+        )
     scope = _resolve_verify_scope(
         df, text_col, id_col, verify_scope, "minhash_lsh_pairs"
     )
     df = spread_small_input(df)
-    # the band table feeds the bucket-size guard AND both sides of the
-    # candidate self-join, and its lineage is the whole md5/min-aggregate
-    # signature build. All three read one signature exchange: the
-    # planner reuses identical exchanges (AQE runs one query stage for
-    # them), so the signatures are computed once, inside the query,
-    # with no construction-time job.
     bands = minhash_band_table(df, text_col, id_col, n)
-    small = (
-        bands.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .filter(F.col("bn") <= max_bucket)
-        .drop("bn")
-    )
-    bands = bands.join(small, on=["band", "band_key"])
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(b, on=["band", "band_key"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .distinct()
-    )
     return _jaccard_verify(
-        cand, df, df, ("doc_a", "doc_b"), ("n_a", "n_b"), id_col, text_col,
-        n, scope, tau_num, tau_den,
+        _bucket_pairs(bands, id_col, max_bucket), df, df, ("doc_a", "doc_b"),
+        ("n_a", "n_b"), id_col, text_col, n, scope, tau_num, tau_den,
     )
 
 
@@ -1557,7 +1590,7 @@ def simhash_pairs_banded(
     mask = (1 << width) - 1
     # one row per document: materialize the sketch once instead of
     # running the 60-aggregate build on BOTH sides of the band
-    # self-join (same rationale as minhash_lsh_pairs' band table)
+    # self-join
     sk = simhash(df, text_col, id_col).localCheckpoint(eager=True)
     banded = sk.select(
         F.col(id_col),

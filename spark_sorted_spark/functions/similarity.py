@@ -2869,7 +2869,7 @@ def cosine_neardup_pairs_lsh(
     df = spread_small_input(df)
     # n_tables short rows per vector: materialize once instead of
     # running the sign-bit bucket construction on BOTH self-join
-    # sides (same build-once rationale as minhash_lsh_pairs)
+    # sides
     b = _multi_table_buckets(
         df, n_planes, n_tables, dim, vec_col, id_col
     ).localCheckpoint(eager=True)

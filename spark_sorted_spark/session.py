@@ -66,6 +66,32 @@ Two more remove fixed costs from scans and streams:
   forks; 10 drains took 4.77 s instead of 5.71 s. Its rename is atomic
   on local and HDFS file systems; a cluster master keeps Spark's
   default, which is right for HDFS.
+
+Two more keep driver-side query construction cheap:
+
+* ``spark.python.sql.dataFrameDebugging.enabled`` = false (PySpark 4:
+  true, a static setting). With it on, PySpark wraps every function
+  and Column call in ``_with_origin``, which per call reads the
+  active session and ``spark.sql.stackTracesInDataFrameContext``
+  through py4j, walks the Python stack (trying ``import IPython``)
+  and sets and clears ``PySparkCurrentOrigin`` in the JVM. Off,
+  ``F.col`` took 120-124 µs instead of 462 and
+  ``(F.col("a") + F.lit(1)) > F.col("b")`` 424-433 µs instead of
+  1,840-1,861 (min of 5 x 1,000 calls, ``local[2]``, 4-core host). A
+  second construction at sf0.01 sent 798 py4j commands instead of
+  1,378 (``bm25_join``) and 1,097 instead of 1,927
+  (``pipeline_clean_corpus``). What is lost: DataFrame error contexts
+  no longer name the Python call site. PySpark caches the setting per
+  Python process at its first wrapped call.
+* ``spark.sql.codegen.useIdInClassName`` = false (Spark: true). The
+  generated class name then omits the whole-stage codegen id, which
+  AQE assigns in the order it plans query stages. Over a cached
+  corpus that order changed between ``pipeline_clean_corpus`` passes,
+  so the same code was compiled again under another name (4 classes
+  in one pass); without the id, identical code shares one class. The
+  first pass over a cached sf0.001 corpus compiled 56 classes instead
+  of 72. What is lost: stack traces and profiles show
+  ``GeneratedIterator`` without the stage id (plans still print it).
 """
 
 from __future__ import annotations
@@ -107,6 +133,8 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
         .config("spark.sql.files.openCostInBytes", str(FILE_OPEN_COST_BYTES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )

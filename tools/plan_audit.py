@@ -76,6 +76,11 @@ _BANDS_IN_PLAN = (
     "lineage; AQE runs their shared exchange once)"
 )
 
+_BUCKET_PASS = (
+    "the bucket guard's join back and the band self-join became one "
+    "windowed bucket pass (the band table is read once)"
+)
+
 _NOTES = {
     "hybrid_join": (
         "scan twin of hybrid_join_indexed: composes two scan-form "
@@ -120,9 +125,13 @@ _NOTES = {
         "deduped join by its leaf scans): the candidate-side "
         "localCheckpoint jobs moved into this plan, 14 -> 16 shuffles "
         "and 14 -> 7 build jobs per call; then " + _BANDS_IN_PLAN
-        + ", 16 -> 28 shuffles and 7 -> 0 build jobs per call"
+        + ", 16 -> 28 shuffles and 7 -> 0 build jobs per call; then "
+        + _BUCKET_PASS + ", 28 -> 16 shuffles"
     ),
-    "dedup_minhash_lsh": _BANDS_IN_PLAN + ", 6 -> 13 shuffles",
+    "dedup_minhash_lsh": (
+        _BANDS_IN_PLAN + ", 6 -> 13 shuffles; then " + _BUCKET_PASS
+        + ", 13 -> 7 shuffles"
+    ),
 }
 
 # Every BM25 ranker collects its |terms|-row df aggregate at
